@@ -229,6 +229,39 @@ def apply_patches(
     )
 
 
+def upsert_patches(patches: DataFrame, partition_col: str | None = None):
+    """X4's persistent form, the Delta ``MERGE INTO`` analog: a
+    ``TxTable.merge(spark, transform)`` transform that resolves
+    ``patches`` into the current table with :func:`apply_patches`
+    (last-write-wins with retraction) as one copy-on-write commit.
+
+    With ``partition_col``, only the base partitions the patches touch
+    pay the LWW window; the rest carry over unresolved, so its cost
+    scales with the patch's partition footprint, not the table.  The
+    touched predicate is never NULL: ``isin`` and ``~isin`` are both
+    NULL for a NULL partition value, which would drop such base rows
+    from BOTH sides, so NULL partitions count as touched iff the
+    patches themselves carry NULL partitions."""
+
+    def transform(base: DataFrame) -> DataFrame:
+        if not partition_col or partition_col not in base.columns:
+            return apply_patches(base, patches)
+        touched = [
+            r[0] for r in patches.select(partition_col).distinct().collect()
+        ]
+        values = [t for t in touched if t is not None]
+        is_touched = F.coalesce(
+            F.col(partition_col).isin(values), F.lit(False)
+        )
+        if len(values) != len(touched):
+            is_touched = is_touched | F.col(partition_col).isNull()
+        return apply_patches(base.filter(is_touched), patches).unionByName(
+            base.filter(~is_touched)
+        )
+
+    return transform
+
+
 def tx_sorted_writer(datoms: DataFrame, partitions: int | None = None):
     """T1/S8: the load-bearing timestamp sort before import
     (``pseudoace.py:87-95``, ``runcommand.py:180-185``).

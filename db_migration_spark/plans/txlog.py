@@ -2,11 +2,13 @@
 
 The reference's store is Datomic: transactional appends with a total
 commit order (``pseudoace.py:98-102``) and point-in-time reads
-(backup/restore, ``datomic.py:12-23``).  The versioned-snapshot store
-(plans/snapshots.py) gives this repo time travel, but its manifest swap is
-last-writer-wins: two concurrent writers both read manifest N and the
-second ``os.replace`` silently discards the first's version — no commit
-protocol, no concurrent-writer story (round-3 verdict, What's missing #2).
+(backup/restore, ``datomic.py:12-23``).  This module is the repo's ONE
+versioned store: dated snapshots are ``commit_overwrite`` versions read
+back with ``read(version=)``, and copy-on-write upserts are ``merge``
+with a transform (``operators/eav.upsert_patches``).  A plain manifest
+file swapped with ``os.replace`` would be last-writer-wins — two writers
+read manifest N and the second silently discards the first's version —
+so every version here is claimed through a commit protocol instead.
 Real deployments would use Delta/Iceberg (not installable in this
 sandbox); this module implements the same protocol in miniature, from
 public knowledge of how those formats commit:
@@ -731,6 +733,109 @@ class TxTable:
         self._publish(version, commit)
         return version
 
+    def _drop_groups(self, groups) -> None:
+        """Remove staged, never-published group directories."""
+        for g in groups:
+            shutil.rmtree(os.path.join(self.data_dir, g), ignore_errors=True)
+
+    def _commit(
+        self,
+        op: str,
+        attempt,
+        max_retries: int,
+        txn: tuple[str, int] | None = None,
+        rewrite: bool = False,
+    ) -> int:
+        """The ONE optimistic-commit loop under the row-level and rewrite
+        verbs (delete / update / merge_into / apply_cdc / replace_where /
+        overwrite / merge).  Each attempt pins ``read_v`` and targets
+        ``read_v + 1``, so a commit landing in between is a
+        CommitConflict and the attempt re-runs on the advanced snapshot.
+
+        ``attempt(read_v)`` validates (constraints included) and returns
+        ``(mask, append)``: a (file_path, row_index) frame to mask with a
+        deletion vector and a frame to land as a new group, either None.
+        Attempts never write, so nothing is on disk when they raise; the
+        core stages both and removes every staged ``dv-``/``g-`` dir on
+        a conflict, an error, a no-op, or exhausted retries.
+
+        ``rewrite=True`` removes every live group at ``read_v`` and
+        stamps the appended frame's schema.  Otherwise an empty DV or an
+        empty delta is dropped, and when both are empty the commit is a
+        provable no-op returning ``read_v`` — unless ``txn`` is given:
+        then a metadata-only commit records the identity so an
+        incremental consumer's cursor advances past the empty batch.
+        The ``txn`` identity is probed at every pinned version, so a
+        replayed batch returns its original version without running
+        ``attempt``, and so does a retry whose lost race WAS its replay
+        twin."""
+        for _ in range(max_retries):
+            read_v = self.latest_version()
+            seen = self.txn_version(*txn) if txn is not None else None
+            if seen is not None:
+                return seen
+            mask, append = attempt(read_v)
+            staged: list[str] = []
+            try:
+                dv, add = None, {}
+                if mask is not None:
+                    group, n, covers = self._write_dv(mask)
+                    staged.append(group)
+                    if n:
+                        dv = {"group": group, "covers": covers, "n": n}
+                if append is not None:
+                    group, stats = self._write_group(append)
+                    staged.append(group)
+                    if rewrite or stats["__rows"]:
+                        add[group] = stats
+                kept = set(add) | ({dv["group"]} if dv else set())
+                self._drop_groups(g for g in staged if g not in kept)
+                if not kept and txn is None:
+                    return read_v
+                return self._try_commit(
+                    op,
+                    list(add),
+                    self.active_groups(read_v) if rewrite else [],
+                    read_v + 1,
+                    stats=add,
+                    txn=txn,
+                    dv=dv,
+                    schema_json=append.schema.json() if rewrite else None,
+                )
+            except CommitConflict:
+                self._drop_groups(staged)
+            except BaseException:
+                self._drop_groups(staged)
+                raise
+        raise CommitConflict(f"{op} lost {max_retries} races")
+
+    def _live_scan(self, spark: SparkSession, read_v: int, verb: str):
+        """(scan, live) at ``read_v`` for a row-level verb: the scan under
+        the LOG-OWNED schema (post-ADD-COLUMN, older footers lack the
+        newest column) and its rows with live deletion vectors
+        applied."""
+        if read_v < 0:
+            raise ValueError(f"cannot {verb} an empty table")
+        active, _stats, dvs = self._replay(read_v)
+        scan = self._scan(spark, active, read_v)
+        return scan, self._apply_dvs(spark, scan, dvs)
+
+    @staticmethod
+    def _key_positions(live: DataFrame, src: DataFrame, keys) -> DataFrame:
+        """(file_path, row_index) of the live rows whose key appears in
+        ``src`` — tagged BEFORE the semi-join, because a USING-join
+        output no longer resolves the _metadata pseudo-column."""
+        from pyspark.sql import functions as F
+
+        tagged = live.select(
+            *keys,
+            F.col("_metadata.file_path").alias("file_path"),
+            F.col("_metadata.row_index").cast("long").alias("row_index"),
+        )
+        return tagged.join(
+            src.select(*keys).distinct(), on=keys, how="left_semi"
+        ).select("file_path", "row_index")
+
     def _dropped_physicals(self) -> set[str]:
         """Physical column names retired by ALTER DROP COLUMN across the
         whole log — a re-added logical column must never reuse one, or
@@ -851,12 +956,6 @@ class TxTable:
         idempotence, and cleanup of every staged group on abort."""
         from pyspark.sql.types import StructType
 
-        def _cleanup():
-            for g in groups:
-                shutil.rmtree(
-                    os.path.join(self.data_dir, g), ignore_errors=True
-                )
-
         for _ in range(max_retries):
             # pin ONE read version per attempt: schema and constraints
             # are derived AT read_v and the commit targets read_v + 1,
@@ -872,7 +971,7 @@ class TxTable:
                 try:
                     self._check_constraints(df)
                 except ConstraintViolation:
-                    _cleanup()
+                    self._drop_groups(groups)
                     raise
                 cons_seen = cons_now
             # re-read the log schema EVERY attempt: a concurrent
@@ -901,7 +1000,7 @@ class TxTable:
                     # overwrite or ALTER DROP).  Never re-add it — under
                     # evolve that would resurrect a retired physical —
                     # fail as a metadata conflict, Delta's rule.
-                    _cleanup()
+                    self._drop_groups(groups)
                     raise CommitConflict(
                         f"concurrent schema change removed {sorted(lost)}"
                     )
@@ -916,7 +1015,7 @@ class TxTable:
                     for f in sch_now.fields:
                         lp = local_phys.get(f.name)
                         if lp is not None and lp != self._physical_name(f):
-                            _cleanup()
+                            self._drop_groups(groups)
                             raise CommitConflict(
                                 f"concurrent schema change remapped "
                                 f"{f.name!r} ({lp!r} → "
@@ -952,7 +1051,7 @@ class TxTable:
                 if txn is not None:
                     seen = self.txn_version(*txn)
                     if seen is not None:  # the race WAS our replay twin
-                        _cleanup()
+                        self._drop_groups(groups)
                         return seen
                 continue
         raise CommitConflict(f"append lost {max_retries} races")
@@ -1040,10 +1139,7 @@ class TxTable:
             # a failed staged write or promotion must not leak the
             # '.part-<uuid>' staging dir (vacuum only collects g-/dv-
             # prefixes) or half-promoted uncommitted groups
-            for g in groups:
-                shutil.rmtree(
-                    os.path.join(self.data_dir, g), ignore_errors=True
-                )
+            self._drop_groups(groups)
             raise
         finally:
             shutil.rmtree(staging, ignore_errors=True)
@@ -1092,47 +1188,14 @@ class TxTable:
         streaming *materialized-view* sink shape: each batch rewrites a
         small derived table (e.g. an HLL register rollup) exactly
         once."""
-        if txn is not None:
-            seen = self.txn_version(*txn)
-            if seen is not None:
-                return seen
-        cons_seen = self.constraints()
-        self._check_constraints(df)
-        group, stats = self._write_group(df)
-        for _ in range(max_retries):
-            read_v = self.latest_version()  # pinned BEFORE derivations
-            if txn is not None:
-                seen = self.txn_version(*txn)
-                if seen is not None:  # a replay raced this writer in
-                    shutil.rmtree(
-                        os.path.join(self.data_dir, group),
-                        ignore_errors=True,
-                    )
-                    return seen
-            cons_now = self.constraints(upto=read_v)
-            if cons_now != cons_seen:  # same race window as commit_append
-                try:
-                    self._check_constraints(df)
-                except ConstraintViolation:
-                    shutil.rmtree(
-                        os.path.join(self.data_dir, group),
-                        ignore_errors=True,
-                    )
-                    raise
-                cons_seen = cons_now
-            try:
-                return self._try_commit(
-                    "overwrite",
-                    [group],
-                    self.active_groups(read_v),
-                    read_v + 1,
-                    stats={group: stats},
-                    txn=txn,
-                    schema_json=df.schema.json(),
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"overwrite lost {max_retries} races")
+
+        def attempt(_read_v):
+            self._check_constraints(df)
+            return None, df
+
+        return self._commit(
+            "overwrite", attempt, max_retries, txn=txn, rewrite=True
+        )
 
     def merge(
         self,
@@ -1149,33 +1212,15 @@ class TxTable:
         ``txn=(app, batch)`` makes the rewrite idempotent on the
         transaction identity — the cursor primitive an incremental
         materialized-view refresh records ATOMICALLY with its output."""
-        if txn is not None:
-            seen = self.txn_version(*txn)
-            if seen is not None:
-                return seen
-        for _ in range(max_retries):
-            read_v = self.latest_version()
-            current = self.read(spark, read_v) if read_v >= 0 else None
-            out = transform(current)
+
+        def attempt(read_v):
+            out = transform(self.read(spark, read_v) if read_v >= 0 else None)
             self._check_constraints(out)
-            group, stats = self._write_group(out)
-            try:
-                return self._try_commit(
-                    "merge",
-                    [group],
-                    self.active_groups(read_v),
-                    read_v + 1,
-                    stats={group: stats},
-                    txn=txn,
-                    schema_json=out.schema.json(),
-                )
-            except CommitConflict:
-                if txn is not None:
-                    seen = self.txn_version(*txn)
-                    if seen is not None:
-                        return seen
-                continue  # re-read, re-transform, re-write
-        raise CommitConflict(f"merge lost {max_retries} races")
+            return None, out
+
+        return self._commit(
+            "merge", attempt, max_retries, txn=txn, rewrite=True
+        )
 
     def optimize(
         self,
@@ -1283,11 +1328,7 @@ class TxTable:
                     stats=stats,
                 )
             except CommitConflict:
-                for g in added:
-                    shutil.rmtree(
-                        os.path.join(self.data_dir, g), ignore_errors=True
-                    )
-                continue
+                self._drop_groups(added)
         raise CommitConflict(f"optimize lost {max_retries} races")
 
     def _write_split_groups(self, df: DataFrame) -> tuple[list[str], dict]:
@@ -1735,32 +1776,12 @@ class TxTable:
         advances the snapshot and the positions are recomputed against
         it.  A predicate matching nothing commits nothing and returns
         the read version."""
-        for _ in range(max_retries):
-            read_v = self.latest_version()
-            if read_v < 0:
-                raise ValueError("cannot delete from an empty table")
-            active, _stats, dvs = self._replay(read_v)
-            # log-owned schema (not footer inference): post-ADD-COLUMN
-            # the newest column may be absent from older footers
-            scan = self._scan(spark, active, read_v)
-            matched = self._apply_dvs(spark, scan, dvs).filter(predicate)
-            group, n, covered = self._write_dv(self._positions(matched))
-            path = os.path.join(self.data_dir, group)
-            if n == 0:  # nothing matched — no commit, no new version
-                shutil.rmtree(path, ignore_errors=True)
-                return read_v
-            try:
-                return self._try_commit(
-                    "delete",
-                    [],
-                    [],
-                    read_v + 1,
-                    dv={"group": group, "covers": covered, "n": n},
-                )
-            except CommitConflict:
-                shutil.rmtree(path, ignore_errors=True)
-                continue  # re-read the advanced snapshot, recompute
-        raise CommitConflict(f"delete lost {max_retries} races")
+
+        def attempt(read_v):
+            _scan, live = self._live_scan(spark, read_v, "delete from")
+            return self._positions(live.filter(predicate)), None
+
+        return self._commit("delete", attempt, max_retries)
 
     def update_where(
         self,
@@ -1785,52 +1806,23 @@ class TxTable:
         unknown = set(assignments) - set(self.read_schema_columns(spark))
         if unknown:
             raise ValueError(f"unknown update columns: {sorted(unknown)}")
-        for _ in range(max_retries):
-            read_v = self.latest_version()
-            if read_v < 0:
-                raise ValueError("cannot update an empty table")
-            active, _stats, dvs = self._replay(read_v)
-            # log-owned schema: updated rows must carry EVERY table
-            # column (footer inference after ADD COLUMN can miss the new
-            # one and silently drop it from the rebuilt delta rows)
-            scan = self._scan(spark, active, read_v)
-            matched = self._apply_dvs(spark, scan, dvs).filter(predicate)
-            # constraints BEFORE any on-disk write: a violation must
-            # raise with zero orphaned uncommitted DV/group directories
+
+        def attempt(read_v):
+            # updated rows carry EVERY log-schema column (footer inference
+            # after ADD COLUMN can miss the new one and silently drop it)
+            scan, live = self._live_scan(spark, read_v, "update")
+            matched = live.filter(predicate)
             updated = matched.select(
                 *[
-                    (
-                        assignments[c].alias(c)
-                        if c in assignments
-                        else F.col(c)
-                    )
+                    assignments[c].alias(c) if c in assignments else F.col(c)
                     for c in scan.columns
                 ]
             )
             updated = self._align_to_schema(updated, scan.schema)
             self._check_constraints(updated)
-            dv_group, n, covered = self._write_dv(self._positions(matched))
-            dv_path = os.path.join(self.data_dir, dv_group)
-            if n == 0:
-                shutil.rmtree(dv_path, ignore_errors=True)
-                return read_v
-            group, gstats = self._write_group(self._to_physical(updated))
-            try:
-                return self._try_commit(
-                    "update",
-                    [group],
-                    [],
-                    read_v + 1,
-                    stats={group: gstats},
-                    dv={"group": dv_group, "covers": covered, "n": n},
-                )
-            except CommitConflict:
-                shutil.rmtree(dv_path, ignore_errors=True)
-                shutil.rmtree(
-                    os.path.join(self.data_dir, group), ignore_errors=True
-                )
-                continue
-        raise CommitConflict(f"update lost {max_retries} races")
+            return self._positions(matched), self._to_physical(updated)
+
+        return self._commit("update", attempt, max_retries)
 
     def merge_into(
         self,
@@ -1862,38 +1854,14 @@ class TxTable:
         the log and returns without recomputing — exactly-once MERGE on
         top of at-least-once micro-batch delivery."""
         keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-        if txn is not None:
-            seen = self.txn_version(*txn)
-            if seen is not None:
-                return seen
-        for _ in range(max_retries):
-            read_v = self.latest_version()
-            if read_v < 0:
-                raise ValueError("cannot merge into an empty table")
-            active, _stats, dvs = self._replay(read_v)
-            # log-owned schema: _align_to_schema(source, …) must see the
-            # full evolved column set, not a pre-evolution footer's
-            scan = self._scan(spark, active, read_v)
+
+        def attempt(read_v):
+            scan, live = self._live_scan(spark, read_v, "merge into")
+            # the log-owned schema: the source must see the full evolved
+            # column set, not a pre-evolution footer's
             src = self._align_to_schema(source, scan.schema)
             if src.groupBy(*keys).count().where("count > 1").take(1):
-                raise ValueError(
-                    f"merge source is not unique on {keys}"
-                )
-            live = self._apply_dvs(spark, scan, dvs)
-            # tag positions BEFORE the semi-join: a USING-join output no
-            # longer resolves the _metadata pseudo-column
-            from pyspark.sql import functions as F
-
-            tagged = live.select(
-                *keys,
-                F.col("_metadata.file_path").alias("file_path"),
-                F.col("_metadata.row_index").cast("long").alias("row_index"),
-            )
-            hit = tagged.join(
-                src.select(*keys).distinct(), on=keys, how="left_semi"
-            ).select("file_path", "row_index")
-            # constraints BEFORE any on-disk write: a violation must
-            # raise with zero orphaned uncommitted DV/group directories
+                raise ValueError(f"merge source is not unique on {keys}")
             delta = (
                 src
                 if insert
@@ -1902,66 +1870,12 @@ class TxTable:
                 )
             )
             self._check_constraints(delta)
-            dv_group, n_masked, covered = self._write_dv(hit)
-            dv_path = os.path.join(self.data_dir, dv_group)
-            group, gstats = self._write_group(self._to_physical(delta))
-            import pyarrow.parquet as _pq
-
-            gpath = os.path.join(self.data_dir, group)
-            n_delta = sum(
-                _pq.ParquetFile(os.path.join(gpath, f)).metadata.num_rows
-                for f in os.listdir(gpath)
-                if f.endswith(".parquet")
+            return (
+                self._key_positions(live, src, keys),
+                self._to_physical(delta),
             )
-            if n_masked == 0 and n_delta == 0:  # provable no-op
-                shutil.rmtree(dv_path, ignore_errors=True)
-                shutil.rmtree(gpath, ignore_errors=True)
-                if txn is None:
-                    return read_v
-                # a no-op merge CARRYING a txn identity must still
-                # record it (metadata-only commit) so the incremental
-                # consumer's cursor advances past the empty batch —
-                # otherwise txn_latest_batch() re-serves it forever
-                try:
-                    return self._try_commit(
-                        "merge_into", [], [], read_v + 1, txn=txn
-                    )
-                except CommitConflict:
-                    seen = self.txn_version(*txn)
-                    if seen is not None:
-                        return seen
-                    continue
-            if n_delta == 0:  # delete-only merge — drop the empty group
-                shutil.rmtree(gpath, ignore_errors=True)
-            if n_masked == 0:
-                shutil.rmtree(dv_path, ignore_errors=True)
-            try:
-                return self._try_commit(
-                    "merge_into",
-                    [group] if n_delta else [],
-                    [],
-                    read_v + 1,
-                    stats={group: gstats} if n_delta else None,
-                    txn=txn,
-                    dv=(
-                        {
-                            "group": dv_group,
-                            "covers": covered,
-                            "n": n_masked,
-                        }
-                        if n_masked
-                        else None
-                    ),
-                )
-            except CommitConflict:
-                shutil.rmtree(dv_path, ignore_errors=True)
-                shutil.rmtree(gpath, ignore_errors=True)
-                if txn is not None:
-                    seen = self.txn_version(*txn)
-                    if seen is not None:  # the race WAS our replay twin
-                        return seen
-                continue
-        raise CommitConflict(f"merge_into lost {max_retries} races")
+
+        return self._commit("merge_into", attempt, max_retries, txn=txn)
 
     def apply_cdc(
         self,
@@ -1986,26 +1900,16 @@ class TxTable:
         keys (the stream_nsw_mv adjacency: only edges whose per-src
         top-M actually moved).  ``txn`` makes the commit idempotent on
         the transaction identity, including the provable-no-op case."""
-        keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
-        if txn is not None:
-            seen = self.txn_version(*txn)
-            if seen is not None:
-                return seen
         from pyspark.sql import functions as F
 
-        bad = changes.filter(
-            ~F.col(op_col).isin("upsert", "delete")
-        ).take(1)
-        if bad:
-            raise ValueError(
-                f"apply_cdc: {op_col} must be 'upsert' or 'delete'"
-            )
-        for _ in range(max_retries):
-            read_v = self.latest_version()
-            if read_v < 0:
-                raise ValueError("cannot apply CDC to an empty table")
-            active, _stats, dvs = self._replay(read_v)
-            scan = self._scan(spark, active, read_v)
+        keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
+
+        def attempt(read_v):
+            if changes.filter(~F.col(op_col).isin("upsert", "delete")).take(1):
+                raise ValueError(
+                    f"apply_cdc: {op_col} must be 'upsert' or 'delete'"
+                )
+            scan, live = self._live_scan(spark, read_v, "apply CDC to")
             # align data columns to the log-owned schema while keeping
             # the op marker riding the same frame
             src = changes.select(
@@ -2017,75 +1921,14 @@ class TxTable:
             )
             if src.groupBy(*keys).count().where("count > 1").take(1):
                 raise ValueError(f"CDC source is not unique on {keys}")
-            live = self._apply_dvs(spark, scan, dvs)
-            tagged = live.select(
-                *keys,
-                F.col("_metadata.file_path").alias("file_path"),
-                F.col("_metadata.row_index").cast("long").alias("row_index"),
-            )
-            hit = tagged.join(
-                src.select(*keys).distinct(), on=keys, how="left_semi"
-            ).select("file_path", "row_index")
-            # constraints BEFORE any on-disk write: a violation must
-            # raise with zero orphaned uncommitted DV/group directories
             delta = src.filter(F.col(op_col) == "upsert").drop(op_col)
             self._check_constraints(delta)
-            dv_group, n_masked, covered = self._write_dv(hit)
-            dv_path = os.path.join(self.data_dir, dv_group)
-            group, gstats = self._write_group(self._to_physical(delta))
-            import pyarrow.parquet as _pq
-
-            gpath = os.path.join(self.data_dir, group)
-            n_delta = sum(
-                _pq.ParquetFile(os.path.join(gpath, f)).metadata.num_rows
-                for f in os.listdir(gpath)
-                if f.endswith(".parquet")
+            return (
+                self._key_positions(live, src, keys),
+                self._to_physical(delta),
             )
-            if n_masked == 0 and n_delta == 0:  # provable no-op
-                shutil.rmtree(dv_path, ignore_errors=True)
-                shutil.rmtree(gpath, ignore_errors=True)
-                if txn is None:
-                    return read_v
-                try:
-                    return self._try_commit(
-                        "apply_cdc", [], [], read_v + 1, txn=txn
-                    )
-                except CommitConflict:
-                    seen = self.txn_version(*txn)
-                    if seen is not None:
-                        return seen
-                    continue
-            if n_delta == 0:
-                shutil.rmtree(gpath, ignore_errors=True)
-            if n_masked == 0:
-                shutil.rmtree(dv_path, ignore_errors=True)
-            try:
-                return self._try_commit(
-                    "apply_cdc",
-                    [group] if n_delta else [],
-                    [],
-                    read_v + 1,
-                    stats={group: gstats} if n_delta else None,
-                    txn=txn,
-                    dv=(
-                        {
-                            "group": dv_group,
-                            "covers": covered,
-                            "n": n_masked,
-                        }
-                        if n_masked
-                        else None
-                    ),
-                )
-            except CommitConflict:
-                shutil.rmtree(dv_path, ignore_errors=True)
-                shutil.rmtree(gpath, ignore_errors=True)
-                if txn is not None:
-                    seen = self.txn_version(*txn)
-                    if seen is not None:
-                        return seen
-                continue
-        raise CommitConflict(f"apply_cdc lost {max_retries} races")
+
+        return self._commit("apply_cdc", attempt, max_retries, txn=txn)
 
     def replace_where(
         self,
@@ -2103,20 +1946,15 @@ class TxTable:
         the write cost is O(rows replaced + |df|) — at 100 TB a
         daily-partition backfill touches one slice's positions and the
         new slice, never the table.  The pre-replace state stays
-        time-travelable like any other commit."""
+        time-travelable like any other commit.  An empty ``df`` commits
+        the mask alone; with nothing matched either, nothing is
+        committed (the ``merge_into`` no-op rule)."""
         from pyspark.sql import functions as F
 
-        if txn is not None:
-            seen = self.txn_version(*txn)
-            if seen is not None:
-                return seen
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
-        for _ in range(max_retries):
-            read_v = self.latest_version()
-            if read_v < 0:
-                raise ValueError("cannot replace into an empty table")
-            active, _stats, dvs = self._replay(read_v)
-            scan = self._scan(spark, active, read_v)
+
+        def attempt(read_v):
+            scan, live = self._live_scan(spark, read_v, "replace into")
             src = self._align_to_schema(df, scan.schema)
             n_outside = src.filter(~F.coalesce(pred, F.lit(False))).count()
             if n_outside:
@@ -2125,43 +1963,9 @@ class TxTable:
                     f"replaceWhere predicate"
                 )
             self._check_constraints(src)
-            matched = self._apply_dvs(spark, scan, dvs).filter(pred)
-            dv_group, n_masked, covered = self._write_dv(
-                self._positions(matched)
-            )
-            dv_path = os.path.join(self.data_dir, dv_group)
-            if n_masked == 0:
-                shutil.rmtree(dv_path, ignore_errors=True)
-            group, gstats = self._write_group(self._to_physical(src))
-            try:
-                return self._try_commit(
-                    "replace_where",
-                    [group],
-                    [],
-                    read_v + 1,
-                    stats={group: gstats},
-                    txn=txn,
-                    dv=(
-                        {
-                            "group": dv_group,
-                            "covers": covered,
-                            "n": n_masked,
-                        }
-                        if n_masked
-                        else None
-                    ),
-                )
-            except CommitConflict:
-                shutil.rmtree(dv_path, ignore_errors=True)
-                shutil.rmtree(
-                    os.path.join(self.data_dir, group), ignore_errors=True
-                )
-                if txn is not None:
-                    seen = self.txn_version(*txn)
-                    if seen is not None:
-                        return seen
-                continue
-        raise CommitConflict(f"replace_where lost {max_retries} races")
+            return self._positions(live.filter(pred)), self._to_physical(src)
+
+        return self._commit("replace_where", attempt, max_retries, txn=txn)
 
     def overwrite_partitions(
         self,
@@ -2315,22 +2119,6 @@ class TxTable:
                 return {"long": 64, "integer": 32}.get(f.get("type"))
         return None
 
-    def _bloom_positions(self, spark: SparkSession, col, m, k: int):
-        """The k bloom bit positions of ``col`` (a Column), as Spark
-        expressions — pmod(xxhash64(value, seed_j), m).  Hashing stays
-        in the JVM so the index builder and the lookup prober can never
-        disagree on the hash family.  ``m`` may be an int (the prober's
-        single sizing) or a Column (the batched builder joins each
-        group's own sizing in as a column)."""
-        from pyspark.sql import Column
-        from pyspark.sql import functions as F
-
-        mcol = m if isinstance(m, Column) else F.lit(m)
-        return [
-            F.pmod(F.xxhash64(col, F.lit(j)), mcol).cast("long")
-            for j in range(k)
-        ]
-
     def add_bloom_index(
         self,
         spark: SparkSession,
@@ -2361,14 +2149,45 @@ class TxTable:
         the commit stats ('__rows', metadata-only); groups a pre-stats
         log can't size cost one extra counting job TOTAL, not one per
         group.  Sidecar writes go to shared storage exactly like data
-        files.  Returns the number of groups indexed."""
+        files.  Returns the number of groups indexed (0 when the table
+        has no such column).
+
+        Contract: only ``long`` and ``int`` columns can be indexed.  The
+        point planners hash probe values in numpy, bit-exact with
+        Spark's xxhash64 for exactly those two widths, so a sidecar on
+        any other type could never be consulted; such a column raises
+        ValueError naming the column and its type."""
         import base64
 
         from pyspark.sql import functions as F
-        from pyspark.sql.types import StructField, StructType
+        from pyspark.sql.types import (
+            IntegerType,
+            LongType,
+            StructField,
+            StructType,
+        )
 
         upto = self.latest_version() if version is None else version
-        column = self._physical_map(upto).get(column, column)
+        name, column = column, self._physical_map(upto).get(column, column)
+        # the column's on-file type, from the log-owned schema (legacy
+        # logs: the first live group's footer)
+        sch = self.read_schema(spark, upto)
+        dtype = next(
+            (
+                f.dataType
+                for f in (sch.fields if sch is not None else [])
+                if self._physical_name(f) == column
+            ),
+            None,
+        )
+        if dtype is None:
+            return 0
+        if not isinstance(dtype, (LongType, IntegerType)):
+            raise ValueError(
+                f"cannot bloom-index column {name!r} of type "
+                f"{dtype.simpleString()}: only long and int columns are "
+                "supported"
+            )
         todo: list[str] = []
         for g in self.active_groups(upto):
             if self._base_dirs() and not os.path.isdir(
@@ -2388,25 +2207,6 @@ class TxTable:
                 continue  # already indexed
             todo.append(g)
         if not todo:
-            return 0
-
-        # the column's on-file type, from the log-owned schema (no
-        # footer opened); legacy logs fall back to one footer inference
-        dtype = None
-        sch = self.read_schema(spark, upto)
-        if sch is not None:
-            for f in sch.fields:
-                if self._physical_name(f) == column:
-                    dtype = f.dataType
-                    break
-        if dtype is None:
-            probe = spark.read.parquet(
-                os.path.join(self.data_dir, todo[0])
-            ).schema
-            dtype = next(
-                (f.dataType for f in probe.fields if f.name == column), None
-            )
-        if dtype is None:
             return 0
         one_col = StructType([StructField(column, dtype, True)])
         gid = F.regexp_extract(
@@ -2464,11 +2264,16 @@ class TxTable:
             .join(F.broadcast(sizing), "g")
             .select(
                 "g",
+                # the k bit positions pmod(xxhash64(value, j), m), each
+                # group's own m joined in as a column
                 F.explode(
                     F.array(
-                        *self._bloom_positions(
-                            spark, F.col(column), F.col("m"), k
-                        )
+                        *[
+                            F.pmod(
+                                F.xxhash64(F.col(column), F.lit(j)), F.col("m")
+                            ).cast("long")
+                            for j in range(k)
+                        ]
                     )
                 ).alias("p"),
             )
@@ -2513,63 +2318,11 @@ class TxTable:
     def prune_groups_point(
         self, spark: SparkSession, column: str, value, version: int | None = None
     ) -> tuple[list[str], int]:
-        """Point-lookup planning: keep the live groups whose bloom
-        sidecar MAY contain ``value`` (groups without a sidecar are
-        never wrongly pruned — kept), composed with the zone-map range
-        check.  Probing hashes the value through the same JVM exprs the
-        builder used (one 1-row job per distinct (m, k) sizing)."""
-        import base64
-
-        from pyspark.sql import functions as F
-
-        upto = self.latest_version() if version is None else version
-        zone_kept, total = self.prune_groups(
-            column, lo=value, hi=value, version=upto
-        )
-        probe_cache: dict[tuple[int, int], list[int]] = {}
-        kept: list[str] = []
-        sch = self.read_schema(spark, upto)
-        vtype = None
-        if sch is not None and column in [f.name for f in sch.fields]:
-            vtype = sch[column].dataType
-        # sidecars are named by the stable PHYSICAL column name, so a
-        # renamed column keeps its index
-        phys = self._physical_map(upto).get(column, column)
-        for g in zone_kept:
-            try:
-                side = os.path.join(self._gpath(g), f"_bloom_{phys}.json")
-            except FileNotFoundError:
-                # clone group missing everywhere: planning never raises
-                # (pruning is an optimization) — keep it, so the SCAN
-                # raises the diagnostic naming the tried clone bases
-                kept.append(g)
-                continue
-            if not os.path.exists(side):
-                kept.append(g)
-                continue
-            with open(side) as fh:
-                idx = json.load(fh)
-            m, kk = int(idx["m"]), int(idx["k"])
-            if (m, kk) not in probe_cache:
-                lit = F.lit(value)
-                if vtype is not None:
-                    lit = lit.cast(vtype)
-                row = (
-                    spark.range(1)
-                    .select(*self._bloom_positions(spark, lit, m, kk))
-                    .collect()[0]
-                )
-                probe_cache[(m, kk)] = [int(v) for v in row]
-            bitmap = base64.b64decode(idx["bitmap"])
-            if all(
-                bitmap[p // 8] & (1 << (p % 8))
-                for p in probe_cache[(m, kk)]
-            ):
-                kept.append(g)
-        # prune_groups already replayed the log for this version — its
-        # total IS the live-group count; a second replay here would
-        # double the planning cost of every point lookup
-        return kept, total
+        """Point-lookup planning: the one-value case of
+        :meth:`prune_groups_points` — zone maps, then bloom sidecars,
+        with no Spark job.  Groups without a sidecar are never wrongly
+        pruned (kept).  Returns (kept groups, total live count)."""
+        return self.prune_groups_points(column, [value], version)
 
     def read_point(
         self, spark: SparkSession, column: str, value, version: int | None = None
@@ -2582,11 +2335,9 @@ class TxTable:
         groups, _total = self.prune_groups_point(
             spark, column, value, version=upto
         )
-        if not groups:
-            return self.read(spark, upto).filter(F.lit(False))
-        df = self._scan(spark, groups, upto)
-        df = self._apply_dvs(spark, df, self._replay(upto)[2])
-        return df.filter(F.col(column) == F.lit(value))
+        return self.read_groups(spark, groups, upto).filter(
+            F.col(column) == F.lit(value)
+        )
 
     def count_rows(
         self, spark: SparkSession, version: int | None = None

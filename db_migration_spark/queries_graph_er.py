@@ -386,24 +386,22 @@ ORACLES["archive_zip_scan"] = ORACLE_ARCHIVE_ZIP
 
 
 def q_merge_into_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Delta ``MERGE INTO`` analog over plain Parquet
-    (plans/upsert.merge_upsert — copy-on-write against the versioned
-    snapshot store): a customer-datom store partitioned by market
-    segment takes a patch transaction touching ONLY the BUILDING
-    partition (updates for most, retractions for every 10th customer);
-    untouched partitions carry over without paying the LWW window.  The
-    merged snapshot is read back and profiled per segment; the oracle
-    recomputes the post-merge state in closed form.  (Delta itself is
-    not installable in this sandbox — probed, STATUS.md — so the COW
-    seam IS the production path here.)"""
-    import shutil
-
-    from .plans import snapshots as SNAP
-    from .plans.upsert import merge_upsert
+    """The Delta ``MERGE INTO`` analog as a copy-on-write commit on the
+    transaction-log store (``TxTable.merge`` with the
+    ``eav.upsert_patches`` transform): a customer-datom store
+    partitioned by market segment takes a patch transaction touching
+    ONLY the BUILDING partition (updates for most, retractions for
+    every 10th customer); untouched partitions carry over without
+    paying the LWW window.  The merged version is read back and
+    profiled per segment; the oracle recomputes the post-merge state in
+    closed form.  (Delta itself is not installed — probed, STATUS.md —
+    so the txlog seam IS the production path.)"""
+    from .plans.txlog import TxTable
     from .queries_e2e import _fx
 
     root = _fx(sf_dir, "merge_store")
     shutil.rmtree(root, ignore_errors=True)
+    t = TxTable(root)
     cust = load_table(spark, sf_dir, "customer")
     k = F.col("c_custkey")
     base = cust.select(
@@ -414,7 +412,7 @@ def q_merge_into_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(True).alias("op"),
         F.col("c_mktsegment").alias("class"),
     )
-    SNAP.write_snapshot(base, root, label="base")
+    t.commit_overwrite(base)
     patches = (
         cust.filter(F.col("c_mktsegment") == "BUILDING")
         .select(
@@ -426,8 +424,10 @@ def q_merge_into_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("c_mktsegment").alias("class"),
         )
     )
-    merge_upsert(spark, root, patches, partition_col="class", label="merged")
-    merged = SNAP.read_snapshot(spark, root, label="merged")
+    merged_v = t.merge(
+        spark, eav.upsert_patches(patches, partition_col="class")
+    )
+    merged = t.read(spark, version=merged_v)
     return (
         merged.groupBy("class")
         .agg(

@@ -489,18 +489,19 @@ GROUP BY v.user_id
 def q_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming ingest INTO the versioned store: the event stream is
     drained availableNow through ``foreachBatch``, each micro-batch
-    MERGEd (plans/upsert.merge_upsert — the Delta MERGE INTO analog)
-    into a snapshot store seeded with the first quarter of the events.
-    Every batch commits a new snapshot version atomically, so a crash
-    between batches leaves a consistent store (the checkpointed source
-    offset + versioned sink is the exactly-once recipe without a
-    transaction log).  The final store is the LWW state per (user,
+    MERGEd (``TxTable.merge`` with the ``eav.upsert_patches`` transform
+    — the Delta MERGE INTO analog) into a transaction-log store seeded
+    with the early events.  Every batch commits one version atomically
+    under the txn identity ``(app, batch_id)``, so a crash between
+    batches leaves a consistent store and a replayed batch is a no-op
+    (checkpointed source offset + idempotent versioned sink is the
+    exactly-once recipe).  The final store is the LWW state per (user,
     event_type); the oracle recomputes it from the full table."""
     import re as _re
     import shutil
 
-    from .plans import snapshots as SNAP
-    from .plans.upsert import merge_upsert
+    from .operators.eav import upsert_patches
+    from .plans.txlog import TxTable
     from .queries_e2e import _fx
 
     root = _fx(sf_dir, "stream_merge_store")
@@ -517,12 +518,14 @@ def q_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     cut = 2000
-    SNAP.write_snapshot(to_datoms(ev.filter(F.col("event_id") < cut)), root)
+    t = TxTable(root)
+    t.commit_overwrite(to_datoms(ev.filter(F.col("event_id") < cut)))
 
     def sink(batch_df: DataFrame, batch_id: int) -> None:
-        merge_upsert(
-            spark, root, to_datoms(batch_df), partition_col=None,
-            label=f"b{batch_id}",
+        t.merge(
+            spark,
+            upsert_patches(to_datoms(batch_df)),
+            txn=("stream_merge", batch_id),
         )
 
     ckpt = f"/tmp/dbm_spark_ckpt/stream_merge_{_re.sub(r'[^A-Za-z0-9]', '_', sf_dir)}"
@@ -536,7 +539,7 @@ def q_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination(300)
-    final = SNAP.read_snapshot(spark, root)
+    final = t.read(spark)
     return (
         final.groupBy("a")
         .agg(

@@ -1159,20 +1159,20 @@ SELECT (SELECT count(*) FROM edges) AS n_edges,
 
 
 # ---------------------------------------------------------------------------
-# S9 time travel: the versioned snapshot sink under the oracle gate
+# S9 time travel on the versioned store, under the oracle gate
 # ---------------------------------------------------------------------------
 
 
 def q_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VERSION AS OF over the plain-Parquet snapshot store
-    (plans/snapshots.py — the reference's dated-backup analog,
-    runcommand.py:221-255): write a base version, write a patched
-    version ('en' docs grow one char), read BOTH versions back by label
-    and compare per-lang — the time-travel read path, end to end, with a
-    DuckDB oracle recomputing both versions from the live table."""
+    """VERSION AS OF over the transaction-log store (``TxTable`` — the
+    reference's dated-backup analog, runcommand.py:221-255): overwrite
+    a base version, overwrite a patched version ('en' docs grow one
+    char), read BOTH versions back with ``read(version=)`` and compare
+    per-lang — the time-travel read path, end to end, with a DuckDB
+    oracle recomputing both versions from the live table."""
     import shutil
 
-    from .plans import snapshots as SNAP
+    from .plans.txlog import TxTable
     from .queries_e2e import _fx
 
     root = _fx(sf_dir, "ttravel_store")
@@ -1186,10 +1186,11 @@ def q_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("n_chars")
         ),
     )
-    SNAP.write_snapshot(docs, root, label="base")
-    SNAP.write_snapshot(patched, root, label="patched")
-    v0 = SNAP.read_snapshot(spark, root, label="base")
-    v1 = SNAP.read_snapshot(spark, root, label="patched")
+    t = TxTable(root)
+    base_v = t.commit_overwrite(docs)
+    patched_v = t.commit_overwrite(patched)
+    v0 = t.read(spark, version=base_v)
+    v1 = t.read(spark, version=patched_v)
     return (
         v0.groupBy("lang")
         .agg(

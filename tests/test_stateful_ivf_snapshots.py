@@ -1,4 +1,5 @@
-"""Stateful streaming profiles, IVF ANN, versioned snapshots."""
+"""Stateful streaming profiles, IVF ANN, copy-on-write upserts on the
+versioned store."""
 
 from __future__ import annotations
 
@@ -8,7 +9,6 @@ from pyspark.sql import functions as F
 
 from db_migration_spark.catalog import load_table
 from db_migration_spark.operators import similarity
-from db_migration_spark.plans import snapshots
 from db_migration_spark.streaming.stateful import user_profiles
 
 TS = datetime.datetime
@@ -95,27 +95,11 @@ def test_ivf_assignment_covers_corpus(spark):
     assert 2 <= n_lists <= 8
 
 
-def test_snapshots_roundtrip(spark, tmp_path):
-    root = str(tmp_path / "snaps")
-    df1 = spark.createDataFrame([(1, "a")], "id LONG, v STRING")
-    df2 = spark.createDataFrame([(1, "a"), (2, "b")], "id LONG, v STRING")
-    v0 = snapshots.write_snapshot(df1, root, label="initial")
-    v1 = snapshots.write_snapshot(df2, root, label="after-patch")
-    assert (v0, v1) == (0, 1)
-    # re-entrancy: same label again is a no-op returning the old version
-    assert snapshots.write_snapshot(df1, root, label="initial") == 0
-    assert len(snapshots.list_snapshots(root)) == 2
-    assert snapshots.read_snapshot(spark, root, version=0).count() == 1
-    assert snapshots.read_snapshot(spark, root).count() == 2  # latest
-    assert (
-        snapshots.read_snapshot(spark, root, label="after-patch").count() == 2
-    )
+def test_upsert_patches_copy_on_write(spark, tmp_path):
+    from db_migration_spark.operators.eav import upsert_patches
+    from db_migration_spark.plans.txlog import TxTable
 
-
-def test_merge_upsert_copy_on_write(spark, tmp_path):
-    from db_migration_spark.plans import upsert
-
-    root = str(tmp_path / "store")
+    t = TxTable(str(tmp_path / "store"))
     base = spark.createDataFrame(
         [
             (1, "name", "old", TS(2020, 1, 1), True, "Gene"),
@@ -123,24 +107,21 @@ def test_merge_upsert_copy_on_write(spark, tmp_path):
         ],
         "e LONG, a STRING, v STRING, tx TIMESTAMP, op BOOLEAN, class STRING",
     )
-    snapshots.write_snapshot(base, root, label="v0")
+    assert t.commit_overwrite(base) == 0
     patches = spark.createDataFrame(
         [
             (1, "name", "new", TS(2020, 2, 1), True, "Gene"),
         ],
         "e LONG, a STRING, v STRING, tx TIMESTAMP, op BOOLEAN, class STRING",
     )
-    v = upsert.merge_upsert(spark, root, patches, partition_col="class")
+    v = t.merge(spark, upsert_patches(patches, partition_col="class"))
     assert v == 1
-    latest = {
-        (r["e"], r["a"]): r["v"]
-        for r in snapshots.read_snapshot(spark, root).collect()
-    }
+    latest = {(r["e"], r["a"]): r["v"] for r in t.read(spark).collect()}
     assert latest == {(1, "name"): "new", (2, "name"): "keep"}
     # time travel: version 0 still shows the old fact
     v0 = {
         (r["e"], r["a"]): r["v"]
-        for r in snapshots.read_snapshot(spark, root, version=0).collect()
+        for r in t.read(spark, version=0).collect()
     }
     assert v0[(1, "name")] == "old"
 
@@ -185,12 +166,13 @@ def test_kmeans_refine_improves_or_holds_recall(spark):
     assert max(sizes) < emb.count()  # not collapsed to one list
 
 
-def test_merge_upsert_null_partition_rows_survive(spark, tmp_path):
+def test_upsert_patches_null_partition_rows_survive(spark, tmp_path):
     """Base rows whose partition_col is NULL must carry over (isin() is
     NULL for NULL input, which used to drop them from both sides)."""
-    from db_migration_spark.plans import upsert
+    from db_migration_spark.operators.eav import upsert_patches
+    from db_migration_spark.plans.txlog import TxTable
 
-    root = str(tmp_path / "store_null")
+    t = TxTable(str(tmp_path / "store_null"))
     base = spark.createDataFrame(
         [
             (1, "name", "old", TS(2020, 1, 1), True, "Gene"),
@@ -198,16 +180,13 @@ def test_merge_upsert_null_partition_rows_survive(spark, tmp_path):
         ],
         "e LONG, a STRING, v STRING, tx TIMESTAMP, op BOOLEAN, class STRING",
     )
-    snapshots.write_snapshot(base, root, label="v0")
+    t.commit_overwrite(base)
     patches = spark.createDataFrame(
         [(1, "name", "new", TS(2020, 2, 1), True, "Gene")],
         "e LONG, a STRING, v STRING, tx TIMESTAMP, op BOOLEAN, class STRING",
     )
-    upsert.merge_upsert(spark, root, patches, partition_col="class")
-    latest = {
-        (r["e"], r["a"]): r["v"]
-        for r in snapshots.read_snapshot(spark, root).collect()
-    }
+    t.merge(spark, upsert_patches(patches, partition_col="class"))
+    latest = {(r["e"], r["a"]): r["v"] for r in t.read(spark).collect()}
     assert latest == {
         (1, "name"): "new",
         (3, "name"): "nullpart",  # NULL-partition row survived

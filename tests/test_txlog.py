@@ -568,8 +568,9 @@ def test_read_changes_across_apply_cdc_equals_snapshot_diff(spark, tmp_path):
 
 
 def test_constraint_violation_leaves_no_orphan_dirs(spark, tmp_path):
-    """A merge-on-read writer (apply_cdc / merge_into / update_where)
-    that trips a CHECK constraint must raise BEFORE any on-disk write:
+    """A merge-on-read writer (apply_cdc / merge_into / update_where /
+    replace_where) that trips a CHECK constraint must raise BEFORE any
+    on-disk write:
     no uncommitted DV or delta group directories may be left behind in
     data_dir."""
     import os
@@ -606,7 +607,125 @@ def test_constraint_violation_leaves_no_orphan_dirs(spark, tmp_path):
     with pytest.raises(ConstraintViolation):
         t.update_where(spark, F.col("k") == 1, {"v": F.lit(-1)})
     assert dirs() == before
+    with pytest.raises(ConstraintViolation):
+        t.replace_where(
+            spark,
+            F.col("k") == 1,
+            spark.range(1).select(
+                F.lit(1).alias("k"), F.lit(-5).alias("v")
+            ),
+        )
+    assert dirs() == before
     assert t.read(spark).count() == 10
+
+
+# the seven verbs on the shared optimistic-commit core, each applied to
+# _df(0, 10), with the {k: v} state it must leave
+_CORE_VERBS = {
+    "delete_where": (
+        lambda spark, t, **kw: t.delete_where(spark, F.col("k") == 1, **kw),
+        {k: 2 * k for k in range(10) if k != 1},
+    ),
+    "update_where": (
+        lambda spark, t, **kw: t.update_where(
+            spark, F.col("k") == 1, {"v": F.lit(100)}, **kw
+        ),
+        {**{k: 2 * k for k in range(10)}, 1: 100},
+    ),
+    "merge_into": (
+        lambda spark, t, **kw: t.merge_into(
+            spark, _df(spark, 5, 15), "k", **kw
+        ),
+        {k: 2 * k for k in range(15)},
+    ),
+    "apply_cdc": (
+        lambda spark, t, **kw: t.apply_cdc(
+            spark,
+            spark.createDataFrame(
+                [(1, 0, "delete"), (50, 500, "upsert")],
+                "k long, v long, op string",
+            ),
+            "k",
+            **kw,
+        ),
+        {**{k: 2 * k for k in range(10) if k != 1}, 50: 500},
+    ),
+    "replace_where": (
+        lambda spark, t, **kw: t.replace_where(
+            spark, F.col("k") < 3, _df(spark, 0, 2), **kw
+        ),
+        {k: 2 * k for k in range(10) if k != 2},
+    ),
+    "commit_overwrite": (
+        lambda spark, t, **kw: t.commit_overwrite(_df(spark, 100, 105), **kw),
+        {k: 2 * k for k in range(100, 105)},
+    ),
+    "merge": (
+        lambda spark, t, **kw: t.merge(
+            spark, lambda cur: cur.filter(F.col("k") > 4), **kw
+        ),
+        {k: 2 * k for k in range(5, 10)},
+    ),
+}
+
+
+def _unreferenced_groups(t):
+    """g-/dv- dirs that no commit ever published (staged leftovers)."""
+    import os
+
+    referenced = set()
+    for c in t.history():
+        referenced.update(c.get("add", []))
+        if c.get("dv"):
+            referenced.add(c["dv"]["group"])
+    return sorted(
+        d
+        for d in os.listdir(t.data_dir)
+        if d.startswith(("g-", "dv-")) and d not in referenced
+    )
+
+
+@pytest.mark.parametrize("verb", sorted(_CORE_VERBS))
+def test_lost_race_commits_once_and_cleans_staged_groups(
+    spark, tmp_path, monkeypatch, verb
+):
+    """Every verb on the commit core, losing ONE publish race, must
+    retry, land exactly one commit, and leave no staged group behind."""
+    run, want = _CORE_VERBS[verb]
+    t = TxTable(str(tmp_path / "t"))
+    t.commit_append(_df(spark, 0, 10))
+    orig = t._publish
+    calls = {"n": 0}
+
+    def lose_once(version, commit):
+        calls["n"] += 1
+        if calls["n"] == 1:
+            raise CommitConflict(f"version {version} already committed")
+        return orig(version, commit)
+
+    monkeypatch.setattr(t, "_publish", lose_once)
+    assert run(spark, t) == 1
+    assert calls["n"] == 2 and t.latest_version() == 1
+    assert {r.k: r.v for r in t.read(spark).collect()} == want
+    assert _unreferenced_groups(t) == []
+
+
+@pytest.mark.parametrize("verb", sorted(_CORE_VERBS))
+def test_exhausted_retries_clean_staged_groups(
+    spark, tmp_path, monkeypatch, verb
+):
+    run, _want = _CORE_VERBS[verb]
+    t = TxTable(str(tmp_path / "t"))
+    t.commit_append(_df(spark, 0, 10))
+
+    def always_lose(version, commit):
+        raise CommitConflict(f"version {version} already committed")
+
+    monkeypatch.setattr(t, "_publish", always_lose)
+    with pytest.raises(CommitConflict, match="lost 2 races"):
+        run(spark, t, max_retries=2)
+    assert t.latest_version() == 0
+    assert _unreferenced_groups(t) == []
 
 
 def test_add_constraint_rejects_existing_violations(spark, tmp_path):

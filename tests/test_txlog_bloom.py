@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from db_migration_spark.plans.txlog import TxTable
@@ -71,6 +72,51 @@ def test_bloom_composes_with_deletion_vectors(spark, tmp_path):
     t.delete_where(spark, F.col("k") == 5)
     assert t.read_point(spark, "k", 5).count() == 0
     assert t.read_point(spark, "k", 9).count() == 1
+
+
+def test_bloom_index_rejects_non_integer_column(spark, tmp_path):
+    """Bloom sidecars index long/int columns only (the planner's
+    numpy probe hasher reproduces xxhash64 for those widths alone): a
+    string column is refused up front, naming the column and its type,
+    and no sidecar is written."""
+    t = _build(spark, tmp_path)
+    with pytest.raises(ValueError, match=r"'v'.*string"):
+        t.add_bloom_index(spark, "v")
+    assert not any(
+        f.startswith("_bloom_")
+        for g in t.active_groups()
+        for f in os.listdir(os.path.join(t.data_dir, g))
+    )
+
+
+def test_point_planning_launches_no_spark_jobs(spark, tmp_path):
+    """Point planning is metadata only: ``prune_groups_point`` on a
+    bloom-indexed int key starts ZERO Spark jobs (counted by the status
+    tracker under a dedicated job group) and plans exactly what the
+    batched ``prune_groups_points`` plans for the same single value."""
+    t = _build(spark, tmp_path)
+    t.add_bloom_index(spark, "k")
+    t.commit_append(_mk(spark, [(999_999, "late")]))  # one unindexed group
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    tracker = sc.statusTracker()
+    group = "txlog-point-planning"
+    bus.waitUntilEmpty()
+    before = len(tracker.getJobIdsForGroup(group))
+    sc.setJobGroup(group, group)
+    try:
+        plans = {
+            v: t.prune_groups_point(spark, "k", v)
+            for v in (5, 6, 1003, 999_999, 10_000_000)
+        }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    bus.waitUntilEmpty()
+    assert len(tracker.getJobIdsForGroup(group)) == before == 0
+    for v, got in plans.items():
+        assert got == t.prune_groups_points("k", [v])
+    assert len(plans[5][0]) < N_GROUPS + 1  # the bloom did prune
 
 
 def test_sidecar_invisible_to_scans_and_stats(spark, tmp_path):
