@@ -1457,8 +1457,11 @@ def descent_mv_recluster(
 
     vt, kt, lt = TxTable(vec_root), TxTable(knn_root), TxTable(lr_root)
     rt = TxTable(os.path.join(os.path.dirname(vec_root), "reps"))
-    allv = vt.read(spark).select("vec_id", "embedding")
     n = vt.count_rows(spark)
+    if n == 0:
+        # no live vectors: no seeds to quantize around, nothing to cluster
+        return
+    allv = vt.read(spark).select("vec_id", "embedding")
     if target_groups is None:
         # scale-adaptive group count: ~650 vector rows (≈ a couple
         # hundred KB at dim 64) per group at toy scale so pruning has

@@ -23,6 +23,10 @@ from pyspark.sql import SparkSession
 # long as it is not too small, so we set a high ceiling and let AQE shrink.
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
+# The engine's root: the directory holding db_migration_spark/ and the
+# Python worker entry pyspark_graft_worker.py.
+ENGINE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     app_name: str = "db-migration-spark",
@@ -45,6 +49,12 @@ def get_spark(
     * ``maxPartitionBytes`` 128 MiB: at 100 TB this yields ~800k input
       splits — large enough tasks to amortize scheduling, small enough to
       fit executor memory.
+    * Python workers run the engine's worker entry
+      (``pyspark_graft_worker``), which keeps the zip import caches across
+      tasks instead of re-reading ``pyspark.zip`` before each one
+      (~0.25 CPU-s per task on CPython 3.11); the engine root goes on
+      the executors' ``PYTHONPATH`` so the daemon can import it from any
+      working directory.
     """
     cpus = DEFAULT_CPUS
     # Scale-dependent knobs are ENV-parameterised with local defaults
@@ -86,6 +96,8 @@ def get_spark(
         .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        .config("spark.python.worker.module", "pyspark_graft_worker")
+        .config("spark.executorEnv.PYTHONPATH", ENGINE_ROOT)
     )
     if master:
         builder = builder.master(master)

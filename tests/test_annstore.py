@@ -678,6 +678,32 @@ def test_descent_mv_bootstrap_crash_replay_heals(spark, tmp_path):
     assert TxTable(vec_root).count_rows(spark) == b0.count()
 
 
+def test_descent_mv_recluster_noops_on_empty_corpus(spark, tmp_path):
+    """With zero live vectors there are no IVF seeds: the recluster
+    returns without a commit instead of indexing an empty seed chain."""
+    from db_migration_spark.queries_annstore import (
+        descent_mv_recluster,
+        descent_mv_refresh,
+    )
+
+    root = str(tmp_path / "empty")
+    vec_root, knn_root = root + "/vec", root + "/knn"
+    os.makedirs(root, exist_ok=True)
+    b0 = (
+        load_table(spark, SF, "embeddings")
+        .select("vec_id", "embedding")
+        .filter(F.col("vec_id") < 40)
+    )
+    descent_mv_refresh(spark, vec_root, knn_root, root + "/stats.jsonl", b0, 0)
+    vt, kt = TxTable(vec_root), TxTable(knn_root)
+    vt.delete_where(spark, F.lit(True))
+    assert vt.count_rows(spark) == 0
+    before = (vt.latest_version(), kt.latest_version())
+    descent_mv_recluster(spark, vec_root, knn_root, root + "/lr")
+    assert (vt.latest_version(), kt.latest_version()) == before
+    assert TxTable(root + "/reps").latest_version() == -1
+
+
 def test_descent_serve_paths_agree(spark):
     """The size-gated serve planner never changes the answer: the
     zone-map-pruned hop loop and the in-memory lazy plan serve the
