@@ -36,6 +36,21 @@ At 100 TB the log is tiny (KBs per commit) and the data plane is
 untouched Parquet: planning cost is one log replay + an explicit file
 list handed to the scan, exactly the Delta/Iceberg read path.
 
+One of each, like the reference's single transactor:
+
+* ONE commit loop (``_commit``) under every writer — appends, DML,
+  rewrites, OPTIMIZE, RESTORE, constraints and ALTERs.  A writer's
+  attempt validates at a pinned read version and returns the commit's
+  fields; the core probes the txn identity, publishes, and removes every
+  group it staged unless the commit published it.
+* ONE staging path (``_write_groups``) for multi-group writes
+  (partitioned append, clustered OPTIMIZE): the frame is written once
+  under a ``.part-`` dir, then each leaf is promoted to its own group.
+* ONE log replay (``_state``): live groups, zone maps, deletion vectors,
+  schema, constraints, txn map and retired physical names are one
+  checkpoint-seeded fold over the commits, and a checkpoint is exactly
+  that fold's state.
+
 Round-4 extensions (same public-knowledge protocol surface):
 
 * **Zone maps** — each commit records per-file-group column min/max
@@ -283,32 +298,15 @@ class TxTable:
         """Live CHECK constraints at ``upto`` (default latest):
         {name: sql_expr} — checkpoint-seeded, O(commits since
         checkpoint)."""
-        if upto is None:
-            upto = self.latest_version()
-        base, start = self._checkpoint_base(upto, "constraints")
-        cons: dict[str, str] = dict(base or {})
-        for v in self._versions():
-            if v < start:
-                continue
-            if v > upto:
-                break
-            c = self._read_commit(v)
-            if c.get("op") == "set_constraint":
-                cons[c["constraint"]["name"]] = c["constraint"]["expr"]
-            elif c.get("op") == "drop_constraint":
-                cons.pop(c["constraint"]["name"], None)
-            elif c.get("op") == "clone" and c.get("constraints"):
-                cons.update(c["constraints"])
-        return cons
+        return self._state(upto)["constraints"]
 
-    def _check_constraints(self, df: DataFrame) -> None:
+    def _check_constraints(self, df: DataFrame, cons: dict) -> None:
         """Raise :class:`ConstraintViolation` if any row of ``df``
-        evaluates a live constraint to FALSE (NULL passes — the SQL
+        evaluates one of ``cons`` to FALSE (NULL passes — the SQL
         CHECK contract).  One combined filter+count job for all
         constraints."""
         from pyspark.sql import functions as F
 
-        cons = self.constraints()
         if not cons:
             return
         violating = None
@@ -332,13 +330,11 @@ class TxTable:
         metadata-only log entry.  Every subsequent write — append,
         overwrite, merge, update, merge-into delta — is validated
         against the live constraint set before its commit publishes."""
-        for _ in range(max_retries):
-            read_v = self.latest_version()
-            if read_v >= 0:
-                live = self.read(spark, read_v)
-                from pyspark.sql import functions as F
+        from pyspark.sql import functions as F
 
-                n = live.filter(
+        def attempt(read_v, _staged):
+            if read_v >= 0:
+                n = self.read(spark, read_v).filter(
                     ~F.coalesce(F.expr(expr), F.lit(True))
                 ).count()
                 if n:
@@ -346,26 +342,34 @@ class TxTable:
                         f"cannot add {name!r}: {n} existing rows violate "
                         f"({expr})"
                     )
-            try:
-                return self._try_commit(
-                    "set_constraint", [], [], read_v + 1,
-                    constraint={"name": name, "expr": expr},
-                )
-            except CommitConflict:
-                continue  # re-validate against the advanced snapshot
-        raise CommitConflict(f"add_constraint lost {max_retries} races")
+            return {"constraint": {"name": name, "expr": expr}}
+
+        return self._commit("set_constraint", attempt, max_retries)
 
     # -- ALTER TABLE column surface (metadata-only, column mapping) ----------
 
-    def _constraint_mentions(
-        self, column: str, upto: int | None = None
-    ) -> list[str]:
+    def _alter_schema(self, spark: SparkSession, read_v: int, column: str):
+        """The schema at ``read_v`` of an ALTER on ``column``: it must
+        exist, and no live CHECK constraint may reference it."""
         import re as _re
 
+        sch = self.read_schema(spark, read_v)
+        if sch is None:
+            raise ValueError(
+                f"cannot alter column {column!r} of an empty table"
+            )
+        if column not in [f.name for f in sch.fields]:
+            raise ValueError(f"no column named {column!r}")
         pat = _re.compile(rf"\b{_re.escape(column)}\b")
-        return sorted(
-            n for n, e in self.constraints(upto=upto).items() if pat.search(e)
+        cons = sorted(
+            n for n, e in self.constraints(read_v).items() if pat.search(e)
         )
+        if cons:
+            raise ValueError(
+                f"column {column!r} is referenced by constraints {cons}; "
+                f"drop them first"
+            )
+        return sch
 
     def alter_rename_column(
         self, spark: SparkSession, old: str, new: str, max_retries: int = 20
@@ -378,51 +382,26 @@ class TxTable:
         the parquet write; time travel to a pre-rename version returns
         the old name (each version's schema is its own).
 
-        The whole schema derivation (including the constraint guard)
-        re-runs INSIDE the optimistic loop, PINNED to one read version:
-        ``read_v`` is snapshotted first, schema and constraints are
-        derived AT that version, and the commit targets ``read_v + 1``
-        — so any commit landing between the snapshot and the publish
-        surfaces as a CommitConflict and the attempt rebases, never
-        republishing a stale schema at a later free slot (the
-        add_constraint pattern)."""
+        The schema derivation (including the constraint guard) runs at
+        the commit core's pinned read version, so a commit landing
+        before the publish is a conflict that re-derives it — never a
+        stale schema republished at a later free slot."""
         from pyspark.sql.types import StructField, StructType
 
-        for _ in range(max_retries):
-            read_v = self.latest_version()
-            sch = self.read_schema(spark, read_v) if read_v >= 0 else None
-            if sch is None:
-                raise ValueError("cannot rename a column of an empty table")
-            names = [f.name for f in sch.fields]
-            if old not in names:
-                raise ValueError(f"no column named {old!r}")
-            if new in names:
+        def attempt(read_v, _staged):
+            sch = self._alter_schema(spark, read_v, old)
+            if new in [f.name for f in sch.fields]:
                 raise ValueError(f"column {new!r} already exists")
-            cons = self._constraint_mentions(old, upto=read_v)
-            if cons:
-                raise ValueError(
-                    f"column {old!r} is referenced by constraints {cons}; "
-                    f"drop them first"
-                )
             fields = []
             for f in sch.fields:
                 if f.name == old:
                     md = dict(f.metadata or {})
                     md["physical"] = self._physical_name(f)
-                    fields.append(
-                        StructField(new, f.dataType, f.nullable, md)
-                    )
-                else:
-                    fields.append(f)
-            new_schema = StructType(fields)
-            try:
-                return self._try_commit(
-                    "alter_rename", [], [], read_v + 1,
-                    schema_json=new_schema.json(),
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"rename lost {max_retries} races")
+                    f = StructField(new, f.dataType, f.nullable, md)
+                fields.append(f)
+            return {"schema": json.loads(StructType(fields).json())}
+
+        return self._commit("alter_rename", attempt, max_retries)
 
     def alter_drop_column(
         self, spark: SparkSession, column: str, max_retries: int = 20
@@ -431,77 +410,58 @@ class TxTable:
         leaves the log schema, so every subsequent read projects it
         away at the scan (the bytes stay in place for time travel — a
         pre-drop version still serves the column).  Rejected while a
-        CHECK constraint references it.  Like rename, the schema
-        derivation re-runs inside the retry loop pinned to a snapshot
-        version (``read_v``), and the commit targets ``read_v + 1`` so
-        an intervening commit is a CommitConflict, not a silent stale
-        republish."""
+        CHECK constraint references it.  Like rename, the schema is
+        derived at the commit core's pinned read version."""
         from pyspark.sql.types import StructType
 
-        for _ in range(max_retries):
-            read_v = self.latest_version()
-            sch = self.read_schema(spark, read_v) if read_v >= 0 else None
-            if sch is None:
-                raise ValueError("cannot drop a column of an empty table")
-            names = [f.name for f in sch.fields]
-            if column not in names:
-                raise ValueError(f"no column named {column!r}")
-            if len(names) == 1:
+        def attempt(read_v, _staged):
+            sch = self._alter_schema(spark, read_v, column)
+            if len(sch.fields) == 1:
                 raise ValueError("cannot drop the only column")
-            cons = self._constraint_mentions(column, upto=read_v)
-            if cons:
-                raise ValueError(
-                    f"column {column!r} is referenced by constraints "
-                    f"{cons}; drop them first"
-                )
-            phys = next(
-                self._physical_name(f)
-                for f in sch.fields
-                if f.name == column
-            )
-            new_schema = StructType(
-                [f for f in sch.fields if f.name != column]
-            )
-            try:
-                return self._try_commit(
-                    "alter_drop", [], [], read_v + 1,
-                    schema_json=new_schema.json(),
-                    # the physical name is retired FOREVER: a later
-                    # re-add of the same logical name must map to a
-                    # fresh physical name or old file bytes resurrect
-                    dropped={"logical": column, "physical": phys},
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"drop column lost {max_retries} races")
+            phys = self._physical_name(sch[column])
+            return {
+                "schema": json.loads(
+                    StructType(
+                        [f for f in sch.fields if f.name != column]
+                    ).json()
+                ),
+                # the physical name is retired FOREVER: a later re-add
+                # of the same logical name must map to a fresh physical
+                # name or old file bytes resurrect
+                "dropped": {"logical": column, "physical": phys},
+            }
+
+        return self._commit("alter_drop", attempt, max_retries)
 
     def drop_constraint(self, name: str, max_retries: int = 20) -> int:
-        if name not in self.constraints():
-            raise ValueError(f"no constraint named {name!r}")
-        for _ in range(max_retries):
-            try:
-                return self._try_commit(
-                    "drop_constraint", [], [], self.latest_version() + 1,
-                    constraint={"name": name},
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"drop_constraint lost {max_retries} races")
+        def attempt(read_v, _staged):
+            if name not in self.constraints(read_v):
+                raise ValueError(f"no constraint named {name!r}")
+            return {"constraint": {"name": name}}
 
-    def _replay(self, upto: int) -> tuple[list[str], dict, list[dict]]:
-        """Replay commits 0..upto → (live groups, {group: zone-map
-        stats}, live deletion vectors).
+        return self._commit("drop_constraint", attempt, max_retries)
 
-        Starts from the newest checkpoint ≤ ``upto`` when one exists, so
-        planning on a long-lived table is O(commits since checkpoint) —
-        the Delta/Iceberg checkpoint read path — and falls back to a full
-        replay otherwise.  A deletion vector stays live while ANY group
-        it covers is live; a rewrite commit that removes every covered
-        group retires it (the rewrite read through the DV, so the new
-        files already exclude the deleted rows)."""
-        active: list[str] = []
-        stats: dict = {}
-        dvs: list[dict] = []
+    def _state(self, upto: int | None = None) -> dict:
+        """The ONE log replay: commits 0..``upto`` (default latest)
+        folded into every log-derived lookup — ``active`` (live groups),
+        ``stats`` (their zone maps), ``dvs`` (live deletion vectors),
+        ``schema``, ``constraints``, ``txns`` ({app: {str(batch):
+        version}}) and ``dropped`` (physical names ALTER DROP retired).
+        ``checkpoint()`` writes exactly this dict.
+
+        Starts from the newest checkpoint ≤ ``upto`` when it records
+        every key, so lookups on a long-lived table are O(commits since
+        checkpoint) — the Delta/Iceberg checkpoint read path; an older
+        checkpoint lacking a key falls back to a full replay.  A
+        deletion vector stays live while ANY group it covers is live; a
+        rewrite commit that removes every covered group retires it (the
+        rewrite read through the DV, so the new files already exclude
+        the deleted rows)."""
+        upto = self.latest_version() if upto is None else upto
+        s: dict = {
+            "active": [], "stats": {}, "dvs": [], "schema": None,
+            "constraints": {}, "txns": {}, "dropped": [],
+        }
         start = 0
         cps = [v for v in self._checkpoint_versions() if v <= upto]
         if cps:
@@ -509,10 +469,9 @@ class TxTable:
                 os.path.join(self.log_dir, f"{cps[-1]:020d}.checkpoint.json")
             ) as fh:
                 snap = json.load(fh)
-            active = list(snap["active"])
-            stats = dict(snap.get("stats", {}))
-            dvs = list(snap.get("dvs", []))
-            start = cps[-1] + 1
+            if set(s) <= set(snap):
+                s = {k: snap[k] for k in s}
+                start = cps[-1] + 1
         for v in self._versions():
             if v < start:
                 continue
@@ -520,14 +479,14 @@ class TxTable:
                 break
             c = self._read_commit(v)
             removed = set(c.get("remove", []))
-            active = [g for g in active if g not in removed]
-            active.extend(c.get("add", []))
-            stats.update(c.get("stats", {}))
+            s["active"] = [g for g in s["active"] if g not in removed]
+            s["active"].extend(c.get("add", []))
+            s["stats"].update(c.get("stats", {}))
             if c.get("dv"):
-                dvs.append(dict(c["dv"]))
+                s["dvs"].append(dict(c["dv"]))
             if c.get("drop_dvs"):  # RESTORE retires post-target DVs
                 dead = set(c["drop_dvs"])
-                dvs = [d for d in dvs if d["group"] not in dead]
+                s["dvs"] = [d for d in s["dvs"] if d["group"] not in dead]
             if c.get("re_add_dvs"):
                 # RESTORE re-asserts the target's live DVs: a replay
                 # seeded from a checkpoint taken AFTER the DVs retired
@@ -537,11 +496,33 @@ class TxTable:
                 # Replace-by-group so a full replay (which still has
                 # them) doesn't double-count.
                 back = {d["group"]: dict(d) for d in c["re_add_dvs"]}
-                dvs = [d for d in dvs if d["group"] not in back]
-                dvs.extend(back.values())
-        live = set(active)
-        dvs = [d for d in dvs if live.intersection(d.get("covers", []))]
-        return active, {g: stats.get(g, {}) for g in active}, dvs
+                s["dvs"] = [d for d in s["dvs"] if d["group"] not in back]
+                s["dvs"].extend(back.values())
+            if "schema" in c:
+                s["schema"] = c["schema"]
+            con = c.get("constraint")
+            if c.get("op") == "set_constraint":
+                s["constraints"][con["name"]] = con["expr"]
+            elif c.get("op") == "drop_constraint":
+                s["constraints"].pop(con["name"], None)
+            s["constraints"].update(c.get("constraints") or {})  # clone
+            if c.get("txn"):
+                t = c["txn"]
+                s["txns"].setdefault(t["app"], {})[str(t["batch"])] = v
+            if c.get("dropped"):
+                s["dropped"].append(c["dropped"]["physical"])
+        live = set(s["active"])
+        s["dvs"] = [
+            d for d in s["dvs"] if live.intersection(d.get("covers", []))
+        ]
+        s["stats"] = {g: s["stats"].get(g, {}) for g in s["active"]}
+        return s
+
+    def _replay(self, upto: int) -> tuple[list[str], dict, list[dict]]:
+        """(live groups, {group: zone-map stats}, live deletion vectors)
+        at ``upto`` — the file state of :meth:`_state`."""
+        s = self._state(upto)
+        return s["active"], s["stats"], s["dvs"]
 
     def active_groups(self, version: int | None = None) -> list[str]:
         """Replay the log to ``version`` → the live data file groups."""
@@ -632,16 +613,14 @@ class TxTable:
         upto = self.latest_version() if version is None else version
         if upto < 0:
             raise ValueError(f"cannot clone empty table {self.root}")
-        active, stats, dvs = self._replay(upto)
-        schema = self.table_schema_json(upto)
-        cons = self.constraints(upto=upto)
+        st = self._state(upto)
         dest = TxTable(dest_root)
         if dest._versions():
             raise ValueError(f"clone target {dest_root} is not empty")
         commit = {
             "version": 0,
             "op": "clone",
-            "add": list(active),
+            "add": st["active"],
             "remove": [],
             "committed_at": time.strftime(
                 "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
@@ -650,18 +629,18 @@ class TxTable:
             "source": os.path.abspath(self.root),
             "source_version": upto,
             "bases": [os.path.abspath(self.data_dir), *self._base_dirs()],
-            "stats": {g: stats.get(g, {}) for g in active},
+            "stats": st["stats"],
         }
-        if dvs:
-            commit["re_add_dvs"] = [dict(d) for d in dvs]
-        if schema is not None:
-            commit["schema"] = schema
-        if cons:
+        if st["dvs"]:
+            commit["re_add_dvs"] = st["dvs"]
+        if st["schema"] is not None:
+            commit["schema"] = st["schema"]
+        if st["constraints"]:
             # carried IN commit 0 (not as follow-up commits): the clone
             # is fully formed or absent — a crash or a racing writer
             # between commits can never leave a clone that silently
             # dropped the source's CHECK constraints
-            commit["constraints"] = dict(cons)
+            commit["constraints"] = st["constraints"]
         dest._publish(0, commit)
         return dest
 
@@ -672,12 +651,23 @@ class TxTable:
 
     # -- writes -------------------------------------------------------------
 
-    def _write_group(self, df: DataFrame) -> tuple[str, dict]:
-        """Write a new immutable uuid-named file group; return its relative
-        name and the zone-map stats harvested from the parquet footers
-        just written (no second data pass — the row-group min/max already
+    def _write_groups(
+        self, df: DataFrame, staged: list, split=None
+    ) -> dict:
+        """Write ``df`` as new immutable uuid-named file groups; return
+        {group: zone-map stats} harvested from the parquet footers just
+        written (no second data pass — the row-group min/max already
         exist; this is how Delta/Iceberg collect file stats at write).
-        Not yet visible — visibility comes from the log commit."""
+        Not yet visible — visibility comes from the log commit.
+
+        ``split=None`` writes one group.  Otherwise — the ONE staging
+        path — the frame is written ONCE under a ``.part-`` staging dir,
+        ``partitionBy(*split)``, and every leaf partition dir (with
+        ``split=[]``: every task's output file) is promoted to its own
+        group by a rename.  Every group name lands in ``staged`` before
+        its bytes do, so the commit core owning the list removes even a
+        half-written group; the staging dir is always removed (an aged
+        one a crashed PROCESS left behind is ``vacuum``'s)."""
         if "__rows" in df.columns:
             # '__rows' is the reserved stats key carrying the group's
             # exact row count (metadata-only COUNT); a physical column
@@ -686,52 +676,32 @@ class TxTable:
                 "column name '__rows' is reserved by the txlog stats "
                 "format; rename the column before writing"
             )
-        group = f"g-{uuid.uuid4().hex}"
-        path = os.path.join(self.data_dir, group)
-        df.write.mode("errorifexists").parquet(path)
-        return group, _footer_stats(path)
-
-    def _try_commit(
-        self,
-        op: str,
-        add: list[str],
-        remove: list[str],
-        version: int,
-        stats: dict | None = None,
-        txn: tuple[str, int] | None = None,
-        dv: dict | None = None,
-        constraint: dict | None = None,
-        schema_json: str | None = None,
-        drop_dvs: list[str] | None = None,
-        re_add_dvs: list[dict] | None = None,
-        dropped: dict | None = None,
-    ) -> int:
-        commit = {
-            "version": version,
-            "op": op,
-            "add": add,
-            "remove": remove,
-            "committed_at": time.strftime("%Y-%m-%dT%H:%M:%SZ", time.gmtime()),
-            "committed_ts": time.time(),
-        }
-        if stats:
-            commit["stats"] = stats
-        if txn is not None:
-            commit["txn"] = {"app": txn[0], "batch": int(txn[1])}
-        if dv is not None:
-            commit["dv"] = dv
-        if constraint is not None:
-            commit["constraint"] = constraint
-        if schema_json is not None:
-            commit["schema"] = json.loads(schema_json)
-        if drop_dvs:
-            commit["drop_dvs"] = list(drop_dvs)
-        if re_add_dvs:
-            commit["re_add_dvs"] = [dict(d) for d in re_add_dvs]
-        if dropped:
-            commit["dropped"] = dict(dropped)
-        self._publish(version, commit)
-        return version
+        if split is None:
+            group = f"g-{uuid.uuid4().hex}"
+            staged.append(group)
+            path = os.path.join(self.data_dir, group)
+            df.write.mode("errorifexists").parquet(path)
+            return {group: _footer_stats(path)}
+        staging = os.path.join(self.data_dir, f".part-{uuid.uuid4().hex}")
+        out: dict = {}
+        try:
+            df.write.partitionBy(*split).parquet(staging)
+            for dirpath, _dirs, files in sorted(os.walk(staging)):
+                parquets = sorted(f for f in files if f.endswith(".parquet"))
+                units = [parquets] if split else [[f] for f in parquets]
+                for unit in filter(None, units):
+                    group = f"g-{uuid.uuid4().hex}"
+                    staged.append(group)
+                    gdir = os.path.join(self.data_dir, group)
+                    os.makedirs(gdir)
+                    for f in unit:
+                        os.rename(
+                            os.path.join(dirpath, f), os.path.join(gdir, f)
+                        )
+                    out[group] = _footer_stats(gdir)
+        finally:
+            shutil.rmtree(staging, ignore_errors=True)
+        return out
 
     def _drop_groups(self, groups) -> None:
         """Remove staged, never-published group directories."""
@@ -744,70 +714,105 @@ class TxTable:
         attempt,
         max_retries: int,
         txn: tuple[str, int] | None = None,
-        rewrite: bool = False,
+        once=(),
     ) -> int:
-        """The ONE optimistic-commit loop under the row-level and rewrite
-        verbs (delete / update / merge_into / apply_cdc / replace_where /
-        overwrite / merge).  Each attempt pins ``read_v`` and targets
-        ``read_v + 1``, so a commit landing in between is a
-        CommitConflict and the attempt re-runs on the advanced snapshot.
+        """The ONE optimistic-commit loop under every writer.  Each
+        attempt pins ``read_v`` and targets ``read_v + 1``, so a commit
+        landing in between is a CommitConflict and the attempt re-runs
+        on the advanced snapshot.
 
-        ``attempt(read_v)`` validates (constraints included) and returns
-        ``(mask, append)``: a (file_path, row_index) frame to mask with a
-        deletion vector and a frame to land as a new group, either None.
-        Attempts never write, so nothing is on disk when they raise; the
-        core stages both and removes every staged ``dv-``/``g-`` dir on
-        a conflict, an error, a no-op, or exhausted retries.
+        ``attempt(read_v, staged)`` validates AT ``read_v`` and returns
+        the commit's fields under the log's own keys (``add``,
+        ``remove``, ``stats``, ``dv``, ``schema``, ``constraint``,
+        ``dropped``, ``drop_dvs``, ``re_add_dvs``; empty ones are left
+        out), or None for a provable no-op, which returns ``read_v`` —
+        unless ``txn`` is given: then a metadata-only commit records the
+        identity so an incremental consumer's cursor advances past the
+        empty batch.  The core adds ``version``, ``op``, ``txn`` and the
+        timestamps and publishes.
 
-        ``rewrite=True`` removes every live group at ``read_v`` and
-        stamps the appended frame's schema.  Otherwise an empty DV or an
-        empty delta is dropped, and when both are empty the commit is a
-        provable no-op returning ``read_v`` — unless ``txn`` is given:
-        then a metadata-only commit records the identity so an
-        incremental consumer's cursor advances past the empty batch.
-        The ``txn`` identity is probed at every pinned version, so a
-        replayed batch returns its original version without running
-        ``attempt``, and so does a retry whose lost race WAS its replay
-        twin."""
-        for _ in range(max_retries):
-            read_v = self.latest_version()
-            seen = self.txn_version(*txn) if txn is not None else None
+        Groups an attempt writes go into ``staged`` and are removed
+        unless its commit publishes them: on a lost race, an error, a
+        no-op, a replay twin or exhausted retries.  ``once`` lists
+        groups written ONCE for every attempt (the append's data, which
+        a lost race never rewrites); they are removed when the call
+        ends without publishing them.  The ``txn`` identity is probed
+        at every pinned version, so a replayed batch returns its
+        original version without running ``attempt``, and so does a
+        retry whose lost race WAS its replay twin."""
+
+        def replayed(upto):
+            if txn is not None:
+                txns = self._state(upto)["txns"].get(txn[0], {})
+                return txns.get(str(int(txn[1])))
+
+        staged: list[str] = []
+        published: set[str] = set()
+        try:
+            for _ in range(max_retries):
+                self._drop_groups(staged)  # the lost race's groups
+                staged = []
+                read_v = self.latest_version()
+                seen = replayed(read_v)
+                if seen is not None:
+                    return seen
+                fields = attempt(read_v, staged)
+                if fields is None and txn is None:
+                    return read_v
+                commit = {
+                    "version": read_v + 1,
+                    "op": op,
+                    "add": [],
+                    "remove": [],
+                    "committed_at": time.strftime(
+                        "%Y-%m-%dT%H:%M:%SZ", time.gmtime()
+                    ),
+                    "committed_ts": time.time(),
+                }
+                commit.update((k, v) for k, v in (fields or {}).items() if v)
+                if txn is not None:
+                    commit["txn"] = {"app": txn[0], "batch": int(txn[1])}
+                try:
+                    self._publish(read_v + 1, commit)
+                except CommitConflict:
+                    continue
+                published = set(commit["add"])
+                if "dv" in commit:
+                    published.add(commit["dv"]["group"])
+                return read_v + 1
+            seen = replayed(None)  # the last race lost to our replay twin
             if seen is not None:
                 return seen
-            mask, append = attempt(read_v)
-            staged: list[str] = []
-            try:
-                dv, add = None, {}
-                if mask is not None:
-                    group, n, covers = self._write_dv(mask)
-                    staged.append(group)
-                    if n:
-                        dv = {"group": group, "covers": covers, "n": n}
-                if append is not None:
-                    group, stats = self._write_group(append)
-                    staged.append(group)
-                    if rewrite or stats["__rows"]:
-                        add[group] = stats
-                kept = set(add) | ({dv["group"]} if dv else set())
-                self._drop_groups(g for g in staged if g not in kept)
-                if not kept and txn is None:
-                    return read_v
-                return self._try_commit(
-                    op,
-                    list(add),
-                    self.active_groups(read_v) if rewrite else [],
-                    read_v + 1,
-                    stats=add,
-                    txn=txn,
-                    dv=dv,
-                    schema_json=append.schema.json() if rewrite else None,
-                )
-            except CommitConflict:
-                self._drop_groups(staged)
-            except BaseException:
-                self._drop_groups(staged)
-                raise
-        raise CommitConflict(f"{op} lost {max_retries} races")
+            raise CommitConflict(f"{op} lost {max_retries} races")
+        finally:
+            self._drop_groups(
+                g for g in [*once, *staged] if g not in published
+            )
+
+    def _row_fields(
+        self, staged: list, mask=None, delta=None, replaces=None
+    ) -> dict | None:
+        """Stage a row-level attempt's frames as commit fields: ``mask``
+        (file_path, row_index) positions → a deletion-vector group,
+        ``delta`` → a new data group.  An empty DV or delta is left out
+        (the core removes its dir); None when both are — a provable
+        no-op.  ``replaces`` (a rewrite: overwrite / merge) lists the
+        live groups the delta replaces: they are removed, the delta is
+        kept even when empty, and its schema is stamped."""
+        out: dict = {}
+        if mask is not None:
+            group, n, covers = self._write_dv(mask, staged)
+            if n:
+                out["dv"] = {"group": group, "covers": covers, "n": n}
+        if delta is not None:
+            stats = self._write_groups(delta, staged)
+            if replaces is not None or any(
+                s["__rows"] for s in stats.values()
+            ):
+                out.update(add=list(stats), stats=stats)
+        if replaces is not None:
+            out.update(remove=replaces, schema=json.loads(delta.schema.json()))
+        return out or None
 
     def _live_scan(self, spark: SparkSession, read_v: int, verb: str):
         """(scan, live) at ``read_v`` for a row-level verb: the scan under
@@ -836,49 +841,17 @@ class TxTable:
             src.select(*keys).distinct(), on=keys, how="left_semi"
         ).select("file_path", "row_index")
 
-    def _dropped_physicals(self) -> set[str]:
-        """Physical column names retired by ALTER DROP COLUMN across the
-        whole log — a re-added logical column must never reuse one, or
-        the dropped column's bytes in pre-drop files would resurrect
-        under the new field.  Alter commits are rare, so this is a plain
-        log walk (no checkpoint seeding needed)."""
-        out: set[str] = set()
-        for v in self._versions():
-            d = self._read_commit(v).get("dropped")
-            if d:
-                out.add(d["physical"])
-        return out
-
-    def _txn_map(self, upto: int | None = None) -> dict:
-        """{app: {str(batch): version}} over the log up to ``upto``
-        (default latest) — checkpoint-seeded, O(commits since
-        checkpoint).  The map a long-lived streaming sink probes every
-        micro-batch."""
-        if upto is None:
-            upto = self.latest_version()
-        base, start = self._checkpoint_base(upto, "txns")
-        txns: dict = {a: dict(b) for a, b in (base or {}).items()}
-        for v in self._versions():
-            if v < start:
-                continue
-            if v > upto:
-                break
-            t = self._read_commit(v).get("txn")
-            if t:
-                txns.setdefault(t["app"], {})[str(t["batch"])] = v
-        return txns
-
     def txn_latest_batch(self, app: str) -> int | None:
         """The highest batch id an app identity has committed, or None —
         the refresh CURSOR of an incremental consumer whose txn batch
         ids encode 'source processed up to'."""
-        m = self._txn_map().get(app)
+        m = self._state()["txns"].get(app)
         return max(int(b) for b in m) if m else None
 
     def txn_version(self, app: str, batch: int) -> int | None:
         """The version a transaction identity committed at, or None —
         the idempotence probe for exactly-once streaming sinks."""
-        return self._txn_map().get(app, {}).get(str(int(batch)))
+        return self._state()["txns"].get(app, {}).get(str(int(batch)))
 
     def commit_append(
         self,
@@ -900,161 +873,128 @@ class TxTable:
         mergeSchema): columns the table lacks are appended to the log
         schema by this commit; readers backfill NULL for files written
         before it.  Without it, an extra column raises."""
-        from pyspark.sql.types import StructField, StructType
+        return self._append(df, max_retries, txn, evolve=evolve)
 
-        if txn is not None:
-            seen = self.txn_version(*txn)
-            if seen is not None:
-                return seen
-        sch = self.read_schema(df.sparkSession)
-        if sch is not None:
-            have = {f.name for f in sch.fields}
-            extra = [c for c in df.columns if c not in have]
-            if extra and evolve:
-                # a new logical name must not collide with ANY physical
-                # name that exists in files — drop-retired ones (their
-                # bytes would resurrect) or the stable physical of a
-                # renamed-away field (duplicate column at write)
-                taken = self._dropped_physicals() | {
-                    self._physical_name(f) for f in sch.fields
-                }
-                new_fields = []
-                for c in extra:
-                    md = {}
-                    if c in taken:
-                        md = {"physical": f"{c}__{uuid.uuid4().hex[:8]}"}
-                    new_fields.append(
-                        StructField(c, df.schema[c].dataType, True, md)
-                    )
-                sch = StructType(list(sch.fields) + new_fields)
-            df = self._align_to_schema(df, sch)
-        cons_seen = self.constraints()
-        self._check_constraints(df)
-        group, stats = self._write_group(self._to_physical(df, schema=sch))
-        return self._commit_append_groups(
-            df, [group], {group: stats}, sch, cons_seen,
-            max_retries=max_retries, txn=txn, evolve=evolve,
-            own_extras=set(extra) if (sch is not None and evolve) else set(),
-        )
-
-    def _commit_append_groups(
+    def _append(
         self,
         df: DataFrame,
-        groups: list[str],
-        stats: dict,
-        sch,
-        cons_seen: dict,
         max_retries: int,
         txn: tuple[str, int] | None,
-        evolve: bool,
-        own_extras: set | None = None,
+        evolve: bool = False,
+        partition_cols=None,
     ) -> int:
-        """The optimistic append-commit loop shared by the plain and the
-        partitioned append: constraint re-validation on change, schema
-        re-read on every attempt (union with a concurrently evolved
-        schema; loud failure on a concurrent column removal), txn
-        idempotence, and cleanup of every staged group on abort."""
-        from pyspark.sql.types import StructType
+        """The append attempt under both appends.  The frame is aligned
+        to the log schema, validated and written ONCE, at the first
+        attempt's read version (``evolve``: each new column gets a
+        physical name no file carries).  Every attempt then validates
+        at its own read version: the constraints again when the live
+        set changed, and the commit schema is the UNION with the log's
+        (a concurrent evolve=True append may have committed a column
+        since; our file backfills NULL for it).  A column we carry that
+        vanished (concurrent overwrite or ALTER DROP) or now maps to
+        another physical name is a metadata conflict, Delta's rule:
+        our already-written file cannot follow it."""
+        from pyspark.sql import functions as F
+        from pyspark.sql.types import StructField, StructType
 
-        for _ in range(max_retries):
-            # pin ONE read version per attempt: schema and constraints
-            # are derived AT read_v and the commit targets read_v + 1,
-            # so a commit landing mid-derivation is a CommitConflict
-            # (rebase), never a stale union schema published at a later
-            # free slot
-            read_v = self.latest_version()
-            # a constraint committed since validation (it is exactly what
-            # our version conflict can be) must gate THIS append too —
-            # re-validate whenever the live constraint set changed
-            cons_now = self.constraints(upto=read_v)
-            if cons_now != cons_seen:
-                try:
-                    self._check_constraints(df)
-                except ConstraintViolation:
-                    self._drop_groups(groups)
-                    raise
-                cons_seen = cons_now
-            # re-read the log schema EVERY attempt: a concurrent
-            # evolve=True append may have committed a new column since
-            # our snapshot, and stamping our (narrower) schema on the
-            # winning commit would clobber it — the commit's schema is
-            # the UNION (our file backfills NULL for the new column, the
-            # same contract as any pre-evolution file).  A schema that
-            # LOST one of our columns (a concurrent overwrite) is a
-            # metadata conflict and fails, Delta's rule.
-            sch_now = (
-                self.read_schema(df.sparkSession, read_v)
-                if read_v >= 0
-                else None
-            )
-            commit_schema = df.schema
+        once: list[str] = []
+        w: dict = {}  # the write-once state: sch, own, data, stats, cons
+        split = (
+            None
+            if partition_cols is None
+            else [f"__p_{c}" for c in partition_cols]
+        )
+
+        def attempt(read_v, _staged):
+            sch_now = self.read_schema(df.sparkSession, read_v)
+            cons = self.constraints(read_v)
+            if not w:
+                sch, own = sch_now, set()
+                if sch is not None:
+                    have = {f.name for f in sch.fields}
+                    extra = [c for c in df.columns if c not in have]
+                    if extra and evolve:
+                        # a new logical name must not collide with ANY
+                        # physical name in files — drop-retired ones
+                        # (their bytes would resurrect) or the stable
+                        # physical of a renamed-away field
+                        taken = set(self._state(read_v)["dropped"]) | {
+                            self._physical_name(f) for f in sch.fields
+                        }
+                        fresh = {
+                            c: {"physical": f"{c}__{uuid.uuid4().hex[:8]}"}
+                            for c in extra
+                            if c in taken
+                        }
+                        sch = StructType(
+                            list(sch.fields)
+                            + [
+                                StructField(
+                                    c, df.schema[c].dataType, True,
+                                    fresh.get(c, {}),
+                                )
+                                for c in extra
+                            ]
+                        )
+                        own = set(extra)
+                data = df if sch is None else self._align_to_schema(df, sch)
+                self._check_constraints(data, cons)
+                phys = data
+                for c in partition_cols or ():
+                    # a duplicated key to partitionBy on, so the files
+                    # keep the full table schema
+                    phys = phys.withColumn(f"__p_{c}", F.col(c))
+                w.update(sch=sch, own=own, data=data, stats=self._write_groups(
+                    self._to_physical(phys, schema=sch), once, split
+                ))
+            elif cons != w["cons"]:
+                # a constraint committed since the last check is exactly
+                # what a lost race can be: it gates THIS append too
+                self._check_constraints(w["data"], cons)
+            w["cons"] = cons
+            sch, data = w["sch"], w["data"]
+            if not w["stats"] and txn is None:
+                return None  # an empty partitioned frame: nothing to add
+            commit_schema = data.schema
             if sch_now is not None:
-                ours = {f.name for f in df.schema.fields}
                 lost = (
-                    ours
+                    set(data.columns)
                     - {f.name for f in sch_now.fields}
-                    - (own_extras or set())  # our evolution, not a loss
+                    - w["own"]
                 )
                 if lost and sch is not None:
-                    # a column we carry vanished mid-flight (concurrent
-                    # overwrite or ALTER DROP).  Never re-add it — under
-                    # evolve that would resurrect a retired physical —
-                    # fail as a metadata conflict, Delta's rule.
-                    self._drop_groups(groups)
                     raise CommitConflict(
                         f"concurrent schema change removed {sorted(lost)}"
                     )
-                if sch is not None:
-                    # a concurrent writer remapping one of our columns to
-                    # a different physical name means OUR already-written
-                    # file carries the wrong on-file name — unrecoverable
-                    # without a rewrite, so fail loudly
-                    local_phys = {
-                        f.name: self._physical_name(f) for f in sch.fields
-                    }
-                    for f in sch_now.fields:
-                        lp = local_phys.get(f.name)
-                        if lp is not None and lp != self._physical_name(f):
-                            self._drop_groups(groups)
-                            raise CommitConflict(
-                                f"concurrent schema change remapped "
-                                f"{f.name!r} ({lp!r} → "
-                                f"{self._physical_name(f)!r})"
-                            )
-                # extras prefer the caller's local schema fields: the
-                # select/cast of _align_to_schema strips StructField
-                # metadata, and an evolving append's fresh PHYSICAL
-                # name lives exactly there
+                # extras prefer the local schema fields: the select/cast
+                # of _align_to_schema strips StructField metadata, and an
+                # evolving append's fresh PHYSICAL name lives exactly there
                 local = {
                     f.name: f for f in (sch.fields if sch is not None else [])
                 }
+                for f in sch_now.fields:
+                    ours = self._physical_name(local.get(f.name, f))
+                    if ours != self._physical_name(f):
+                        raise CommitConflict(
+                            f"concurrent schema change remapped {f.name!r} "
+                            f"({ours!r} → {self._physical_name(f)!r})"
+                        )
+                now = {f.name for f in sch_now.fields}
                 commit_schema = StructType(
                     list(sch_now.fields)
                     + [
                         local.get(f.name, f)
-                        for f in df.schema.fields
-                        if f.name
-                        not in {g.name for g in sch_now.fields}
+                        for f in data.schema.fields
+                        if f.name not in now
                     ]
                 )
-            try:
-                return self._try_commit(
-                    "append",
-                    list(groups),
-                    [],
-                    read_v + 1,
-                    stats=stats,
-                    txn=txn,
-                    schema_json=commit_schema.json(),
-                )
-            except CommitConflict:
-                if txn is not None:
-                    seen = self.txn_version(*txn)
-                    if seen is not None:  # the race WAS our replay twin
-                        self._drop_groups(groups)
-                        return seen
-                continue
-        raise CommitConflict(f"append lost {max_retries} races")
+            return {
+                "add": list(w["stats"]),
+                "stats": w["stats"],
+                "schema": json.loads(commit_schema.json()),
+            }
+
+        return self._commit("append", attempt, max_retries, txn=txn, once=once)
 
     def commit_append_partitioned(
         self,
@@ -1093,68 +1033,7 @@ class TxTable:
         missing = set(cols) - set(df.columns)
         if missing:
             raise ValueError(f"unknown partition columns: {sorted(missing)}")
-        if txn is not None:
-            seen = self.txn_version(*txn)
-            if seen is not None:
-                return seen
-        sch = self.read_schema(df.sparkSession)
-        if sch is not None:
-            df = self._align_to_schema(df, sch)
-        cons_seen = self.constraints()
-        self._check_constraints(df)
-
-        from pyspark.sql import functions as F
-
-        mapping = self._physical_map()
-        staged = self._to_physical(df)
-        pcopies = []
-        for c in cols:
-            pc = f"__p_{c}"
-            staged = staged.withColumn(pc, F.col(mapping.get(c, c)))
-            pcopies.append(pc)
-        if "__rows" in staged.columns:
-            raise ValueError(
-                "column name '__rows' is reserved by the txlog stats "
-                "format; rename the column before writing"
-            )
-        staging = os.path.join(self.data_dir, f".part-{uuid.uuid4().hex}")
-        groups: list[str] = []
-        stats: dict = {}
-        try:
-            staged.write.partitionBy(*pcopies).parquet(staging)
-            for dirpath, _dirs, files in sorted(os.walk(staging)):
-                parquets = [f for f in files if f.endswith(".parquet")]
-                if not parquets:
-                    continue
-                group = f"g-{uuid.uuid4().hex}"
-                gdir = os.path.join(self.data_dir, group)
-                os.makedirs(gdir)
-                for f in parquets:
-                    os.rename(
-                        os.path.join(dirpath, f), os.path.join(gdir, f)
-                    )
-                groups.append(group)
-                stats[group] = _footer_stats(gdir)
-        except BaseException:
-            # a failed staged write or promotion must not leak the
-            # '.part-<uuid>' staging dir (vacuum only collects g-/dv-
-            # prefixes) or half-promoted uncommitted groups
-            self._drop_groups(groups)
-            raise
-        finally:
-            shutil.rmtree(staging, ignore_errors=True)
-        if not groups:
-            # empty micro-batches are NORMAL for a streaming sink: with
-            # a txn identity, publish a metadata-only commit so the
-            # batch cursor advances (the merge_into no-op rule);
-            # without one, there is nothing to record — return the
-            # current version, commit nothing
-            if txn is None:
-                return self.latest_version()
-        return self._commit_append_groups(
-            df, groups, stats, sch, cons_seen,
-            max_retries=max_retries, txn=txn, evolve=False,
-        )
+        return self._append(df, max_retries, txn, partition_cols=cols)
 
     def partitions(self, column: str, version: int | None = None) -> list:
         """The distinct values a partition column takes across the live
@@ -1189,13 +1068,13 @@ class TxTable:
         small derived table (e.g. an HLL register rollup) exactly
         once."""
 
-        def attempt(_read_v):
-            self._check_constraints(df)
-            return None, df
+        def attempt(read_v, staged):
+            self._check_constraints(df, self.constraints(read_v))
+            return self._row_fields(
+                staged, delta=df, replaces=self.active_groups(read_v)
+            )
 
-        return self._commit(
-            "overwrite", attempt, max_retries, txn=txn, rewrite=True
-        )
+        return self._commit("overwrite", attempt, max_retries, txn=txn)
 
     def merge(
         self,
@@ -1213,14 +1092,14 @@ class TxTable:
         transaction identity — the cursor primitive an incremental
         materialized-view refresh records ATOMICALLY with its output."""
 
-        def attempt(read_v):
+        def attempt(read_v, staged):
             out = transform(self.read(spark, read_v) if read_v >= 0 else None)
-            self._check_constraints(out)
-            return None, out
+            self._check_constraints(out, self.constraints(read_v))
+            return self._row_fields(
+                staged, delta=out, replaces=self.active_groups(read_v)
+            )
 
-        return self._commit(
-            "merge", attempt, max_retries, txn=txn, rewrite=True
-        )
+        return self._commit("merge", attempt, max_retries, txn=txn)
 
     def optimize(
         self,
@@ -1264,8 +1143,7 @@ class TxTable:
         set and retry on top of it."""
         from pyspark.sql import functions as F
 
-        for _ in range(max_retries):
-            read_v = self.latest_version()
+        def attempt(read_v, staged):
             if read_v < 0:
                 raise ValueError("cannot optimize an empty table")
             if where is not None:
@@ -1274,7 +1152,7 @@ class TxTable:
                     w_col, lo=w_lo, hi=w_hi, version=read_v
                 )
                 if not selected:
-                    return read_v  # nothing to compact in the slice
+                    return None  # nothing to compact in the slice
                 dvs = [
                     d
                     for d in self._replay(read_v)[2]
@@ -1286,71 +1164,38 @@ class TxTable:
             else:
                 selected = self.active_groups(read_v)
                 df = self.read(spark, read_v)
-            if sort_key is not None:
-                # global range layout on the cluster key: one rewritten
-                # GROUP per range partition (repartitionByRange samples
-                # the key), sorted within — each group owns a disjoint
-                # key range, so group-level zone maps become narrow and
-                # planning-time skipping actually fires.  This is
-                # OPTIMIZE ZORDER's physical shape; the one-file-per-
-                # range split below is the per-file-stats granularity
-                # Delta/Iceberg record.
-                keys = sort_key if isinstance(sort_key, list) else [sort_key]
-                if cluster_map is not None:
-                    mdf, on_col = cluster_map
-                    mdf = mdf.select(
-                        F.col(on_col).alias("__ck_on"), "__ckey"
-                    ).dropDuplicates(["__ck_on"])
-                    df = df.join(
-                        mdf, df[on_col] == mdf["__ck_on"], "left"
-                    ).drop("__ck_on")
-                    keys = ["__ckey"] + keys
-                staged = (
-                    df.repartitionByRange(target_groups, *keys)
-                    .sortWithinPartitions(*keys)
+            if sort_key is None:
+                stats = self._write_groups(
+                    self._to_physical(df.repartition(target_groups)), staged
                 )
-                if cluster_map is not None:
-                    staged = staged.drop("__ckey")
-                added, stats = self._write_split_groups(
-                    self._to_physical(staged)
-                )
-            else:
-                group, gstats = self._write_group(
-                    self._to_physical(df.repartition(target_groups))
-                )
-                added, stats = [group], {group: gstats}
-            try:
-                return self._try_commit(
-                    "optimize",
-                    added,
-                    selected,
-                    read_v + 1,
-                    stats=stats,
-                )
-            except CommitConflict:
-                self._drop_groups(added)
-        raise CommitConflict(f"optimize lost {max_retries} races")
+                return {"add": list(stats), "remove": selected, "stats": stats}
+            # global range layout on the cluster key: one rewritten GROUP
+            # per range partition (repartitionByRange samples the key),
+            # sorted within — each group owns a disjoint key range, so
+            # group-level zone maps become narrow and planning-time
+            # skipping actually fires.  This is OPTIMIZE ZORDER's
+            # physical shape; one group per output file is the per-file-
+            # stats granularity Delta/Iceberg record.
+            keys = sort_key if isinstance(sort_key, list) else [sort_key]
+            if cluster_map is not None:
+                mdf, on_col = cluster_map
+                mdf = mdf.select(
+                    F.col(on_col).alias("__ck_on"), "__ckey"
+                ).dropDuplicates(["__ck_on"])
+                df = df.join(
+                    mdf, df[on_col] == mdf["__ck_on"], "left"
+                ).drop("__ck_on")
+                keys = ["__ckey"] + keys
+            ranged = (
+                df.repartitionByRange(target_groups, *keys)
+                .sortWithinPartitions(*keys)
+            )
+            if cluster_map is not None:
+                ranged = ranged.drop("__ckey")
+            stats = self._write_groups(self._to_physical(ranged), staged, [])
+            return {"add": list(stats), "remove": selected, "stats": stats}
 
-    def _write_split_groups(self, df: DataFrame) -> tuple[list[str], dict]:
-        """Write ``df`` once, then promote each task's output file to its
-        own file group (a rename on the store — no second data pass), so
-        zone maps hold at the per-range granularity the clustering just
-        created."""
-        import glob as _glob
-
-        staging = os.path.join(self.data_dir, f".opt-{uuid.uuid4().hex}")
-        df.write.parquet(staging)
-        added: list[str] = []
-        stats: dict = {}
-        for f in sorted(_glob.glob(os.path.join(staging, "*.parquet"))):
-            group = f"g-{uuid.uuid4().hex}"
-            gdir = os.path.join(self.data_dir, group)
-            os.makedirs(gdir)
-            os.rename(f, os.path.join(gdir, os.path.basename(f)))
-            added.append(group)
-            stats[group] = _footer_stats(gdir)
-        shutil.rmtree(staging, ignore_errors=True)
-        return added, stats
+        return self._commit("optimize", attempt, max_retries)
 
     def checkpoint(self, version: int | None = None) -> int:
         """Materialize the replayed state at ``version`` (default latest)
@@ -1358,34 +1203,17 @@ class TxTable:
         instead of commit 0.  Idempotent; published with the same
         atomic-create primitive as commits (a racing checkpointer of the
         same version writes identical content, so the loser just
-        defers)."""
+        defers).  It holds every log-derived lookup of :meth:`_state`,
+        not just the file state — all BOUNDED BY the version: a
+        checkpoint of an older version is version-consistent, not a mix
+        of its files with the latest metadata."""
         v = self.latest_version() if version is None else version
-        active, stats, dvs = self._replay(v)
         final = os.path.join(self.log_dir, f"{v:020d}.checkpoint.json")
         if os.path.exists(final):
             return v
         tmp = os.path.join(self.log_dir, f".tmp-{uuid.uuid4().hex}.json")
         with open(tmp, "w") as fh:
-            json.dump(
-                {
-                    "version": v,
-                    "active": active,
-                    "stats": stats,
-                    "dvs": dvs,
-                    # seed every log-derived lookup, not just the file
-                    # state: schema, constraints, and the txn map all
-                    # resume from here (O(commits since checkpoint) for
-                    # long-lived streaming tables).  All BOUNDED BY v —
-                    # a checkpoint of an older version must be version-
-                    # consistent, not a mix of v's files with latest's
-                    # metadata (and racing checkpointers of the same v
-                    # really do write identical content)
-                    "schema": self.table_schema_json(v),
-                    "constraints": self.constraints(upto=v),
-                    "txns": self._txn_map(upto=v),
-                },
-                fh,
-            )
+            json.dump({"version": v, **self._state(v)}, fh)
         try:
             os.link(tmp, final)
         except FileExistsError:
@@ -1416,16 +1244,12 @@ class TxTable:
         deleted = []
         for g in sorted(os.listdir(self.data_dir)):
             path = os.path.join(self.data_dir, g)
-            # '.part-*' staging dirs are normally removed by the
-            # partitioned append's try/finally; an aged survivor means
+            # staging dirs ('.part-*'; '.opt-*' from older writers) are
+            # normally removed by their writer; an aged survivor means
             # the writer PROCESS died mid-write — orphan bytes no commit
             # references, collected like Delta VACUUM's uncommitted files
             if (
-                (
-                    g.startswith("g-")
-                    or g.startswith("dv-")
-                    or g.startswith(".part-")
-                )
+                g.startswith(("g-", "dv-", ".part-", ".opt-"))
                 and g not in keep
                 and now - os.path.getmtime(path) >= min_age_seconds
             ):
@@ -1443,44 +1267,39 @@ class TxTable:
         apply to the restored state).  If the target's bytes were
         VACUUMed past the retention horizon, the next read fails loudly
         at scan time — restore never resurrects deleted bytes."""
-        t_active, t_stats, t_dvs = self._replay(version)
-        t_schema = self.table_schema_json(version)
-        for _ in range(max_retries):
-            read_v = self.latest_version()
+        target = self._state(version)
+
+        def attempt(read_v, _staged):
             if version > read_v:
                 raise ValueError(f"cannot restore to future v{version}")
-            cur_active = self.active_groups(read_v)
-            cur_set = set(cur_active)
-            # retire EVERY deletion vector committed after the target —
-            # including ones currently retired (their covered groups come
-            # back alive with the restore and the masks would resurrect;
-            # caught by tests/test_txlog_model.py)
-            drop = [
-                self._read_commit(v)["dv"]["group"]
-                for v in self._versions()
-                if version < v <= read_v
-                and self._read_commit(v).get("dv")
-            ]
-            try:
-                return self._try_commit(
-                    "restore",
-                    [g for g in t_active if g not in cur_set],
-                    [g for g in cur_active if g not in set(t_active)],
-                    read_v + 1,
-                    stats=t_stats,
-                    schema_json=(
-                        json.dumps(t_schema) if t_schema is not None else None
-                    ),
-                    drop_dvs=drop,
-                    # re-assert the target's live DVs so a checkpoint-
-                    # seeded replay (where they may have been end-
-                    # filtered out after a rewrite) masks the restored
-                    # groups exactly as a full replay does
-                    re_add_dvs=t_dvs,
-                )
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"restore lost {max_retries} races")
+            cur = self.active_groups(read_v)
+            cur_set, t_set = set(cur), set(target["active"])
+            return {
+                "add": [g for g in target["active"] if g not in cur_set],
+                "remove": [g for g in cur if g not in t_set],
+                "stats": target["stats"],
+                "schema": target["schema"],
+                # retire EVERY deletion vector committed after the target
+                # — including ones currently retired (their covered
+                # groups come back alive with the restore and the masks
+                # would resurrect; caught by tests/test_txlog_model.py)
+                "drop_dvs": [
+                    c["dv"]["group"]
+                    for c in (
+                        self._read_commit(v)
+                        for v in self._versions()
+                        if version < v <= read_v
+                    )
+                    if c.get("dv")
+                ],
+                # re-assert the target's live DVs so a checkpoint-seeded
+                # replay (where they may have been end-filtered out after
+                # a rewrite) masks the restored groups exactly as a full
+                # replay does
+                "re_add_dvs": target["dvs"],
+            }
+
+        return self._commit("restore", attempt, max_retries)
 
     def history_df(self, spark: SparkSession) -> DataFrame:
         """DESCRIBE HISTORY as a DataFrame: one row per commit with the
@@ -1717,9 +1536,12 @@ class TxTable:
             F.col("_metadata.row_index").cast("long").alias("row_index"),
         )
 
-    def _write_dv(self, pos: DataFrame) -> tuple[str, int, list[str]]:
+    def _write_dv(
+        self, pos: DataFrame, staged: list
+    ) -> tuple[str, int, list[str]]:
         """Write a (file_path, row_index) positions frame as a deletion-
-        vector group; return (group, n_positions, covered data groups).
+        vector group (named in ``staged`` first, like ``_write_groups``);
+        return (group, n_positions, covered data groups).
 
         Coverage is PRECISE — only the groups that actually contain a
         masked position — so CDF pre-image reads touch just those files
@@ -1732,6 +1554,7 @@ class TxTable:
         import pyarrow.parquet as _pq
 
         group = f"dv-{uuid.uuid4().hex}"
+        staged.append(group)
         path = os.path.join(self.data_dir, group)
         pos.write.mode("errorifexists").parquet(path)
         n = sum(
@@ -1777,9 +1600,11 @@ class TxTable:
         it.  A predicate matching nothing commits nothing and returns
         the read version."""
 
-        def attempt(read_v):
+        def attempt(read_v, staged):
             _scan, live = self._live_scan(spark, read_v, "delete from")
-            return self._positions(live.filter(predicate)), None
+            return self._row_fields(
+                staged, mask=self._positions(live.filter(predicate))
+            )
 
         return self._commit("delete", attempt, max_retries)
 
@@ -1807,7 +1632,7 @@ class TxTable:
         if unknown:
             raise ValueError(f"unknown update columns: {sorted(unknown)}")
 
-        def attempt(read_v):
+        def attempt(read_v, staged):
             # updated rows carry EVERY log-schema column (footer inference
             # after ADD COLUMN can miss the new one and silently drop it)
             scan, live = self._live_scan(spark, read_v, "update")
@@ -1819,8 +1644,12 @@ class TxTable:
                 ]
             )
             updated = self._align_to_schema(updated, scan.schema)
-            self._check_constraints(updated)
-            return self._positions(matched), self._to_physical(updated)
+            self._check_constraints(updated, self.constraints(read_v))
+            return self._row_fields(
+                staged,
+                mask=self._positions(matched),
+                delta=self._to_physical(updated),
+            )
 
         return self._commit("update", attempt, max_retries)
 
@@ -1855,7 +1684,7 @@ class TxTable:
         top of at-least-once micro-batch delivery."""
         keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
 
-        def attempt(read_v):
+        def attempt(read_v, staged):
             scan, live = self._live_scan(spark, read_v, "merge into")
             # the log-owned schema: the source must see the full evolved
             # column set, not a pre-evolution footer's
@@ -1869,10 +1698,11 @@ class TxTable:
                     live.select(*keys).distinct(), on=keys, how="left_semi"
                 )
             )
-            self._check_constraints(delta)
-            return (
-                self._key_positions(live, src, keys),
-                self._to_physical(delta),
+            self._check_constraints(delta, self.constraints(read_v))
+            return self._row_fields(
+                staged,
+                mask=self._key_positions(live, src, keys),
+                delta=self._to_physical(delta),
             )
 
         return self._commit("merge_into", attempt, max_retries, txn=txn)
@@ -1904,7 +1734,7 @@ class TxTable:
 
         keys = [key_cols] if isinstance(key_cols, str) else list(key_cols)
 
-        def attempt(read_v):
+        def attempt(read_v, staged):
             if changes.filter(~F.col(op_col).isin("upsert", "delete")).take(1):
                 raise ValueError(
                     f"apply_cdc: {op_col} must be 'upsert' or 'delete'"
@@ -1922,10 +1752,11 @@ class TxTable:
             if src.groupBy(*keys).count().where("count > 1").take(1):
                 raise ValueError(f"CDC source is not unique on {keys}")
             delta = src.filter(F.col(op_col) == "upsert").drop(op_col)
-            self._check_constraints(delta)
-            return (
-                self._key_positions(live, src, keys),
-                self._to_physical(delta),
+            self._check_constraints(delta, self.constraints(read_v))
+            return self._row_fields(
+                staged,
+                mask=self._key_positions(live, src, keys),
+                delta=self._to_physical(delta),
             )
 
         return self._commit("apply_cdc", attempt, max_retries, txn=txn)
@@ -1953,7 +1784,7 @@ class TxTable:
 
         pred = F.expr(predicate) if isinstance(predicate, str) else predicate
 
-        def attempt(read_v):
+        def attempt(read_v, staged):
             scan, live = self._live_scan(spark, read_v, "replace into")
             src = self._align_to_schema(df, scan.schema)
             n_outside = src.filter(~F.coalesce(pred, F.lit(False))).count()
@@ -1962,8 +1793,12 @@ class TxTable:
                     f"{n_outside} replacement rows do not satisfy the "
                     f"replaceWhere predicate"
                 )
-            self._check_constraints(src)
-            return self._positions(live.filter(pred)), self._to_physical(src)
+            self._check_constraints(src, self.constraints(read_v))
+            return self._row_fields(
+                staged,
+                mask=self._positions(live.filter(pred)),
+                delta=self._to_physical(src),
+            )
 
         return self._commit("replace_where", attempt, max_retries, txn=txn)
 
@@ -2378,39 +2213,12 @@ class TxTable:
         sch = self.read_schema(spark)
         return [f.name for f in sch.fields] if sch is not None else []
 
-    def _checkpoint_base(self, upto: int, key: str):
-        """(base_value, first_version_to_walk) for a log-derived lookup:
-        the newest checkpoint ≤ ``upto`` that RECORDS ``key`` seeds the
-        scan so the walk is O(commits since checkpoint); old-format
-        checkpoints without the key fall back to a full walk."""
-        cps = [v for v in self._checkpoint_versions() if v <= upto]
-        if cps:
-            with open(
-                os.path.join(
-                    self.log_dir, f"{cps[-1]:020d}.checkpoint.json"
-                )
-            ) as fh:
-                snap = json.load(fh)
-            if key in snap:
-                return snap[key], cps[-1] + 1
-        return None, 0
-
     def table_schema_json(self, upto: int | None = None):
         """The schema recorded in the log at ``upto`` (default latest):
         the LAST data commit's schema wins — Delta's log-owned schema,
         so planning never opens a parquet footer.  None on pre-schema
         (legacy) logs.  O(commits since checkpoint)."""
-        v = self.latest_version() if upto is None else upto
-        out, start = self._checkpoint_base(v, "schema")
-        for ver in self._versions():
-            if ver < start:
-                continue
-            if ver > v:
-                break
-            c = self._read_commit(ver)
-            if "schema" in c:
-                out = c["schema"]
-        return out
+        return self._state(upto)["schema"]
 
     def read_schema(self, spark: SparkSession, version: int | None = None):
         """The table schema (StructType) — from the LOG when recorded
@@ -2453,6 +2261,26 @@ class TxTable:
             *[F.col(f.name).cast(f.dataType) for f in schema.fields]
         )
 
+    def _zone_prune(self, column: str, version: int | None, hit):
+        """The ONE zone-map pass under both planners → (upto, physical
+        column, live groups ``hit(min, max)`` cannot rule out, total
+        live count).  Zone maps are keyed by the on-file (PHYSICAL)
+        column name.  Groups with no stats for the column, or stats in
+        another domain than the probe, always survive — pruning is an
+        optimization, never a filter."""
+        upto = self.latest_version() if version is None else version
+        column = self._physical_map(upto).get(column, column)
+        active, stats, _dvs = self._replay(upto)
+        picked = []
+        for g in active:
+            s = stats.get(g, {}).get(column)
+            try:
+                if s is None or hit(*s):
+                    picked.append(g)
+            except TypeError:  # bound/stat domain mismatch → keep
+                picked.append(g)
+        return upto, column, picked, len(active)
+
     def prune_groups(
         self,
         column: str,
@@ -2466,24 +2294,14 @@ class TxTable:
         [min, max] PROVES it disjoint; groups with no stats for the
         column always survive — pruning is an optimization, never a
         filter."""
-        upto = self.latest_version() if version is None else version
-        # zone maps are keyed by the on-file (PHYSICAL) column name
-        column = self._physical_map(upto).get(column, column)
-        active, stats, _dvs = self._replay(upto)
         lo_n, hi_n = _stat_scalar(lo), _stat_scalar(hi)
-        picked = []
-        for g in active:
-            s = stats.get(g, {}).get(column)
-            if s is not None:
-                try:
-                    if hi_n is not None and s[0] > hi_n:
-                        continue
-                    if lo_n is not None and s[1] < lo_n:
-                        continue
-                except TypeError:  # bound/stat domain mismatch → keep
-                    pass
-            picked.append(g)
-        return picked, len(active)
+        _upto, _col, picked, total = self._zone_prune(
+            column,
+            version,
+            lambda mn, mx: (hi_n is None or mn <= hi_n)
+            and (lo_n is None or mx >= lo_n),
+        )
+        return picked, total
 
     def prune_groups_points(
         self,
@@ -2512,22 +2330,13 @@ class TxTable:
         planner granularity."""
         import bisect
 
-        upto = self.latest_version() if version is None else version
-        column = self._physical_map(upto).get(column, column)
-        active, stats, _dvs = self._replay(upto)
         vals = sorted({_stat_scalar(v) for v in values})
-        picked: list[str] = []
-        for g in active:
-            s = stats.get(g, {}).get(column)
-            if s is None or s[0] is None or s[1] is None:
-                picked.append(g)
-                continue
-            try:
-                i = bisect.bisect_left(vals, s[0])
-                if i < len(vals) and vals[i] <= s[1]:
-                    picked.append(g)
-            except TypeError:  # bound/stat domain mismatch → keep
-                picked.append(g)
+
+        def hit(mn, mx):
+            i = bisect.bisect_left(vals, mn)
+            return i < len(vals) and vals[i] <= mx
+
+        upto, column, picked, total = self._zone_prune(column, version, hit)
         # bloom refinement: only attempted when every probe value is an
         # int and the schema proves the column's hashed width
         if picked and vals and all(
@@ -2551,7 +2360,7 @@ class TxTable:
                     if bool(bit.all(axis=0).any()):
                         kept.append(g)
                 picked = kept
-        return picked, len(active)
+        return picked, total
 
     def column_range(
         self,
@@ -2658,11 +2467,9 @@ class TxTable:
         schema — the predicate provably selects nothing."""
         from pyspark.sql import functions as F
 
-        groups, _total = self.prune_groups(column, lo, hi, version)
-        if not groups:
-            full = self.read(spark, version)
-            return full.filter(F.lit(False))
-        df = self.read_groups(spark, groups, version)
+        upto = self.latest_version() if version is None else version
+        groups, _total = self.prune_groups(column, lo, hi, upto)
+        df = self.read_groups(spark, groups, upto)
         if lo is not None:
             df = df.filter(F.col(column) >= F.lit(lo))
         if hi is not None:

@@ -94,7 +94,7 @@ def test_uncommitted_group_is_invisible(spark, tmp_path):
     t = TxTable(str(tmp_path / "t"))
     t.commit_append(_df(spark, 0, 5))
     # an aborted writer: data group written, log never published
-    t._write_group(_df(spark, 500, 600))
+    t._write_groups(_df(spark, 500, 600), [])
     assert t.read(spark).count() == 5
     assert t.latest_version() == 0
 
@@ -126,13 +126,21 @@ def test_zonemap_stats_recorded_and_prune(spark, tmp_path):
     assert got == list(range(250, 350))
 
 
-def test_zonemap_prune_is_never_a_filter(spark, tmp_path):
+def test_zonemap_prune_is_never_a_filter(spark, tmp_path, monkeypatch):
     """Groups without stats for the column always survive planning."""
     t = TxTable(str(tmp_path / "t"))
     t.commit_append(_df(spark, 0, 10))
     # forge a commit whose stats are missing (old-format commit)
-    g, _stats = t._write_group(_df(spark, 1000, 1010))
-    t._try_commit("append", [g], [], t.latest_version() + 1)
+    orig = t._publish
+
+    def stats_less(version, commit):
+        commit.pop("stats", None)
+        return orig(version, commit)
+
+    monkeypatch.setattr(t, "_publish", stats_less)
+    t.commit_append(_df(spark, 1000, 1010))
+    monkeypatch.undo()
+    assert "stats" not in t.history()[-1]
     picked, total = t.prune_groups("k", lo=5000, hi=6000)
     assert total == 2 and len(picked) == 1  # stats-less group kept
     assert t.read_pruned(spark, "k", 0, 2000).count() == 20
@@ -214,7 +222,7 @@ def test_vacuum_retention(spark, tmp_path):
     with pytest.raises(Exception):
         t.read(spark, version=0).collect()
     # an in-flight (young, uncommitted) group is never vacuumed
-    t._write_group(_df(spark, 900, 910))
+    t._write_groups(_df(spark, 900, 910), [])
     assert t.vacuum(retain_versions=0, min_age_seconds=3600) == []
 
 
@@ -619,26 +627,45 @@ def test_constraint_violation_leaves_no_orphan_dirs(spark, tmp_path):
     assert t.read(spark).count() == 10
 
 
-# the seven verbs on the shared optimistic-commit core, each applied to
-# _df(0, 10), with the {k: v} state it must leave
+# every writer on the one optimistic-commit core, each applied to
+# _df(0, 10) after its optional setup: (setup, run, the end state it
+# must leave — see _end_state)
+_BASE = {k: 2 * k for k in range(10)}
+
+
+def _want(kv, columns=("k", "v"), constraints=None):
+    return list(columns), {k: (v,) for k, v in kv.items()}, constraints or {}
+
+
+def _end_state(spark, t):
+    """(columns, {first column: rest of the row}, live constraints)."""
+    df = t.read(spark)
+    rows = {r[0]: tuple(r[1:]) for r in df.collect()}
+    return df.columns, rows, t.constraints()
+
+
 _CORE_VERBS = {
     "delete_where": (
+        None,
         lambda spark, t, **kw: t.delete_where(spark, F.col("k") == 1, **kw),
-        {k: 2 * k for k in range(10) if k != 1},
+        _want({k: 2 * k for k in range(10) if k != 1}),
     ),
     "update_where": (
+        None,
         lambda spark, t, **kw: t.update_where(
             spark, F.col("k") == 1, {"v": F.lit(100)}, **kw
         ),
-        {**{k: 2 * k for k in range(10)}, 1: 100},
+        _want({**_BASE, 1: 100}),
     ),
     "merge_into": (
+        None,
         lambda spark, t, **kw: t.merge_into(
             spark, _df(spark, 5, 15), "k", **kw
         ),
-        {k: 2 * k for k in range(15)},
+        _want({k: 2 * k for k in range(15)}),
     ),
     "apply_cdc": (
+        None,
         lambda spark, t, **kw: t.apply_cdc(
             spark,
             spark.createDataFrame(
@@ -648,29 +675,91 @@ _CORE_VERBS = {
             "k",
             **kw,
         ),
-        {**{k: 2 * k for k in range(10) if k != 1}, 50: 500},
+        _want({**{k: 2 * k for k in range(10) if k != 1}, 50: 500}),
     ),
     "replace_where": (
+        None,
         lambda spark, t, **kw: t.replace_where(
             spark, F.col("k") < 3, _df(spark, 0, 2), **kw
         ),
-        {k: 2 * k for k in range(10) if k != 2},
+        _want({k: 2 * k for k in range(10) if k != 2}),
     ),
     "commit_overwrite": (
+        None,
         lambda spark, t, **kw: t.commit_overwrite(_df(spark, 100, 105), **kw),
-        {k: 2 * k for k in range(100, 105)},
+        _want({k: 2 * k for k in range(100, 105)}),
     ),
     "merge": (
+        None,
         lambda spark, t, **kw: t.merge(
             spark, lambda cur: cur.filter(F.col("k") > 4), **kw
         ),
-        {k: 2 * k for k in range(5, 10)},
+        _want({k: 2 * k for k in range(5, 10)}),
+    ),
+    "commit_append": (
+        None,
+        lambda spark, t, **kw: t.commit_append(_df(spark, 10, 12), **kw),
+        _want({k: 2 * k for k in range(12)}),
+    ),
+    "commit_append_txn": (
+        None,
+        lambda spark, t, **kw: t.commit_append(
+            _df(spark, 10, 12), txn=("app", 1), **kw
+        ),
+        _want({k: 2 * k for k in range(12)}),
+    ),
+    "commit_append_partitioned": (
+        None,
+        lambda spark, t, **kw: t.commit_append_partitioned(
+            _df(spark, 10, 13), "k", **kw
+        ),
+        _want({k: 2 * k for k in range(13)}),
+    ),
+    "optimize": (
+        None,
+        lambda spark, t, **kw: t.optimize(spark, **kw),
+        _want(_BASE),
+    ),
+    "optimize_clustered": (
+        None,
+        lambda spark, t, **kw: t.optimize(
+            spark, sort_key=["k"], target_groups=3, **kw
+        ),
+        _want(_BASE),
+    ),
+    "restore": (
+        lambda spark, t: t.commit_append(_df(spark, 10, 12)),
+        lambda spark, t, **kw: t.restore(0, **kw),
+        _want(_BASE),
+    ),
+    "add_constraint": (
+        None,
+        lambda spark, t, **kw: t.add_constraint(
+            spark, "v_nonneg", "v >= 0", **kw
+        ),
+        _want(_BASE, constraints={"v_nonneg": "v >= 0"}),
+    ),
+    "drop_constraint": (
+        lambda spark, t: t.add_constraint(spark, "v_nonneg", "v >= 0"),
+        lambda spark, t, **kw: t.drop_constraint("v_nonneg", **kw),
+        _want(_BASE),
+    ),
+    "alter_rename_column": (
+        None,
+        lambda spark, t, **kw: t.alter_rename_column(spark, "v", "w", **kw),
+        _want(_BASE, columns=("k", "w")),
+    ),
+    "alter_drop_column": (
+        None,
+        lambda spark, t, **kw: t.alter_drop_column(spark, "v", **kw),
+        (["k"], {k: () for k in range(10)}, {}),
     ),
 }
 
 
 def _unreferenced_groups(t):
-    """g-/dv- dirs that no commit ever published (staged leftovers)."""
+    """g-/dv- dirs that no commit ever published, and staging dirs
+    (staged leftovers)."""
     import os
 
     referenced = set()
@@ -681,19 +770,28 @@ def _unreferenced_groups(t):
     return sorted(
         d
         for d in os.listdir(t.data_dir)
-        if d.startswith(("g-", "dv-")) and d not in referenced
+        if d.startswith(("g-", "dv-", ".part-", ".opt-"))
+        and d not in referenced
     )
+
+
+def _core_table(spark, tmp_path, setup):
+    t = TxTable(str(tmp_path / "t"))
+    t.commit_append(_df(spark, 0, 10))
+    if setup is not None:
+        setup(spark, t)
+    return t
 
 
 @pytest.mark.parametrize("verb", sorted(_CORE_VERBS))
 def test_lost_race_commits_once_and_cleans_staged_groups(
     spark, tmp_path, monkeypatch, verb
 ):
-    """Every verb on the commit core, losing ONE publish race, must
+    """Every writer on the commit core, losing ONE publish race, must
     retry, land exactly one commit, and leave no staged group behind."""
-    run, want = _CORE_VERBS[verb]
-    t = TxTable(str(tmp_path / "t"))
-    t.commit_append(_df(spark, 0, 10))
+    setup, run, want = _CORE_VERBS[verb]
+    t = _core_table(spark, tmp_path, setup)
+    before = t.latest_version()
     orig = t._publish
     calls = {"n": 0}
 
@@ -704,9 +802,9 @@ def test_lost_race_commits_once_and_cleans_staged_groups(
         return orig(version, commit)
 
     monkeypatch.setattr(t, "_publish", lose_once)
-    assert run(spark, t) == 1
-    assert calls["n"] == 2 and t.latest_version() == 1
-    assert {r.k: r.v for r in t.read(spark).collect()} == want
+    assert run(spark, t) == before + 1
+    assert calls["n"] == 2 and t.latest_version() == before + 1
+    assert _end_state(spark, t) == want
     assert _unreferenced_groups(t) == []
 
 
@@ -714,9 +812,9 @@ def test_lost_race_commits_once_and_cleans_staged_groups(
 def test_exhausted_retries_clean_staged_groups(
     spark, tmp_path, monkeypatch, verb
 ):
-    run, _want = _CORE_VERBS[verb]
-    t = TxTable(str(tmp_path / "t"))
-    t.commit_append(_df(spark, 0, 10))
+    setup, run, _want = _CORE_VERBS[verb]
+    t = _core_table(spark, tmp_path, setup)
+    before = t.latest_version()
 
     def always_lose(version, commit):
         raise CommitConflict(f"version {version} already committed")
@@ -724,8 +822,34 @@ def test_exhausted_retries_clean_staged_groups(
     monkeypatch.setattr(t, "_publish", always_lose)
     with pytest.raises(CommitConflict, match="lost 2 races"):
         run(spark, t, max_retries=2)
-    assert t.latest_version() == 0
+    assert t.latest_version() == before
     assert _unreferenced_groups(t) == []
+
+
+def test_drop_constraint_losing_to_concurrent_drop_raises(
+    spark, tmp_path, monkeypatch
+):
+    """A drop_constraint that loses its publish race to a concurrent
+    drop of the SAME constraint re-checks at the advanced version and
+    fails — the history holds exactly one drop."""
+    t = TxTable(str(tmp_path / "t"))
+    t.commit_append(_df(spark, 0, 10))
+    t.add_constraint(spark, "v_nonneg", "v >= 0")
+    orig = t._publish
+    fired = {"done": False}
+
+    def racing(version, commit):
+        if not fired["done"]:
+            fired["done"] = True
+            TxTable(t.root).drop_constraint("v_nonneg")
+        return orig(version, commit)
+
+    monkeypatch.setattr(t, "_publish", racing)
+    with pytest.raises(ValueError, match="no constraint named"):
+        t.drop_constraint("v_nonneg")
+    ops = [c["op"] for c in t.history()]
+    assert ops.count("drop_constraint") == 1
+    assert t.constraints() == {}
 
 
 def test_add_constraint_rejects_existing_violations(spark, tmp_path):
@@ -995,23 +1119,23 @@ def test_constraint_committed_mid_append_still_gates(spark, tmp_path):
     bad = spark.range(1).select(
         F.lit(9).cast("long").alias("k"), F.lit(-1).cast("long").alias("v")
     )
-    orig = t._try_commit
+    orig = t._publish
     fired = {"done": False}
 
-    def racing(op, *a, **kw):
+    def racing(version, commit):
         # inject the constraint AFTER the append validated, BEFORE its
         # first publish attempt — it wins the version race
-        if op == "append" and not fired["done"]:
+        if commit["op"] == "append" and not fired["done"]:
             fired["done"] = True
-            t.add_constraint(spark, "v_nonneg", "v >= 0")
-        return orig(op, *a, **kw)
+            TxTable(t.root).add_constraint(spark, "v_nonneg", "v >= 0")
+        return orig(version, commit)
 
-    t._try_commit = racing
+    t._publish = racing
     try:
         with pytest.raises(ConstraintViolation):
             t.commit_append(bad)
     finally:
-        t._try_commit = orig
+        t._publish = orig
     assert t.read(spark).filter(F.col("v") < 0).count() == 0
 
 

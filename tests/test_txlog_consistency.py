@@ -321,7 +321,7 @@ def test_alter_drop_race_rebases_onto_evolved_schema(
 
 
 def test_append_union_schema_derivation_race(spark, tmp_path, monkeypatch):
-    """The same TOCTOU inside _commit_append_groups: a concurrent
+    """The same TOCTOU inside the append attempt: a concurrent
     evolve lands AFTER the union-schema re-read but BEFORE the publish.
     The append must conflict at read_v+1 and re-derive the union on
     retry, not publish the stale (narrower) schema at a later slot."""
@@ -334,8 +334,8 @@ def test_append_union_schema_derivation_race(spark, tmp_path, monkeypatch):
 
     def racy(sp, version=None):
         sch = orig(sp, version)
-        # only the IN-LOOP re-read passes a pinned integer version;
-        # the pre-write snapshot passes None
+        # the append's schema reads are pinned (an integer version);
+        # the test's own reads pass None
         if version is not None and not state["raced"]:
             state["raced"] = True
             TxTable(root).commit_append(
@@ -457,6 +457,87 @@ def test_vacuum_collects_orphaned_staging_dirs(spark, tmp_path):
     assert t.vacuum(min_age_seconds=0.0) == [".part-deadbeef"]
     assert not os.path.exists(orphan)
     assert t.read(spark).count() == 1
+
+
+def test_vacuum_collects_aged_optimize_staging_dir(spark, tmp_path):
+    """An aged '.opt-*' dir (an older writer's clustered OPTIMIZE died
+    mid-write) is collected like a '.part-*' one."""
+    t = TxTable(str(tmp_path / "t"))
+    t.commit_append(_kv(spark, [(1, 10)]))
+    os.makedirs(os.path.join(t.data_dir, ".opt-deadbeef"))
+    assert t.vacuum(min_age_seconds=0.0) == [".opt-deadbeef"]
+    assert t.read(spark).count() == 1
+
+
+def test_clustered_optimize_failure_leaves_no_staging(
+    spark, tmp_path, monkeypatch
+):
+    """A clustered OPTIMIZE whose group promotion fails part-way must
+    remove its staging dir AND the groups it already promoted."""
+    import db_migration_spark.plans.txlog as TX
+
+    t = TxTable(str(tmp_path / "t"))
+    t.commit_append(_kv(spark, [(k, k) for k in range(30)]).repartition(3))
+    orig = TX._footer_stats
+    calls = {"n": 0}
+
+    def fail_second(path):
+        calls["n"] += 1
+        if calls["n"] == 2:
+            raise RuntimeError("stats harvest failed")
+        return orig(path)
+
+    monkeypatch.setattr(TX, "_footer_stats", fail_second)
+    with pytest.raises(RuntimeError, match="stats harvest"):
+        t.optimize(spark, sort_key=["k"], target_groups=3)
+    live = set(t.active_groups())
+    leftovers = [
+        d for d in os.listdir(t.data_dir)
+        if d.startswith((".opt-", ".part-"))
+        or (d.startswith("g-") and d not in live)
+    ]
+    assert leftovers == [], f"staging/group leak: {leftovers}"
+    assert t.latest_version() == 0
+
+
+def test_older_format_checkpoint_reads_like_full_replay(spark, tmp_path):
+    """A checkpoint written without the 'schema'/'constraints'/'txns'
+    keys (the older format) must give every log-derived lookup the
+    answer a full replay from commit 0 gives."""
+    t = TxTable(str(tmp_path / "t"))
+    t.commit_append(_kv(spark, [(1, 10), (2, 20)]), txn=("app", 1))  # v0
+    t.add_constraint(spark, "v_pos", "v > 0")                         # v1
+    t.commit_append(                                                  # v2
+        _kv(spark, [(3, 30, 300)], "k long, v long, w long"),
+        evolve=True, txn=("app", 2),
+    )
+    t.delete_where(spark, F.col("k") == 1)                            # v3
+    t.alter_rename_column(spark, "w", "w2")                           # v4
+    t.commit_append(_kv(spark, [(4, 40, 400)], "k long, v long, w2 long"))
+
+    def lookups():
+        return (
+            t.active_groups(),
+            t.read_schema(spark).json(),
+            t.constraints(),
+            t.txn_version("app", 1),
+            t.txn_version("app", 2),
+            t.txn_latest_batch("app"),
+            sorted(tuple(r) for r in t.read(spark).collect()),
+        )
+
+    full = lookups()
+    t.checkpoint(version=3)
+    cp = os.path.join(t.log_dir, f"{3:020d}.checkpoint.json")
+    with open(cp) as fh:
+        snap = json.load(fh)
+    older = {k: snap[k] for k in ("version", "active", "stats", "dvs")}
+    os.remove(cp)
+    with open(cp, "w") as fh:
+        json.dump(older, fh)
+    assert lookups() == full
+    assert full[2] == {"v_pos": "v > 0"} and full[5] == 2
+    assert full[6] == [(2, 20, None), (3, 30, 300), (4, 40, 400)]
 
 
 def test_commit_overwrite_txn_idempotent(spark, tmp_path):
