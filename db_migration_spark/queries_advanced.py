@@ -44,6 +44,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import load_table
+from .queries_e2e import _fx
 
 # ---------------------------------------------------------------------------
 # recursive CTE through the SQL front door
@@ -778,8 +779,6 @@ def q_fixedwidth_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     codegen substring math, no UDF."""
     import os
 
-    from .queries_e2e import _fx
-
     o = load_table(spark, sf_dir, "orders")
     path = _fx(sf_dir, "orders_fixedwidth")
     if not os.path.exists(os.path.join(path, "_SUCCESS")):
@@ -1069,8 +1068,6 @@ def q_csv_multiline_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     parallelize per-FILE, which is why the engine's own sinks are
     parquet and this path exists for interchange fidelity."""
     import os
-
-    from .queries_e2e import _fx
 
     o = load_table(spark, sf_dir, "orders")
     path = _fx(sf_dir, "orders_multiline_csv")
@@ -1898,8 +1895,6 @@ def q_sink_compaction_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     import glob
     import os
 
-    from .queries_e2e import _fx
-
     o = load_table(spark, sf_dir, "orders")
     frag = _fx(sf_dir, "orders_fragmented")
     compacted = _fx(sf_dir, "orders_compacted")
@@ -2623,86 +2618,46 @@ def q_orders_abc_factscale(
     )
 
 
-def register(queries: dict, oracles: dict) -> None:
-    queries["ivm_join_delta"] = q_ivm_join_delta
-    oracles["ivm_join_delta"] = ORACLE_IVM_JOIN
-    queries["eav_tx_log"] = q_eav_tx_log
-    oracles["eav_tx_log"] = ORACLE_EAV_TX_LOG
-    queries["ts_seasonal_forecast"] = q_ts_seasonal_forecast
-    oracles["ts_seasonal_forecast"] = ORACLE_SEASONAL
-    queries["eav_tx_metadata"] = q_eav_tx_metadata
-    oracles["eav_tx_metadata"] = ORACLE_EAV_TX_META
-    queries["fixedwidth_source"] = q_fixedwidth_source
-    oracles["fixedwidth_source"] = ORACLE_FIXEDWIDTH
-    queries["eav_lookup_ref"] = q_eav_lookup_ref
-    oracles["eav_lookup_ref"] = ORACLE_EAV_LOOKUP_REF
-    queries["f_regex_suite"] = q_f_regex_suite
-    oracles["f_regex_suite"] = ORACLE_F_REGEX
-    queries["f_interval_suite"] = q_f_interval_suite
-    oracles["f_interval_suite"] = ORACLE_F_INTERVAL
-    queries["text_quality_logit"] = q_text_quality_logit
-    oracles["text_quality_logit"] = ORACLE_QUALITY_LOGIT
-    queries["csv_multiline_roundtrip"] = q_csv_multiline_roundtrip
-    oracles["csv_multiline_roundtrip"] = ORACLE_CSV_MULTILINE
-    queries["stats_chi_square"] = q_stats_chi_square
-    oracles["stats_chi_square"] = ORACLE_CHI_SQUARE
-    queries["mv_reuse_rollup"] = q_mv_reuse_rollup
-    oracles["mv_reuse_rollup"] = ORACLE_MV_REUSE
-    queries["orders_skyline"] = q_orders_skyline
-    oracles["orders_skyline"] = ORACLE_SKYLINE
-    queries["u6_setops_all"] = q_u6_setops_all
-    oracles["u6_setops_all"] = ORACLE_U6_SETOPS
-    queries["f_window_suite2"] = q_f_window_suite2
-    oracles["f_window_suite2"] = ORACLE_F_WINDOW2
-    queries["eav_schema_alter"] = q_eav_schema_alter
-    oracles["eav_schema_alter"] = ORACLE_SCHEMA_ALTER
-    queries["shard_manifest"] = q_shard_manifest
-    oracles["shard_manifest"] = ORACLE_SHARD_MANIFEST
-    queries["ivm_delta_merge"] = q_ivm_delta_merge
-    oracles["ivm_delta_merge"] = ORACLE_IVM
-    queries["eav_bitemporal"] = q_eav_bitemporal
-    oracles["eav_bitemporal"] = ORACLE_BITEMPORAL
-    queries["events_markov_transitions"] = q_events_markov_transitions
-    oracles["events_markov_transitions"] = ORACLE_MARKOV
-    queries["orders_abc_pareto"] = q_orders_abc_pareto
-    oracles["orders_abc_pareto"] = ORACLE_ABC
-    queries["sink_compaction_roundtrip"] = q_sink_compaction_roundtrip
-    oracles["sink_compaction_roundtrip"] = ORACLE_COMPACTION
-    queries["eav_nohistory"] = q_eav_nohistory
-    oracles["eav_nohistory"] = ORACLE_NOHISTORY
-    queries["f_array_suite2"] = q_f_array_suite2
-    oracles["f_array_suite2"] = ORACLE_F_ARRAY2
-    queries["a9_percentile_disc"] = q_a9_percentile_disc
-    oracles["a9_percentile_disc"] = ORACLE_PCT_DISC
-    queries["eav_tuple_attr"] = q_eav_tuple_attr
-    oracles["eav_tuple_attr"] = ORACLE_TUPLE_ATTR
-    queries["profile_gini"] = q_profile_gini
-    oracles["profile_gini"] = ORACLE_PROFILE_GINI
-    queries["f_bitwise_suite"] = q_f_bitwise_suite
-    oracles["f_bitwise_suite"] = ORACLE_F_BITWISE
-    queries["ts_twap"] = q_ts_twap
-    oracles["ts_twap"] = ORACLE_TWAP
-    queries["ts_vwap"] = q_ts_vwap
-    oracles["ts_vwap"] = ORACLE_VWAP
-    queries["graph_assortativity"] = q_graph_assortativity
-    oracles["graph_assortativity"] = ORACLE_ASSORTATIVITY
-    queries["orders_benford"] = q_orders_benford
-    oracles["orders_benford"] = ORACLE_BENFORD
-    queries["sql_recursive_cte"] = q_sql_recursive_cte
-    oracles["sql_recursive_cte"] = SQL_RECURSIVE_CTE
-    queries["assoc_rules"] = q_assoc_rules
-    oracles["assoc_rules"] = ORACLE_ASSOC
-    queries["rfm_segments"] = q_rfm_segments
-    oracles["rfm_segments"] = ORACLE_RFM
-    queries["rfm_segments_factscale"] = q_rfm_segments_factscale
-    oracles["rfm_segments_factscale"] = ORACLE_RFM
-    queries["orders_abc_factscale"] = q_orders_abc_factscale
-    oracles["orders_abc_factscale"] = ORACLE_ABC
-    queries["stats_ab_test"] = q_stats_ab_test
-    oracles["stats_ab_test"] = ORACLE_AB_TEST
-    queries["ts_ohlc_bars"] = q_ts_ohlc_bars
-    oracles["ts_ohlc_bars"] = ORACLE_OHLC
-    queries["graph_kcore"] = q_graph_kcore
-    oracles["graph_kcore"] = ORACLE_KCORE
-    queries["f_aggorder_suite"] = q_f_aggorder_suite
-    oracles["f_aggorder_suite"] = ORACLE_AGGORDER
+REGISTRY = (
+    (q_ivm_join_delta, ORACLE_IVM_JOIN),
+    (q_eav_tx_log, ORACLE_EAV_TX_LOG),
+    (q_ts_seasonal_forecast, ORACLE_SEASONAL),
+    (q_eav_tx_metadata, ORACLE_EAV_TX_META),
+    (q_fixedwidth_source, ORACLE_FIXEDWIDTH),
+    (q_eav_lookup_ref, ORACLE_EAV_LOOKUP_REF),
+    (q_f_regex_suite, ORACLE_F_REGEX),
+    (q_f_interval_suite, ORACLE_F_INTERVAL),
+    (q_text_quality_logit, ORACLE_QUALITY_LOGIT),
+    (q_csv_multiline_roundtrip, ORACLE_CSV_MULTILINE),
+    (q_stats_chi_square, ORACLE_CHI_SQUARE),
+    (q_mv_reuse_rollup, ORACLE_MV_REUSE),
+    (q_orders_skyline, ORACLE_SKYLINE),
+    (q_u6_setops_all, ORACLE_U6_SETOPS),
+    (q_f_window_suite2, ORACLE_F_WINDOW2),
+    (q_eav_schema_alter, ORACLE_SCHEMA_ALTER),
+    (q_shard_manifest, ORACLE_SHARD_MANIFEST),
+    (q_ivm_delta_merge, ORACLE_IVM),
+    (q_eav_bitemporal, ORACLE_BITEMPORAL),
+    (q_events_markov_transitions, ORACLE_MARKOV),
+    (q_orders_abc_pareto, ORACLE_ABC),
+    (q_sink_compaction_roundtrip, ORACLE_COMPACTION),
+    (q_eav_nohistory, ORACLE_NOHISTORY),
+    (q_f_array_suite2, ORACLE_F_ARRAY2),
+    (q_a9_percentile_disc, ORACLE_PCT_DISC),
+    (q_eav_tuple_attr, ORACLE_TUPLE_ATTR),
+    (q_profile_gini, ORACLE_PROFILE_GINI),
+    (q_f_bitwise_suite, ORACLE_F_BITWISE),
+    (q_ts_twap, ORACLE_TWAP),
+    (q_ts_vwap, ORACLE_VWAP),
+    (q_graph_assortativity, ORACLE_ASSORTATIVITY),
+    (q_orders_benford, ORACLE_BENFORD),
+    (q_sql_recursive_cte, SQL_RECURSIVE_CTE),
+    (q_assoc_rules, ORACLE_ASSOC),
+    (q_rfm_segments, ORACLE_RFM),
+    (q_rfm_segments_factscale, ORACLE_RFM),
+    (q_orders_abc_factscale, ORACLE_ABC),
+    (q_stats_ab_test, ORACLE_AB_TEST),
+    (q_ts_ohlc_bars, ORACLE_OHLC),
+    (q_graph_kcore, ORACLE_KCORE),
+    (q_f_aggorder_suite, ORACLE_AGGORDER),
+)

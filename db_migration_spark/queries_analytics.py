@@ -50,6 +50,8 @@ from pyspark.sql import functions as F
 from .catalog import load_table
 from .functions import text as T
 from .operators import dedup
+from .queries_e2e import _fx
+from .queries_shared import _melt_lineitem_df
 
 # ---------------------------------------------------------------------------
 # dynamic partition pruning
@@ -69,8 +71,6 @@ def q_dpp_pruned_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition and scanning the table.  Plan guard:
     test_plans_guard.py (dynamicpruning on the fact scan).
     """
-    from .queries_e2e import _fx
-
     docs = load_table(spark, sf_dir, "documents")
     path = _fx(sf_dir, "docs_by_lang_dpp")
     docs.write.mode("overwrite").partitionBy("lang").parquet(path)
@@ -1048,8 +1048,6 @@ def q_xml_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     the original table.  Adds the one self-describing hierarchical
     format the S-inventory lacked (S11 CSV, S7 EDN, JSONL already
     gated)."""
-    from .queries_e2e import _fx
-
     nat = load_table(spark, sf_dir, "nation")
     path = _fx(sf_dir, "nation_xml")
     (
@@ -1087,8 +1085,6 @@ def q_sink_zstd_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate.  zstd is the 100 TB archive codec of choice (snappy-class
     decode speed at gzip-class ratios); the roundtrip proves codec
     support end-to-end and the aggregate pins value fidelity."""
-    from .queries_e2e import _fx
-
     li = load_table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag") == "R"
     )
@@ -1127,7 +1123,6 @@ def q_eav_excision(spark: SparkSession, sf_dir: str) -> DataFrame:
     the gate hashes both the removal and the audit trail.  Operator:
     eav.excise (broadcast anti-join; surviving datoms never shuffle)."""
     from .operators import eav
-    from .queries import _melt_lineitem_df
 
     li = load_table(spark, sf_dir, "lineitem")
     datoms = _melt_lineitem_df(li)
@@ -1377,8 +1372,6 @@ def q_csv_badrecords(spark: SparkSession, sf_dir: str) -> DataFrame:
     JSONL path already gates, now for the CSV dialect."""
     import os
 
-    from .queries_e2e import _fx
-
     nat = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_name", "n_regionkey"
     )
@@ -1586,54 +1579,30 @@ FROM batch b LEFT JOIN store s ON b.fp = s.fp
 # ---------------------------------------------------------------------------
 
 
-def register(queries: dict, oracles: dict) -> None:
-    queries["dpp_pruned_join"] = q_dpp_pruned_join
-    oracles["dpp_pruned_join"] = ORACLE_DPP
-    queries["bloom_filter_join"] = q_bloom_filter_join
-    oracles["bloom_filter_join"] = ORACLE_BLOOM
-    queries["stats_moments"] = q_stats_moments
-    oracles["stats_moments"] = ORACLE_MOMENTS
-    queries["heavy_hitters_cms"] = q_heavy_hitters_cms
-    oracles["heavy_hitters_cms"] = ORACLE_CMS
-    queries["sample_stratified"] = q_sample_stratified
-    oracles["sample_stratified"] = ORACLE_STRATIFIED
-    queries["sample_weighted"] = q_sample_weighted
-    oracles["sample_weighted"] = ORACLE_WEIGHTED
-    queries["cohort_retention"] = q_cohort_retention
-    oracles["cohort_retention"] = ORACLE_COHORT
-    queries["ts_gapfill"] = q_ts_gapfill
-    oracles["ts_gapfill"] = ORACLE_GAPFILL
-    queries["text_gopher_rules"] = q_text_gopher_rules
-    oracles["text_gopher_rules"] = ORACLE_GOPHER
-    queries["dedup_containment"] = q_dedup_containment
-    oracles["dedup_containment"] = ORACLE_CONTAINMENT
-    queries["bpe_encode"] = q_bpe_encode
-    oracles["bpe_encode"] = ORACLE_BPE_ENCODE
-    queries["u5_unpivot"] = q_u5_unpivot
-    oracles["u5_unpivot"] = ORACLE_UNPIVOT
-    queries["lateral_topk"] = q_lateral_topk
-    oracles["lateral_topk"] = ORACLE_LATERAL
-    queries["mixture_temperature"] = q_mixture_temperature
-    oracles["mixture_temperature"] = ORACLE_MIXTURE_T
-    queries["ts_anomaly_flags"] = q_ts_anomaly_flags
-    oracles["ts_anomaly_flags"] = ORACLE_ANOMALY
-    queries["xml_roundtrip"] = q_xml_roundtrip
-    oracles["xml_roundtrip"] = ORACLE_XML
-    queries["sink_zstd_roundtrip"] = q_sink_zstd_roundtrip
-    oracles["sink_zstd_roundtrip"] = ORACLE_ZSTD
-    queries["eav_excision"] = q_eav_excision
-    oracles["eav_excision"] = ORACLE_EXCISION
-    queries["scd2_intervals"] = q_scd2_intervals
-    oracles["scd2_intervals"] = ORACLE_SCD2
-    queries["attribution_last_touch"] = q_attribution_last_touch
-    oracles["attribution_last_touch"] = ORACLE_ATTRIBUTION
-    queries["dq_expectations"] = q_dq_expectations
-    oracles["dq_expectations"] = ORACLE_DQ
-    queries["csv_badrecords"] = q_csv_badrecords
-    oracles["csv_badrecords"] = ORACLE_CSV_BAD
-    queries["vocab_coverage"] = q_vocab_coverage
-    oracles["vocab_coverage"] = ORACLE_VOCAB
-    queries["w8_sequential_pattern"] = q_w8_sequential_pattern
-    oracles["w8_sequential_pattern"] = ORACLE_W8
-    queries["dedup_incremental"] = q_dedup_incremental
-    oracles["dedup_incremental"] = ORACLE_DEDUP_INCR
+REGISTRY = (
+    (q_dpp_pruned_join, ORACLE_DPP),
+    (q_bloom_filter_join, ORACLE_BLOOM),
+    (q_stats_moments, ORACLE_MOMENTS),
+    (q_heavy_hitters_cms, ORACLE_CMS),
+    (q_sample_stratified, ORACLE_STRATIFIED),
+    (q_sample_weighted, ORACLE_WEIGHTED),
+    (q_cohort_retention, ORACLE_COHORT),
+    (q_ts_gapfill, ORACLE_GAPFILL),
+    (q_text_gopher_rules, ORACLE_GOPHER),
+    (q_dedup_containment, ORACLE_CONTAINMENT),
+    (q_bpe_encode, ORACLE_BPE_ENCODE),
+    (q_u5_unpivot, ORACLE_UNPIVOT),
+    (q_lateral_topk, ORACLE_LATERAL),
+    (q_mixture_temperature, ORACLE_MIXTURE_T),
+    (q_ts_anomaly_flags, ORACLE_ANOMALY),
+    (q_xml_roundtrip, ORACLE_XML),
+    (q_sink_zstd_roundtrip, ORACLE_ZSTD),
+    (q_eav_excision, ORACLE_EXCISION),
+    (q_scd2_intervals, ORACLE_SCD2),
+    (q_attribution_last_touch, ORACLE_ATTRIBUTION),
+    (q_dq_expectations, ORACLE_DQ),
+    (q_csv_badrecords, ORACLE_CSV_BAD),
+    (q_vocab_coverage, ORACLE_VOCAB),
+    (q_w8_sequential_pattern, ORACLE_W8),
+    (q_dedup_incremental, ORACLE_DEDUP_INCR),
+)

@@ -96,6 +96,9 @@ from .operators.similarity import (
     nsw_build_edges_descent,
     nsw_longrange_edges,
 )
+from .queries_e2e import _fx
+from .queries_round4 import ORACLE_NSW, _HNSW_M1, _HNSW_STRIDE, _nsw_answer
+from .queries_shared import _ORACLE_ANN_EXACT_HEAD, _ann_recall_gate
 
 # ---------------------------------------------------------------------------
 # the persisted graph store (shared by ann_nsw_store_topk and the
@@ -111,7 +114,6 @@ def ensure_nsw_graph_store(spark: SparkSession, sf_dir: str):
     task 7): behind a ``_BUILD_DONE`` marker so sweeps and bench time
     SERVING, never construction."""
     from .plans.txlog import TxTable
-    from .queries_e2e import _fx
 
     root = _fx(sf_dir, "txlog_nsw_graph")
     done = os.path.join(root, "_BUILD_DONE")
@@ -144,9 +146,6 @@ def ensure_nsw_exact_edges(spark: SparkSession, sf_dir: str) -> dict:
     their n² builds ran every bench sweep before this fixture (r7
     verdict task 7: sweeps time serving, not construction).  Returns
     {"l0": path, "l1": path}."""
-    from .queries_e2e import _fx
-    from .queries_round4 import _HNSW_M1, _HNSW_STRIDE
-
     root = _fx(sf_dir, "nsw_exact_edges")
     done = os.path.join(root, "_BUILD_DONE")
     paths = {
@@ -249,8 +248,6 @@ def q_ann_nsw_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     groups must be strictly below hops × live groups, i.e. at least
     one hop physically skipped files (the first hop always does: its
     frontier is the single entry node)."""
-    from .queries import _ann_recall_gate
-
     t = ensure_nsw_graph_store(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
@@ -316,7 +313,6 @@ def _ensure_stream_nsw_mv(spark: SparkSession, sf_dir: str):
     adversarially replayed (both tables must version-no-op); any
     failure rmtrees the fixture before raising."""
     from .plans.txlog import TxTable
-    from .queries_e2e import _fx
 
     root = _fx(sf_dir, "txlog_stream_nsw_mv")
     done = os.path.join(root, "_BUILD_DONE")
@@ -444,7 +440,6 @@ def q_stream_nsw_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     replay-leaked batch loses or corrupts an edge, and any edge
     difference shifts some hop's beam."""
     from .operators.similarity import nsw_beam_search
-    from .queries_round4 import _nsw_answer
 
     kt = _ensure_stream_nsw_mv(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -1630,7 +1625,6 @@ def _ensure_stream_nsw_descent_mv(spark: SparkSession, sf_dir: str):
     in-batch NN-descent build and is adversarially replayed after the
     drain (must version-no-op both tables)."""
     from .plans.txlog import TxTable
-    from .queries_e2e import _fx
 
     root = _fx(sf_dir, "txlog_stream_nsw_descent_mv")
     done = os.path.join(root, "_BUILD_DONE")
@@ -1764,7 +1758,6 @@ def q_stream_nsw_descent_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     never shipped on the serving path."""
     from .operators.similarity import nsw_beam_search
     from .plans.txlog import TxTable
-    from .queries import _ann_recall_gate
 
     kt, stats_path = _ensure_stream_nsw_descent_mv(spark, sf_dir)
     base = os.path.dirname(kt.root)
@@ -1874,7 +1867,6 @@ def _ensure_ivfpq_store(spark: SparkSession, sf_dir: str):
     serves from is n_sub bytes/vector + centroids + codebooks."""
     from .operators import similarity
     from .plans.txlog import TxTable
-    from .queries_e2e import _fx
 
     root = _fx(sf_dir, "txlog_ivfpq_store")
     done = os.path.join(root, "_BUILD_DONE")
@@ -2073,7 +2065,6 @@ def q_ann_ivfpq_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     ann_ivfpq_hirecall_topk gate.  No counterpart in the reference;
     completes §2.12's similarity family at its serving composition."""
     from .operators import similarity
-    from .queries import _ann_recall_gate
 
     t, books_path = _ensure_ivfpq_store(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -2104,7 +2095,6 @@ def q_ann_ivfpq_hirecall_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     documented trade (the strict boolean lives on
     ann_ivfpq_store_topk's workload); recall is the contract here."""
     from .operators import similarity
-    from .queries import _ann_recall_gate
 
     t, books_path = _ensure_ivfpq_store(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -2136,7 +2126,6 @@ def _ensure_stream_ivfpq_mv(spark: SparkSession, sf_dir: str):
     (code TxTable, codebooks path)."""
     from .operators import similarity
     from .plans.txlog import TxTable
-    from .queries_e2e import _fx
 
     root = _fx(sf_dir, "txlog_stream_ivfpq_mv")
     done = os.path.join(root, "_BUILD_DONE")
@@ -2246,7 +2235,6 @@ def q_stream_ivfpq_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     has one file group per (batch, list), so the probe's zone-map skip
     covers ~_N_SLICES groups per unprobed list."""
     from .operators import similarity
-    from .queries import _ann_recall_gate
 
     t, books_path = _ensure_stream_ivfpq_mv(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -2266,26 +2254,21 @@ def q_stream_ivfpq_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def register(queries: dict, oracles: dict) -> None:
-    from .queries import _ORACLE_ANN_EXACT_HEAD
-    from .queries_round4 import ORACLE_NSW
+ORACLE_ANN_PRUNED = _ORACLE_ANN_EXACT_HEAD.replace(
+    "TRUE AS recall_ok", "TRUE AS recall_ok,\n       TRUE AS pruned"
+)
+# the store gate runs the 4-query workload (strict pruned union)
+ORACLE_ANN_PRUNED_Q4 = ORACLE_ANN_PRUNED.replace("vec_id < 8", "vec_id < 4")
+ORACLE_ANN_BOUNDED = _ORACLE_ANN_EXACT_HEAD.replace(
+    "TRUE AS recall_ok", "TRUE AS recall_ok,\n       TRUE AS bounded"
+)
 
-    pruned_head = _ORACLE_ANN_EXACT_HEAD.replace(
-        "TRUE AS recall_ok", "TRUE AS recall_ok,\n       TRUE AS pruned"
-    )
-    # the store gate runs the 4-query workload (strict pruned union)
-    pruned_head_q4 = pruned_head.replace("vec_id < 8", "vec_id < 4")
-    queries["ann_nsw_store_topk"] = q_ann_nsw_store_topk
-    oracles["ann_nsw_store_topk"] = pruned_head
-    queries["stream_nsw_mv"] = q_stream_nsw_mv
-    oracles["stream_nsw_mv"] = ORACLE_NSW
-    queries["ann_ivfpq_store_topk"] = q_ann_ivfpq_store_topk
-    oracles["ann_ivfpq_store_topk"] = pruned_head_q4
-    queries["stream_ivfpq_mv"] = q_stream_ivfpq_mv
-    oracles["stream_ivfpq_mv"] = pruned_head_q4
-    queries["ann_ivfpq_hirecall_topk"] = q_ann_ivfpq_hirecall_topk
-    oracles["ann_ivfpq_hirecall_topk"] = _ORACLE_ANN_EXACT_HEAD
-    queries["stream_nsw_descent_mv"] = q_stream_nsw_descent_mv
-    oracles["stream_nsw_descent_mv"] = _ORACLE_ANN_EXACT_HEAD.replace(
-        "TRUE AS recall_ok", "TRUE AS recall_ok,\n       TRUE AS bounded"
-    )
+
+REGISTRY = (
+    (q_ann_nsw_store_topk, ORACLE_ANN_PRUNED),
+    (q_stream_nsw_mv, ORACLE_NSW),
+    (q_ann_ivfpq_store_topk, ORACLE_ANN_PRUNED_Q4),
+    (q_stream_ivfpq_mv, ORACLE_ANN_PRUNED_Q4),
+    (q_ann_ivfpq_hirecall_topk, _ORACLE_ANN_EXACT_HEAD),
+    (q_stream_nsw_descent_mv, ORACLE_ANN_BOUNDED),
+)

@@ -17,6 +17,8 @@ from pyspark.sql import functions as F
 
 from .catalog import load_table
 from .operators import corpus as C
+from .queries_dedupstore import _docs_stream
+from .queries_e2e import _fx
 
 
 def _dsir_top50(w: DataFrame) -> DataFrame:
@@ -162,9 +164,6 @@ def _ensure_stream_dsir_mv(spark: SparkSession, sf_dir: str):
 
     from .operators.corpus import dsir_bucket_stats, dsir_occurrences
     from .plans.txlog import TxTable
-    from .queries_dedupstore import _docs_stream
-    from .queries_e2e import _fx
-
     root = _fx(sf_dir, "txlog_stream_dsir_mv")
     done = os.path.join(root, "_BUILD_DONE")
     t = TxTable(root)
@@ -560,47 +559,6 @@ FROM (VALUES
 """
 
 
-def register(queries: dict, oracles: dict) -> None:
-    queries.update(
-        {
-            "corpus_dsir_select": q_corpus_dsir_select,
-            "corpus_dsir_resample": q_corpus_dsir_resample,
-            "stream_dsir_mv": q_stream_dsir_mv,
-            "bpe_train_merges": q_bpe_train_merges,
-            "passage_chunks": q_passage_chunks,
-            "text_lm_perplexity": q_text_lm_perplexity,
-            "text_boilerplate_scrub": q_text_boilerplate_scrub,
-            "pack_sequences": q_pack_sequences,
-            "sample_split": q_sample_split,
-            "url_canonical_dedup": q_url_canonical_dedup,
-            "chunk_dedup": q_chunk_dedup,
-            "mixture_interleave": q_mixture_interleave,
-            "dense_ids": q_dense_ids,
-            "dedup_best_survivor": q_dedup_best_survivor,
-            "length_batching": q_length_batching,
-        }
-    )
-    oracles.update(
-        {
-            "corpus_dsir_select": ORACLE_DSIR,
-            "corpus_dsir_resample": ORACLE_DSIR_RESAMPLE,
-            "stream_dsir_mv": ORACLE_DSIR,
-            "passage_chunks": ORACLE_PASSAGES,
-            "text_lm_perplexity": ORACLE_LM_PPL,
-            "text_boilerplate_scrub": ORACLE_SCRUB,
-            "pack_sequences": ORACLE_PACK,
-            "sample_split": ORACLE_SPLIT,
-            "url_canonical_dedup": ORACLE_URL_DEDUP,
-            "chunk_dedup": ORACLE_CHUNK_DEDUP,
-            "mixture_interleave": ORACLE_INTERLEAVE,
-            "dense_ids": ORACLE_DENSE_IDS,
-            "dedup_best_survivor": ORACLE_BEST_SURVIVOR,
-            "length_batching": ORACLE_LENGTH_BATCHING,
-            "bpe_train_merges": ORACLE_BPE_TRAIN,
-        }
-    )
-
-
 def q_dense_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dense 1..N id assignment in doc_id order (operators/corpus.py
     dense_ids): two-level construction — range partitions, local ranks,
@@ -677,3 +635,22 @@ SELECT (rank - 1) // 32 AS batch_id,
 FROM ranked
 GROUP BY 1
 """
+
+
+REGISTRY = (
+    (q_corpus_dsir_select, ORACLE_DSIR),
+    (q_corpus_dsir_resample, ORACLE_DSIR_RESAMPLE),
+    (q_stream_dsir_mv, ORACLE_DSIR),
+    (q_bpe_train_merges, ORACLE_BPE_TRAIN),
+    (q_passage_chunks, ORACLE_PASSAGES),
+    (q_text_lm_perplexity, ORACLE_LM_PPL),
+    (q_text_boilerplate_scrub, ORACLE_SCRUB),
+    (q_pack_sequences, ORACLE_PACK),
+    (q_sample_split, ORACLE_SPLIT),
+    (q_url_canonical_dedup, ORACLE_URL_DEDUP),
+    (q_chunk_dedup, ORACLE_CHUNK_DEDUP),
+    (q_mixture_interleave, ORACLE_INTERLEAVE),
+    (q_dense_ids, ORACLE_DENSE_IDS),
+    (q_dedup_best_survivor, ORACLE_BEST_SURVIVOR),
+    (q_length_batching, ORACLE_LENGTH_BATCHING),
+)

@@ -6,21 +6,14 @@ verdict task 5); bodies unchanged, same oracles."""
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import load_table
-from .functions import text as TXT
-from .operators import dedup, eav, relational, similarity
-
-from .queries_shared import _ORACLE_MELT_BODY  # noqa: E402
-from .queries_shared import _MELT_ATTRS  # noqa: E402
-from .queries_shared import _melted_lineitem  # noqa: E402
-QUERIES: dict = {}
-ORACLES: dict = {}
+from .operators import eav
+from .queries_e2e import _fx
+from .queries_shared import _MELT_ATTRS, _ORACLE_MELT_BODY, _melted_lineitem
 
 # ---------------------------------------------------------------------------
 # §2.9 X7-ext — Datalog query surface over the datoms store
@@ -56,9 +49,6 @@ WHERE r.a = 'l_returnflag' AND r.v = 'R'
   AND q.a = 'l_quantity'
   AND r.e = s.e AND s.e = q.e
 """
-
-QUERIES["datalog_query"] = q_datalog_query
-ORACLES["datalog_query"] = ORACLE_DATALOG
 
 
 def q_datalog_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -113,9 +103,6 @@ FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
 WHERE o.o_orderstatus = 'F'
 """
 
-QUERIES["datalog_join"] = q_datalog_join
-ORACLES["datalog_join"] = ORACLE_DATALOG_JOIN
-
 
 def q_datalog_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Datomic-style aggregate find: per attribute, the count of distinct
@@ -137,9 +124,6 @@ ORACLE_DATALOG_AGG = """
 SELECT event_type AS a, count(DISTINCT user_id) AS count_e
 FROM events GROUP BY event_type
 """
-
-QUERIES["datalog_agg"] = q_datalog_agg
-ORACLES["datalog_agg"] = ORACLE_DATALOG_AGG
 
 
 def q_datalog_not(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -165,9 +149,6 @@ SELECT DISTINCT user_id AS e FROM events
 WHERE event_type = 'click'
   AND user_id NOT IN (SELECT user_id FROM events WHERE event_type = 'error')
 """
-
-QUERIES["datalog_not"] = q_datalog_not
-ORACLES["datalog_not"] = ORACLE_DATALOG_NOT
 
 
 def q_datalog_or(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -198,9 +179,6 @@ WHERE event_type IN ('click', 'view')
   AND user_id NOT IN (SELECT user_id FROM events WHERE event_type = 'error')
 """
 
-QUERIES["datalog_or"] = q_datalog_or
-ORACLES["datalog_or"] = ORACLE_DATALOG_OR
-
 
 def q_datalog_ancestors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Recursive Datalog rule (ancestor over a parent relation) via path
@@ -229,9 +207,6 @@ WITH RECURSIVE edges AS (
 )
 SELECT src, dst FROM reach
 """
-
-QUERIES["datalog_ancestors"] = q_datalog_ancestors
-ORACLES["datalog_ancestors"] = ORACLE_DATALOG_ANCESTORS
 
 
 def q_datalog_pull(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -280,9 +255,6 @@ SELECT CAST(n.n_nationkey AS BIGINT) AS e,
 FROM nation n JOIN region r ON r.r_regionkey = n.n_regionkey
 """
 
-QUERIES["datalog_pull"] = q_datalog_pull
-ORACLES["datalog_pull"] = ORACLE_DATALOG_PULL
-
 
 def q_datalog_pull_wildcard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Datomic wildcard pull ``[*]`` (datalog.pull with "*"): every
@@ -326,9 +298,6 @@ SELECT CAST(r.r_regionkey + 1000 AS BIGINT) AS e,
        '"region/name":["' || r.r_name || '"]}' AS pulled
 FROM region r
 """
-
-QUERIES["datalog_pull_wildcard"] = q_datalog_pull_wildcard
-ORACLES["datalog_pull_wildcard"] = ORACLE_DATALOG_PULL_WILDCARD
 
 
 def q_eav_cas_patch(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -377,9 +346,6 @@ SELECT c_custkey AS e,
 FROM customer ORDER BY e
 """
 
-QUERIES["eav_cas_patch"] = q_eav_cas_patch
-ORACLES["eav_cas_patch"] = ORACLE_EAV_CAS
-
 
 def q_x7_multi_pivot(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X7 cardinality-many pivot: EAV → one sorted ``array<string>`` per
@@ -404,9 +370,6 @@ FROM m
 WHERE a IN ('l_returnflag', 'l_linestatus')
 GROUP BY e
 """
-
-QUERIES["x7_multi_pivot"] = q_x7_multi_pivot
-ORACLES["x7_multi_pivot"] = ORACLE_X7_MULTI
 
 
 def q_x7_attr_map(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -444,9 +407,6 @@ FROM u GROUP BY e
 """
 )
 
-QUERIES["x7_attr_map"] = q_x7_attr_map
-ORACLES["x7_attr_map"] = ORACLE_X7_ATTR_MAP
-
 
 def q_x7_sparse_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X7 wide-class fallback at PIPELINE level (SURVEY §7 hard part (c)):
@@ -464,7 +424,6 @@ def q_x7_sparse_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from .migrate import materialize_wide
-    from .queries_e2e import _fx
 
     store = _fx(sf_dir, "sparse_map_store")
     schema_p = _fx(sf_dir, "sparse_map_schema")
@@ -543,9 +502,6 @@ SELECT l_orderkey * 8 + l_linenumber AS e,
 FROM unique_li
 """
 
-QUERIES["x7_sparse_map"] = q_x7_sparse_map
-ORACLES["x7_sparse_map"] = ORACLE_X7_SPARSE_MAP
-
 
 # ---------------------------------------------------------------------------
 # §2.9 X4 — cardinality-aware patch resolution
@@ -591,9 +547,6 @@ WITH datoms AS (
 )
 SELECT e, a, v, tx, op FROM ranked WHERE rn = 1 AND op
 """
-
-QUERIES["x4_card_many"] = q_x4_card_many
-ORACLES["x4_card_many"] = ORACLE_X4_CARD_MANY
 
 
 # ---------------------------------------------------------------------------
@@ -644,9 +597,6 @@ FROM latest WHERE rn = 1 AND op
 GROUP BY a
 """
 
-QUERIES["eav_as_of"] = q_eav_as_of
-ORACLES["eav_as_of"] = ORACLE_EAV_AS_OF
-
 
 def q_eav_since(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Datomic ``since`` view (eav.since) — the complement of as-of:
@@ -687,9 +637,6 @@ SELECT a, count(*) AS n_visible, count(DISTINCT e) AS n_entities,
 FROM latest WHERE rn = 1 AND op
 GROUP BY a
 """
-
-QUERIES["eav_since"] = q_eav_since
-ORACLES["eav_since"] = ORACLE_EAV_SINCE
 
 
 def q_eav_upsert_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -766,9 +713,6 @@ SELECT ident, e AS resolved_e, FALSE AS upserted FROM misses
 ORDER BY ident
 """
 
-QUERIES["eav_upsert_identity"] = q_eav_upsert_identity
-ORACLES["eav_upsert_identity"] = ORACLE_EAV_UPSERT
-
 
 def q_eav_retract_cascade(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Datomic ``:db/retractEntity`` with ``:db/isComponent`` cascade
@@ -833,9 +777,6 @@ SELECT count(*) AS n_entities, min(e) AS min_e, max(e) AS max_e,
 FROM closure
 """
 
-QUERIES["eav_retract_cascade"] = q_eav_retract_cascade
-ORACLES["eav_retract_cascade"] = ORACLE_EAV_RETRACT
-
 
 def q_datalog_with(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Datomic ``:with`` clause — bag semantics for aggregates: ``[:find
@@ -872,9 +813,6 @@ GROUP BY event_type
 ORDER BY t
 """
 
-QUERIES["datalog_with"] = q_datalog_with
-ORACLES["datalog_with"] = ORACLE_DATALOG_WITH
-
 
 def q_datalog_collection(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Datomic collection find-spec ``:find [?n ...]`` — the distinct
@@ -905,11 +843,6 @@ ORACLE_DATALOG_COLLECTION = """
 SELECT list_sort(list(DISTINCT n_name)) AS n_coll
 FROM nation WHERE n_regionkey = 3
 """
-
-QUERIES["datalog_collection"] = q_datalog_collection
-ORACLES["datalog_collection"] = ORACLE_DATALOG_COLLECTION
-
-
 
 
 def q_datalog_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -969,11 +902,6 @@ WHERE o_totalprice > 300000 OR o_orderpriority = '1-URGENT'
 GROUP BY o_orderstatus
 """
 
-QUERIES["datalog_rules"] = q_datalog_rules
-ORACLES["datalog_rules"] = ORACLE_DATALOG_RULES
-
-
-
 
 def _ensure_index_store(spark: SparkSession, sf_dir: str) -> str:
     """Build the four-index store (eav.write_indexes) once per sf —
@@ -982,7 +910,6 @@ def _ensure_index_store(spark: SparkSession, sf_dir: str) -> str:
     import os
 
     from .operators.eav import write_indexes
-    from .queries_e2e import _fx
 
     root = _fx(sf_dir, "index_store")
     if os.path.exists(f"{root}/avet"):
@@ -1034,9 +961,6 @@ WHERE c_name >= 'Customer#000000100' AND c_name <= 'Customer#000000199'
 ORDER BY e
 """
 
-QUERIES["eav_avet_lookup"] = q_eav_avet_lookup
-ORACLES["eav_avet_lookup"] = ORACLE_EAV_AVET
-
 
 def q_eav_vaet_reverse(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Datomic's VAET index: reverse-ref navigation ("which orders point
@@ -1066,9 +990,6 @@ SELECT o_custkey AS target, count(*) AS n_referrers,
 FROM orders WHERE o_custkey < 50
 GROUP BY o_custkey ORDER BY target
 """
-
-QUERIES["eav_vaet_reverse"] = q_eav_vaet_reverse
-ORACLES["eav_vaet_reverse"] = ORACLE_EAV_VAET
 
 
 def q_datalog_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1101,10 +1022,29 @@ FROM orders JOIN customer ON o_custkey = c_custkey
 GROUP BY c_mktsegment
 """
 
-QUERIES["datalog_indexed"] = q_datalog_indexed
-ORACLES["datalog_indexed"] = ORACLE_DATALOG_INDEXED
 
-
-def register(queries: dict, oracles: dict) -> None:
-    queries.update(QUERIES)
-    oracles.update(ORACLES)
+REGISTRY = (
+    (q_datalog_query, ORACLE_DATALOG),
+    (q_datalog_join, ORACLE_DATALOG_JOIN),
+    (q_datalog_agg, ORACLE_DATALOG_AGG),
+    (q_datalog_not, ORACLE_DATALOG_NOT),
+    (q_datalog_or, ORACLE_DATALOG_OR),
+    (q_datalog_ancestors, ORACLE_DATALOG_ANCESTORS),
+    (q_datalog_pull, ORACLE_DATALOG_PULL),
+    (q_datalog_pull_wildcard, ORACLE_DATALOG_PULL_WILDCARD),
+    (q_eav_cas_patch, ORACLE_EAV_CAS),
+    (q_x7_multi_pivot, ORACLE_X7_MULTI),
+    (q_x7_attr_map, ORACLE_X7_ATTR_MAP),
+    (q_x7_sparse_map, ORACLE_X7_SPARSE_MAP),
+    (q_x4_card_many, ORACLE_X4_CARD_MANY),
+    (q_eav_as_of, ORACLE_EAV_AS_OF),
+    (q_eav_since, ORACLE_EAV_SINCE),
+    (q_eav_upsert_identity, ORACLE_EAV_UPSERT),
+    (q_eav_retract_cascade, ORACLE_EAV_RETRACT),
+    (q_datalog_with, ORACLE_DATALOG_WITH),
+    (q_datalog_collection, ORACLE_DATALOG_COLLECTION),
+    (q_datalog_rules, ORACLE_DATALOG_RULES),
+    (q_eav_avet_lookup, ORACLE_EAV_AVET),
+    (q_eav_vaet_reverse, ORACLE_EAV_VAET),
+    (q_datalog_indexed, ORACLE_DATALOG_INDEXED),
+)

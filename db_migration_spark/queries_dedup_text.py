@@ -5,21 +5,14 @@ bodies unchanged, same oracles."""
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import load_table
 from .functions import text as TXT
-from .operators import dedup, eav, relational, similarity
+from .operators import dedup, similarity
+from .queries_shared import _ORACLE_ANN_EXACT_HEAD, _ann_recall_gate
 
-from .queries_shared import _ORACLE_ANN_EXACT_HEAD  # noqa: E402
-from .queries_shared import _ann_recall_gate  # noqa: E402
-QUERIES: dict = {}
-ORACLES: dict = {}
 
 def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (threshold 0.4 — the synthetic
@@ -125,22 +118,6 @@ ORDER BY t.label
 """
 
 
-QUERIES.update(
-    {
-        "dedup_embedding_cosine": q_dedup_embedding_cosine,
-        "dedup_semantic": q_dedup_semantic,
-        "text_bpe_tokens": q_text_bpe_tokens,
-    }
-)
-ORACLES.update(
-    {
-        "dedup_embedding_cosine": ORACLE_DEDUP_COSINE,
-        "dedup_semantic": ORACLE_DEDUP_SEMANTIC,
-        "text_bpe_tokens": ORACLE_BPE,
-    }
-)
-
-
 def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-partitioned ANN as a deterministic acceptance row (centroid
     seeding is hash-ranked and deterministic; the gated CONTRACT is
@@ -155,10 +132,6 @@ def q_ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "neighbor_id"
     )
     return _ann_recall_gate(approx, exact, bound=0.4)
-
-
-QUERIES["ann_ivf_topk"] = q_ann_ivf_topk
-ORACLES["ann_ivf_topk"] = _ORACLE_ANN_EXACT_HEAD
 
 
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -180,10 +153,6 @@ def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "query_id", "neighbor_id"
     )
     return _ann_recall_gate(approx, exact, bound=0.4)
-
-
-QUERIES["ann_pq_topk"] = q_ann_pq_topk
-ORACLES["ann_pq_topk"] = _ORACLE_ANN_EXACT_HEAD
 
 
 # ---------------------------------------------------------------------------
@@ -266,20 +235,6 @@ SELECT d.doc_id,
 FROM documents d LEFT JOIN comps c ON c.id = d.doc_id
 """
 )
-
-QUERIES.update(
-    {
-        "dedup_components": q_dedup_components,
-        "dedup_survivors": q_dedup_survivors,
-    }
-)
-ORACLES.update(
-    {
-        "dedup_components": ORACLE_DEDUP_COMPONENTS,
-        "dedup_survivors": ORACLE_DEDUP_SURVIVORS,
-    }
-)
-
 
 
 # ---------------------------------------------------------------------------
@@ -484,26 +439,17 @@ WHERE priority_rank <= CASE lang WHEN 'en' THEN 100 WHEN 'es' THEN 40
                        WHEN 'zh' THEN 40 ELSE 0 END
 """
 
-QUERIES.update(
-    {
-        "text_pii_redact": q_text_pii_redact,
-        "text_repetition_gate": q_text_repetition_gate,
-        "text_contamination": q_text_contamination,
-        "sample_lang_budget": q_sample_lang_budget,
-    }
+
+REGISTRY = (
+    (q_dedup_embedding_cosine, ORACLE_DEDUP_COSINE),
+    (q_dedup_semantic, ORACLE_DEDUP_SEMANTIC),
+    (q_text_bpe_tokens, ORACLE_BPE),
+    (q_ann_ivf_topk, _ORACLE_ANN_EXACT_HEAD),
+    (q_ann_pq_topk, _ORACLE_ANN_EXACT_HEAD),
+    (q_dedup_components, ORACLE_DEDUP_COMPONENTS),
+    (q_dedup_survivors, ORACLE_DEDUP_SURVIVORS),
+    (q_text_pii_redact, ORACLE_PII),
+    (q_text_repetition_gate, ORACLE_REPETITION),
+    (q_text_contamination, ORACLE_CONTAMINATION),
+    (q_sample_lang_budget, ORACLE_LANG_BUDGET),
 )
-ORACLES.update(
-    {
-        "text_pii_redact": ORACLE_PII,
-        "text_repetition_gate": ORACLE_REPETITION,
-        "text_contamination": ORACLE_CONTAMINATION,
-        "sample_lang_budget": ORACLE_LANG_BUDGET,
-    }
-)
-
-
-
-
-def register(queries: dict, oracles: dict) -> None:
-    queries.update(QUERIES)
-    oracles.update(ORACLES)

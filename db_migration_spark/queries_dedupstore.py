@@ -37,6 +37,8 @@ from pyspark.sql import functions as F
 
 from .catalog import load_table
 from .operators import dedup
+from .queries_e2e import _fx
+from .queries_shared import _SHINGLE_JACCARD_CTES
 
 NUM_HASHES = 32
 BANDS = 8
@@ -71,7 +73,6 @@ def _ensure_lsh_store(spark: SparkSession, sf_dir: str):
     import shutil
 
     from .plans.txlog import TxTable
-    from .queries_e2e import _fx
 
     root = _fx(sf_dir, "lsh_band_store")
     done = os.path.join(root, "_BUILD_DONE")
@@ -289,7 +290,6 @@ def q_stream_dedup_lsh_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from .plans.txlog import TxTable
-    from .queries_e2e import _fx
 
     root = _fx(sf_dir, "stream_lsh_mv")
     done = os.path.join(root, "_BUILD_DONE")
@@ -370,15 +370,11 @@ def q_stream_dedup_lsh_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def register(queries: dict, oracles: dict) -> None:
-    # the exact-pair CTEs live in queries.py (the shared shingle block
-    # every dedup oracle extends); imported here at register time —
-    # register() is called from queries.py AFTER those are defined
-    from .queries import _SHINGLE_JACCARD_CTES
-
-    oracle_probe = (
-        _SHINGLE_JACCARD_CTES.format(
-            extra_ctes=r""", hi AS (
+# the exact-pair CTEs are the shared shingle block every dedup oracle
+# extends (queries_shared)
+ORACLE_LSH_STORE_PROBE = (
+    _SHINGLE_JACCARD_CTES.format(
+        extra_ctes=r""", hi AS (
   SELECT id_a, id_b
   FROM inter
   JOIN sizes sa ON sa.doc_id = id_a
@@ -386,28 +382,29 @@ def register(queries: dict, oracles: dict) -> None:
   WHERE CAST(n_inter AS DOUBLE) / (sa.n_sh + sb.n_sh - n_inter) >= 0.8
     AND (id_a % 2) <> (id_b % 2)
 )"""
-        )
-        + """
+    )
+    + """
 SELECT CAST(count(*) AS BIGINT) AS n_exact_hi,
        TRUE AS recall_ok, TRUE AS est_err_ok
 FROM hi
 """
-    )
-    oracle_mv = f"""
+)
+ORACLE_STREAM_LSH_MV = f"""
 SELECT CAST(count(*) AS BIGINT) AS n_docs,
        CAST(count(*) * {BANDS} AS BIGINT) AS n_band_rows,
        TRUE AS store_equals_batch
 FROM documents
 """
-    oracle_point = """
+ORACLE_LSH_POINT_PROBE = """
 SELECT CAST((SELECT min(doc_id) FROM documents WHERE doc_id % 2 = 0)
             AS BIGINT) AS probe_id,
        TRUE AS self_found,
        TRUE AS probe_cost_bounded
 """
-    queries["dedup_lsh_store_probe"] = q_dedup_lsh_store_probe
-    oracles["dedup_lsh_store_probe"] = oracle_probe
-    queries["dedup_lsh_point_probe"] = q_dedup_lsh_point_probe
-    oracles["dedup_lsh_point_probe"] = oracle_point
-    queries["stream_dedup_lsh_mv"] = q_stream_dedup_lsh_mv
-    oracles["stream_dedup_lsh_mv"] = oracle_mv
+
+
+REGISTRY = (
+    (q_dedup_lsh_store_probe, ORACLE_LSH_STORE_PROBE),
+    (q_dedup_lsh_point_probe, ORACLE_LSH_POINT_PROBE),
+    (q_stream_dedup_lsh_mv, ORACLE_STREAM_LSH_MV),
+)

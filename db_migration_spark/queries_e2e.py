@@ -475,22 +475,10 @@ CROSS JOIN (VALUES ('Id', 'string', 'one'),
 """
 
 
-def register(queries: dict, oracles: dict) -> None:
-    queries.update(
-        {
-            "ace_e2e_datoms": q_ace_e2e_datoms,
-            "ace_e2e_qa": q_ace_e2e_qa,
-            "ace_e2e_patched": q_ace_e2e_patched,
-            "edn_roundtrip": q_edn_roundtrip,
-            "x2_models_schema": q_x2_models_schema,
-        }
-    )
-    oracles.update(
-        {
-            "ace_e2e_datoms": ORACLE_ACE_E2E_DATOMS,
-            "ace_e2e_qa": ORACLE_ACE_E2E_QA,
-            "ace_e2e_patched": ORACLE_ACE_E2E_PATCHED,
-            "edn_roundtrip": ORACLE_EDN_ROUNDTRIP,
-            "x2_models_schema": ORACLE_X2_MODELS,
-        }
-    )
+REGISTRY = (
+    (q_ace_e2e_datoms, ORACLE_ACE_E2E_DATOMS),
+    (q_ace_e2e_qa, ORACLE_ACE_E2E_QA),
+    (q_ace_e2e_patched, ORACLE_ACE_E2E_PATCHED),
+    (q_edn_roundtrip, ORACLE_EDN_ROUNDTRIP),
+    (q_x2_models_schema, ORACLE_X2_MODELS),
+)

@@ -34,12 +34,13 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import load_table
+from .queries_e2e import _code_version as _fx_code_version
+from .queries_e2e import _fx
+from .queries_shared import _melted_lineitem
 
 # hermetic cache root: keyed by the package-source content hash, so a
 # generator edit can never serve a stale pre-change fixture (see
 # queries_e2e._code_version)
-from .queries_e2e import _code_version as _fx_code_version
-
 _BINFILE_ROOT = f"/tmp/dbm_spark_binfiles_{_fx_code_version()}"
 
 
@@ -367,73 +368,6 @@ FROM dims
 # ---------------------------------------------------------------------------
 
 
-def register(queries: dict, oracles: dict) -> None:
-    queries["sql_group_by_all"] = q_sql_group_by_all
-    oracles["sql_group_by_all"] = SQL_GROUP_BY_ALL
-    queries["binaryfile_scan"] = q_binaryfile_scan
-    oracles["binaryfile_scan"] = ORACLE_BINARYFILE
-    queries["corpus_ngram_counts"] = q_corpus_ngram_counts
-    oracles["corpus_ngram_counts"] = ORACLE_NGRAM_COUNTS
-    queries["text_gazetteer_tag"] = q_text_gazetteer_tag
-    oracles["text_gazetteer_tag"] = ORACLE_GAZETTEER
-    queries["multimodal_qoi_decode"] = q_multimodal_qoi_decode
-    oracles["multimodal_qoi_decode"] = ORACLE_QOI
-    queries["multimodal_webp_meta"] = q_multimodal_webp_meta
-    oracles["multimodal_webp_meta"] = ORACLE_WEBP
-    queries["eav_entity_history"] = q_eav_entity_history
-    oracles["eav_entity_history"] = ORACLE_ENTITY_HISTORY
-    queries["f_aggmisc_suite"] = q_f_aggmisc_suite
-    oracles["f_aggmisc_suite"] = ORACLE_AGGMISC
-    queries["sql_join_hint"] = q_sql_join_hint
-    oracles["sql_join_hint"] = SQL_JOIN_HINT
-    queries["cdc_apply"] = q_cdc_apply
-    oracles["cdc_apply"] = ORACLE_CDC
-    queries["multimodal_exif_meta"] = q_multimodal_exif_meta
-    oracles["multimodal_exif_meta"] = ORACLE_EXIF
-    queries["eav_db_filter"] = q_eav_db_filter
-    oracles["eav_db_filter"] = ORACLE_DB_FILTER
-    queries["corpus_e2e_pipeline"] = q_corpus_e2e_pipeline
-    oracles["corpus_e2e_pipeline"] = ORACLE_CORPUS_E2E
-    queries["corpus_survival_funnel"] = q_corpus_survival_funnel
-    oracles["corpus_survival_funnel"] = ORACLE_SURVIVAL_FUNNEL
-    queries["sql_pipe_syntax"] = q_sql_pipe_syntax
-    oracles["sql_pipe_syntax"] = ORACLE_PIPE
-    queries["sql_collation_group"] = q_sql_collation_group
-    oracles["sql_collation_group"] = ORACLE_COLLATION
-    queries["f_like_suite"] = q_f_like_suite
-    oracles["f_like_suite"] = ORACLE_LIKE
-    queries["f_datetime_suite2"] = q_f_datetime_suite2
-    oracles["f_datetime_suite2"] = ORACLE_DATETIME2
-    queries["eav_with_speculative"] = q_eav_with_speculative
-    oracles["eav_with_speculative"] = ORACLE_WITH
-    queries["f_math_suite"] = q_f_math_suite
-    oracles["f_math_suite"] = ORACLE_MATH
-    queries["multimodal_ico_meta"] = q_multimodal_ico_meta
-    oracles["multimodal_ico_meta"] = ORACLE_ICO
-    queries["eav_ident_resolution"] = q_eav_ident_resolution
-    oracles["eav_ident_resolution"] = ORACLE_IDENT
-    queries["w9_value_range_frame"] = q_w9_value_range_frame
-    oracles["w9_value_range_frame"] = ORACLE_W9_RANGE
-    queries["corpus_unigram_ranks"] = q_corpus_unigram_ranks
-    oracles["corpus_unigram_ranks"] = ORACLE_UNIGRAM_RANKS
-    queries["multimodal_flac_meta"] = q_multimodal_flac_meta
-    oracles["multimodal_flac_meta"] = ORACLE_FLAC
-    queries["multimodal_pdf_meta"] = q_multimodal_pdf_meta
-    oracles["multimodal_pdf_meta"] = ORACLE_PDF
-    queries["multimodal_srt_cues"] = q_multimodal_srt_cues
-    oracles["multimodal_srt_cues"] = ORACLE_SRT
-    queries["archive_tar_scan"] = q_archive_tar_scan
-    oracles["archive_tar_scan"] = ORACLE_TAR
-    queries["orders_whatif_discount"] = q_orders_whatif_discount
-    oracles["orders_whatif_discount"] = ORACLE_WHATIF
-    queries["t5_pagination"] = q_t5_pagination
-    oracles["t5_pagination"] = ORACLE_PAGINATION
-    queries["txlog_acid_upsert"] = q_txlog_acid_upsert
-    oracles["txlog_acid_upsert"] = ORACLE_TXLOG_UPSERT
-    queries["txlog_time_travel"] = q_txlog_time_travel
-    oracles["txlog_time_travel"] = ORACLE_TXLOG_TT
-
-
 # ---------------------------------------------------------------------------
 # WebP metadata kernel (RIFF walk, all three bitstream variants)
 # ---------------------------------------------------------------------------
@@ -749,8 +683,6 @@ def q_eav_db_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     predicates into the scan, so the filtered view costs nothing extra
     — the row-level-security shape at 100 TB.  The oracle applies the
     same policy in SQL."""
-    from .queries import _melted_lineitem
-
     datoms = _melted_lineitem(spark, sf_dir)
     visible = datoms.filter(
         F.col("a").isin("l_quantity", "l_returnflag", "l_linestatus")
@@ -1969,7 +1901,6 @@ def _ensure_txlog_store(spark: SparkSession, sf_dir: str):
     import shutil
 
     from .plans.txlog import TxTable
-    from .queries_e2e import _fx
 
     root = _fx(sf_dir, "txlog_orders")
     t = TxTable(root)
@@ -2070,3 +2001,39 @@ SELECT 'latest', count(*),
        CAST(sum(CASE WHEN k % 4 = 0 THEN cents + 1 ELSE cents END) AS BIGINT)
 FROM src WHERE k % 4 IN (0, 1, 2)
 """
+
+
+REGISTRY = (
+    (q_sql_group_by_all, SQL_GROUP_BY_ALL),
+    (q_binaryfile_scan, ORACLE_BINARYFILE),
+    (q_corpus_ngram_counts, ORACLE_NGRAM_COUNTS),
+    (q_text_gazetteer_tag, ORACLE_GAZETTEER),
+    (q_multimodal_qoi_decode, ORACLE_QOI),
+    (q_multimodal_webp_meta, ORACLE_WEBP),
+    (q_eav_entity_history, ORACLE_ENTITY_HISTORY),
+    (q_f_aggmisc_suite, ORACLE_AGGMISC),
+    (q_sql_join_hint, SQL_JOIN_HINT),
+    (q_cdc_apply, ORACLE_CDC),
+    (q_multimodal_exif_meta, ORACLE_EXIF),
+    (q_eav_db_filter, ORACLE_DB_FILTER),
+    (q_corpus_e2e_pipeline, ORACLE_CORPUS_E2E),
+    (q_corpus_survival_funnel, ORACLE_SURVIVAL_FUNNEL),
+    (q_sql_pipe_syntax, ORACLE_PIPE),
+    (q_sql_collation_group, ORACLE_COLLATION),
+    (q_f_like_suite, ORACLE_LIKE),
+    (q_f_datetime_suite2, ORACLE_DATETIME2),
+    (q_eav_with_speculative, ORACLE_WITH),
+    (q_f_math_suite, ORACLE_MATH),
+    (q_multimodal_ico_meta, ORACLE_ICO),
+    (q_eav_ident_resolution, ORACLE_IDENT),
+    (q_w9_value_range_frame, ORACLE_W9_RANGE),
+    (q_corpus_unigram_ranks, ORACLE_UNIGRAM_RANKS),
+    (q_multimodal_flac_meta, ORACLE_FLAC),
+    (q_multimodal_pdf_meta, ORACLE_PDF),
+    (q_multimodal_srt_cues, ORACLE_SRT),
+    (q_archive_tar_scan, ORACLE_TAR),
+    (q_orders_whatif_discount, ORACLE_WHATIF),
+    (q_t5_pagination, ORACLE_PAGINATION),
+    (q_txlog_acid_upsert, ORACLE_TXLOG_UPSERT),
+    (q_txlog_time_travel, ORACLE_TXLOG_TT),
+)

@@ -7,17 +7,13 @@ from __future__ import annotations
 
 import os
 import shutil
-import tempfile
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import load_table
-from .functions import text as TXT
-from .operators import dedup, eav, relational, similarity
+from .queries_e2e import _fx
 
-QUERIES: dict = {}
-ORACLES: dict = {}
 
 def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ORC source/sink (Spark-native columnar alternative to Parquet —
@@ -25,8 +21,6 @@ def q_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     zlib ORC, read it back, aggregate per status.  Predicate pushdown and
     column pruning work the same as Parquet (ORC readers expose min/max
     stripe stats to Catalyst)."""
-    from .queries_e2e import _fx
-
     orders = load_table(spark, sf_dir, "orders")
     path = _fx(sf_dir, "orders_orc")
     orders.write.mode("overwrite").option("compression", "zlib").orc(path)
@@ -50,9 +44,6 @@ FROM orders
 WHERE o_orderdate >= TIMESTAMP '1997-01-01'
 GROUP BY o_orderstatus
 """
-
-QUERIES["orc_roundtrip"] = q_orc_roundtrip
-ORACLES["orc_roundtrip"] = ORACLE_ORC
 
 
 def q_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -117,9 +108,6 @@ FROM lineitem JOIN orders ON l_orderkey = o_orderkey
 GROUP BY o_orderstatus
 """
 
-QUERIES["bucketed_join"] = q_bucketed_join
-ORACLES["bucketed_join"] = ORACLE_BUCKETED
-
 
 def q_sql_frontend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQL front door: every table registered as a view and the query
@@ -149,9 +137,6 @@ SELECT n_name, c_custkey, n_orders, spend,
 FROM cust_orders
 WHERE n_orders >= 3
 """
-
-QUERIES["sql_frontend"] = q_sql_frontend
-ORACLES["sql_frontend"] = SQL_FRONTEND
 
 
 def q_f_try_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -190,9 +175,6 @@ SELECT l_orderkey, l_linenumber,
 FROM lineitem
 """
 
-QUERIES["f_try_suite"] = q_f_try_suite
-ORACLES["f_try_suite"] = ORACLE_TRY
-
 
 def q_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hive-style partitioned layout + partition-pruned scan — the coarse
@@ -201,8 +183,6 @@ def q_partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     to two languages; the plan's PartitionFilters prune every other
     partition directory without opening a file (guard in
     test_plans_guard)."""
-    from .queries_e2e import _fx
-
     docs = load_table(spark, sf_dir, "documents")
     path = _fx(sf_dir, "docs_by_lang")
     (
@@ -228,9 +208,6 @@ WHERE lang IN ('en', 'de')
 GROUP BY lang, source
 """
 
-QUERIES["partitioned_scan"] = q_partitioned_scan
-ORACLES["partitioned_scan"] = ORACLE_PARTITIONED
-
 
 def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Schema drift across shards — the long-lived-corpus reality: an old
@@ -239,8 +216,6 @@ def q_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine aggregates presence per language.  Shard membership is
     deterministic (doc_id parity) so the DuckDB oracle recomputes the
     same split from the live table."""
-    from .queries_e2e import _fx
-
     docs = load_table(spark, sf_dir, "documents")
     root = _fx(sf_dir, "evolving_docs")
     old = docs.filter(F.col("doc_id") % 2 == 0).select(
@@ -274,9 +249,6 @@ FROM documents
 GROUP BY lang
 """
 
-QUERIES["schema_evolution"] = q_schema_evolution
-ORACLES["schema_evolution"] = ORACLE_SCHEMA_EVOLUTION
-
 
 def q_crosstab_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Crosstab via the DataFrame pivot API with an EXPLICIT value list
@@ -304,9 +276,6 @@ SELECT lang,
 FROM documents
 GROUP BY lang
 """
-
-QUERIES["crosstab_lang_source"] = q_crosstab_lang_source
-ORACLES["crosstab_lang_source"] = ORACLE_CROSSTAB
 
 
 def q_nullsafe_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -349,9 +318,6 @@ FROM c JOIN dim ON c.seg_key IS NOT DISTINCT FROM dim.seg_key
 GROUP BY seg_label
 """
 
-QUERIES["nullsafe_join"] = q_nullsafe_join
-ORACLES["nullsafe_join"] = ORACLE_NULLSAFE
-
 
 def q_f_map_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Higher-order MAP expression family: map_from_arrays,
@@ -390,9 +356,6 @@ SELECT c_custkey,
 FROM customer
 """
 
-QUERIES["f_map_suite"] = q_f_map_suite
-ORACLES["f_map_suite"] = ORACLE_MAP
-
 
 def q_hist_doc_lengths(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-width histogram of document length per language (bin width
@@ -415,12 +378,16 @@ FROM documents
 GROUP BY 1, 2
 """
 
-QUERIES["hist_doc_lengths"] = q_hist_doc_lengths
-ORACLES["hist_doc_lengths"] = ORACLE_HIST
 
-
-
-
-def register(queries: dict, oracles: dict) -> None:
-    queries.update(QUERIES)
-    oracles.update(ORACLES)
+REGISTRY = (
+    (q_orc_roundtrip, ORACLE_ORC),
+    (q_bucketed_join, ORACLE_BUCKETED),
+    (q_sql_frontend, SQL_FRONTEND),
+    (q_f_try_suite, ORACLE_TRY),
+    (q_partitioned_scan, ORACLE_PARTITIONED),
+    (q_schema_evolution, ORACLE_SCHEMA_EVOLUTION),
+    (q_crosstab_lang_source, ORACLE_CROSSTAB),
+    (q_nullsafe_join, ORACLE_NULLSAFE),
+    (q_f_map_suite, ORACLE_MAP),
+    (q_hist_doc_lengths, ORACLE_HIST),
+)

@@ -249,14 +249,10 @@ FROM steps GROUP BY user_id HAVING count(*) >= 20
 """
 
 
-def register(queries: dict, oracles: dict) -> None:
-    queries["geo_cell_density"] = q_geo_cell_density
-    oracles["geo_cell_density"] = ORACLE_CELL_DENSITY
-    queries["geo_radius_pairs"] = q_geo_radius_pairs
-    oracles["geo_radius_pairs"] = ORACLE_RADIUS_PAIRS
-    queries["geo_nn_radius"] = q_geo_nn_radius
-    oracles["geo_nn_radius"] = ORACLE_NN_RADIUS
-    queries["geo_polygon_contains"] = q_geo_polygon_contains
-    oracles["geo_polygon_contains"] = ORACLE_POLYGON
-    queries["geo_path_manhattan"] = q_geo_path_manhattan
-    oracles["geo_path_manhattan"] = ORACLE_PATH
+REGISTRY = (
+    (q_geo_cell_density, ORACLE_CELL_DENSITY),
+    (q_geo_radius_pairs, ORACLE_RADIUS_PAIRS),
+    (q_geo_nn_radius, ORACLE_NN_RADIUS),
+    (q_geo_polygon_contains, ORACLE_POLYGON),
+    (q_geo_path_manhattan, ORACLE_PATH),
+)

@@ -322,14 +322,10 @@ FROM a
 """
 
 
-def register(queries: dict, oracles: dict) -> None:
-    queries["privacy_dp_counts"] = q_privacy_dp_counts
-    oracles["privacy_dp_counts"] = ORACLE_DP_COUNTS
-    queries["privacy_randomized_response"] = q_privacy_randomized_response
-    oracles["privacy_randomized_response"] = ORACLE_RANDOMIZED_RESPONSE
-    queries["privacy_k_anonymity"] = q_privacy_k_anonymity
-    oracles["privacy_k_anonymity"] = ORACLE_K_ANONYMITY
-    queries["privacy_l_diversity"] = q_privacy_l_diversity
-    oracles["privacy_l_diversity"] = ORACLE_L_DIVERSITY
-    queries["privacy_t_closeness"] = q_privacy_t_closeness
-    oracles["privacy_t_closeness"] = ORACLE_T_CLOSENESS
+REGISTRY = (
+    (q_privacy_dp_counts, ORACLE_DP_COUNTS),
+    (q_privacy_randomized_response, ORACLE_RANDOMIZED_RESPONSE),
+    (q_privacy_k_anonymity, ORACLE_K_ANONYMITY),
+    (q_privacy_l_diversity, ORACLE_L_DIVERSITY),
+    (q_privacy_t_closeness, ORACLE_T_CLOSENESS),
+)

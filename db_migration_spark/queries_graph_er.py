@@ -5,19 +5,14 @@ Split out of queries.py (round-8 verdict task 5); bodies unchanged."""
 
 from __future__ import annotations
 
-import os
 import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import load_table
-from .functions import text as TXT
-from .operators import dedup, eav, relational, similarity
-
-QUERIES: dict = {}
-ORACLES: dict = {}
+from .operators import eav
+from .queries_e2e import _fx
 
 # ---------------------------------------------------------------------------
 # Graph ranking — deterministic fixed-point PageRank under the exact gate
@@ -92,10 +87,6 @@ FROM r{iters} ORDER BY rank_fp DESC, suppkey LIMIT 50
     return head + "".join(steps) + tail
 
 
-QUERIES["graph_pagerank"] = q_graph_pagerank
-ORACLES["graph_pagerank"] = _pagerank_oracle()
-
-
 def q_graph_bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounded BFS hop distances (graph.bfs_hops): minimum hops from the
     suppliers of the first five nations over the supplier-succession graph, ≤ 4 levels.
@@ -146,9 +137,6 @@ walk AS (
 SELECT node, CAST(min(hops) AS INTEGER) AS hops
 FROM walk GROUP BY node ORDER BY hops, node
 """
-
-QUERIES["graph_bfs_hops"] = q_graph_bfs_hops
-ORACLES["graph_bfs_hops"] = ORACLE_GRAPH_BFS
 
 
 def q_text_encoding_detect(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -212,9 +200,6 @@ SELECT CAST(n_nationkey AS BIGINT) AS media_id,
             AS INTEGER) AS n_chars
 FROM nation
 """
-
-QUERIES["text_encoding_detect"] = q_text_encoding_detect
-ORACLES["text_encoding_detect"] = ORACLE_TEXT_ENCODING
 
 
 def q_er_match_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -288,9 +273,6 @@ SELECT c_id, d_id, score FROM pairs WHERE score >= 40
 ORDER BY c_id, d_id
 """
 
-QUERIES["er_match_pairs"] = q_er_match_pairs
-ORACLES["er_match_pairs"] = ORACLE_ER_MATCH
-
 
 def q_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Key-skew diagnostics (the pre-flight a 100 TB join needs before
@@ -320,9 +302,6 @@ SELECT l_suppkey, cnt,
        CAST((cnt * 1000000) // (SELECT sum(cnt) FROM counts) AS BIGINT) AS share_ppm
 FROM counts ORDER BY cnt DESC, l_suppkey LIMIT 20
 """
-
-QUERIES["skew_report"] = q_skew_report
-ORACLES["skew_report"] = ORACLE_SKEW
 
 
 def q_archive_zip_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -381,9 +360,6 @@ FROM region r CROSS JOIN range(8) i
 WHERE i.range < 3 + r.r_regionkey
 """
 
-QUERIES["archive_zip_scan"] = q_archive_zip_scan
-ORACLES["archive_zip_scan"] = ORACLE_ARCHIVE_ZIP
-
 
 def q_merge_into_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The Delta ``MERGE INTO`` analog as a copy-on-write commit on the
@@ -397,7 +373,6 @@ def q_merge_into_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     closed form.  (Delta itself is not installed — probed, STATUS.md —
     so the txlog seam IS the production path.)"""
     from .plans.txlog import TxTable
-    from .queries_e2e import _fx
 
     root = _fx(sf_dir, "merge_store")
     shutil.rmtree(root, ignore_errors=True)
@@ -451,9 +426,6 @@ SELECT class, count(*) AS n_datoms, CAST(sum(v) AS BIGINT) AS sum_v
 FROM post GROUP BY class ORDER BY class
 """
 
-QUERIES["merge_into_upsert"] = q_merge_into_upsert
-ORACLES["merge_into_upsert"] = ORACLE_MERGE_INTO
-
 
 def q_w7_trailing_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RANGE-frame window with a time interval (the frame mode the ROWS
@@ -488,9 +460,6 @@ SELECT o_custkey, o_orderkey,
 FROM orders
 """
 
-QUERIES["w7_trailing_range"] = q_w7_trailing_range
-ORACLES["w7_trailing_range"] = ORACLE_W7_TRAILING
-
 
 def q_f_generator_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Generator-expression coverage: posexplode (ordinal-preserving
@@ -515,9 +484,6 @@ SELECT n_nationkey, CAST(i.range AS INTEGER) AS pos,
 FROM nation CROSS JOIN range(3) i
 ORDER BY n_nationkey, pos
 """
-
-QUERIES["f_generator_suite"] = q_f_generator_suite
-ORACLES["f_generator_suite"] = ORACLE_F_GENERATOR
 
 
 def q_f_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -574,11 +540,16 @@ SELECT count(*) AS n_rows,
 FROM s
 """
 
-QUERIES["f_null_semantics"] = q_f_null_semantics
-ORACLES["f_null_semantics"] = ORACLE_F_NULLS
 
-
-
-def register(queries: dict, oracles: dict) -> None:
-    queries.update(QUERIES)
-    oracles.update(ORACLES)
+REGISTRY = (
+    (q_graph_pagerank, _pagerank_oracle()),
+    (q_graph_bfs_hops, ORACLE_GRAPH_BFS),
+    (q_text_encoding_detect, ORACLE_TEXT_ENCODING),
+    (q_er_match_pairs, ORACLE_ER_MATCH),
+    (q_skew_report, ORACLE_SKEW),
+    (q_archive_zip_scan, ORACLE_ARCHIVE_ZIP),
+    (q_merge_into_upsert, ORACLE_MERGE_INTO),
+    (q_w7_trailing_range, ORACLE_W7_TRAILING),
+    (q_f_generator_suite, ORACLE_F_GENERATOR),
+    (q_f_null_semantics, ORACLE_F_NULLS),
+)

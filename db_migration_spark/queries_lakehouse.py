@@ -52,6 +52,8 @@ from .catalog import load_table
 from .operators.relational import zorder_key
 from .plans.txlog import TxTable
 from .queries_e2e import _fx
+from .queries_shared import _ann_recall_gate
+from .queries_streaming import _events_stream
 
 _EPOCH = "1992-01-01"
 
@@ -155,8 +157,6 @@ def _ensure_stream_txlog(spark: SparkSession, sf_dir: str) -> TxTable:
     with per-batch transactional identity, then adversarially REPLAY
     batch 0 (the restart/redelivery case).  The replay must be a no-op;
     if it is not, the declared aggregate double-counts and goes red."""
-    from .queries_streaming import _events_stream
-
     root = _fx(sf_dir, "txlog_stream_events")
     done = os.path.join(root, "_BUILD_DONE")
     t = TxTable(root)
@@ -671,8 +671,6 @@ def _ensure_cdc_upsert_store(spark: SparkSession, sf_dir: str) -> TxTable:
     with the batch's transaction identity; then batch 0 is adversarially
     REPLAYED — the txn identity makes the re-merge a no-op, which the
     builder asserts on the version counter."""
-    from .queries_streaming import _events_stream
-
     root = _fx(sf_dir, "txlog_cdc_upsert_v1")
     done = os.path.join(root, "_BUILD_DONE")
     t = TxTable(root)
@@ -1380,8 +1378,6 @@ def _ensure_stream_partitioned(spark: SparkSession, sf_dir: str) -> TxTable:
     group per event type inside it) with the per-batch txn identity,
     then batch 0 is adversarially replayed — exactly-once AND
     partition-pruned in the same sink."""
-    from .queries_streaming import _events_stream
-
     root = _fx(sf_dir, "txlog_stream_partitioned")
     done = os.path.join(root, "_BUILD_DONE")
     t = TxTable(root)
@@ -1747,8 +1743,6 @@ def q_ann_ivf_pruned_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = similarity.brute_force_topk(
         emb, emb.filter(F.col("vec_id") < 8), k=10
     ).select("query_id", "neighbor_id")
-    from .queries import _ann_recall_gate
-
     return _ann_recall_gate(approx, exact, bound=0.4).withColumn(
         "pruned",
         F.lit(0 < len(picked) < total or len(probes) >= total),
@@ -2387,7 +2381,6 @@ def _ensure_stream_catalog(spark: SparkSession, sf_dir: str):
     (app, batch) txn identities.  Batch 0 is adversarially replayed
     after the drain: fact, summ and catalog must all no-op."""
     from .plans.catalog_txn import TxCatalog
-    from .queries_streaming import _events_stream
 
     root = _fx(sf_dir, "txlog_stream_catalog")
     done = os.path.join(root, "_BUILD_DONE")
@@ -2523,58 +2516,32 @@ FROM s ORDER BY cv, seg
 """
 
 
-def register(queries: dict, oracles: dict) -> None:
-    queries["txlog_cdc_feed"] = q_txlog_cdc_feed
-    oracles["txlog_cdc_feed"] = ORACLE_CDC_FEED
-    queries["txlog_zonemap_scan"] = q_txlog_zonemap_scan
-    oracles["txlog_zonemap_scan"] = ORACLE_ZONEMAP
-    queries["txlog_partitioned_scan"] = q_txlog_partitioned_scan
-    oracles["txlog_partitioned_scan"] = ORACLE_PARTITIONED
-    queries["txlog_replace_where"] = q_txlog_replace_where
-    oracles["txlog_replace_where"] = ORACLE_REPLACE_WHERE
-    queries["txlog_check_constraint"] = q_txlog_check_constraint
-    oracles["txlog_check_constraint"] = ORACLE_CHECK_CONSTRAINT
-    queries["txlog_restore_checkpoint"] = q_txlog_restore_checkpoint
-    oracles["txlog_restore_checkpoint"] = ORACLE_RESTORE
-    queries["txlog_export_manifest"] = q_txlog_export_manifest
-    oracles["txlog_export_manifest"] = ORACLE_EXPORT_MANIFEST
-    queries["stream_partitioned_sink"] = q_stream_partitioned_sink
-    oracles["stream_partitioned_sink"] = ORACLE_STREAM_PARTITIONED
-    queries["txlog_bloom_lookup"] = q_txlog_bloom_lookup
-    oracles["txlog_bloom_lookup"] = ORACLE_BLOOM_LOOKUP
-    queries["txlog_column_mapping"] = q_txlog_column_mapping
-    oracles["txlog_column_mapping"] = ORACLE_COLUMN_MAPPING
-    queries["txlog_fast_count"] = q_txlog_fast_count
-    oracles["txlog_fast_count"] = ORACLE_FAST_COUNT
-    queries["stream_txlog_sink"] = q_stream_txlog_sink
-    oracles["stream_txlog_sink"] = ORACLE_STREAM_TXLOG
-    queries["txlog_optimize_zorder"] = q_txlog_optimize_zorder
-    oracles["txlog_optimize_zorder"] = ORACLE_OPTIMIZE
-    queries["txlog_cdf_read"] = q_txlog_cdf_read
-    oracles["txlog_cdf_read"] = ORACLE_CDF
-    queries["txlog_stream_source"] = q_txlog_stream_source
-    oracles["txlog_stream_source"] = ORACLE_TXLOG_STREAM
-    queries["txlog_delete_vectors"] = q_txlog_delete_vectors
-    oracles["txlog_delete_vectors"] = ORACLE_DELETE_VECTORS
-    queries["txlog_merge_on_read"] = q_txlog_merge_on_read
-    oracles["txlog_merge_on_read"] = ORACLE_MERGE_ON_READ
-    queries["stream_cdc_upsert"] = q_stream_cdc_upsert
-    oracles["stream_cdc_upsert"] = ORACLE_CDC_UPSERT
-    queries["txlog_incremental_mv"] = q_txlog_incremental_mv
-    oracles["txlog_incremental_mv"] = ORACLE_INCREMENTAL_MV
-    queries["txlog_describe_history"] = q_txlog_describe_history
-    oracles["txlog_describe_history"] = ORACLE_DESCRIBE_HISTORY
-    queries["ann_ivf_pruned_store"] = q_ann_ivf_pruned_store
-    oracles["ann_ivf_pruned_store"] = ORACLE_ANN_IVF_PRUNED
-    queries["txlog_shallow_clone"] = q_txlog_shallow_clone
-    oracles["txlog_shallow_clone"] = ORACLE_SHALLOW_CLONE
-    queries["txlog_catalog_snapshot"] = q_txlog_catalog_snapshot
-    oracles["txlog_catalog_snapshot"] = ORACLE_CATALOG_SNAPSHOT
-    queries["stream_catalog_txn"] = q_stream_catalog_txn
-    oracles["stream_catalog_txn"] = ORACLE_STREAM_CATALOG
-    queries["txlog_catalog_branch"] = q_txlog_catalog_branch
-    oracles["txlog_catalog_branch"] = ORACLE_CATALOG_BRANCH
-    queries["txlog_rtbf_erasure"] = q_txlog_rtbf_erasure
-    oracles["txlog_rtbf_erasure"] = ORACLE_RTBF
-    queries["txlog_partition_evolution"] = q_txlog_partition_evolution
-    oracles["txlog_partition_evolution"] = ORACLE_PARTITION_EVOLUTION
+REGISTRY = (
+    (q_txlog_cdc_feed, ORACLE_CDC_FEED),
+    (q_txlog_zonemap_scan, ORACLE_ZONEMAP),
+    (q_txlog_partitioned_scan, ORACLE_PARTITIONED),
+    (q_txlog_replace_where, ORACLE_REPLACE_WHERE),
+    (q_txlog_check_constraint, ORACLE_CHECK_CONSTRAINT),
+    (q_txlog_restore_checkpoint, ORACLE_RESTORE),
+    (q_txlog_export_manifest, ORACLE_EXPORT_MANIFEST),
+    (q_stream_partitioned_sink, ORACLE_STREAM_PARTITIONED),
+    (q_txlog_bloom_lookup, ORACLE_BLOOM_LOOKUP),
+    (q_txlog_column_mapping, ORACLE_COLUMN_MAPPING),
+    (q_txlog_fast_count, ORACLE_FAST_COUNT),
+    (q_stream_txlog_sink, ORACLE_STREAM_TXLOG),
+    (q_txlog_optimize_zorder, ORACLE_OPTIMIZE),
+    (q_txlog_cdf_read, ORACLE_CDF),
+    (q_txlog_stream_source, ORACLE_TXLOG_STREAM),
+    (q_txlog_delete_vectors, ORACLE_DELETE_VECTORS),
+    (q_txlog_merge_on_read, ORACLE_MERGE_ON_READ),
+    (q_stream_cdc_upsert, ORACLE_CDC_UPSERT),
+    (q_txlog_incremental_mv, ORACLE_INCREMENTAL_MV),
+    (q_txlog_describe_history, ORACLE_DESCRIBE_HISTORY),
+    (q_ann_ivf_pruned_store, ORACLE_ANN_IVF_PRUNED),
+    (q_txlog_shallow_clone, ORACLE_SHALLOW_CLONE),
+    (q_txlog_catalog_snapshot, ORACLE_CATALOG_SNAPSHOT),
+    (q_stream_catalog_txn, ORACLE_STREAM_CATALOG),
+    (q_txlog_catalog_branch, ORACLE_CATALOG_BRANCH),
+    (q_txlog_rtbf_erasure, ORACLE_RTBF),
+    (q_txlog_partition_evolution, ORACLE_PARTITION_EVOLUTION),
+)

@@ -5,19 +5,11 @@ verdict task 5); bodies unchanged, same oracles."""
 
 from __future__ import annotations
 
-import os
-import shutil
-import tempfile
-
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import load_table
-from .functions import text as TXT
-from .operators import dedup, eav, relational, similarity
 
-QUERIES: dict = {}
-ORACLES: dict = {}
 
 def q_multimodal_png_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image decode, oracled: one constant-color PNG per nation is
@@ -71,9 +63,6 @@ SELECT CAST(n_nationkey AS BIGINT) AS media_id,
        CAST((n_nationkey * 3) % 256 AS DOUBLE) AS mean_b
 FROM nation
 """
-
-QUERIES["multimodal_png_decode"] = q_multimodal_png_decode
-ORACLES["multimodal_png_decode"] = ORACLE_MULTIMODAL_PNG
 
 
 def q_multimodal_jpeg_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -129,9 +118,6 @@ FROM nation n CROSS JOIN range(12) r
 WHERE r.range < (1 + n.n_nationkey % 4) * (1 + (n.n_nationkey // 4) % 3)
 GROUP BY 1, 2, 3, 4
 """
-
-QUERIES["multimodal_jpeg_decode"] = q_multimodal_jpeg_decode
-ORACLES["multimodal_jpeg_decode"] = ORACLE_MULTIMODAL_JPEG
 
 
 def q_multimodal_gif_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -220,9 +206,6 @@ FROM idx
 GROUP BY k, w, h
 """
 
-QUERIES["multimodal_gif_decode"] = q_multimodal_gif_decode
-ORACLES["multimodal_gif_decode"] = ORACLE_MULTIMODAL_GIF
-
 
 def q_multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL video frame sampling, oracled: per region an MJPEG AVI
@@ -279,9 +262,6 @@ SELECT CAST(k AS BIGINT) AS media_id,
 FROM f CROSS JOIN range(4) b
 GROUP BY k, j
 """
-
-QUERIES["multimodal_video_frames"] = q_multimodal_video_frames
-ORACLES["multimodal_video_frames"] = ORACLE_MULTIMODAL_VIDEO
 
 
 def q_multimodal_g711_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -366,9 +346,6 @@ FROM with_prev
 GROUP BY k
 """
 
-QUERIES["multimodal_g711_stats"] = q_multimodal_g711_stats
-ORACLES["multimodal_g711_stats"] = ORACLE_MULTIMODAL_G711
-
 
 def q_multimodal_wav_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL audio metadata decode, oracled: one 16-bit PCM WAV per region
@@ -409,9 +386,6 @@ SELECT CAST(r_regionkey AS BIGINT) AS media_id,
          / (8000 + 1000 * r_regionkey) AS duration_ms
 FROM region
 """
-
-QUERIES["multimodal_wav_meta"] = q_multimodal_wav_meta
-ORACLES["multimodal_wav_meta"] = ORACLE_MULTIMODAL_WAV
 
 
 def q_multimodal_image_sniff(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -466,9 +440,6 @@ FROM base
 CROSS JOIN (VALUES (0, 'png', 0), (1, 'jpeg', 100),
                    (2, 'gif', 200), (3, 'bmp', 300)) AS f(i, fmt, off)
 """
-
-QUERIES["multimodal_image_sniff"] = q_multimodal_image_sniff
-ORACLES["multimodal_image_sniff"] = ORACLE_IMAGE_SNIFF
 
 
 def q_multimodal_wav_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -530,9 +501,6 @@ FROM lagged
 GROUP BY k, n
 """
 
-QUERIES["multimodal_wav_stats"] = q_multimodal_wav_stats
-ORACLES["multimodal_wav_stats"] = ORACLE_MULTIMODAL_WAV_STATS
-
 
 def q_multimodal_mp4_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL video-container metadata, oracled: per nation a minimal ISO
@@ -581,11 +549,6 @@ SELECT CAST(n_nationkey AS BIGINT) AS media_id,
        CAST(1 + n_nationkey % 3 AS INTEGER) AS n_tracks
 FROM nation
 """
-
-QUERIES["multimodal_mp4_meta"] = q_multimodal_mp4_meta
-ORACLES["multimodal_mp4_meta"] = ORACLE_MULTIMODAL_MP4
-
-
 
 
 # ---------------------------------------------------------------------------
@@ -669,9 +632,6 @@ FROM nation, grid
 GROUP BY n_nationkey
 """
 
-QUERIES["multimodal_bmp_decode"] = q_multimodal_bmp_decode
-ORACLES["multimodal_bmp_decode"] = ORACLE_MULTIMODAL_BMP
-
 
 def q_multimodal_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL image resize under the exact gate: gradient PNGs are decoded
@@ -712,9 +672,6 @@ SELECT CAST(n_nationkey AS BIGINT) AS media_id,
 FROM nation, grid
 GROUP BY n_nationkey
 """
-
-QUERIES["multimodal_image_resize"] = q_multimodal_image_resize
-ORACLES["multimodal_image_resize"] = ORACLE_MULTIMODAL_RESIZE
 
 
 def q_multimodal_audio_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -780,9 +737,6 @@ SELECT CAST(v.k AS BIGINT) AS media_id,
 FROM vals v JOIN src ON v.k = src.k
 GROUP BY v.k
 """
-
-QUERIES["multimodal_audio_resample"] = q_multimodal_audio_resample
-ORACLES["multimodal_audio_resample"] = ORACLE_MULTIMODAL_RESAMPLE_AUDIO
 
 
 def q_dedup_image_phash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -929,11 +883,6 @@ FROM signed a JOIN signed b ON a.media_id < b.media_id
 WHERE bit_count(xor(a.dhash, b.dhash)) <= 3
 """
 
-QUERIES["dedup_image_phash"] = q_dedup_image_phash
-ORACLES["dedup_image_phash"] = ORACLE_DEDUP_IMAGE_PHASH
-
-
-
 
 def q_dedup_audio_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Audio dedup under the exact gate: per nation, a base clip (400
@@ -1007,11 +956,6 @@ SELECT fingerprint, count(*) AS n_clips,
 FROM clips GROUP BY fingerprint
 """
 
-QUERIES["dedup_audio_fingerprint"] = q_dedup_audio_fingerprint
-ORACLES["dedup_audio_fingerprint"] = ORACLE_DEDUP_AUDIO_FP
-
-
-
 
 def q_multimodal_tiff_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """REAL TIFF container parsing under the exact gate: per-nation
@@ -1080,9 +1024,6 @@ SELECT CAST(n_nationkey AS BIGINT) AS media_id,
        n_nationkey % 2 = 1 AS big_endian
 FROM nation
 """
-
-QUERIES["multimodal_tiff_meta"] = q_multimodal_tiff_meta
-ORACLES["multimodal_tiff_meta"] = ORACLE_MULTIMODAL_TIFF
 
 
 def q_multimodal_mp3_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1153,12 +1094,22 @@ JOIN br ON br.idx = 1 + n_nationkey % 14
 JOIN sr ON sr.idx = n_nationkey % 3
 """
 
-QUERIES["multimodal_mp3_meta"] = q_multimodal_mp3_meta
-ORACLES["multimodal_mp3_meta"] = ORACLE_MULTIMODAL_MP3
 
-
-
-
-def register(queries: dict, oracles: dict) -> None:
-    queries.update(QUERIES)
-    oracles.update(ORACLES)
+REGISTRY = (
+    (q_multimodal_png_decode, ORACLE_MULTIMODAL_PNG),
+    (q_multimodal_jpeg_decode, ORACLE_MULTIMODAL_JPEG),
+    (q_multimodal_gif_decode, ORACLE_MULTIMODAL_GIF),
+    (q_multimodal_video_frames, ORACLE_MULTIMODAL_VIDEO),
+    (q_multimodal_g711_stats, ORACLE_MULTIMODAL_G711),
+    (q_multimodal_wav_meta, ORACLE_MULTIMODAL_WAV),
+    (q_multimodal_image_sniff, ORACLE_IMAGE_SNIFF),
+    (q_multimodal_wav_stats, ORACLE_MULTIMODAL_WAV_STATS),
+    (q_multimodal_mp4_meta, ORACLE_MULTIMODAL_MP4),
+    (q_multimodal_bmp_decode, ORACLE_MULTIMODAL_BMP),
+    (q_multimodal_image_resize, ORACLE_MULTIMODAL_RESIZE),
+    (q_multimodal_audio_resample, ORACLE_MULTIMODAL_RESAMPLE_AUDIO),
+    (q_dedup_image_phash, ORACLE_DEDUP_IMAGE_PHASH),
+    (q_dedup_audio_fingerprint, ORACLE_DEDUP_AUDIO_FP),
+    (q_multimodal_tiff_meta, ORACLE_MULTIMODAL_TIFF),
+    (q_multimodal_mp3_meta, ORACLE_MULTIMODAL_MP3),
+)

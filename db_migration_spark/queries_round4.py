@@ -24,6 +24,25 @@ from pyspark.sql import functions as F
 
 from .catalog import load_table
 from .operators.relational import asof_join_nearest
+# NSW graph machinery lives in operators/similarity (round-8 move); the
+# aliases keep this module's oracles and external callers (tests, tools)
+# working unchanged.
+from .operators.similarity import (
+    FP_SCALE as _MMR_SCALE,
+    NSW_H as _NSW_H,
+    NSW_K as _NSW_K,
+    NSW_M as _NSW_M,
+    NSW_W as _NSW_W,
+    fp_dot as _fp_dot,
+    nsw_beam_search,
+    nsw_build_edges,
+    nsw_build_edges_descent,
+    nsw_build_edges_lsh,
+    nsw_longrange_edges,
+)
+from .queries_e2e import _fx
+from .queries_shared import _ORACLE_ANN_EXACT_HEAD, _ann_recall_gate
+from .queries_stats import _copurchase_edges
 
 
 def q_asof_nearest_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -234,8 +253,6 @@ def q_sql_ddl_ctas(spark: SparkSession, sf_dir: str) -> DataFrame:
     recomputes the CTAS+INSERT union straight from ``orders``."""
     import os
     import shutil
-
-    from .queries_e2e import _fx
 
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_src")
     loc = _fx(sf_dir, "ddl_orders_rollup")
@@ -598,8 +615,6 @@ def q_sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
     import shutil
 
-    from .queries_e2e import _fx
-
     loc = _fx(sf_dir, "dyn_overwrite_orders")
     marker = os.path.join(loc, "_BUILD_DONE")
     orders = load_table(spark, sf_dir, "orders").select(
@@ -711,8 +726,6 @@ def q_graph_random_walks(spark: SparkSession, sf_dir: str) -> DataFrame:
     (walk-front × adjacency) on node id — linear in walks × degree,
     never materializing paths beyond the frontier."""
     from pyspark.sql import Window
-
-    from .queries_stats import _copurchase_edges
 
     und = _copurchase_edges(spark, sf_dir).localCheckpoint(eager=False)
     adj = und.select(
@@ -989,8 +1002,6 @@ def q_graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     once and reused by every round.  The oracle unrolls the identical
     three rounds as chained CTEs."""
     from pyspark.sql import Window
-
-    from .queries_stats import _copurchase_edges
 
     und = _copurchase_edges(spark, sf_dir).select(
         F.col("lo").cast("long").alias("lo"),
@@ -1376,8 +1387,6 @@ GROUP BY lang
 
 _MMR_CANDS = 12  # per-query candidate pool (top by relevance)
 _MMR_K = 5  # selected set size
-from .operators.similarity import FP_SCALE as _MMR_SCALE  # noqa: E402
-from .operators.similarity import fp_dot as _fp_dot  # noqa: E402
 
 # integer trade-off weights: score = rel - max_sim_to_selected — the
 # canonical lambda=0.5 MMR balance (Carbonell & Goldstein's default)
@@ -1605,21 +1614,6 @@ SELECT query_id, rank, neighbor_id, q_label, rel FROM (
 ORDER BY query_id, rank
 """
 
-
-# NSW graph machinery lives in operators/similarity (round-8 move); the
-# aliases keep this module's oracles and external callers (tests, tools)
-# working unchanged.
-from .operators.similarity import (  # noqa: E402
-    NSW_H as _NSW_H,
-    NSW_K as _NSW_K,
-    NSW_M as _NSW_M,
-    NSW_W as _NSW_W,
-    nsw_beam_search,
-    nsw_build_edges,
-    nsw_build_edges_descent,
-    nsw_build_edges_lsh,
-    nsw_longrange_edges,
-)
 
 def q_ann_nsw_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graph-based ANN serving (Navigable Small World — Malkov et al.;
@@ -1930,8 +1924,6 @@ def q_ann_nsw_descent_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fixture, not a flaky check.  This is the variant a 100 TB
     corpus actually builds — cost ∝ n·(2m)² per descent round — where
     ann_nsw_topk's exact n² build is the oracle-replayable tier."""
-    from .queries import _ann_recall_gate
-
     from .queries_annstore import ensure_nsw_graph_store
 
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -1979,56 +1971,30 @@ def q_ann_nsw_descent_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _ann_recall_gate(approx, exact, bound=0.5)
 
 
-def register(queries: dict, oracles: dict) -> None:
-    queries["emb_mmr_diversify"] = q_emb_mmr_diversify
-    oracles["emb_mmr_diversify"] = ORACLE_MMR
-    queries["ann_filtered_topk"] = q_ann_filtered_topk
-    oracles["ann_filtered_topk"] = ORACLE_ANN_FILTERED
-    queries["ann_nsw_topk"] = q_ann_nsw_topk
-    oracles["ann_nsw_topk"] = ORACLE_NSW
-    queries["ann_hnsw_topk"] = q_ann_hnsw_topk
-    oracles["ann_hnsw_topk"] = ORACLE_HNSW
-    from .queries import _ORACLE_ANN_EXACT_HEAD
-
-    queries["ann_nsw_descent_topk"] = q_ann_nsw_descent_topk
-    oracles["ann_nsw_descent_topk"] = _ORACLE_ANN_EXACT_HEAD
-    queries["corpus_fim_split"] = q_corpus_fim_split
-    oracles["corpus_fim_split"] = ORACLE_FIM_SPLIT
-    queries["sql_udf_functions"] = q_sql_udf_functions
-    oracles["sql_udf_functions"] = ORACLE_SQL_UDF
-    queries["corpus_preference_pairs"] = q_corpus_preference_pairs
-    oracles["corpus_preference_pairs"] = ORACLE_PREFERENCE_PAIRS
-    queries["asof_nearest_tolerance"] = q_asof_nearest_tolerance
-    oracles["asof_nearest_tolerance"] = ORACLE_ASOF_NEAREST
-    queries["f_hof_suite"] = q_f_hof_suite
-    oracles["f_hof_suite"] = ORACLE_HOF
-    queries["sql_pivot_clause"] = q_sql_pivot_clause
-    oracles["sql_pivot_clause"] = ORACLE_PIVOT
-    queries["sql_ddl_ctas"] = q_sql_ddl_ctas
-    oracles["sql_ddl_ctas"] = ORACLE_DDL_CTAS
-    queries["mapinarrow_stats"] = q_mapinarrow_stats
-    oracles["mapinarrow_stats"] = ORACLE_MAPINARROW
-    queries["sql_bom_rollup"] = q_sql_bom_rollup
-    oracles["sql_bom_rollup"] = SQL_BOM_ROLLUP
-    queries["sql_agg_filter"] = q_sql_agg_filter
-    oracles["sql_agg_filter"] = SQL_AGG_FILTER
-    queries["sql_lateral_view"] = q_sql_lateral_view
-    oracles["sql_lateral_view"] = ORACLE_LATERAL_VIEW
-    queries["corpus_chat_template"] = q_corpus_chat_template
-    oracles["corpus_chat_template"] = ORACLE_CHAT_TEMPLATE
-    queries["corpus_context_stuffing"] = q_corpus_context_stuffing
-    oracles["corpus_context_stuffing"] = ORACLE_CONTEXT_STUFFING
-    queries["sink_dynamic_overwrite"] = q_sink_dynamic_overwrite
-    oracles["sink_dynamic_overwrite"] = ORACLE_DYN_OVERWRITE
-    queries["emb_gram_matrix"] = q_emb_gram_matrix
-    oracles["emb_gram_matrix"] = ORACLE_GRAM
-    queries["graph_random_walks"] = q_graph_random_walks
-    oracles["graph_random_walks"] = ORACLE_RANDOM_WALKS
-    queries["stats_ks_test"] = q_stats_ks_test
-    oracles["stats_ks_test"] = ORACLE_KS_TEST
-    queries["stats_kendall_tau"] = q_stats_kendall_tau
-    oracles["stats_kendall_tau"] = ORACLE_KENDALL
-    queries["graph_label_propagation"] = q_graph_label_propagation
-    oracles["graph_label_propagation"] = ORACLE_LABEL_PROP
-    queries["emb_kmeans_step"] = q_emb_kmeans_step
-    oracles["emb_kmeans_step"] = ORACLE_KMEANS_STEP
+REGISTRY = (
+    (q_emb_mmr_diversify, ORACLE_MMR),
+    (q_ann_filtered_topk, ORACLE_ANN_FILTERED),
+    (q_ann_nsw_topk, ORACLE_NSW),
+    (q_ann_hnsw_topk, ORACLE_HNSW),
+    (q_ann_nsw_descent_topk, _ORACLE_ANN_EXACT_HEAD),
+    (q_corpus_fim_split, ORACLE_FIM_SPLIT),
+    (q_sql_udf_functions, ORACLE_SQL_UDF),
+    (q_corpus_preference_pairs, ORACLE_PREFERENCE_PAIRS),
+    (q_asof_nearest_tolerance, ORACLE_ASOF_NEAREST),
+    (q_f_hof_suite, ORACLE_HOF),
+    (q_sql_pivot_clause, ORACLE_PIVOT),
+    (q_sql_ddl_ctas, ORACLE_DDL_CTAS),
+    (q_mapinarrow_stats, ORACLE_MAPINARROW),
+    (q_sql_bom_rollup, SQL_BOM_ROLLUP),
+    (q_sql_agg_filter, SQL_AGG_FILTER),
+    (q_sql_lateral_view, ORACLE_LATERAL_VIEW),
+    (q_corpus_chat_template, ORACLE_CHAT_TEMPLATE),
+    (q_corpus_context_stuffing, ORACLE_CONTEXT_STUFFING),
+    (q_sink_dynamic_overwrite, ORACLE_DYN_OVERWRITE),
+    (q_emb_gram_matrix, ORACLE_GRAM),
+    (q_graph_random_walks, ORACLE_RANDOM_WALKS),
+    (q_stats_ks_test, ORACLE_KS_TEST),
+    (q_stats_kendall_tau, ORACLE_KENDALL),
+    (q_graph_label_propagation, ORACLE_LABEL_PROP),
+    (q_emb_kmeans_step, ORACLE_KMEANS_STEP),
+)

@@ -38,6 +38,8 @@ from pyspark.sql import functions as F
 from .catalog import load_table
 from .functions import text as TXT
 from .functions import vectors as V
+from .queries_dedupstore import _docs_stream
+from .queries_e2e import _fx
 
 K1 = 1.2
 B = 0.75
@@ -250,7 +252,6 @@ def _ensure_search_index(spark: SparkSession, sf_dir: str):
     import shutil
 
     from .plans.txlog import TxTable
-    from .queries_e2e import _fx
 
     root = _fx(sf_dir, "search_index")
     done = os.path.join(root, "_BUILD_DONE")
@@ -526,7 +527,6 @@ def _ensure_stream_postings_mv(spark: SparkSession, sf_dir: str):
     import shutil
 
     from .plans.txlog import TxTable
-    from .queries_e2e import _fx
 
     root = _fx(sf_dir, "txlog_stream_postings_mv")
     done = os.path.join(root, "_BUILD_DONE")
@@ -585,8 +585,6 @@ def _ensure_stream_postings_mv(spark: SparkSession, sf_dir: str):
         TxTable(paths["consts"]).merge(
             bdf.sparkSession, fold_consts, txn=("consts_mv", batch_id)
         )
-
-    from .queries_dedupstore import _docs_stream
 
     q = (
         _docs_stream(spark, sf_dir)
@@ -694,8 +692,6 @@ def _ensure_maximpact(spark: SparkSession, sf_dir: str) -> str:
     import json as _json
     import os
     import shutil
-
-    from .queries_e2e import _fx
 
     root = _fx(sf_dir, "search_maximpact")
     done = os.path.join(root, "_BUILD_DONE")
@@ -1368,8 +1364,6 @@ def _ensure_blockmax(spark: SparkSession, sf_dir: str) -> str:
     import os
     import shutil
 
-    from .queries_e2e import _fx
-
     root = _fx(sf_dir, "search_blockmax")
     done = os.path.join(root, "_BUILD_DONE")
     path = os.path.join(root, "block_ub")
@@ -1627,24 +1621,15 @@ def blockmax_topk(
     )
 
 
-def register(queries: dict, oracles: dict) -> None:
-    queries["search_bm25_topk"] = q_search_bm25_topk
-    oracles["search_bm25_topk"] = ORACLE_BM25
-    queries["search_bm25_indexed"] = q_search_bm25_indexed
-    oracles["search_bm25_indexed"] = ORACLE_BM25
-    queries["search_bm25_maxscore"] = q_search_bm25_maxscore
-    oracles["search_bm25_maxscore"] = ORACLE_BM25
-    queries["search_bm25_blockmax"] = q_search_bm25_blockmax
-    oracles["search_bm25_blockmax"] = ORACLE_BM25
-    queries["stream_postings_mv"] = q_stream_postings_mv
-    oracles["stream_postings_mv"] = ORACLE_BM25
-    queries["search_eval_ndcg"] = q_search_eval_ndcg
-    oracles["search_eval_ndcg"] = ORACLE_NDCG
-    queries["search_inverted_postings"] = q_search_inverted_postings
-    oracles["search_inverted_postings"] = ORACLE_POSTINGS
-    queries["search_hybrid_rrf"] = q_search_hybrid_rrf
-    oracles["search_hybrid_rrf"] = ORACLE_RRF
-    queries["search_dirichlet_lm"] = q_search_dirichlet_lm
-    oracles["search_dirichlet_lm"] = ORACLE_DIRICHLET
-    queries["search_phrase_match"] = q_search_phrase_match
-    oracles["search_phrase_match"] = ORACLE_PHRASE_MATCH
+REGISTRY = (
+    (q_search_bm25_topk, ORACLE_BM25),
+    (q_search_bm25_indexed, ORACLE_BM25),
+    (q_search_bm25_maxscore, ORACLE_BM25),
+    (q_search_bm25_blockmax, ORACLE_BM25),
+    (q_stream_postings_mv, ORACLE_BM25),
+    (q_search_eval_ndcg, ORACLE_NDCG),
+    (q_search_inverted_postings, ORACLE_POSTINGS),
+    (q_search_hybrid_rrf, ORACLE_RRF),
+    (q_search_dirichlet_lm, ORACLE_DIRICHLET),
+    (q_search_phrase_match, ORACLE_PHRASE_MATCH),
+)

@@ -1,7 +1,6 @@
-"""Shared query-building helpers and oracle CTE fragments used by more
-than one queries_* module — a LEAF module (imports only operators), so
-family modules can import it without touching the registry's import
-cycle."""
+"""Shared query-building helpers and oracle SQL fragments used by more
+than one queries* module — a LEAF module (imports only operators), so any
+query module can import it at module top."""
 
 from __future__ import annotations
 
@@ -98,3 +97,65 @@ SELECT CAST(count(DISTINCT query_id) AS BIGINT) AS n_queries,
 FROM ranked WHERE rank <= 10
 """
 
+
+# THE shared exact word-3-gram shingle/Jaccard CTE block — single
+# definition so a future shingle-rule change cannot fork the ngram
+# oracle from the sketch acceptance oracles that gate against it
+# (minhash/simhash recompute "exact Jaccard >= threshold" over the
+# SAME pair space).
+_SHINGLE_JACCARD_CTES = r"""
+WITH toks AS (
+  SELECT doc_id,
+         list_filter(regexp_split_to_array(lower(trim(text)), '\s+'), x -> x <> '') AS toks
+  FROM documents
+), sh AS (
+  -- mirrors functions/text.shingles(): docs with < k tokens contribute
+  -- ONE whole-text shingle instead of vanishing from the pair space
+  SELECT doc_id,
+         unnest(CASE WHEN len(toks) < 3
+                THEN [array_to_string(toks, ' ')]
+                ELSE list_distinct(list_transform(range(1, len(toks) - 3 + 2),
+                     i -> array_to_string(list_slice(toks, i, i + 2), ' ')))
+                END) AS shingle
+  FROM toks
+), sizes AS (
+  SELECT doc_id, count(*) AS n_sh FROM sh GROUP BY doc_id
+), inter AS (
+  SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_inter
+  FROM sh a JOIN sh b ON a.shingle = b.shingle AND a.doc_id < b.doc_id
+  GROUP BY 1, 2
+){extra_ctes}
+"""
+
+# the .ace dump profile recomputed from the generating tables; shared by
+# the format plugin's batch, streaming and write-back entry points (the
+# profile must be identical however the dump dir is read)
+ORACLE_ACE_DATASOURCE = """
+SELECT 'Customer' AS class, 'Name' AS tag, count(*) AS n_records,
+       count(DISTINCT 'C' || c_custkey) AS n_objs,
+       min(c_name) AS min_v, max(c_name) AS max_v,
+       count(*) AS n_ts, CAST(0 AS BIGINT) AS n_comments
+FROM customer
+UNION ALL
+SELECT 'Customer', 'Address', count(*), count(DISTINCT 'C' || c_custkey),
+       min('CITY_' || c_nationkey), max('CITY_' || c_nationkey), 0, 0
+FROM customer
+UNION ALL
+SELECT 'Customer', 'Acctbal', count(*), count(DISTINCT 'C' || c_custkey),
+       min(CAST(CAST(c_acctbal AS DECIMAL(12,2)) AS VARCHAR)),
+       max(CAST(CAST(c_acctbal AS DECIMAL(12,2)) AS VARCHAR)), 0, 0
+FROM customer
+UNION ALL
+SELECT 'Customer', 'Segment', count(*), count(DISTINCT 'C' || c_custkey),
+       min(c_mktsegment), max(c_mktsegment), 0, 0
+FROM customer
+UNION ALL
+SELECT 'Nation', 'RegionKey', count(*), count(DISTINCT n_name),
+       min(CAST(n_regionkey AS VARCHAR)), max(CAST(n_regionkey AS VARCHAR)),
+       count(*), count(*)
+FROM nation
+UNION ALL
+SELECT 'Region', 'Comment', count(*), count(DISTINCT r_name),
+       min('area ' || r_regionkey), max('area ' || r_regionkey), 0, 0
+FROM region
+"""

@@ -28,6 +28,9 @@ from pyspark.sql import functions as F
 
 from .catalog import load_table
 from .functions.hll import hll_estimate, hll_merge, hll_registers
+from .functions.qsketch import oracle_bin_sql, oracle_midpoint_sql
+from .queries_e2e import _fx
+from .queries_streaming import _events_stream
 
 # ---------------------------------------------------------------------------
 # shared oracle CTE: portable registers over events at (event_type, j)
@@ -360,9 +363,6 @@ def _ensure_stream_hll_mv(spark: SparkSession, sf_dir: str):
     import shutil
 
     from .plans.txlog import TxTable
-    from .queries_e2e import _fx
-    from .queries_streaming import _events_stream
-
     root = _fx(sf_dir, "txlog_stream_hll_mv")
     done = os.path.join(root, "_BUILD_DONE")
     t = TxTable(root)
@@ -829,9 +829,6 @@ def _ensure_stream_theta_mv(spark: SparkSession, sf_dir: str):
 
     from .functions.theta import kmv_merge, kmv_sketch
     from .plans.txlog import TxTable
-    from .queries_e2e import _fx
-    from .queries_streaming import _events_stream
-
     root = _fx(sf_dir, "txlog_stream_theta_mv")
     done = os.path.join(root, "_BUILD_DONE")
     t = TxTable(root)
@@ -1168,9 +1165,6 @@ def _ensure_stream_quantile_mv(spark: SparkSession, sf_dir: str):
 
     from .functions.qsketch import logbin_merge, logbin_table
     from .plans.txlog import TxTable
-    from .queries_e2e import _fx
-    from .queries_streaming import _events_stream
-
     root = _fx(sf_dir, "txlog_stream_quantile_mv")
     done = os.path.join(root, "_BUILD_DONE")
     t = TxTable(root)
@@ -1320,8 +1314,6 @@ def q_sketch_quantile_merge_total(
     rollups safe to fold at 100 TB."""
     return _qsketch_result(spark, sf_dir, [])
 
-
-from .functions.qsketch import oracle_bin_sql, oracle_midpoint_sql  # noqa: E402
 
 _QB = oracle_bin_sql("cents")
 _ORACLE_Q_CTES = f"""
@@ -1596,9 +1588,6 @@ def _ensure_stream_priority_mv(spark: SparkSession, sf_dir: str):
 
     from .functions.theta import priority_merge, priority_sample
     from .plans.txlog import TxTable
-    from .queries_e2e import _fx
-    from .queries_streaming import _events_stream
-
     root = _fx(sf_dir, "txlog_stream_priority_mv")
     done = os.path.join(root, "_BUILD_DONE")
     t = TxTable(root)
@@ -1773,9 +1762,6 @@ def _ensure_stream_bottomk_mv(spark: SparkSession, sf_dir: str):
 
     from .functions.theta import bottomk_merge, bottomk_sample
     from .plans.txlog import TxTable
-    from .queries_e2e import _fx
-    from .queries_streaming import _events_stream
-
     root = _fx(sf_dir, "txlog_stream_bottomk_mv")
     done = os.path.join(root, "_BUILD_DONE")
     t = TxTable(root)
@@ -2130,44 +2116,21 @@ ORDER BY m.seg
 """
 
 
-def register(queries: dict, oracles: dict) -> None:
-    queries.update(
-        {
-            "sketch_hll_rollup": q_sketch_hll_rollup,
-            "sketch_hll_union": q_sketch_hll_union,
-            "sketch_hll_merge_total": q_sketch_hll_merge_total,
-            "stream_hll_mv": q_stream_hll_mv,
-            "sketch_theta_build": q_sketch_theta_build,
-            "sketch_theta_intersect": q_sketch_theta_intersect,
-            "sketch_theta_diff": q_sketch_theta_diff,
-            "stream_theta_mv": q_stream_theta_mv,
-            "sample_aqp_revenue": q_sample_aqp_revenue,
-            "sketch_quantile_rollup": q_sketch_quantile_rollup,
-            "sketch_quantile_merge_total": q_sketch_quantile_merge_total,
-            "stream_quantile_mv": q_stream_quantile_mv,
-            "sketch_priority_sample": q_sketch_priority_sample,
-            "stream_priority_mv": q_stream_priority_mv,
-            "sketch_bottomk_quantiles": q_sketch_bottomk_quantiles,
-            "stream_bottomk_mv": q_stream_bottomk_mv,
-        }
-    )
-    oracles.update(
-        {
-            "sketch_hll_rollup": ORACLE_HLL_ROLLUP,
-            "sketch_hll_union": ORACLE_HLL_UNION,
-            "sketch_hll_merge_total": ORACLE_HLL_MERGE_TOTAL,
-            "stream_hll_mv": ORACLE_HLL_ROLLUP,
-            "sketch_theta_build": ORACLE_THETA_BUILD,
-            "sketch_theta_intersect": ORACLE_THETA_INTERSECT,
-            "sketch_theta_diff": ORACLE_THETA_DIFF,
-            "stream_theta_mv": ORACLE_STREAM_THETA_MV,
-            "sample_aqp_revenue": ORACLE_SAMPLE_AQP,
-            "sketch_quantile_rollup": ORACLE_QUANTILE_ROLLUP,
-            "sketch_quantile_merge_total": ORACLE_QUANTILE_MERGE_TOTAL,
-            "stream_quantile_mv": ORACLE_STREAM_QUANTILE_MV,
-            "sketch_priority_sample": ORACLE_PRIORITY_SAMPLE,
-            "stream_priority_mv": ORACLE_STREAM_PRIORITY_MV,
-            "sketch_bottomk_quantiles": ORACLE_BOTTOMK_QUANTILES,
-            "stream_bottomk_mv": ORACLE_STREAM_BOTTOMK_MV,
-        }
-    )
+REGISTRY = (
+    (q_sketch_hll_rollup, ORACLE_HLL_ROLLUP),
+    (q_sketch_hll_union, ORACLE_HLL_UNION),
+    (q_sketch_hll_merge_total, ORACLE_HLL_MERGE_TOTAL),
+    (q_stream_hll_mv, ORACLE_HLL_ROLLUP),
+    (q_sketch_theta_build, ORACLE_THETA_BUILD),
+    (q_sketch_theta_intersect, ORACLE_THETA_INTERSECT),
+    (q_sketch_theta_diff, ORACLE_THETA_DIFF),
+    (q_stream_theta_mv, ORACLE_STREAM_THETA_MV),
+    (q_sample_aqp_revenue, ORACLE_SAMPLE_AQP),
+    (q_sketch_quantile_rollup, ORACLE_QUANTILE_ROLLUP),
+    (q_sketch_quantile_merge_total, ORACLE_QUANTILE_MERGE_TOTAL),
+    (q_stream_quantile_mv, ORACLE_STREAM_QUANTILE_MV),
+    (q_sketch_priority_sample, ORACLE_PRIORITY_SAMPLE),
+    (q_stream_priority_mv, ORACLE_STREAM_PRIORITY_MV),
+    (q_sketch_bottomk_quantiles, ORACLE_BOTTOMK_QUANTILES),
+    (q_stream_bottomk_mv, ORACLE_STREAM_BOTTOMK_MV),
+)

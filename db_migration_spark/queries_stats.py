@@ -51,6 +51,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import load_table
+from .queries_shared import _melted_lineitem
 
 
 # ---------------------------------------------------------------------------
@@ -901,63 +902,6 @@ FROM ranked
 ORACLE_PERM_FDR = _perm_fdr_oracle()
 
 
-def register(queries: dict, oracles: dict) -> None:
-    queries["stats_permutation_fdr"] = q_stats_permutation_fdr
-    oracles["stats_permutation_fdr"] = ORACLE_PERM_FDR
-    queries["stats_psi_drift"] = q_stats_psi_drift
-    oracles["stats_psi_drift"] = ORACLE_PSI
-    queries["stats_spearman"] = q_stats_spearman
-    oracles["stats_spearman"] = ORACLE_SPEARMAN
-    queries["stats_linreg"] = q_stats_linreg
-    oracles["stats_linreg"] = ORACLE_LINREG
-    queries["stats_mann_whitney"] = q_stats_mann_whitney
-    oracles["stats_mann_whitney"] = ORACLE_MANN_WHITNEY
-    queries["graph_clustering_coeff"] = q_graph_clustering_coeff
-    oracles["graph_clustering_coeff"] = ORACLE_CLUSTERING
-    queries["graph_jaccard_linkpred"] = q_graph_jaccard_linkpred
-    oracles["graph_jaccard_linkpred"] = ORACLE_JACCARD_LP
-    queries["eav_attr_stats"] = q_eav_attr_stats
-    oracles["eav_attr_stats"] = ORACLE_ATTR_STATS
-    queries["a10_percentile_cont"] = q_a10_percentile_cont
-    oracles["a10_percentile_cont"] = ORACLE_P_CONT
-    queries["stats_kruskal_wallis"] = q_stats_kruskal_wallis
-    oracles["stats_kruskal_wallis"] = ORACLE_KRUSKAL
-    queries["stats_cohens_kappa"] = q_stats_cohens_kappa
-    oracles["stats_cohens_kappa"] = ORACLE_KAPPA
-    queries["graph_temporal_reach"] = q_graph_temporal_reach
-    oracles["graph_temporal_reach"] = ORACLE_TEMPORAL_REACH
-    queries["events_out_of_order_audit"] = q_events_out_of_order_audit
-    oracles["events_out_of_order_audit"] = ORACLE_OOO_AUDIT
-    queries["events_sliding_distinct"] = q_events_sliding_distinct
-    oracles["events_sliding_distinct"] = ORACLE_SLIDING_DISTINCT
-    queries["graph_ktruss"] = q_graph_ktruss
-    oracles["graph_ktruss"] = ORACLE_KTRUSS
-    queries["stats_km_lifetable"] = q_stats_km_lifetable
-    oracles["stats_km_lifetable"] = ORACLE_KM
-    queries["cohort_ltv"] = q_cohort_ltv
-    oracles["cohort_ltv"] = ORACLE_COHORT_LTV
-    queries["stats_gini_inequality"] = q_stats_gini_inequality
-    oracles["stats_gini_inequality"] = ORACLE_GINI_INEQ
-    queries["stats_hhi_concentration"] = q_stats_hhi_concentration
-    oracles["stats_hhi_concentration"] = ORACLE_HHI
-    queries["stats_runs_test"] = q_stats_runs_test
-    oracles["stats_runs_test"] = ORACLE_RUNS
-    queries["stats_bootstrap_means"] = q_stats_bootstrap_means
-    oracles["stats_bootstrap_means"] = ORACLE_BOOTSTRAP
-    queries["stats_mad"] = q_stats_mad
-    oracles["stats_mad"] = ORACLE_MAD
-    queries["graph_modularity"] = q_graph_modularity
-    oracles["graph_modularity"] = ORACLE_MODULARITY
-    queries["stats_welch_suffstats"] = q_stats_welch_suffstats
-    oracles["stats_welch_suffstats"] = ORACLE_WELCH
-    queries["graph_degree_histogram"] = q_graph_degree_histogram
-    oracles["graph_degree_histogram"] = ORACLE_DEGREE_HIST
-    queries["a11_approx_quantiles"] = q_a11_approx_quantiles
-    # sketch internals are engine-specific; the gate is the error-bound
-    # acceptance row (exact group sizes + booleans the oracle pins TRUE)
-    oracles["a11_approx_quantiles"] = ORACLE_A11
-
-
 # ---------------------------------------------------------------------------
 # Datomic-style attribute statistics over the datom store
 # ---------------------------------------------------------------------------
@@ -977,8 +921,6 @@ def q_eav_attr_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     it is a map-only projection of the parquet scan, so re-running it
     per branch costs three cheap scans, while materializing the full
     datom stream would hold |rows|×|attrs| strings in memory."""
-    from .queries import _melted_lineitem
-
     datoms = _melted_lineitem(spark, sf_dir)
     base = datoms.groupBy("a").agg(
         F.count(F.lit(1)).alias("n_datoms"),
@@ -2419,3 +2361,35 @@ SELECT source, n, n11, n10, n01, n00,
          AS kappa_den
 FROM agg
 """
+
+
+REGISTRY = (
+    (q_stats_permutation_fdr, ORACLE_PERM_FDR),
+    (q_stats_psi_drift, ORACLE_PSI),
+    (q_stats_spearman, ORACLE_SPEARMAN),
+    (q_stats_linreg, ORACLE_LINREG),
+    (q_stats_mann_whitney, ORACLE_MANN_WHITNEY),
+    (q_graph_clustering_coeff, ORACLE_CLUSTERING),
+    (q_graph_jaccard_linkpred, ORACLE_JACCARD_LP),
+    (q_eav_attr_stats, ORACLE_ATTR_STATS),
+    (q_a10_percentile_cont, ORACLE_P_CONT),
+    (q_stats_kruskal_wallis, ORACLE_KRUSKAL),
+    (q_stats_cohens_kappa, ORACLE_KAPPA),
+    (q_graph_temporal_reach, ORACLE_TEMPORAL_REACH),
+    (q_events_out_of_order_audit, ORACLE_OOO_AUDIT),
+    (q_events_sliding_distinct, ORACLE_SLIDING_DISTINCT),
+    (q_graph_ktruss, ORACLE_KTRUSS),
+    (q_stats_km_lifetable, ORACLE_KM),
+    (q_cohort_ltv, ORACLE_COHORT_LTV),
+    (q_stats_gini_inequality, ORACLE_GINI_INEQ),
+    (q_stats_hhi_concentration, ORACLE_HHI),
+    (q_stats_runs_test, ORACLE_RUNS),
+    (q_stats_bootstrap_means, ORACLE_BOOTSTRAP),
+    (q_stats_mad, ORACLE_MAD),
+    (q_graph_modularity, ORACLE_MODULARITY),
+    (q_stats_welch_suffstats, ORACLE_WELCH),
+    (q_graph_degree_histogram, ORACLE_DEGREE_HIST),
+    # sketch internals are engine-specific; the gate is the error-bound
+    # acceptance row (exact group sizes + booleans the oracle pins TRUE)
+    (q_a11_approx_quantiles, ORACLE_A11),
+)

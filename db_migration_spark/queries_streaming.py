@@ -23,6 +23,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import load_table
+from .queries_analytics import ORACLE_CMS, cms_cell_structs
+from .queries_e2e import _ensure_ace_dump, _fx
+from .queries_shared import ORACLE_ACE_DATASOURCE
 from .streaming import import_stream as ST
 
 
@@ -138,7 +141,6 @@ def q_stream_ace_import(spark: SparkSession, sf_dir: str) -> DataFrame:
     min/max, curator comments, max tx.  The oracle recomputes the profile
     from the parquet tables, so the gate hashes what the streaming melt
     actually emitted."""
-    from .queries_e2e import _ensure_ace_dump
     from .sources.ace import ace_records_to_datoms, parse_ace_blocks_df
     from .sources.ace import read_ace_blocks_stream
 
@@ -241,13 +243,6 @@ FROM g GROUP BY user_id, sid
 """
 
 
-def _ORACLE_STREAM_CMS() -> str:
-    # identical semantics to the batch twin: same cells, same probes
-    from .queries_analytics import ORACLE_CMS
-
-    return ORACLE_CMS
-
-
 def q_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The count-min sketch maintained BY the streaming engine: the
     4×256 integer-hash cell grid (queries_analytics.cms_cell_structs)
@@ -258,8 +253,6 @@ def q_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch-side on the drained cells, and the oracle is the SAME SQL as
     the batch twin heavy_hitters_cms, so the gate hashes what the
     streaming aggregation produced cell-for-cell."""
-    from .queries_analytics import cms_cell_structs
-
     name = _sink_name("stream_cms", sf_dir)
     cells = (
         _events_stream(spark, sf_dir)
@@ -400,41 +393,6 @@ GROUP BY user_id
 """
 
 
-def register(queries: dict, oracles: dict) -> None:
-    queries.update(
-        {
-            "stream_stateful_profile": q_stream_stateful_profile,
-            "ace_stream_sink": q_ace_stream_sink,
-            "stream_chained_stateful": q_stream_chained_stateful,
-            "stream_hourly_rollup": q_stream_hourly_rollup,
-            "stream_dedup_keys": q_stream_dedup_keys,
-            "stream_stream_join": q_stream_stream_join,
-            "stream_ace_import": q_stream_ace_import,
-            "stream_session_rollup": q_stream_session_rollup,
-            "stream_merge_upsert": q_stream_merge_upsert,
-            "stream_cms": q_stream_cms,
-            "stream_outer_join": q_stream_outer_join,
-            "stream_topk_per_window": q_stream_topk_per_window,
-        }
-    )
-    oracles.update(
-        {
-            "stream_stateful_profile": ORACLE_STREAM_STATEFUL,
-            "ace_stream_sink": ORACLE_ACE_STREAM_SINK,
-            "stream_chained_stateful": ORACLE_STREAM_CHAINED,
-            "stream_hourly_rollup": ORACLE_STREAM_ROLLUP,
-            "stream_dedup_keys": ORACLE_STREAM_DEDUP,
-            "stream_stream_join": ORACLE_STREAM_SSJOIN,
-            "stream_ace_import": ORACLE_STREAM_ACE,
-            "stream_session_rollup": ORACLE_STREAM_SESSIONS,
-            "stream_merge_upsert": ORACLE_STREAM_MERGE,
-            "stream_cms": _ORACLE_STREAM_CMS(),
-            "stream_outer_join": ORACLE_STREAM_LOUTER,
-            "stream_topk_per_window": ORACLE_STREAM_TOPK,
-        }
-    )
-
-
 def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream interval join — the hardest Structured Streaming
     shape (state on BOTH sides, bounded by watermarks + the time-range
@@ -502,7 +460,6 @@ def q_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from .operators.eav import upsert_patches
     from .plans.txlog import TxTable
-    from .queries_e2e import _fx
 
     root = _fx(sf_dir, "stream_merge_store")
     shutil.rmtree(root, ignore_errors=True)
@@ -583,8 +540,6 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-preserved side — emits nothing).  With eviction total, the
     streaming answer equals the batch LEFT JOIN, which is the oracle."""
     import os
-
-    from .queries_e2e import _fx
 
     name = _sink_name("stream_louter", sf_dir)
     batch = load_table(spark, sf_dir, "events")
@@ -726,7 +681,6 @@ def q_ace_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     availableNow and profiled identically to ace_datasource_scan, so a
     stream-offset bug — file skipped, file replayed — shifts the counts
     and fails the same oracle the batch entry point uses."""
-    from .queries_e2e import _ensure_ace_dump
     from .sources import ace_datasource
 
     ace_datasource.register(spark)
@@ -844,8 +798,6 @@ def q_stream_chained_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
     after the drain."""
     import os
 
-    from .queries_e2e import _fx
-
     batch = load_table(spark, sf_dir, "events")
     batch_max = batch.agg(F.max("ts").alias("m")).collect()[0]["m"]
     sent_path = _fx(sf_dir, "stream_chain_sentinel")
@@ -894,3 +846,21 @@ SELECT time_bucket(INTERVAL 1 HOUR, ts) AS hour, event_type,
 FROM deduped
 GROUP BY 1, 2
 """
+
+
+REGISTRY = (
+    (q_stream_stateful_profile, ORACLE_STREAM_STATEFUL),
+    (q_ace_stream_sink, ORACLE_ACE_STREAM_SINK),
+    (q_stream_chained_stateful, ORACLE_STREAM_CHAINED),
+    (q_stream_hourly_rollup, ORACLE_STREAM_ROLLUP),
+    (q_stream_dedup_keys, ORACLE_STREAM_DEDUP),
+    (q_stream_stream_join, ORACLE_STREAM_SSJOIN),
+    (q_stream_ace_import, ORACLE_STREAM_ACE),
+    (q_stream_session_rollup, ORACLE_STREAM_SESSIONS),
+    (q_stream_merge_upsert, ORACLE_STREAM_MERGE),
+    # identical semantics to the batch twin: same cells, same probes
+    (q_stream_cms, ORACLE_CMS),
+    (q_stream_outer_join, ORACLE_STREAM_LOUTER),
+    (q_stream_topk_per_window, ORACLE_STREAM_TOPK),
+    (q_ace_datasource_stream, ORACLE_ACE_DATASOURCE),
+)

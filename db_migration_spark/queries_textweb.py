@@ -188,8 +188,7 @@ FROM idx
 """
 
 
-def register(queries: dict, oracles: dict) -> None:
-    queries["text_html_extract"] = q_text_html_extract
-    oracles["text_html_extract"] = ORACLE_HTML_EXTRACT
-    queries["udtf_passage_split"] = q_udtf_passage_split
-    oracles["udtf_passage_split"] = ORACLE_UDTF_SPLIT
+REGISTRY = (
+    (q_text_html_extract, ORACLE_HTML_EXTRACT),
+    (q_udtf_passage_split, ORACLE_UDTF_SPLIT),
+)

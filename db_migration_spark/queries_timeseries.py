@@ -770,22 +770,14 @@ FROM lagged WHERE x24 IS NOT NULL
 """
 
 
-def register(queries: dict, oracles: dict) -> None:
-    queries["ts_ewma"] = q_ts_ewma
-    oracles["ts_ewma"] = ORACLE_EWMA
-    queries["ts_holt_trend"] = q_ts_holt_trend
-    oracles["ts_holt_trend"] = ORACLE_HOLT
-    queries["ts_theil_sen"] = q_ts_theil_sen
-    oracles["ts_theil_sen"] = ORACLE_THEIL_SEN
-    queries["ts_rolling_corr"] = q_ts_rolling_corr
-    oracles["ts_rolling_corr"] = ORACLE_ROLLING_CORR
-    queries["ts_changepoint"] = q_ts_changepoint
-    oracles["ts_changepoint"] = ORACLE_TS_CHANGEPOINT
-    queries["ts_max_drawdown"] = q_ts_max_drawdown
-    oracles["ts_max_drawdown"] = ORACLE_DRAWDOWN
-    queries["ts_cusum_changepoint"] = q_ts_cusum_changepoint
-    oracles["ts_cusum_changepoint"] = ORACLE_CUSUM
-    queries["ts_concurrent_intervals"] = q_ts_concurrent_intervals
-    oracles["ts_concurrent_intervals"] = ORACLE_CONCURRENT
-    queries["ts_autocorrelation"] = q_ts_autocorrelation
-    oracles["ts_autocorrelation"] = ORACLE_AUTOCORR
+REGISTRY = (
+    (q_ts_ewma, ORACLE_EWMA),
+    (q_ts_holt_trend, ORACLE_HOLT),
+    (q_ts_theil_sen, ORACLE_THEIL_SEN),
+    (q_ts_rolling_corr, ORACLE_ROLLING_CORR),
+    (q_ts_changepoint, ORACLE_TS_CHANGEPOINT),
+    (q_ts_max_drawdown, ORACLE_DRAWDOWN),
+    (q_ts_cusum_changepoint, ORACLE_CUSUM),
+    (q_ts_concurrent_intervals, ORACLE_CONCURRENT),
+    (q_ts_autocorrelation, ORACLE_AUTOCORR),
+)

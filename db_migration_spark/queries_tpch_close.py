@@ -390,22 +390,10 @@ ORDER BY s_name
 """
 
 
-def register(queries: dict, oracles: dict) -> None:
-    queries.update(
-        {
-            "q2_min_cost_supplier": q_q2_min_cost_supplier,
-            "q9_product_profit": q_q9_product_profit,
-            "q11_important_stock": q_q11_important_stock,
-            "q16_supplier_count": q_q16_supplier_count,
-            "q20_concentrated_suppliers": q_q20_concentrated_suppliers,
-        }
-    )
-    oracles.update(
-        {
-            "q2_min_cost_supplier": ORACLE_Q2,
-            "q9_product_profit": ORACLE_Q9,
-            "q11_important_stock": ORACLE_Q11,
-            "q16_supplier_count": ORACLE_Q16,
-            "q20_concentrated_suppliers": ORACLE_Q20,
-        }
-    )
+REGISTRY = (
+    (q_q2_min_cost_supplier, ORACLE_Q2),
+    (q_q9_product_profit, ORACLE_Q9),
+    (q_q11_important_stock, ORACLE_Q11),
+    (q_q16_supplier_count, ORACLE_Q16),
+    (q_q20_concentrated_suppliers, ORACLE_Q20),
+)

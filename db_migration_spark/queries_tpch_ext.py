@@ -27,6 +27,7 @@ from pyspark.sql import functions as F
 
 from .catalog import load_table
 from .operators import relational
+from .queries_e2e import _fx
 
 def _rev():
     """Decimal-exact extended revenue term (built lazily — Column
@@ -612,63 +613,6 @@ GROUP BY c_count
 """
 
 
-def register(queries: dict, oracles: dict) -> None:
-    queries.update(
-        {
-            "q4_order_priority": q_q4_order_priority,
-            "q7_nation_volume": q_q7_nation_volume,
-            "q10_returned_items": q_q10_returned_items,
-            "q14_promo_share": q_q14_promo_share,
-            "q15_top_supplier": q_q15_top_supplier,
-            "q17_small_qty_revenue": q_q17_small_qty_revenue,
-            "q18_large_orders": q_q18_large_orders,
-            "q19_disjunctive": q_q19_disjunctive,
-            "q21_sole_late_supplier": q_q21_sole_late_supplier,
-            "q22_idle_customers": q_q22_idle_customers,
-            "q13_order_distribution": q_q13_order_distribution,
-            "w5_distribution_ranks": q_w5_distribution_ranks,
-            "a8_grouping_sets": q_a8_grouping_sets,
-            "u4_union_by_name": q_u4_union_by_name,
-            "user_profiles": q_user_profiles,
-            "events_sliding_rollup": q_events_sliding_rollup,
-            "winsorize_values": q_winsorize_values,
-            "store_diff": q_store_diff,
-            "w6_revenue_share": q_w6_revenue_share,
-            "funnel_view_purchase": q_funnel_view_purchase,
-            "copurchase_triangles": q_copurchase_triangles,
-            "snapshot_time_travel": q_snapshot_time_travel,
-            "q8_market_share": q_q8_market_share,
-        }
-    )
-    oracles.update(
-        {
-            "q4_order_priority": ORACLE_Q4,
-            "q7_nation_volume": ORACLE_Q7,
-            "q10_returned_items": ORACLE_Q10,
-            "q14_promo_share": ORACLE_Q14,
-            "q15_top_supplier": ORACLE_Q15,
-            "q17_small_qty_revenue": ORACLE_Q17,
-            "q18_large_orders": ORACLE_Q18,
-            "q19_disjunctive": ORACLE_Q19,
-            "q21_sole_late_supplier": ORACLE_Q21,
-            "q22_idle_customers": ORACLE_Q22,
-            "q13_order_distribution": ORACLE_Q13,
-            "w5_distribution_ranks": ORACLE_W5,
-            "a8_grouping_sets": ORACLE_A8,
-            "u4_union_by_name": ORACLE_U4,
-            "user_profiles": ORACLE_USER_PROFILES,
-            "events_sliding_rollup": ORACLE_SLIDING,
-            "winsorize_values": ORACLE_WINSORIZE,
-            "store_diff": ORACLE_STORE_DIFF,
-            "w6_revenue_share": ORACLE_W6,
-            "funnel_view_purchase": ORACLE_FUNNEL,
-            "copurchase_triangles": ORACLE_TRIANGLES,
-            "snapshot_time_travel": ORACLE_TIME_TRAVEL,
-            "q8_market_share": ORACLE_Q8,
-        }
-    )
-
-
 # ---------------------------------------------------------------------------
 # Window distribution functions / grouping sets / union harmonization
 # ---------------------------------------------------------------------------
@@ -1173,7 +1117,6 @@ def q_snapshot_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
 
     from .plans.txlog import TxTable
-    from .queries_e2e import _fx
 
     root = _fx(sf_dir, "ttravel_store")
     shutil.rmtree(root, ignore_errors=True)
@@ -1293,3 +1236,30 @@ JOIN nation n2 ON s_nationkey = n2.n_nationkey
 WHERE r_name = 'AMERICA'
 GROUP BY o_year
 """
+
+
+REGISTRY = (
+    (q_q4_order_priority, ORACLE_Q4),
+    (q_q7_nation_volume, ORACLE_Q7),
+    (q_q10_returned_items, ORACLE_Q10),
+    (q_q14_promo_share, ORACLE_Q14),
+    (q_q15_top_supplier, ORACLE_Q15),
+    (q_q17_small_qty_revenue, ORACLE_Q17),
+    (q_q18_large_orders, ORACLE_Q18),
+    (q_q19_disjunctive, ORACLE_Q19),
+    (q_q21_sole_late_supplier, ORACLE_Q21),
+    (q_q22_idle_customers, ORACLE_Q22),
+    (q_q13_order_distribution, ORACLE_Q13),
+    (q_w5_distribution_ranks, ORACLE_W5),
+    (q_a8_grouping_sets, ORACLE_A8),
+    (q_u4_union_by_name, ORACLE_U4),
+    (q_user_profiles, ORACLE_USER_PROFILES),
+    (q_events_sliding_rollup, ORACLE_SLIDING),
+    (q_winsorize_values, ORACLE_WINSORIZE),
+    (q_store_diff, ORACLE_STORE_DIFF),
+    (q_w6_revenue_share, ORACLE_W6),
+    (q_funnel_view_purchase, ORACLE_FUNNEL),
+    (q_copurchase_triangles, ORACLE_TRIANGLES),
+    (q_snapshot_time_travel, ORACLE_TIME_TRAVEL),
+    (q_q8_market_share, ORACLE_Q8),
+)

@@ -8,6 +8,9 @@ that silently displaces a flagship row fails here, not in the driver report.
 from __future__ import annotations
 
 import sys
+import types
+
+import pytest
 
 sys.path.insert(0, "/root/repo")
 
@@ -39,11 +42,57 @@ def test_registry_is_complete_superset():
     assert len(q) == len(QUERIES)
 
 
-def test_oracles_subset_of_queries():
+def test_oracles_match_queries():
+    # one (query function, oracle) pair per entry: no query without an oracle
     from db_migration_spark.queries import ORACLES, QUERIES
 
-    stray = set(ORACLES) - set(QUERIES)
-    assert not stray, f"oracle keys without queries: {stray}"
+    assert set(ORACLES) == set(QUERIES)
+    empty = [k for k, v in ORACLES.items() if not (isinstance(v, str) and v.strip())]
+    assert not empty, f"entries without oracle SQL: {empty}"
+
+
+def _query_fn(name):
+    def build(spark, sf_dir):
+        raise AssertionError("stub query functions are never run")
+
+    build.__name__ = name
+    return build
+
+
+def _stub_module(name, *pairs):
+    mod = types.ModuleType(name)
+    mod.REGISTRY = pairs
+    return mod
+
+
+def test_build_loop_names_and_order():
+    from db_migration_spark.queries import _build_registry
+
+    a = _stub_module(
+        "stub_a", (_query_fn("q_b"), "SELECT 2"), (_query_fn("q_a"), "SELECT 1")
+    )
+    b = _stub_module("stub_b", (_query_fn("q_c"), "SELECT 3"))
+    queries, oracles = _build_registry((a, b))
+    assert list(queries) == ["b", "a", "c"]
+    assert oracles == {"b": "SELECT 2", "a": "SELECT 1", "c": "SELECT 3"}
+
+
+def test_build_loop_rejects_duplicate_name():
+    from db_migration_spark.queries import _build_registry
+
+    a = _stub_module("stub_a", (_query_fn("q_same"), "SELECT 1"))
+    b = _stub_module("stub_b", (_query_fn("q_same"), "SELECT 2"))
+    with pytest.raises(ValueError, match="'same'"):
+        _build_registry((a, b))
+
+
+def test_build_loop_rejects_function_not_named_q():
+    from db_migration_spark.queries import _build_registry
+
+    a = _stub_module("stub_a", (_query_fn("q_ok"), "SELECT 1"))
+    b = _stub_module("stub_b", (_query_fn("build_x"), "SELECT 2"))
+    with pytest.raises(ValueError, match="build_x"):
+        _build_registry((a, b))
 
 
 def test_bench_suite_names_resolve():

@@ -9,7 +9,7 @@ Usage: python tools/check_correctness.py [--json out.json] [sf_dir] [query ...]
 
 ``--json`` additionally writes a driver-artifact-shaped file: one record
 per query with rows/schema/hash match booleans (hash here = the sorted
-row-multiset comparison; "no_oracle" rows report spark_rows only).
+row-multiset comparison).  Every registry entry has an oracle.
 """
 
 from __future__ import annotations
@@ -163,15 +163,6 @@ def main() -> int:
                             "hash_match": False, "spark_rows": None,
                             "oracle_rows": None, "err": f"spark: {exc}"[:300]}
             print(f"FAIL {name}: spark error: {exc}")
-            continue
-        if name not in ORACLES:
-            report[name] = {"rows_match": None, "schema_match": None,
-                            "hash_match": None, "spark_rows": len(srows),
-                            "oracle_rows": None, "err": "no_oracle"}
-            print(f"pass {name}: rows-only ({len(srows)} rows, "
-                  f"{time.time()-t0:.1f}s)")
-            if len(srows) == 0:
-                print(f"  WARNING: {name} returned 0 rows")
             continue
         try:
             described = con.execute(

@@ -64,8 +64,6 @@ def main() -> int:
     for name in QUERIES:
         if only and name not in only:
             continue
-        if name not in ORACLES:
-            continue
         try:
             stypes = dict(QUERIES[name](spark, sf_dir).dtypes)
             dtypes = {
