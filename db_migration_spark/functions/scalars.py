@@ -48,11 +48,6 @@ def rjust(col: Column | str, width: int) -> Column:
     return F.lpad(c, width, " ")
 
 
-def join_with(sep: str, *cols) -> Column:
-    """F6: separator join (``util.py:99``, ``pseudoace.py:29``)."""
-    return F.concat_ws(sep, *cols)
-
-
 def basename(path: Column | str) -> Column:
     """F7: ``os.path.basename`` analog (``install.py:144-147``)."""
     c = F.col(path) if isinstance(path, str) else path
@@ -69,12 +64,6 @@ def iso_date(ts: Column | str) -> Column:
     """F8: ISO date stamp (``runcommand.py:232``)."""
     c = F.col(ts) if isinstance(ts, str) else ts
     return F.date_format(c, "yyyy-MM-dd")
-
-
-def epoch_seconds(ts: Column | str) -> Column:
-    """F9: epoch timestamp (``notifications.py:96``)."""
-    c = F.col(ts) if isinstance(ts, str) else ts
-    return F.unix_timestamp(c)
 
 
 def gib_floor(nbytes: Column | str) -> Column:

@@ -991,7 +991,7 @@ def nsw_longrange_edges(emb: DataFrame, links: int = 4) -> DataFrame:
     out-neighbors, symmetrized.  Without these, a kNN graph over
     CLUSTERED embeddings degenerates into disconnected near-cliques and
     a fixed-entry beam can never leave the entry's cluster — measured
-    in tools/scale_round7.py nswdescent: recall@10 went 10/50 → 50/50
+    in SCALE.md "Round-7 continuation": recall@10 went 10/50 → 50/50
     at 20k clustered vectors when these links were added.  dst is
     hash(src, j) mod n over the dense vec_id domain; self-links drop."""
     n = emb.count()

@@ -22,6 +22,23 @@ is the function's name without ``q_`` and is written nowhere else.  A new
 module goes into ``_MODULES`` at the end of this file, the one tuple the
 build loop reads; the loop rejects a duplicate name or a function not
 named ``q_*``.
+
+Store fixtures (persisted tables a query builds before serving from
+them) follow one protocol, written once in ``queries_e2e.py``:
+
+* the root is ``_fx(sf_dir, name)``, under a directory keyed by the
+  package source hash, so any code edit rebuilds every fixture;
+* ``_build_once(root, build)`` runs ``build`` unless the root carries
+  its ``_BUILD_DONE`` marker, resetting the root first and writing the
+  marker only after ``build`` returns;
+* a streaming build runs its configured writer through ``_drain``
+  (``availableNow``, one bound; a timed-out drain stops and raises);
+* an exactly-once build replays batch 0 through ``_check_replay``,
+  which removes the root and raises ``RuntimeError`` if any table
+  version moved.
+
+Single-write fixtures gated by Spark's own ``_SUCCESS`` marker
+(``queries_e2e._complete``) need none of this.
 """
 
 from __future__ import annotations
@@ -73,13 +90,6 @@ from .queries_shared import (
     _melted_lineitem,
 )
 
-
-def _repo_tmp() -> str:
-    """Scratch space inside the repo (the environment forbids writes
-    elsewhere); gitignored."""
-    d = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
-    os.makedirs(d, exist_ok=True)
-    return d
 
 # ---------------------------------------------------------------------------
 # §2.4/§2.3/§2.9 — the flagship: QA count-reconciliation report (X6 = A1 ⋈ J1)

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from .catalog import load_table
 from .operators import eav
-from .queries_e2e import _fx
+from .queries_e2e import _build_once, _fx
 from .queries_shared import _MELT_ATTRS, _ORACLE_MELT_BODY, _melted_lineitem
 
 # ---------------------------------------------------------------------------
@@ -905,36 +905,36 @@ GROUP BY o_orderstatus
 
 def _ensure_index_store(spark: SparkSession, sf_dir: str) -> str:
     """Build the four-index store (eav.write_indexes) once per sf —
-    content-deterministic from the parquet tables, so existence-gating
-    is safe (same idempotency pattern as queries_e2e fixtures)."""
-    import os
-
+    content-deterministic from the parquet tables, so it is built once
+    (``_build_once``) and served thereafter."""
     from .operators.eav import write_indexes
 
     root = _fx(sf_dir, "index_store")
-    if os.path.exists(f"{root}/avet"):
-        return root
-    cust = load_table(spark, sf_dir, "customer")
-    orders = load_table(spark, sf_dir, "orders")
-    datoms = (
-        cust.select(
-            F.col("c_custkey").alias("e"), F.lit("cust/name").alias("a"),
-            F.col("c_name").alias("v"), F.lit(1).alias("tx"),
-            F.lit(True).alias("op"),
+
+    def build() -> None:
+        cust = load_table(spark, sf_dir, "customer")
+        orders = load_table(spark, sf_dir, "orders")
+        datoms = (
+            cust.select(
+                F.col("c_custkey").alias("e"), F.lit("cust/name").alias("a"),
+                F.col("c_name").alias("v"), F.lit(1).alias("tx"),
+                F.lit(True).alias("op"),
+            )
+            .unionByName(cust.select(
+                F.col("c_custkey").alias("e"), F.lit("cust/segment").alias("a"),
+                F.col("c_mktsegment").alias("v"), F.lit(1).alias("tx"),
+                F.lit(True).alias("op"),
+            ))
+            .unionByName(orders.select(
+                (F.col("o_orderkey") + 10000000).alias("e"),
+                F.lit("order/customer").alias("a"),
+                F.col("o_custkey").cast("string").alias("v"),
+                F.lit(1).alias("tx"), F.lit(True).alias("op"),
+            ))
         )
-        .unionByName(cust.select(
-            F.col("c_custkey").alias("e"), F.lit("cust/segment").alias("a"),
-            F.col("c_mktsegment").alias("v"), F.lit(1).alias("tx"),
-            F.lit(True).alias("op"),
-        ))
-        .unionByName(orders.select(
-            (F.col("o_orderkey") + 10000000).alias("e"),
-            F.lit("order/customer").alias("a"),
-            F.col("o_custkey").cast("string").alias("v"),
-            F.lit(1).alias("tx"), F.lit(True).alias("op"),
-        ))
-    )
-    write_indexes(datoms, root, ref_attrs=["order/customer"])
+        write_indexes(datoms, root, ref_attrs=["order/customer"])
+
+    _build_once(root, build)
     return root
 
 

@@ -37,7 +37,7 @@ from pyspark.sql import functions as F
 
 from .catalog import load_table
 from .operators import dedup
-from .queries_e2e import _fx
+from .queries_e2e import _build_once, _check_replay, _drain, _fx
 from .queries_shared import _SHINGLE_JACCARD_CTES
 
 NUM_HASHES = 32
@@ -70,30 +70,26 @@ def _ensure_lsh_store(spark: SparkSession, sf_dir: str):
     NUM_HASHES longs/doc, the text itself never re-moves).  Returns
     (band TxTable, signatures path)."""
     import os
-    import shutil
 
     from .plans.txlog import TxTable
 
     root = _fx(sf_dir, "lsh_band_store")
-    done = os.path.join(root, "_BUILD_DONE")
     band_root = os.path.join(root, "bands")
     sig_path = os.path.join(root, "signatures.parquet")
-    if os.path.exists(done):
-        return TxTable(band_root), sig_path
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    docs = load_table(spark, sf_dir, "documents")
-    store_docs = docs.filter(F.col("doc_id") % 2 == 0)
-    sigs = dedup.minhash_signatures(store_docs, num_hashes=NUM_HASHES)
-    sigs.write.mode("overwrite").parquet(sig_path)
-    sigs = spark.read.parquet(sig_path)  # band rows read the written sigs
-    t = TxTable(band_root)
-    t.commit_append(dedup.band_rows(sigs, "doc_id", BANDS))
-    t.optimize(spark, sort_key=["bucket"], target_groups=8)
-    t.add_bloom_index(spark, "bucket")
-    with open(done, "w"):
-        pass
-    return t, sig_path
+
+    def build() -> None:
+        docs = load_table(spark, sf_dir, "documents")
+        store_docs = docs.filter(F.col("doc_id") % 2 == 0)
+        sigs = dedup.minhash_signatures(store_docs, num_hashes=NUM_HASHES)
+        sigs.write.mode("overwrite").parquet(sig_path)
+        sigs = spark.read.parquet(sig_path)  # band rows read the written sigs
+        t = TxTable(band_root)
+        t.commit_append(dedup.band_rows(sigs, "doc_id", BANDS))
+        t.optimize(spark, sort_key=["bucket"], target_groups=8)
+        t.add_bloom_index(spark, "bucket")
+
+    _build_once(root, build)
+    return TxTable(band_root), sig_path
 
 
 def probe_pairs(
@@ -287,15 +283,12 @@ def q_stream_dedup_lsh_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs x BANDS (each doc emits one row per band), which is what
     the oracle pins."""
     import os
-    import shutil
 
     from .plans.txlog import TxTable
 
     root = _fx(sf_dir, "stream_lsh_mv")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if not os.path.exists(done):
-        shutil.rmtree(root, ignore_errors=True)
+
+    def build() -> None:
         t = TxTable(root)
 
         def refresh(bdf: DataFrame, batch_id: int) -> None:
@@ -306,35 +299,24 @@ def q_stream_dedup_lsh_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             TxTable(root).commit_append(rows, txn=("lsh_mv", batch_id))
 
-        q = (
+        _drain(
             _docs_stream(spark, sf_dir)
             .select("doc_id", "text")
             .writeStream.foreachBatch(refresh)
             .option("checkpointLocation", os.path.join(root, "_chk"))
-            .trigger(availableNow=True)
-            .start()
         )
-        q.awaitTermination(300)
-        if q.isActive:
-            q.stop()
-            raise RuntimeError("lsh mv stream drain did not finish")
         # adversarial replay: batch 0's identity is already in the log —
         # the commit must be a version no-op, or exactly-once is broken
-        before = t.latest_version()
-        # deterministic replay slice + rmtree-on-failure: if txn dedup
-        # ever regresses, the fixture is not left half-poisoned
-        refresh(
+        # (deterministic slice, so a dedup regression fails reproducibly)
+        replay = (
             load_table(spark, sf_dir, "documents")
             .filter(F.col("doc_id") < 50)
-            .select("doc_id", "text"),
-            0,
+            .select("doc_id", "text")
         )
-        if t.latest_version() != before:
-            shutil.rmtree(root, ignore_errors=True)
-            raise RuntimeError("replayed batch 0 was not idempotent")
-        with open(done, "w"):
-            pass
+        _check_replay(root, t.latest_version, lambda: refresh(replay, 0))
 
+    _build_once(root, build)
+    t = TxTable(root)
     docs = load_table(spark, sf_dir, "documents")
     batch_rows = dedup.band_rows(
         dedup.minhash_signatures(docs, num_hashes=NUM_HASHES),

@@ -20,9 +20,12 @@ the input tables, so overwriting per call is idempotent.
 from __future__ import annotations
 
 import os
+import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from .catalog import load_table
 from .operators.eav import typed_cast
@@ -64,6 +67,60 @@ def _fx(sf_dir: str, name: str) -> str:
     return os.path.join(
         FIXTURE_ROOT, os.path.basename(sf_dir.rstrip("/")), name
     )
+
+
+# ---------------------------------------------------------------------------
+# store-fixture protocol (the one resume rule every declared store follows)
+# ---------------------------------------------------------------------------
+
+_DRAIN_S = 600  # the one bound on every availableNow drain
+
+
+def _build_once(root: str, build: Callable[[], object]) -> None:
+    """Run ``build`` unless ``root`` carries a ``_BUILD_DONE`` marker.
+
+    No marker means never built or died mid-build, so the root is reset
+    first; the marker is written only after ``build`` returns, so a
+    failed or interrupted build is rebuilt, never served."""
+    done = os.path.join(root, "_BUILD_DONE")
+    if os.path.exists(done):
+        return
+    shutil.rmtree(root, ignore_errors=True)
+    build()
+    os.makedirs(root, exist_ok=True)
+    with open(done, "w"):
+        pass
+
+
+def _drain(writer: DataStreamWriter) -> None:
+    """Run a configured stream writer ``availableNow`` to completion.  A
+    drain still running after ``_DRAIN_S`` is stopped and raises: its
+    sink holds a prefix of the input, which must not be served or
+    cached."""
+    q = writer.trigger(availableNow=True).start()
+    if not q.awaitTermination(_DRAIN_S):
+        q.stop()
+        raise RuntimeError(
+            f"availableNow drain {q.name or q.id} did not finish in {_DRAIN_S}s"
+        )
+
+
+def _check_replay(
+    root: str, versions: Callable[[], object], replay: Callable[[], object]
+) -> None:
+    """Exactly-once check: ``replay`` re-delivers an already committed
+    batch under its txn identity, which must leave ``versions()`` (the
+    store's table versions) unchanged.  If it moved, the store under
+    ``root`` is removed and ``RuntimeError`` raised — not an assert,
+    ``python -O`` must not strip it."""
+    before = versions()
+    replay()
+    after = versions()
+    if after != before:
+        shutil.rmtree(root, ignore_errors=True)
+        raise RuntimeError(
+            f"replayed batch committed ({before} -> {after}): txn dedup broke"
+        )
 
 
 # ---------------------------------------------------------------------------

@@ -35,7 +35,7 @@ from pyspark.sql import functions as F
 
 from .catalog import load_table
 from .queries_e2e import _code_version as _fx_code_version
-from .queries_e2e import _fx
+from .queries_e2e import _build_once, _fx
 from .queries_shared import _melted_lineitem
 
 # hermetic cache root: keyed by the package-source content hash, so a
@@ -1896,39 +1896,35 @@ def _ensure_txlog_store(spark: SparkSession, sf_dir: str):
     v0 append (keys ≡0 mod 4), v1 append (≡1), v2 serializable MERGE that
     bumps every ≡0 row's cents by 1 AND appends the ≡2 rows — so the final
     state can only be produced by a read-modify-write that saw v0+v1.
-    Rebuilt from scratch if a previous build died mid-way (log shorter
-    than 3 commits)."""
-    import shutil
-
+    Rebuilt from scratch if a previous build died mid-way."""
     from .plans.txlog import TxTable
 
     root = _fx(sf_dir, "txlog_orders")
-    t = TxTable(root)
-    if t.latest_version() == 2:
-        return t
-    if t.latest_version() >= 0:  # partial build — start over
-        shutil.rmtree(root, ignore_errors=True)
+
+    def build() -> None:
         t = TxTable(root)
-    orders = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderkey").alias("k"),
-        F.col("o_orderpriority").alias("prio"),
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("long")
-        .alias("cents"),
-    )
-    t.commit_append(orders.filter(F.col("k") % 4 == 0))
-    t.commit_append(orders.filter(F.col("k") % 4 == 1))
+        orders = load_table(spark, sf_dir, "orders").select(
+            F.col("o_orderkey").alias("k"),
+            F.col("o_orderpriority").alias("prio"),
+            F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
+            .cast("long")
+            .alias("cents"),
+        )
+        t.commit_append(orders.filter(F.col("k") % 4 == 0))
+        t.commit_append(orders.filter(F.col("k") % 4 == 1))
 
-    def bump_and_add(cur):
-        return cur.withColumn(
-            "cents",
-            F.when(F.col("k") % 4 == 0, F.col("cents") + 1).otherwise(
-                F.col("cents")
-            ),
-        ).unionByName(orders.filter(F.col("k") % 4 == 2))
+        def bump_and_add(cur):
+            return cur.withColumn(
+                "cents",
+                F.when(F.col("k") % 4 == 0, F.col("cents") + 1).otherwise(
+                    F.col("cents")
+                ),
+            ).unionByName(orders.filter(F.col("k") % 4 == 2))
 
-    t.merge(spark, bump_and_add)
-    return t
+        t.merge(spark, bump_and_add)
+
+    _build_once(root, build)
+    return TxTable(root)
 
 
 def q_txlog_acid_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:

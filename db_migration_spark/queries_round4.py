@@ -40,7 +40,7 @@ from .operators.similarity import (
     nsw_build_edges_lsh,
     nsw_longrange_edges,
 )
-from .queries_e2e import _fx
+from .queries_e2e import _build_once, _fx
 from .queries_shared import _ORACLE_ANN_EXACT_HEAD, _ann_recall_gate
 from .queries_stats import _copurchase_edges
 
@@ -251,15 +251,11 @@ def q_sql_ddl_ctas(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-attach with CREATE TABLE IF NOT EXISTS over the existing files
     (catalog metadata is session-scoped; the data is not).  The oracle
     recomputes the CTAS+INSERT union straight from ``orders``."""
-    import os
-    import shutil
-
     load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_src")
     loc = _fx(sf_dir, "ddl_orders_rollup")
-    marker = os.path.join(loc, "_BUILD_DONE")
     spark.sql("DROP TABLE IF EXISTS ddl_rollup")
-    if not os.path.exists(marker):
-        shutil.rmtree(loc, ignore_errors=True)
+
+    def build() -> None:
         spark.sql(
             f"""
             CREATE TABLE ddl_rollup USING PARQUET LOCATION '{loc}' AS
@@ -276,13 +272,11 @@ def q_sql_ddl_ctas(spark: SparkSession, sf_dir: str) -> DataFrame:
             FROM orders_src WHERE o_orderkey % 3 <> 0
             """
         )
-        with open(marker, "w"):
-            pass
-    else:
-        spark.sql(
-            f"CREATE TABLE IF NOT EXISTS ddl_rollup "
-            f"USING PARQUET LOCATION '{loc}'"
-        )
+
+    _build_once(loc, build)
+    spark.sql(
+        f"CREATE TABLE IF NOT EXISTS ddl_rollup USING PARQUET LOCATION '{loc}'"
+    )
     return spark.sql(
         """
         SELECT prio, count(*) AS n_orders,
@@ -613,10 +607,8 @@ def q_sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
     declared read aggregates the whole table; only an overwrite that
     replaced exactly one partition matches the oracle."""
     import os
-    import shutil
 
     loc = _fx(sf_dir, "dyn_overwrite_orders")
-    marker = os.path.join(loc, "_BUILD_DONE")
     orders = load_table(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("k"),
         F.col("o_orderpriority").alias("prio"),
@@ -625,9 +617,8 @@ def q_sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
         .alias("cents"),
     )
     data_dir = os.path.join(loc, "table")
-    if not os.path.exists(marker):
-        shutil.rmtree(loc, ignore_errors=True)
-        os.makedirs(loc, exist_ok=True)
+
+    def build() -> None:
         orders.write.partitionBy("prio").parquet(data_dir)
         urgent_bumped = orders.filter(
             F.col("prio") == "1-URGENT"
@@ -638,8 +629,8 @@ def q_sink_dynamic_overwrite(spark: SparkSession, sf_dir: str) -> DataFrame:
             .partitionBy("prio")
             .parquet(data_dir)
         )
-        with open(marker, "w"):
-            pass
+
+    _build_once(loc, build)
     return (
         spark.read.parquet(data_dir)
         .groupBy("prio")
@@ -1919,7 +1910,7 @@ def q_ann_nsw_descent_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     hyperplanes are not SQL-expressible, so — like ann_lsh_topk — the
     recall CONTRACT is the gate: mean recall@10 vs the in-query exact
     top-10 must be ≥ 0.5 (measured 0.74 at sf0.001, 0.88 at sf0.01;
-    50/50 at 20k clustered vectors in tools/scale_round7.py).  Every
+    50/50 at 20k clustered vectors, SCALE.md "Round-7 continuation").  Every
     ingredient is deterministic, so the boolean is a fixed property of
     the fixture, not a flaky check.  This is the variant a 100 TB
     corpus actually builds — cost ∝ n·(2m)² per descent round — where

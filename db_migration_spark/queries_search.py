@@ -39,7 +39,7 @@ from .catalog import load_table
 from .functions import text as TXT
 from .functions import vectors as V
 from .queries_dedupstore import _docs_stream
-from .queries_e2e import _fx
+from .queries_e2e import _build_once, _check_replay, _drain, _fx
 
 K1 = 1.2
 B = 0.75
@@ -249,40 +249,36 @@ def _ensure_search_index(spark: SparkSession, sf_dir: str):
     corpus.  Returns (postings TxTable, consts path)."""
     import json as _json
     import os
-    import shutil
 
     from .plans.txlog import TxTable
 
     root = _fx(sf_dir, "search_index")
-    done = os.path.join(root, "_BUILD_DONE")
     post_root = os.path.join(root, "postings")
     consts_path = os.path.join(root, "consts.json")
-    if os.path.exists(done):
-        return TxTable(post_root), consts_path
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    tf, dl, df_, consts = _term_stats(spark, sf_dir)
-    post = (
-        tf.join(dl, "doc_id")
-        .join(df_.select("term", "df"), "term")
-        .select("term", "doc_id", "tf", "dl", "df")
-    )
-    t = TxTable(post_root)
-    t.commit_append(post)
-    t.optimize(spark, sort_key=["term"], target_groups=8)
-    c = consts.collect()[0]
-    with open(consts_path, "w") as fh:
-        _json.dump(
-            {
-                "n_docs": c["n_docs"],
-                "avgdl": c["avgdl"],
-                "coll_len": c["coll_len"],
-            },
-            fh,
+
+    def build() -> None:
+        tf, dl, df_, consts = _term_stats(spark, sf_dir)
+        post = (
+            tf.join(dl, "doc_id")
+            .join(df_.select("term", "df"), "term")
+            .select("term", "doc_id", "tf", "dl", "df")
         )
-    with open(done, "w"):
-        pass
-    return t, consts_path
+        t = TxTable(post_root)
+        t.commit_append(post)
+        t.optimize(spark, sort_key=["term"], target_groups=8)
+        c = consts.collect()[0]
+        with open(consts_path, "w") as fh:
+            _json.dump(
+                {
+                    "n_docs": c["n_docs"],
+                    "avgdl": c["avgdl"],
+                    "coll_len": c["coll_len"],
+                },
+                fh,
+            )
+
+    _build_once(root, build)
+    return TxTable(post_root), consts_path
 
 
 def q_search_bm25_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -524,99 +520,84 @@ def _ensure_stream_postings_mv(spark: SparkSession, sf_dir: str):
     term.  At 100 TB the per-batch cost is the batch's own tokenize +
     one ≤|vocab|-row and one 1-row fold."""
     import os
-    import shutil
 
     from .plans.txlog import TxTable
 
     root = _fx(sf_dir, "txlog_stream_postings_mv")
-    done = os.path.join(root, "_BUILD_DONE")
     paths = {
         k: os.path.join(root, k) for k in ("postings", "stats", "consts")
     }
-    if os.path.exists(done):
-        return paths
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
 
-    def refresh(bdf: DataFrame, batch_id: int) -> None:
-        terms = bdf.select(
-            "doc_id",
-            F.explode(TXT.tokens(F.lower(F.col("text")))).alias("term"),
-        )
-        tf_b = terms.groupBy("doc_id", "term").agg(
-            F.count(F.lit(1)).alias("tf")
-        )
-        dl_b = tf_b.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-        post_b = tf_b.join(dl_b, "doc_id").select(
-            "term", "doc_id", "tf", "dl"
-        )
-        TxTable(paths["postings"]).commit_append(
-            post_b, txn=("postings_mv", batch_id)
-        )
-        stats_b = tf_b.groupBy("term").agg(
-            F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")
-        )
-
-        def fold_stats(cur: DataFrame | None) -> DataFrame:
-            if cur is None:
-                return stats_b
-            return (
-                cur.unionByName(stats_b)
-                .groupBy("term")
-                .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+    def build() -> None:
+        def refresh(bdf: DataFrame, batch_id: int) -> None:
+            terms = bdf.select(
+                "doc_id",
+                F.explode(TXT.tokens(F.lower(F.col("text")))).alias("term"),
+            )
+            tf_b = terms.groupBy("doc_id", "term").agg(
+                F.count(F.lit(1)).alias("tf")
+            )
+            dl_b = tf_b.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
+            post_b = tf_b.join(dl_b, "doc_id").select(
+                "term", "doc_id", "tf", "dl"
+            )
+            TxTable(paths["postings"]).commit_append(
+                post_b, txn=("postings_mv", batch_id)
+            )
+            stats_b = tf_b.groupBy("term").agg(
+                F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf")
             )
 
-        TxTable(paths["stats"]).merge(
-            bdf.sparkSession, fold_stats, txn=("stats_mv", batch_id)
-        )
-        consts_b = dl_b.agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("dl").alias("coll_len"),
-        )
+            def fold_stats(cur: DataFrame | None) -> DataFrame:
+                if cur is None:
+                    return stats_b
+                return (
+                    cur.unionByName(stats_b)
+                    .groupBy("term")
+                    .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
+                )
 
-        def fold_consts(cur: DataFrame | None) -> DataFrame:
-            if cur is None:
-                return consts_b
-            return cur.unionByName(consts_b).agg(
-                F.sum("n_docs").alias("n_docs"),
-                F.sum("coll_len").alias("coll_len"),
+            TxTable(paths["stats"]).merge(
+                bdf.sparkSession, fold_stats, txn=("stats_mv", batch_id)
+            )
+            consts_b = dl_b.agg(
+                F.count(F.lit(1)).alias("n_docs"),
+                F.sum("dl").alias("coll_len"),
             )
 
-        TxTable(paths["consts"]).merge(
-            bdf.sparkSession, fold_consts, txn=("consts_mv", batch_id)
+            def fold_consts(cur: DataFrame | None) -> DataFrame:
+                if cur is None:
+                    return consts_b
+                return cur.unionByName(consts_b).agg(
+                    F.sum("n_docs").alias("n_docs"),
+                    F.sum("coll_len").alias("coll_len"),
+                )
+
+            TxTable(paths["consts"]).merge(
+                bdf.sparkSession, fold_consts, txn=("consts_mv", batch_id)
+            )
+
+        _drain(
+            _docs_stream(spark, sf_dir)
+            .select("doc_id", "text")
+            .writeStream.foreachBatch(refresh)
+            .option("checkpointLocation", os.path.join(root, "_chk"))
+        )
+        # replay a DETERMINISTIC slice (limit() is an arbitrary subset):
+        # txn dedup must skip it in all three tables, and if dedup ever
+        # regresses the damage is at least reproducible
+        replay = (
+            load_table(spark, sf_dir, "documents")
+            .filter(F.col("doc_id") < 50)
+            .select("doc_id", "text")
+        )
+        _check_replay(
+            root,
+            lambda: {k: TxTable(p).latest_version() for k, p in paths.items()},
+            lambda: refresh(replay, 0),
         )
 
-    q = (
-        _docs_stream(spark, sf_dir)
-        .select("doc_id", "text")
-        .writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", os.path.join(root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError("postings mv stream drain did not finish")
-    before = {k: TxTable(p).latest_version() for k, p in paths.items()}
-    # replay a DETERMINISTIC slice (limit() is an arbitrary subset):
-    # txn dedup must skip it, and if dedup ever regresses the damage
-    # is at least reproducible — and the rmtree below guarantees a
-    # failed gate never leaves a poisoned half-built fixture behind
-    refresh(
-        load_table(spark, sf_dir, "documents")
-        .filter(F.col("doc_id") < 50)
-        .select("doc_id", "text"),
-        0,
-    )
-    after = {k: TxTable(p).latest_version() for k, p in paths.items()}
-    if before != after:
-        shutil.rmtree(root, ignore_errors=True)
-        raise RuntimeError(
-            f"replayed batch 0 must no-op all three tables: {before} {after}"
-        )
-    with open(done, "w"):
-        pass
+    _build_once(root, build)
     return paths
 
 
@@ -691,26 +672,22 @@ def _ensure_maximpact(spark: SparkSession, sf_dir: str) -> str:
     plan term pruning WITHOUT touching any postings."""
     import json as _json
     import os
-    import shutil
 
     root = _fx(sf_dir, "search_maximpact")
-    done = os.path.join(root, "_BUILD_DONE")
     path = os.path.join(root, "term_ub")
-    if os.path.exists(done):
-        return path
-    t, consts_path = _ensure_search_index(spark, sf_dir)
-    with open(consts_path) as fh:
-        c = _json.load(fh)
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    post = t.read(spark)
-    ub = post.groupBy("term").agg(
-        F.max("df").alias("df"),
-        F.max(bm25_contrib(c["n_docs"], c["avgdl"])).alias("ub"),
-    )
-    ub.coalesce(1).write.mode("overwrite").parquet(path)
-    with open(done, "w"):
-        pass
+
+    def build() -> None:
+        t, consts_path = _ensure_search_index(spark, sf_dir)
+        with open(consts_path) as fh:
+            c = _json.load(fh)
+        post = t.read(spark)
+        ub = post.groupBy("term").agg(
+            F.max("df").alias("df"),
+            F.max(bm25_contrib(c["n_docs"], c["avgdl"])).alias("ub"),
+        )
+        ub.coalesce(1).write.mode("overwrite").parquet(path)
+
+    _build_once(root, build)
     return path
 
 
@@ -1362,27 +1339,23 @@ def _ensure_blockmax(spark: SparkSession, sf_dir: str) -> str:
     conservatively by the planner)."""
     import json as _json
     import os
-    import shutil
 
     root = _fx(sf_dir, "search_blockmax")
-    done = os.path.join(root, "_BUILD_DONE")
     path = os.path.join(root, "block_ub")
-    if os.path.exists(done):
-        return path
-    t, consts_path = _ensure_search_index(spark, sf_dir)
-    with open(consts_path) as fh:
-        c = _json.load(fh)
-    shutil.rmtree(root, ignore_errors=True)
-    os.makedirs(root, exist_ok=True)
-    bub = (
-        t.read(spark)
-        .withColumn("grp", _grp_col())
-        .groupBy("grp", "term")
-        .agg(F.max(bm25_contrib(c["n_docs"], c["avgdl"])).alias("bub"))
-    )
-    bub.coalesce(1).write.mode("overwrite").parquet(path)
-    with open(done, "w"):
-        pass
+
+    def build() -> None:
+        t, consts_path = _ensure_search_index(spark, sf_dir)
+        with open(consts_path) as fh:
+            c = _json.load(fh)
+        bub = (
+            t.read(spark)
+            .withColumn("grp", _grp_col())
+            .groupBy("grp", "term")
+            .agg(F.max(bm25_contrib(c["n_docs"], c["avgdl"])).alias("bub"))
+        )
+        bub.coalesce(1).write.mode("overwrite").parquet(path)
+
+    _build_once(root, build)
     return path
 
 

@@ -23,13 +23,15 @@ azanium core.clj:1-80); extends SURVEY §2.4's aggregate tier.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import load_table
 from .functions.hll import hll_estimate, hll_merge, hll_registers
 from .functions.qsketch import oracle_bin_sql, oracle_midpoint_sql
-from .queries_e2e import _fx
+from .queries_e2e import _build_once, _check_replay, _drain, _fx
 from .queries_streaming import _events_stream
 
 # ---------------------------------------------------------------------------
@@ -346,71 +348,81 @@ CROSS JOIN (SELECT COUNT(DISTINCT user_id) AS exact_users FROM events) x
 """
 
 
-def _ensure_stream_hll_mv(spark: SparkSession, sf_dir: str):
-    """Streaming distinct-count materialized view: each micro-batch
-    shreds its rows to (event_type, j, r) registers and folds them into
-    a txlog table via the serializable ``merge`` primitive with a
-    per-batch txn identity — the incremental-MV refresh shape.  Because
-    register MAX is associative, the MV after any number of batches
-    equals a full-rescan register build — which is exactly what the
-    declared query's oracle computes.  Batch 0 is adversarially
-    replayed after the drain (must be a txn no-op).
+def _ensure_merge_mv(
+    spark: SparkSession,
+    sf_dir: str,
+    name: str,
+    cols: list,
+    sketch: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame], DataFrame],
+    stream: Callable[[SparkSession, str], DataFrame] = _events_stream,
+    replay: tuple[str, str] = ("events", "event_id < 500"),
+):
+    """Streaming mergeable-sketch materialized view: each micro-batch of
+    ``stream`` (projected to ``cols``) is sketched and folded into the
+    txlog table ``txlog_stream_<name>_mv`` through the serializable
+    ``merge`` primitive with the per-batch txn identity
+    ``(<name>_mv, batch_id)`` — the incremental-MV refresh shape.
+    Because ``merge`` is associative, the MV after any number of batches
+    equals a full-rescan sketch — exactly what the declared query's
+    oracle computes, so its digest gate certifies BOTH the incremental
+    maintenance and exactly-once delivery (a dropped or doubled batch
+    changes the result).  Batch 0 is adversarially replayed after the
+    drain with a deterministic ``(table, predicate)`` slice — limit()
+    would be an arbitrary subset, so a dedup regression would not
+    corrupt reproducibly — and must be a txn no-op.
 
-    At 100 TB: the per-batch work is one map-side-combinable aggregate
-    over the batch plus a rewrite of an m×dims-row table (KBs); raw
-    data is never re-read."""
+    At 100 TB: per-batch work is one bounded aggregate over the batch
+    plus a rewrite of a KB-sized sketch table; raw data is never
+    re-read."""
     import os
-    import shutil
 
     from .plans.txlog import TxTable
-    root = _fx(sf_dir, "txlog_stream_hll_mv")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    shutil.rmtree(root, ignore_errors=True)
-    t = TxTable(root)
-    events = _events_stream(spark, sf_dir).select("event_type", "user_id")
 
-    def refresh(bdf: DataFrame, batch_id: int) -> None:
-        regs = hll_registers(bdf, ["event_type"], "user_id")
-        mv = TxTable(root)
+    root = _fx(sf_dir, f"txlog_stream_{name}_mv")
+    app = f"{name}_mv"
 
-        def fold(current: DataFrame | None) -> DataFrame:
-            if current is None:
-                return regs
-            return hll_merge(current.unionByName(regs), ["event_type"])
+    def build() -> None:
+        t = TxTable(root)
 
-        mv.merge(bdf.sparkSession, fold, txn=("hll_mv", batch_id))
+        def refresh(bdf: DataFrame, batch_id: int) -> None:
+            part = sketch(bdf)
 
-    q = (
-        events.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", os.path.join(root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
+            def fold(current: DataFrame | None) -> DataFrame:
+                if current is None:
+                    return part
+                return merge(current.unionByName(part))
+
+            TxTable(root).merge(bdf.sparkSession, fold, txn=(app, batch_id))
+
+        _drain(
+            stream(spark, sf_dir)
+            .select(*cols)
+            .writeStream.foreachBatch(refresh)
+            .option("checkpointLocation", os.path.join(root, "_chk"))
+        )
+        table, pred = replay
+        batch0 = load_table(spark, sf_dir, table).filter(pred).select(*cols)
+        _check_replay(
+            root,
+            t.latest_version,
+            lambda: t.merge(spark, lambda _cur: sketch(batch0), txn=(app, 0)),
+        )
+
+    _build_once(root, build)
+    return TxTable(root)
+
+
+def _ensure_stream_hll_mv(spark: SparkSession, sf_dir: str):
+    # register MAX is associative, commutative and idempotent
+    return _ensure_merge_mv(
+        spark,
+        sf_dir,
+        "hll",
+        ["event_type", "user_id"],
+        lambda df: hll_registers(df, ["event_type"], "user_id"),
+        lambda df: hll_merge(df, ["event_type"]),
     )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError("hll mv stream drain did not finish")
-    # adversarial replay: batch 0's identity is already in the log
-    before = t.latest_version()
-    replay = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_id") < 500)  # deterministic replay slice
-        .select("event_type", "user_id")
-    )
-
-    def clobber(current):
-        return hll_registers(replay, ["event_type"], "user_id")
-
-    t.merge(spark, clobber, txn=("hll_mv", 0))
-    if t.latest_version() != before:  # not an assert: -O must not strip it
-        shutil.rmtree(root, ignore_errors=True)
-        raise RuntimeError("replayed batch must not commit (txn dedup broke)")
-    with open(done, "w"):
-        pass
-    return t
 
 
 def q_stream_hll_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -814,72 +826,18 @@ _THETA_MV_K = 64  # events has 150 users/type at sf0.01 — k=64 keeps the
 
 
 def _ensure_stream_theta_mv(spark: SparkSession, sf_dir: str):
-    """Streaming KMV materialized view: each micro-batch sketches its
-    rows and folds them into a txlog table via the serializable
-    ``merge`` primitive with a per-batch txn identity.  Because KMV
-    merge (dedup + global top-k) is associative and idempotent, the MV
-    after any number of batches equals a full-rescan sketch — exactly
-    what the declared query's oracle computes, so the digest gate
-    certifies BOTH the incremental maintenance and exactly-once
-    delivery.  Batch 0 is adversarially replayed after the drain (must
-    be a txn no-op).  At 100 TB: per-batch work is one bounded sketch
-    build over the batch plus a rewrite of a ≤ k×dims-row table."""
-    import os
-    import shutil
-
+    # KMV merge (dedup + global bottom-k of hashes) is associative and
+    # idempotent
     from .functions.theta import kmv_merge, kmv_sketch
-    from .plans.txlog import TxTable
-    root = _fx(sf_dir, "txlog_stream_theta_mv")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    shutil.rmtree(root, ignore_errors=True)
-    t = TxTable(root)
-    events = _events_stream(spark, sf_dir).select("event_type", "user_id")
 
-    def refresh(bdf: DataFrame, batch_id: int) -> None:
-        sk = kmv_sketch(bdf, ["event_type"], "user_id", _THETA_MV_K)
-        mv = TxTable(root)
-
-        def fold(current: DataFrame | None) -> DataFrame:
-            if current is None:
-                return sk
-            return kmv_merge(
-                current.unionByName(sk), ["event_type"], _THETA_MV_K
-            )
-
-        mv.merge(bdf.sparkSession, fold, txn=("theta_mv", batch_id))
-
-    q = (
-        events.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", os.path.join(root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
+    return _ensure_merge_mv(
+        spark,
+        sf_dir,
+        "theta",
+        ["event_type", "user_id"],
+        lambda df: kmv_sketch(df, ["event_type"], "user_id", _THETA_MV_K),
+        lambda df: kmv_merge(df, ["event_type"], _THETA_MV_K),
     )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError("theta mv stream drain did not finish")
-    before = t.latest_version()
-    replay = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_id") < 500)  # deterministic replay slice
-        .select("event_type", "user_id")
-    )
-
-    def clobber(current):
-        from .functions.theta import kmv_sketch as _sk
-
-        return _sk(replay, ["event_type"], "user_id", _THETA_MV_K)
-
-    t.merge(spark, clobber, txn=("theta_mv", 0))
-    if t.latest_version() != before:  # not an assert: -O must not strip it
-        shutil.rmtree(root, ignore_errors=True)
-        raise RuntimeError("replayed batch must not commit (txn dedup broke)")
-    with open(done, "w"):
-        pass
-    return t
 
 
 def q_stream_theta_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1149,82 +1107,19 @@ def _qsketch_result(
 
 
 def _ensure_stream_quantile_mv(spark: SparkSession, sf_dir: str):
-    """Streaming quantile materialized view: each micro-batch bins its
-    rows (exact-integer log bins over value-cents) and folds the
-    (event_type, bin, cnt) table into a txlog MV via the serializable
-    ``merge`` primitive with a per-batch txn identity.  Count-SUM is
-    associative, so the MV after any number of batches equals a
-    full-rescan bin build — the oracle's exact recomputation.  Batch 0
-    is adversarially replayed after the drain (must be a txn no-op).
-
-    At 100 TB: per-batch work is one map-side-combinable aggregate
-    over the batch plus a rewrite of a <= dims x 416-row table (KBs);
-    raw data is never re-read."""
-    import os
-    import shutil
-
+    # per-bin count SUM is associative (exact-integer log bins over
+    # value-cents)
     from .functions.qsketch import logbin_merge, logbin_table
-    from .plans.txlog import TxTable
-    root = _fx(sf_dir, "txlog_stream_quantile_mv")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    shutil.rmtree(root, ignore_errors=True)
-    t = TxTable(root)
 
-    def _cents(df: DataFrame) -> DataFrame:
-        return df.select(
-            "event_type",
-            F.floor(F.col("value") * 100 + F.lit(0.5))
-            .cast("long")
-            .alias("cents"),
-        )
-
-    events = _events_stream(spark, sf_dir).select("event_type", "value")
-
-    def refresh(bdf: DataFrame, batch_id: int) -> None:
-        bins = logbin_table(_cents(bdf), ["event_type"], "cents")
-        mv = TxTable(root)
-
-        def fold(current: DataFrame | None) -> DataFrame:
-            if current is None:
-                return bins
-            return logbin_merge(
-                current.unionByName(bins), ["event_type"]
-            )
-
-        mv.merge(bdf.sparkSession, fold, txn=("qsk_mv", batch_id))
-
-    q = (
-        events.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", os.path.join(root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
+    cents = F.floor(F.col("value") * 100 + F.lit(0.5)).cast("long")
+    return _ensure_merge_mv(
+        spark,
+        sf_dir,
+        "quantile",
+        ["event_type", cents.alias("cents")],
+        lambda df: logbin_table(df, ["event_type"], "cents"),
+        lambda df: logbin_merge(df, ["event_type"]),
     )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError("quantile mv stream drain did not finish")
-    before = t.latest_version()
-    replay = _cents(
-        load_table(spark, sf_dir, "events").filter(
-            F.col("event_id") < 500  # deterministic replay slice
-        )
-    )
-
-    def clobber(current):
-        from .functions.qsketch import logbin_table as _lt
-
-        return _lt(replay, ["event_type"], "cents")
-
-    t.merge(spark, clobber, txn=("qsk_mv", 0))
-    if t.latest_version() != before:  # not an assert: -O must not strip it
-        shutil.rmtree(root, ignore_errors=True)
-        raise RuntimeError("replayed batch must not commit (txn dedup broke)")
-    with open(done, "w"):
-        pass
-    return t
 
 
 def q_stream_quantile_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1571,78 +1466,20 @@ _PRIO_MV_K = 128
 
 
 def _ensure_stream_priority_mv(spark: SparkSession, sf_dir: str):
-    """Streaming priority-sample materialized view: each micro-batch
-    builds its own weighted priority sample (functions/theta.py) and
-    folds it into a txlog table via the serializable ``merge``
-    primitive with a per-batch txn identity.  Priority-merge is
-    lossless (the global top-(k+1) by priority survives any merge
-    order), so the MV after any number of batches equals a direct
-    full-rescan sample — the digest equality the declared query's
-    oracle certifies, which simultaneously proves exactly-once
-    delivery (a dropped or doubled batch changes the retained set).
-    Batch 0 is adversarially replayed after the drain (must be a txn
-    no-op).  At 100 TB: per-batch work is one salted top-(k+1) over
-    the batch plus a rewrite of a ≤ (k+1)×dims-row table."""
-    import os
-    import shutil
-
+    # priority merge is lossless: the global top-(k+1) by priority
+    # survives any merge order
     from .functions.theta import priority_merge, priority_sample
-    from .plans.txlog import TxTable
-    root = _fx(sf_dir, "txlog_stream_priority_mv")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    shutil.rmtree(root, ignore_errors=True)
-    t = TxTable(root)
-    events = _events_stream(spark, sf_dir).select(
-        F.col("event_type").alias("seg"), "event_id", "value"
+
+    return _ensure_merge_mv(
+        spark,
+        sf_dir,
+        "priority",
+        [F.col("event_type").alias("seg"), "event_id", "value"],
+        lambda df: priority_sample(
+            df, ["seg"], "event_id", "value", k=_PRIO_MV_K
+        ),
+        lambda df: priority_merge(df, ["seg"], _PRIO_MV_K),
     )
-
-    def refresh(bdf: DataFrame, batch_id: int) -> None:
-        sk = priority_sample(bdf, ["seg"], "event_id", "value", k=_PRIO_MV_K)
-        mv = TxTable(root)
-
-        def fold(current: DataFrame | None) -> DataFrame:
-            if current is None:
-                return sk
-            return priority_merge(
-                current.unionByName(sk), ["seg"], _PRIO_MV_K
-            )
-
-        mv.merge(bdf.sparkSession, fold, txn=("priority_mv", batch_id))
-
-    q = (
-        events.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", os.path.join(root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError("priority mv stream drain did not finish")
-    before = t.latest_version()
-    replay = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_id") < 500)  # deterministic replay slice
-        .select(
-            F.col("event_type").alias("seg"), "event_id", "value"
-        )
-    )
-
-    def clobber(current):
-        from .functions.theta import priority_sample as _ps
-
-        return _ps(replay, ["seg"], "event_id", "value", k=_PRIO_MV_K)
-
-    t.merge(spark, clobber, txn=("priority_mv", 0))
-    if t.latest_version() != before:  # not an assert: -O must not strip it
-        shutil.rmtree(root, ignore_errors=True)
-        raise RuntimeError("replayed batch must not commit (txn dedup broke)")
-    with open(done, "w"):
-        pass
-    return t
 
 
 def q_stream_priority_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1744,84 +1581,23 @@ _BK_MV_K = 256
 
 
 def _ensure_stream_bottomk_mv(spark: SparkSession, sf_dir: str):
-    """Streaming bottom-k uniform-sample materialized view: each
-    micro-batch builds its own bottom-k row sample (functions/theta.py
-    bottomk_sample, value cents riding along as payload) and folds it
-    into a txlog table via the serializable ``merge`` primitive with a
-    per-batch txn identity.  Bottom-k merge is lossless (the global
-    bottom-k by key hash survives any merge order), so the MV after
-    any number of batches equals a direct full-rescan sample — the
-    digest equality the declared query's oracle certifies, which
-    simultaneously proves exactly-once delivery (a dropped or doubled
-    batch changes the retained set).  Batch 0 is adversarially
-    replayed after the drain (must be a txn no-op).  At 100 TB:
-    per-batch work is one salted bottom-k over the batch plus a
-    rewrite of a ≤ k×dims-row table."""
-    import os
-    import shutil
-
+    # bottom-k merge is lossless: the global bottom-k by key hash
+    # survives any merge order
     from .functions.theta import bottomk_merge, bottomk_sample
-    from .plans.txlog import TxTable
-    root = _fx(sf_dir, "txlog_stream_bottomk_mv")
-    done = os.path.join(root, "_BUILD_DONE")
-    t = TxTable(root)
-    if os.path.exists(done):
-        return t
-    shutil.rmtree(root, ignore_errors=True)
-    t = TxTable(root)
+
     cents = F.floor(
         F.col("value").cast("double") * F.lit(100.0) + F.lit(0.5)
     ).cast("bigint")
-    events = _events_stream(spark, sf_dir).select(
-        F.col("event_type").alias("seg"), "event_id", cents.alias("cents")
+    return _ensure_merge_mv(
+        spark,
+        sf_dir,
+        "bottomk",
+        [F.col("event_type").alias("seg"), "event_id", cents.alias("cents")],
+        lambda df: bottomk_sample(
+            df, ["seg"], "event_id", payload=("cents",), k=_BK_MV_K
+        ),
+        lambda df: bottomk_merge(df, ["seg"], _BK_MV_K),
     )
-
-    def refresh(bdf: DataFrame, batch_id: int) -> None:
-        sk = bottomk_sample(
-            bdf, ["seg"], "event_id", payload=("cents",), k=_BK_MV_K
-        )
-        mv = TxTable(root)
-
-        def fold(current: DataFrame | None) -> DataFrame:
-            if current is None:
-                return sk
-            return bottomk_merge(
-                current.unionByName(sk), ["seg"], _BK_MV_K
-            )
-
-        mv.merge(bdf.sparkSession, fold, txn=("bottomk_mv", batch_id))
-
-    q = (
-        events.writeStream.foreachBatch(refresh)
-        .option("checkpointLocation", os.path.join(root, "_chk"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
-    if q.isActive:
-        q.stop()
-        raise RuntimeError("bottomk mv stream drain did not finish")
-    before = t.latest_version()
-    replay = (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("event_id") < 500)  # deterministic replay slice
-        .select(
-            F.col("event_type").alias("seg"), "event_id", cents.alias("cents")
-        )
-    )
-
-    def clobber(current):
-        from .functions.theta import bottomk_sample as _bs
-
-        return _bs(replay, ["seg"], "event_id", payload=("cents",), k=_BK_MV_K)
-
-    t.merge(spark, clobber, txn=("bottomk_mv", 0))
-    if t.latest_version() != before:  # not an assert: -O must not strip it
-        shutil.rmtree(root, ignore_errors=True)
-        raise RuntimeError("replayed batch must not commit (txn dedup broke)")
-    with open(done, "w"):
-        pass
-    return t
 
 
 def q_stream_bottomk_mv(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from .catalog import load_table
 from .queries_analytics import ORACLE_CMS, cms_cell_structs
-from .queries_e2e import _ensure_ace_dump, _fx
+from .queries_e2e import _build_once, _drain, _ensure_ace_dump, _fx
 from .queries_shared import ORACLE_ACE_DATASOURCE
 from .streaming import import_stream as ST
 
@@ -60,15 +60,8 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     return stream
 
 
-def _drain(df: DataFrame, name: str, mode: str) -> None:
-    q = (
-        df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(mode)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(300)
+def _drain_to_memory(df: DataFrame, name: str, mode: str) -> None:
+    _drain(df.writeStream.format("memory").queryName(name).outputMode(mode))
 
 
 def _sink_name(prefix: str, sf_dir: str) -> str:
@@ -82,7 +75,7 @@ def q_stream_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     events_hourly_rollup, and the oracle is the same SQL."""
     name = _sink_name("stream_rollup", sf_dir)
     rolled = ST.windowed_event_rollup(_events_stream(spark, sf_dir))
-    _drain(rolled, name, "complete")
+    _drain_to_memory(rolled, name, "complete")
     return spark.table(name)
 
 
@@ -114,7 +107,7 @@ def q_stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
         ts_col="ts",
         delay="2 hours",
     ).select("user_id", "event_type")
-    _drain(deduped, name, "append")
+    _drain_to_memory(deduped, name, "append")
     sink = spark.table(name)
     n_rows = sink.count()
     n_keys = sink.distinct().count()
@@ -149,7 +142,7 @@ def q_stream_ace_import(spark: SparkSession, sf_dir: str) -> DataFrame:
     datoms = ace_records_to_datoms(
         parse_ace_blocks_df(read_ace_blocks_stream(spark, dump))
     )
-    _drain(datoms, name, "append")
+    _drain_to_memory(datoms, name, "append")
     return (
         spark.table(name)
         .groupBy("class", "a")
@@ -217,7 +210,7 @@ def q_stream_session_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly ``gap`` after the previous one opens a NEW session)."""
     name = _sink_name("stream_sessions", sf_dir)
     rolled = ST.session_windowed_rollup(_events_stream(spark, sf_dir))
-    _drain(rolled, name, "complete")
+    _drain_to_memory(rolled, name, "complete")
     return spark.table(name)
 
 
@@ -262,7 +255,7 @@ def q_stream_cms(spark: SparkSession, sf_dir: str) -> DataFrame:
         .count()
         .withColumnRenamed("count", "cell")
     )
-    _drain(cells, name, "complete")
+    _drain_to_memory(cells, name, "complete")
     cms = spark.table(name)
     ev = load_table(spark, sf_dir, "events")
     top = (
@@ -370,7 +363,7 @@ def q_stream_stateful_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    _drain(folded, name, "update")
+    _drain_to_memory(folded, name, "update")
     w = Window.partitionBy("user_id").orderBy(
         F.desc("n_events"), F.desc("max_event_id")
     )
@@ -426,7 +419,7 @@ def q_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") >= F.col("v_ts"))
         & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
     ).select("v_user", "v_id", "p_id")
-    _drain(joined, name, "append")
+    _drain_to_memory(joined, name, "append")
     return (
         spark.table(name)
         .groupBy(F.col("v_user").alias("user_id"))
@@ -487,15 +480,12 @@ def q_stream_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     ckpt = f"/tmp/dbm_spark_ckpt/stream_merge_{_re.sub(r'[^A-Za-z0-9]', '_', sf_dir)}"
     shutil.rmtree(ckpt, ignore_errors=True)
-    q = (
+    _drain(
         _events_stream(spark, sf_dir)
         .filter(F.col("event_id") >= cut)
         .writeStream.foreachBatch(sink)
         .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
     )
-    q.awaitTermination(300)
     final = t.read(spark)
     return (
         final.groupBy("a")
@@ -589,7 +579,7 @@ def q_stream_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("p_ts") <= F.col("v_ts") + F.expr("INTERVAL 30 MINUTES")),
         "left_outer",
     ).select("v_user", "v_id", "p_id")
-    _drain(joined, name, "append")
+    _drain_to_memory(joined, name, "append")
     return (
         spark.table(name)
         .filter(F.col("v_user") >= 0)
@@ -640,7 +630,7 @@ def q_stream_topk_per_window(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.lit(1)).alias("n_events"),
         )
     )
-    _drain(agg, name, "complete")
+    _drain_to_memory(agg, name, "complete")
     drained = spark.table(name).select(
         F.col("w.start").alias("win_start"),
         "user_id",
@@ -687,7 +677,7 @@ def q_ace_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     dump = _ensure_ace_dump(spark, sf_dir)
     name = _sink_name("stream_ace_ds", sf_dir)
     recs = spark.readStream.format("ace").load(dump)
-    _drain(recs, name, "append")
+    _drain_to_memory(recs, name, "append")
     return (
         spark.table(name)
         .select(
@@ -721,22 +711,14 @@ def q_ace_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     profile from the live events table, so a serializer escape bug, a
     dropped partition, or a batch collision all shift the counts."""
     import os
-    import shutil
-    import tempfile
 
     from .sources import ace_datasource
 
     ace_datasource.register(spark)
-    base = os.path.join(
-        tempfile.gettempdir(),
-        "dbm_spark_ace_sink_v1",
-        os.path.basename(sf_dir.rstrip("/")),
-    )
-    out, ckpt = os.path.join(base, "out"), os.path.join(base, "ckpt")
-    marker = os.path.join(base, "_DONE")
-    if not os.path.exists(marker):
-        shutil.rmtree(base, ignore_errors=True)
-        os.makedirs(base, exist_ok=True)
+    base = _fx(sf_dir, "ace_stream_sink")
+    out = os.path.join(base, "out")
+
+    def build() -> None:
         recs = _events_stream(spark, sf_dir).select(
             F.lit("Event").alias("class"),
             F.concat(F.lit("E"), F.col("event_id")).alias("obj_id"),
@@ -746,21 +728,13 @@ def q_ace_stream_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(None).cast("string").alias("comment"),
             F.lit("stream").alias("src"),
         )
-        q = (
+        _drain(
             recs.writeStream.format("ace")
             .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+            .option("checkpointLocation", os.path.join(base, "ckpt"))
         )
-        if not q.awaitTermination(300):
-            q.stop()
-            raise RuntimeError(
-                "ace stream sink drain timed out — refusing to cache a "
-                "truncated fixture"
-            )
-        with open(marker, "w"):
-            pass
+
+    _build_once(base, build)
     back = spark.read.format("ace").load(out)
     return (
         back.groupBy(F.col("value").alias("event_type"))
@@ -831,7 +805,7 @@ def q_stream_chained_stateful(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     name = _sink_name("stream_chain", sf_dir)
-    _drain(rolled, name, "append")
+    _drain_to_memory(rolled, name, "append")
     return spark.table(name).filter(
         F.col("event_type") != "__sentinel__"
     )

@@ -381,3 +381,104 @@ def test_streaming_ace_melt_matches_batch(spark, tmp_path):
     assert {(r["e"], r["a"], r["v"]) for r in after} == {
         (r["e"], r["a"], r["v"]) for r in batch
     }
+
+
+# ---------------------------------------------------------------------------
+# store-fixture protocol (queries_e2e: _build_once / _drain / _check_replay)
+# ---------------------------------------------------------------------------
+
+
+def test_drain_timeout_raises_and_stops_the_query(spark, tmp_path, monkeypatch):
+    """A drain still running past the bound raises instead of returning
+    a sink that holds a prefix of the input, and leaves no active query."""
+    import time
+
+    from db_migration_spark import queries_e2e as E
+
+    src = tmp_path / "src"
+    spark.range(4).write.parquet(str(src))
+    schema = spark.read.parquet(str(src)).schema
+
+    def slow_sink(bdf, batch_id):
+        time.sleep(4)
+
+    monkeypatch.setattr(E, "_DRAIN_S", 1)
+    with pytest.raises(RuntimeError, match="did not finish"):
+        E._drain(
+            spark.readStream.schema(schema)
+            .parquet(str(src))
+            .writeStream.foreachBatch(slow_sink)
+            .option("checkpointLocation", str(tmp_path / "chk"))
+        )
+    assert spark.streams.active == []
+
+
+def test_replay_without_txn_identity_is_refused_then_rebuilt(spark, tmp_path):
+    """The exactly-once check is a raise, not an assert (``python -O``
+    keeps it): a replay that commits removes the store, and the next
+    build-once call rebuilds it instead of serving it."""
+    import os
+
+    from db_migration_spark import queries_e2e as E
+    from db_migration_spark.plans.txlog import TxTable
+
+    root = str(tmp_path / "store")
+    rows = spark.range(5).withColumnRenamed("id", "k")
+    builds = []
+
+    def build(replay_txn):
+        def run():
+            builds.append(replay_txn)
+            t = TxTable(root)
+            t.commit_append(rows, txn=("app", 0))
+            E._check_replay(
+                root,
+                t.latest_version,
+                lambda: t.commit_append(rows, txn=replay_txn),
+            )
+
+        return run
+
+    with pytest.raises(RuntimeError, match="txn dedup broke"):
+        E._build_once(root, build(None))  # no identity: the replay commits
+    assert not os.path.exists(root)
+
+    E._build_once(root, build(("app", 0)))  # rebuilt, not served
+    assert len(builds) == 2
+    assert TxTable(root).latest_version() == 0
+    E._build_once(root, build(("app", 0)))  # now built: served as is
+    assert len(builds) == 2
+
+
+def test_query_modules_use_the_one_fixture_protocol():
+    """Outside the protocol helpers in queries_e2e.py, no query module
+    writes its own build marker, drain or assert-based replay check."""
+    import ast
+    import glob
+    import os
+    import re
+
+    import db_migration_spark
+
+    pkg = os.path.dirname(db_migration_spark.__file__)
+    helpers = {"_build_once", "_drain"}
+    banned = re.compile(
+        r'"_BUILD_DONE"|awaitTermination\(|trigger\(availableNow=True\)'
+        r"|assert [^\n]*latest_version\(\)"
+    )
+    hits = []
+    for path in sorted(glob.glob(os.path.join(pkg, "queries*.py"))):
+        with open(path) as fh:
+            lines = fh.read().split("\n")
+        skip = set()
+        if os.path.basename(path) == "queries_e2e.py":
+            for node in ast.parse("\n".join(lines)).body:
+                if isinstance(node, ast.FunctionDef) and node.name in helpers:
+                    skip.update(range(node.lineno, node.end_lineno + 1))
+            assert len(skip) > 0, "protocol helpers moved out of queries_e2e"
+        hits += [
+            f"{os.path.basename(path)}:{i}: {line.strip()}"
+            for i, line in enumerate(lines, 1)
+            if i not in skip and banned.search(line)
+        ]
+    assert not hits, "\n".join(hits)
