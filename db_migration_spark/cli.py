@@ -828,20 +828,21 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "lsh-store":
-        # probe/point logic is SHARED with the declared queries
-        # (queries_dedupstore.probe_pairs / point_candidates) — the CLI
-        # is a front door, not a re-implementation
+        # build/probe/point logic is SHARED with the declared queries
+        # (queries_dedupstore.build_lsh_store / probe_pairs /
+        # point_matches) — the CLI is a front door, not a
+        # re-implementation
         import zlib
 
         from pyspark.sql import functions as F
 
-        from .operators.dedup import (
-            band_rows,
-            minhash_signatures,
-            sig_agreement,
-        )
+        from .operators.dedup import band_rows, minhash_signatures
         from .plans.txlog import TxTable
-        from .queries_dedupstore import point_candidates, probe_pairs
+        from .queries_dedupstore import (
+            build_lsh_store,
+            point_matches,
+            probe_pairs,
+        )
 
         spark = get_spark("lsh-store")
         band_root = os.path.join(args.store, "bands")
@@ -871,18 +872,12 @@ def main(argv: list[str] | None = None) -> int:
                     "index; use probe --append for incremental ingest, "
                     "or remove the store first"
                 )
-            nh = args.num_hashes if args.num_hashes is not None else 32
-            nb = args.bands if args.bands is not None else 8
-            docs = spark.read.parquet(args.input)
-            os.makedirs(args.store, exist_ok=True)
-            ts = TxTable(sig_root)
-            ts.commit_append(minhash_signatures(docs, num_hashes=nh))
-            t = TxTable(band_root)
-            t.commit_append(band_rows(ts.read(spark), "doc_id", nb))
-            t.optimize(spark, sort_key=["bucket"], target_groups=8)
-            t.add_bloom_index(spark, "bucket")
-            with open(meta_path, "w") as fh:
-                json.dump({"num_hashes": nh, "bands": nb}, fh)
+            t, ts = build_lsh_store(
+                spark.read.parquet(args.input),
+                args.store,
+                args.num_hashes if args.num_hashes is not None else 32,
+                args.bands if args.bands is not None else 8,
+            )
             print(
                 json.dumps(
                     {
@@ -956,24 +951,13 @@ def main(argv: list[str] | None = None) -> int:
             [(-1, args.text)], "doc_id long, text string"
         )
         psig = minhash_signatures(probe, num_hashes=meta["num_hashes"])
-        cand, scanned = point_candidates(
-            spark, t, psig, bands=meta["bands"]
+        matches, scanned = point_matches(
+            spark, t, ts, psig, meta["bands"], args.threshold
         )
         matches = (
-            cand.join(
-                ts.read(spark).select(
-                    F.col("doc_id").alias("store_id"),
-                    F.col("signature").alias("sig_a"),
-                ),
-                "store_id",
+            matches.select(
+                "store_id", F.round("est_jaccard", 6).alias("est_jaccard")
             )
-            .crossJoin(
-                F.broadcast(psig.select(F.col("signature").alias("sig_b")))
-            )
-            .select(
-                "store_id", F.round(sig_agreement(), 6).alias("est_jaccard")
-            )
-            .filter(F.col("est_jaccard") >= args.threshold)
             .orderBy(F.desc("est_jaccard"), "store_id")
             .limit(20)
         )
@@ -1092,17 +1076,25 @@ def main(argv: list[str] | None = None) -> int:
         return 0
 
     if args.cmd == "ann":
+        # build/probe logic is SHARED with the declared store queries
+        # (queries_annstore) — the CLI is a front door, not a
+        # re-implementation
         import shutil as _sh
 
         from pyspark.sql import Window
         from pyspark.sql import functions as F
 
-        from .operators import similarity
-        from .operators.similarity import centroid_array, cosine
+        from .operators.similarity import rank_topk
         from .plans.txlog import TxTable
+        from .queries_annstore import (
+            build_ivfpq_store,
+            build_nsw_graph_store,
+            descent_mv_repair,
+            ivfpq_candidates,
+            store_beam_search,
+        )
 
         spark = get_spark("ann-cli")
-        n_sub, n_codes = 8, 16
         if args.action.startswith("build") and not args.input:
             raise SystemExit(f"{args.action} requires --input")
         if args.action == "build-ivfpq":
@@ -1112,47 +1104,7 @@ def main(argv: list[str] | None = None) -> int:
                 "vec_id", "embedding"
             )
             _sh.rmtree(args.store, ignore_errors=True)
-            os.makedirs(args.store, exist_ok=True)
-            books_path = os.path.join(args.store, "codebooks.parquet")
-            similarity.pq_refine_codebooks(
-                emb,
-                similarity.pq_codebooks(
-                    emb, n_sub=n_sub, n_codes=n_codes
-                ),
-                n_sub=n_sub,
-                iterations=2,
-            ).coalesce(1).write.mode("overwrite").parquet(books_path)
-            books = spark.read.parquet(books_path)
-            cents = similarity.deterministic_centroids(emb, args.lists)
-            # Persist the coarse quantizer + parameters with the store:
-            # probes must use the SAME centroids (and lists/n_sub/n_codes)
-            # the codes were assigned under, or list_ids silently diverge.
-            cents.coalesce(1).write.mode("overwrite").parquet(
-                os.path.join(args.store, "centroids.parquet")
-            )
-            with open(
-                os.path.join(args.store, "params.json"), "w"
-            ) as fh:
-                json.dump(
-                    {
-                        "lists": args.lists,
-                        "n_sub": n_sub,
-                        "n_codes": n_codes,
-                    },
-                    fh,
-                )
-            t = TxTable(os.path.join(args.store, "codes"))
-            t.commit_append_partitioned(
-                similarity.pq_encode(emb, books, n_sub=n_sub)
-                .join(
-                    similarity.ivf_assign(emb, cents).select(
-                        "vec_id", "list_id"
-                    ),
-                    "vec_id",
-                )
-                .select("list_id", "vec_id", "codes"),
-                "list_id",
-            )
+            t = build_ivfpq_store(emb, args.store, args.lists)
             print(
                 json.dumps(
                     {
@@ -1168,19 +1120,8 @@ def main(argv: list[str] | None = None) -> int:
             emb = spark.read.parquet(args.input).select(
                 "vec_id", "embedding"
             )
-            from .operators.similarity import (
-                nsw_build_edges_descent,
-                nsw_longrange_edges,
-            )
-
             _sh.rmtree(args.store, ignore_errors=True)
-            t = TxTable(os.path.join(args.store, "edges"))
-            t.commit_append(
-                nsw_build_edges_descent(emb)
-                .unionByName(nsw_longrange_edges(emb))
-                .dropDuplicates(["src", "dst"])
-            )
-            t.optimize(spark, sort_key=["src"], target_groups=8)
+            t = build_nsw_graph_store(emb, os.path.join(args.store, "edges"))
             print(
                 json.dumps(
                     {
@@ -1200,8 +1141,6 @@ def main(argv: list[str] | None = None) -> int:
             # delta.  The one-shot build-graph store bakes long-range
             # links into a single edges table and is rebuilt, not
             # repaired.
-            from .queries_annstore import descent_mv_repair
-
             vec_root = os.path.join(args.store, "vectors")
             knn_root = os.path.join(args.store, "knn")
             if not (os.path.isdir(vec_root) and os.path.isdir(knn_root)):
@@ -1231,8 +1170,6 @@ def main(argv: list[str] | None = None) -> int:
         emb = spark.read.parquet(args.input).select("vec_id", "embedding")
         q = emb.filter(F.col("vec_id").isin(qids))
         if args.action == "probe-graph":
-            from .queries_annstore import store_beam_search
-
             t = TxTable(os.path.join(args.store, "edges"))
             beam, scanned, scannable = store_beam_search(
                 spark,
@@ -1268,10 +1205,6 @@ def main(argv: list[str] | None = None) -> int:
         # probe-time --input — recomputing from a different embeddings
         # file silently maps queries to list_ids that don't match the
         # stored assignments.
-        t = TxTable(os.path.join(args.store, "codes"))
-        books = spark.read.parquet(
-            os.path.join(args.store, "codebooks.parquet")
-        )
         params_path = os.path.join(args.store, "params.json")
         if not os.path.exists(params_path):
             raise SystemExit(
@@ -1281,74 +1214,23 @@ def main(argv: list[str] | None = None) -> int:
             )
         with open(params_path) as fh:
             params = json.load(fh)
-        n_sub, n_codes = params["n_sub"], params["n_codes"]
         if args.lists is not None and args.lists != params["lists"]:
             raise SystemExit(
                 f"--lists {args.lists} does not match the store's "
                 f"lists={params['lists']}; the stored value is "
                 "authoritative"
             )
-        cents = spark.read.parquet(
-            os.path.join(args.store, "centroids.parquet")
-        )
-        qv = q.select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("query_vec"),
-        )
-        probe_sorted = F.array_sort(
-            F.transform(
-                F.col("__cents"),
-                lambda s: F.struct(
-                    (-cosine(F.col("query_vec"), s["centroid"])).alias(
-                        "ns"
-                    ),
-                    s["list_id"].alias("lid"),
-                ),
-            )
-        )
-        q_probe = qv.crossJoin(F.broadcast(centroid_array(cents))).select(
-            "query_id",
-            F.explode(F.slice(probe_sorted, 1, args.probes)["lid"]).alias(
-                "list_id"
+        scored, picked, total = ivfpq_candidates(
+            spark,
+            args.store,
+            q.select(
+                F.col("vec_id").alias("query_id"),
+                F.col("embedding").alias("query_vec"),
             ),
-        )
-        probes = sorted(
-            r.list_id
-            for r in q_probe.select("list_id").distinct().collect()
-        )
-        picked, total = t.prune_groups_points("list_id", probes)
-        corpus = t.read_groups(spark, picked).filter(
-            F.col("list_id").isin(probes)
-        )
-        lut = similarity.pq_lut(q, books, n_sub=n_sub, n_codes=n_codes)
-        scored = (
-            corpus.join(F.broadcast(q_probe), "list_id")
-            .filter(F.col("vec_id") != F.col("query_id"))
-            .join(F.broadcast(lut), "query_id")
-            .select(
-                "query_id",
-                F.col("vec_id").alias("neighbor_id"),
-                F.aggregate(
-                    F.sequence(F.lit(0), F.lit(n_sub - 1)),
-                    F.lit(0.0),
-                    lambda acc, m: acc
-                    + F.element_at(
-                        F.col("lut"),
-                        (
-                            m * n_codes
-                            + F.element_at(F.col("codes"), m + 1)
-                            + 1
-                        ).cast("int"),
-                    ),
-                ).alias("approx_score"),
-            )
-        )
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("approx_score"), F.col("neighbor_id")
+            args.probes,
         )
         rows = (
-            scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= args.k)
+            rank_topk(scored, "approx_score", args.k)
             .select("query_id", "rank", "neighbor_id")
             .orderBy("query_id", "rank")
             .collect()

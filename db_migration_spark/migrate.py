@@ -11,8 +11,8 @@ onto the operator library:
     ---------------------------------  -----------------------------------
     create-database + models (X2)      read_models_schema → schema table
     acedump-to-edn-logs (X1)           parse_ace_dump → ace_records_to_datoms
-    sort-edn-logs (T1)                 repartitionByRange(tx) + sortWithin
-    import-logs (S8)                   checkpointed availableNow stream write
+    sort-edn-logs (T1)                 repartitionByRange(class, tx) + sortWithin
+    import-logs (S8)                   batch parquet write, partitioned by class
     apply-patches (X4)                 apply_patches last-write-wins merge
     homol-import (X5)                  class-subset filter → second store
     qa-report (X6 = A1 ⋈ J1)           per_class_counts ⋈ id_catalog → CSV

@@ -19,6 +19,19 @@ from pyspark.sql import functions as F
 from ..functions.vectors import cosine
 
 
+def rank_topk(scored: DataFrame, score_col: str, k: int) -> DataFrame:
+    """Each query's ``k`` best rows of ``scored`` (query_id,
+    neighbor_id, ...) by ``score_col`` descending, ties to the lower
+    neighbor id, numbered in a ``rank`` column — the per-query top-k
+    cut every similarity kernel ends with."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.desc(score_col), F.col("neighbor_id")
+    )
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -51,13 +64,7 @@ def brute_force_topk(
             cosine("query_vec", "corpus_vec").alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.col("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return rank_topk(scored, "score", k)
 
 
 def _hyperplane(dim: int, plane_idx: int, table_idx: int = 0) -> "F.Column":
@@ -166,11 +173,7 @@ def lsh_topk(
         "neighbor_id",
         cosine("query_vec", "corpus_vec").alias("score"),
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return rank_topk(scored, "score", k)
 
 
 # --- IVF (inverted-file) ANN -------------------------------------------------
@@ -259,6 +262,31 @@ def deterministic_centroids(
     )
 
 
+def ivf_probe(queries: DataFrame, centroids: DataFrame, n_probe: int):
+    """Each query's ``n_probe`` nearest inverted lists — the IVF probe
+    selection every IVF serving path shares.  ``queries`` is
+    (query_id, query_vec); returns (query_id, query_vec, list_id), one
+    row per probed list.
+
+    A pure map over the 1-row broadcast centroid array: an ascending
+    struct sort on (-sim, list_id) == (desc sim, asc list_id), the
+    crossJoin + row_number tie-break without the exchange."""
+    probe_sorted = F.array_sort(
+        F.transform(
+            F.col("__cents"),
+            lambda s: F.struct(
+                (-cosine(F.col("query_vec"), s["centroid"])).alias("ns"),
+                s["list_id"].alias("lid"),
+            ),
+        )
+    )
+    return queries.crossJoin(F.broadcast(centroid_array(centroids))).select(
+        "query_id",
+        "query_vec",
+        F.explode(F.slice(probe_sorted, 1, n_probe)["lid"]).alias("list_id"),
+    )
+
+
 def ivf_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -289,31 +317,12 @@ def ivf_topk(
     """
     cents = deterministic_centroids(corpus, n_lists, id_col, vec_col)
     assigned = ivf_assign(corpus, cents, id_col, vec_col)
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
-    )
-    # top-n_probe lists per query, as a pure map: ascending struct sort on
-    # (-sim, list_id) == (desc sim, asc list_id) — the previous
-    # crossJoin + row_number tie-break, without the exchange.
-    probe_sorted = F.array_sort(
-        F.transform(
-            F.col("__cents"),
-            lambda s: F.struct(
-                (-cosine(F.col("query_vec"), s["centroid"])).alias("ns"),
-                s["list_id"].alias("lid"),
-            ),
-        )
-    )
-    q_probe = (
-        q.crossJoin(F.broadcast(centroid_array(cents)))
-        .select(
-            "query_id",
-            "query_vec",
-            F.explode(F.slice(probe_sorted, 1, n_probe)["lid"]).alias(
-                "list_id"
-            ),
-        )
+    q_probe = ivf_probe(
+        queries.select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
+        ),
+        cents,
+        n_probe,
     )
     scored = (
         assigned.join(F.broadcast(q_probe), "list_id")
@@ -324,11 +333,7 @@ def ivf_topk(
             cosine("query_vec", vec_col).alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.col("neighbor_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return rank_topk(scored, "score", k)
 
 
 def kmeans_refine(
@@ -741,43 +746,58 @@ def pq_topk(
         .select(
             "query_id",
             F.col(id_col).alias("neighbor_id"),
-            F.aggregate(
-                F.sequence(F.lit(0), F.lit(n_sub - 1)),
-                F.lit(0.0),
-                lambda acc, m: acc
-                + F.element_at(
-                    F.col("lut"),
-                    (m * n_codes + F.element_at(F.col("codes"), m + 1) + 1).cast(
-                        "int"
-                    ),
-                ),
-            ).alias("approx_score"),
+            pq_adc_score(n_sub, n_codes).alias("approx_score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_score"), F.col("neighbor_id")
-    )
-    if not rerank:
-        return scored.withColumn("rank", F.row_number().over(w)).filter(
-            F.col("rank") <= k
+    if rerank:
+        return pq_rerank(
+            scored,
+            queries.select(
+                F.col(id_col).alias("query_id"),
+                F.col(vec_col).alias("query_vec"),
+            ),
+            corpus.select(
+                F.col(id_col).alias("neighbor_id"),
+                F.col(vec_col).alias("corpus_vec"),
+            ),
+            rerank,
+            k,
         )
-    # PQ + re-rank (the production pairing): the compressed scan picks a
-    # shortlist of ``rerank`` candidates per query, then ONLY those ids
-    # fetch their full vectors for an exact cosine — quantization noise
-    # decides membership of a generous shortlist, never the final order.
-    shortlist = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= rerank)
-        .select("query_id", "neighbor_id")
+    return rank_topk(scored, "approx_score", k)
+
+
+def pq_adc_score(n_sub: int, n_codes: int):
+    """The ADC approximate score of a row's ``codes`` against its
+    query's ``lut`` (:func:`pq_lut`): ``n_sub`` table reads summed in
+    one codegen ``aggregate`` — the one scoring expression of every PQ
+    scan."""
+    return F.aggregate(
+        F.sequence(F.lit(0), F.lit(n_sub - 1)),
+        F.lit(0.0),
+        lambda acc, m: acc
+        + F.element_at(
+            F.col("lut"),
+            (m * n_codes + F.element_at(F.col("codes"), m + 1) + 1).cast(
+                "int"
+            ),
+        ),
     )
-    qv = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("query_vec")
-    )
-    cv = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("corpus_vec")
-    )
+
+
+def pq_rerank(
+    scored: DataFrame, qv: DataFrame, cv: DataFrame, shortlist: int, k: int
+) -> DataFrame:
+    """PQ + re-rank (the production pairing): the compressed scan's
+    ``scored`` (query_id, neighbor_id, approx_score) keeps a shortlist
+    of ``shortlist`` candidates per query, then ONLY those ids fetch
+    their full vectors — ``cv`` (neighbor_id, corpus_vec), queries
+    ``qv`` (query_id, query_vec) — for an exact cosine.  Quantization
+    noise decides membership of a generous shortlist, never the final
+    order.  Returns (query_id, neighbor_id, score, rank ≤ k)."""
+    head = rank_topk(scored, "approx_score", shortlist)
     exact = (
-        shortlist.join(F.broadcast(qv), "query_id")
+        head.select("query_id", "neighbor_id")
+        .join(F.broadcast(qv), "query_id")
         .join(cv, "neighbor_id")
         .select(
             "query_id",
@@ -785,12 +805,7 @@ def pq_topk(
             cosine("query_vec", "corpus_vec").alias("score"),
         )
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.col("neighbor_id")
-    )
-    return exact.withColumn("rank", F.row_number().over(w2)).filter(
-        F.col("rank") <= k
-    )
+    return rank_topk(exact, "score", k)
 
 
 # ---------------------------------------------------------------------------

@@ -78,6 +78,7 @@ pseudoace.py:1-40 is Datomic import plumbing); this completes SURVEY
 from __future__ import annotations
 
 import glob
+import json
 import os
 import shutil
 
@@ -85,20 +86,31 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import load_table
+from .operators import similarity
 from .operators.similarity import (
+    FP_SCALE,
     NSW_H,
     NSW_M,
     NSW_W,
     _score_pairs,
     _symmetrize,
     fp_dot,
+    ivf_assign,
     nsw_build_edges,
+    nsw_beam_search,
     nsw_build_edges_descent,
     nsw_longrange_edges,
 )
+from .plans.txlog import TxTable
 from .queries_e2e import _build_once, _check_replay, _drain, _fx
-from .queries_round4 import ORACLE_NSW, _HNSW_M1, _HNSW_STRIDE, _nsw_answer
-from .queries_shared import _ORACLE_ANN_EXACT_HEAD, _ann_recall_gate
+from .queries_shared import (
+    ORACLE_NSW,
+    _HNSW_M1,
+    _HNSW_STRIDE,
+    _ORACLE_ANN_EXACT_HEAD,
+    _ann_recall_gate,
+    _nsw_answer,
+)
 
 # ---------------------------------------------------------------------------
 # the persisted graph store (shared by ann_nsw_store_topk and the
@@ -106,15 +118,27 @@ from .queries_shared import _ORACLE_ANN_EXACT_HEAD, _ann_recall_gate
 # ---------------------------------------------------------------------------
 
 
-def ensure_nsw_graph_store(spark: SparkSession, sf_dir: str):
-    """The NN-descent + long-range adjacency built once into a txlog
-    table, OPTIMIZE-clustered on ``src`` (each file group owns a
-    contiguous node range → min/max zone maps make any frontier's
-    groups plannable without I/O).  Priming discipline (r7 verdict
-    task 7): built once (``_build_once``) so sweeps and bench time
-    SERVING, never construction."""
-    from .plans.txlog import TxTable
+def build_nsw_graph_store(emb: DataFrame, edges_root: str):
+    """The NN-descent + long-range adjacency of ``emb`` committed to a
+    txlog table at ``edges_root``, OPTIMIZE-clustered on ``src`` (each
+    file group owns a contiguous node range → min/max zone maps make
+    any frontier's groups plannable without I/O) — the one graph-store
+    build behind the declared fixture and ``ann build-graph``.  Returns
+    the edge TxTable."""
+    t = TxTable(edges_root)
+    t.commit_append(
+        nsw_build_edges_descent(emb)
+        .unionByName(nsw_longrange_edges(emb))
+        .dropDuplicates(["src", "dst"])
+    )
+    t.optimize(emb.sparkSession, sort_key=["src"], target_groups=8)
+    return t
 
+
+def ensure_nsw_graph_store(spark: SparkSession, sf_dir: str):
+    """:func:`build_nsw_graph_store` over the embeddings table.
+    Priming discipline (r7 verdict task 7): built once (``_build_once``)
+    so sweeps and bench time SERVING, never construction."""
     root = _fx(sf_dir, "txlog_nsw_graph")
     edges_root = os.path.join(root, "edges")
 
@@ -122,14 +146,7 @@ def ensure_nsw_graph_store(spark: SparkSession, sf_dir: str):
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
-        edges = (
-            nsw_build_edges_descent(emb)
-            .unionByName(nsw_longrange_edges(emb))
-            .dropDuplicates(["src", "dst"])
-        )
-        t = TxTable(edges_root)
-        t.commit_append(edges)
-        t.optimize(spark, sort_key=["src"], target_groups=8)
+        build_nsw_graph_store(emb, edges_root)
 
     _build_once(root, build)
     return TxTable(edges_root)
@@ -299,8 +316,6 @@ def _stream_slices(
     ``refresh``.  Then batch 0 is adversarially replayed with slice_0's
     own rows (deterministic): its txn identity is already in the log of
     every TxTable under ``tables``, so none may gain a version."""
-    from .plans.txlog import TxTable
-
     src_dir = os.path.join(root, "src")
     os.makedirs(src_dir, exist_ok=True)
     for i in range(_N_SLICES):
@@ -344,8 +359,6 @@ def _ensure_stream_nsw_mv(spark: SparkSession, sf_dir: str):
     edge-for-edge against the one-shot batch build, and batch 0 is
     adversarially replayed (both tables must version-no-op); any
     failure rmtrees the fixture before raising."""
-    from .plans.txlog import TxTable
-
     root = _fx(sf_dir, "txlog_stream_nsw_mv")
     vec_root = os.path.join(root, "vectors")
     knn_root = os.path.join(root, "knn")
@@ -436,8 +449,6 @@ def q_stream_nsw_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     AND the sink was exactly-once — a dropped, doubled, or
     replay-leaked batch loses or corrupts an edge, and any edge
     difference shifts some hop's beam."""
-    from .operators.similarity import nsw_beam_search
-
     kt = _ensure_stream_nsw_mv(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
@@ -821,8 +832,6 @@ def _pruned_beam_search_local(
     import math
     from collections import namedtuple
 
-    from .operators.similarity import FP_SCALE
-
     BeamRow = namedtuple("BeamRow", ["query_id", "node", "rel"])
 
     rel_memo: dict = {}  # (query_id, node) -> rel (exact long)
@@ -1001,9 +1010,6 @@ def _descent_mv_refresh_inner(
     txn_family: tuple[str, str],
 ) -> None:
     import hashlib as _hashlib
-    import json as _json
-
-    from .plans.txlog import TxTable
 
     w_top = Window.partitionBy("src").orderBy(F.desc("dot"), "dst")
     b = bdf.select("vec_id", "embedding").localCheckpoint()
@@ -1279,7 +1285,7 @@ def _descent_mv_refresh_inner(
     if kt.latest_version() != k_before:  # not a replayed no-op
         with open(stats_path, "a") as fh:
             fh.write(
-                _json.dumps(
+                json.dumps(
                     {
                         "batch": batch_id,
                         "n_batch": n_batch,
@@ -1316,10 +1322,6 @@ def descent_mv_repair(
     exactly like parquet file compaction.  Reference analog: the
     periodic full QA re-verification after incremental patch rounds
     (azanium/pseudoace.py:105-110)."""
-    import json as _json
-
-    from .plans.txlog import TxTable
-
     _CP = "spark.sql.constraintPropagation.enabled"
     cp_prev = sp.conf.get(_CP, "true")
     sp.conf.set(_CP, "false")
@@ -1403,7 +1405,7 @@ def descent_mv_repair(
                 continue
             with open(stats_path, "a") as fh:
                 fh.write(
-                    _json.dumps(
+                    json.dumps(
                         {
                             "repair": r,
                             "n_corpus": n_corpus,
@@ -1442,9 +1444,6 @@ def descent_mv_recluster(
     content, graph, and every declared result unchanged; runs on the
     repair/compaction schedule, LINEAR in |V| (one assignment pass +
     the rewrite OPTIMIZE always paid)."""
-    from .operators.similarity import ivf_assign
-    from .plans.txlog import TxTable
-
     vt, kt, lt = TxTable(vec_root), TxTable(knn_root), TxTable(lr_root)
     rt = TxTable(os.path.join(os.path.dirname(vec_root), "reps"))
     n = vt.count_rows(spark)
@@ -1614,8 +1613,6 @@ def _ensure_stream_nsw_descent_mv(spark: SparkSession, sf_dir: str):
     exact tier's batch×corpus cross-join.  Batch 0 bootstraps with the
     in-batch NN-descent build and is adversarially replayed after the
     drain (must version-no-op both tables)."""
-    from .plans.txlog import TxTable
-
     root = _fx(sf_dir, "txlog_stream_nsw_descent_mv")
     vec_root = os.path.join(root, "vectors")
     knn_root = os.path.join(root, "knn")
@@ -1663,12 +1660,10 @@ def _descent_mv_bounded(stats_path: str) -> bool:
     |B|·|V| — linear in the corpus — so this bound is exactly the
     property that separates the two maintenance plans; the cross-tier
     measurement at ×10 corpus lives in SCALE.md "Round-9"."""
-    import json as _json
-
     ok = True
     with open(stats_path) as fh:
         for line in fh:
-            s = _json.loads(line)
+            s = json.loads(line)
             if "repair" in s:
                 # repair rounds are LINEAR in the corpus by design:
                 # ≤ D·(D+1) new scorings per node per round
@@ -1713,9 +1708,6 @@ def q_stream_nsw_descent_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     one in-memory lazy plan.  The in-gate EXACT side below stays a
     deliberate full-corpus crossJoin: it is the acceptance harness,
     never shipped on the serving path."""
-    from .operators.similarity import nsw_beam_search
-    from .plans.txlog import TxTable
-
     kt, stats_path = _ensure_stream_nsw_descent_mv(spark, sf_dir)
     base = os.path.dirname(kt.root)
     vt = TxTable(os.path.join(base, "vectors"))
@@ -1813,85 +1805,145 @@ _IVFPQ_HR_PROBES, _IVFPQ_HR_SHORTLIST = 14, 300
 _IVFPQ_REFINE_ITERS = 2
 
 
-def _ensure_ivfpq_store(spark: SparkSession, sf_dir: str):
-    """IVF-PQ at store shape — the FAISS IVFPQ layout on the lakehouse:
-    every vector is coarse-quantized to its IVF list AND product-
-    quantized to 8 codebook indices; the store holds (list_id, vec_id,
-    codes) partitioned by list_id (one file group per inverted list,
-    min==max zone maps), with the trained codebooks beside it.  The
-    corpus' float vectors stay in the embeddings table and are touched
-    ONLY by the shortlist re-rank — the store a 100 TB corpus actually
-    serves from is n_sub bytes/vector + centroids + codebooks."""
-    from .operators import similarity
-    from .plans.txlog import TxTable
+def train_ivfpq(emb: DataFrame, root: str, lists: int) -> None:
+    """Train the IVF-PQ quantizers on ``emb`` and persist them under the
+    store ``root``: the Lloyd-refined PQ codebooks
+    (``codebooks.parquet``), the coarse quantizer (``centroids.parquet``)
+    and the parameters they were trained under (``params.json``: lists,
+    n_sub, n_codes).  Encoding and serving read them from there, never
+    recompute them — a quantizer recomputed from any other input
+    silently maps queries to list_ids that don't match the stored
+    assignments."""
+    os.makedirs(root, exist_ok=True)
+    similarity.pq_refine_codebooks(
+        emb,
+        similarity.pq_codebooks(emb, n_sub=_IVFPQ_SUB, n_codes=_IVFPQ_CODES),
+        n_sub=_IVFPQ_SUB,
+        iterations=_IVFPQ_REFINE_ITERS,
+    ).coalesce(1).write.mode("overwrite").parquet(
+        os.path.join(root, "codebooks.parquet")
+    )
+    similarity.deterministic_centroids(emb, lists).coalesce(1).write.mode(
+        "overwrite"
+    ).parquet(os.path.join(root, "centroids.parquet"))
+    with open(os.path.join(root, "params.json"), "w") as fh:
+        json.dump(
+            {"lists": lists, "n_sub": _IVFPQ_SUB, "n_codes": _IVFPQ_CODES},
+            fh,
+        )
 
+
+def _ivfpq_params(root: str) -> dict:
+    with open(os.path.join(root, "params.json")) as fh:
+        return json.load(fh)
+
+
+def encode_ivfpq(vecs: DataFrame, root: str) -> DataFrame:
+    """(list_id, vec_id, codes) of ``vecs`` (vec_id, embedding) against
+    the quantizers persisted under ``root`` — a pure per-row function of
+    them, so any split of the corpus encodes to the same rows."""
+    sp = vecs.sparkSession
+    books = sp.read.parquet(os.path.join(root, "codebooks.parquet"))
+    cents = sp.read.parquet(os.path.join(root, "centroids.parquet"))
+    return (
+        similarity.pq_encode(vecs, books, n_sub=_ivfpq_params(root)["n_sub"])
+        .join(
+            similarity.ivf_assign(vecs, cents).select("vec_id", "list_id"),
+            "vec_id",
+        )
+        .select("list_id", "vec_id", "codes")
+    )
+
+
+def build_ivfpq_store(emb: DataFrame, root: str, lists: int):
+    """The IVF-PQ store at ``root`` — the FAISS IVFPQ layout on the
+    lakehouse, shared by the declared fixture and ``ann build-ivfpq``:
+    quantizers trained on ``emb`` (:func:`train_ivfpq`), every vector
+    coarse-quantized to its IVF list AND product-quantized to n_sub
+    codebook indices, (list_id, vec_id, codes) committed to ``codes/``
+    partitioned by list_id (one file group per inverted list, min==max
+    zone maps).  The float vectors stay in the caller's table and are
+    touched ONLY by the shortlist re-rank — the store a 100 TB corpus
+    actually serves from is n_sub bytes/vector + centroids +
+    codebooks.  Returns the code TxTable."""
+    train_ivfpq(emb, root, lists)
+    t = TxTable(os.path.join(root, "codes"))
+    t.commit_append_partitioned(encode_ivfpq(emb, root), "list_id")
+    return t
+
+
+def ivfpq_candidates(
+    spark: SparkSession, root: str, qv: DataFrame, probes: int
+):
+    """The IVF-PQ store's approximate scan, from the quantizers
+    persisted with it: (1) each query (``qv``: query_id, query_vec)
+    selects its ``probes`` nearest inverted lists from the store's
+    centroids; (2) the probed lists are one zone-map-PRUNED group read
+    of the code store (file skipping, never a corpus scan); (3)
+    candidates are scored in COMPRESSED form via the per-query ADC
+    lookup table (n_sub table reads per candidate, not dim
+    multiplies).  Returns ((query_id, neighbor_id, approx_score), picked
+    groups, total groups)."""
+    params = _ivfpq_params(root)
+    t = TxTable(os.path.join(root, "codes"))
+    q_probe = similarity.ivf_probe(
+        qv, spark.read.parquet(os.path.join(root, "centroids.parquet")), probes
+    ).select("query_id", "list_id")
+    probed = sorted(
+        r.list_id for r in q_probe.select("list_id").distinct().collect()
+    )  # planner partition selection, ≤ n_lists rows
+    picked, total = t.prune_groups_points("list_id", probed)
+    corpus = t.read_groups(spark, picked).filter(
+        F.col("list_id").isin(probed)
+    )
+    lut = similarity.pq_lut(
+        qv,
+        spark.read.parquet(os.path.join(root, "codebooks.parquet")),
+        n_sub=params["n_sub"],
+        n_codes=params["n_codes"],
+        id_col="query_id",
+        vec_col="query_vec",
+    )
+    scored = (
+        corpus.join(F.broadcast(q_probe), "list_id")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .join(F.broadcast(lut), "query_id")
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            similarity.pq_adc_score(params["n_sub"], params["n_codes"]).alias(
+                "approx_score"
+            ),
+        )
+    )
+    return scored, picked, total
+
+
+def _ensure_ivfpq_store(spark: SparkSession, sf_dir: str) -> str:
+    """:func:`build_ivfpq_store` over the embeddings table, built once.
+    Returns the store root."""
     root = _fx(sf_dir, "txlog_ivfpq_store")
-    store_root = os.path.join(root, "codes")
-    books_path = os.path.join(root, "codebooks.parquet")
 
     def build() -> None:
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
-        books = similarity.pq_refine_codebooks(
-            emb,
-            similarity.pq_codebooks(
-                emb, n_sub=_IVFPQ_SUB, n_codes=_IVFPQ_CODES
-            ),
-            n_sub=_IVFPQ_SUB,
-            iterations=_IVFPQ_REFINE_ITERS,
-        )
-        books.coalesce(1).write.mode("overwrite").parquet(books_path)
-        cents = similarity.deterministic_centroids(emb, _IVFPQ_LISTS)
-        assigned = similarity.ivf_assign(emb, cents).select(
-            "vec_id", "list_id"
-        )
-        codes = similarity.pq_encode(emb, books, n_sub=_IVFPQ_SUB).join(
-            assigned, "vec_id"
-        )
-        t = TxTable(store_root)
-        t.commit_append_partitioned(
-            codes.select("list_id", "vec_id", "codes"), "list_id"
-        )
-        _assert_gate_probe_union(spark, root, emb, cents)
+        build_ivfpq_store(emb, root, _IVFPQ_LISTS)
+        _assert_gate_probe_union(spark, root, emb)
 
     _build_once(root, build)
-    return TxTable(store_root), books_path
+    return root
 
 
-def _ivfpq_q_probe(
-    emb: DataFrame, cents: DataFrame, n_queries: int, probes: int
-) -> tuple[DataFrame, DataFrame]:
-    """The coarse-probe selection shared by serving and the build-time
-    gate-workload check: (query frame, (query_id, list_id) probe
-    frame) — each query's ``probes`` nearest inverted lists from the
-    broadcast centroid array."""
-    from .operators.similarity import centroid_array, cosine
-
-    q = emb.filter(F.col("vec_id") < n_queries).select(
+def _ivfpq_queries(emb: DataFrame, n_queries: int) -> DataFrame:
+    return emb.filter(F.col("vec_id") < n_queries).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("query_vec"),
     )
-    probe_sorted = F.array_sort(
-        F.transform(
-            F.col("__cents"),
-            lambda s: F.struct(
-                (-cosine(F.col("query_vec"), s["centroid"])).alias("ns"),
-                s["list_id"].alias("lid"),
-            ),
-        )
-    )
-    q_probe = q.crossJoin(F.broadcast(centroid_array(cents))).select(
-        "query_id",
-        F.explode(F.slice(probe_sorted, 1, probes)["lid"]).alias(
-            "list_id"
-        ),
-    )
-    return q, q_probe
 
 
 def _assert_gate_probe_union(
-    spark: SparkSession, root: str, emb: DataFrame, cents: DataFrame
+    spark: SparkSession, root: str, emb: DataFrame
 ) -> None:
     """r9 ADVICE #3: the declared IVF-PQ gates carry a STRICT
     ``pruned`` boolean (0 < picked < total — the full-coverage escape
@@ -1901,7 +1953,11 @@ def _assert_gate_probe_union(
     failure, never probe-union coverage — and the failure names the
     knob to retune."""
     union = (
-        _ivfpq_q_probe(emb, cents, _IVFPQ_NQ, _IVFPQ_PROBES)[1]
+        similarity.ivf_probe(
+            _ivfpq_queries(emb, _IVFPQ_NQ),
+            spark.read.parquet(os.path.join(root, "centroids.parquet")),
+            _IVFPQ_PROBES,
+        )
         .select("list_id")
         .distinct()
         .count()
@@ -1915,100 +1971,42 @@ def _assert_gate_probe_union(
         )
 
 
-def _serve_ivfpq(
+def _ivfpq_gate(
     spark: SparkSession,
-    t,
-    books_path: str,
-    emb: DataFrame,
-    cents: DataFrame,
+    sf_dir: str,
+    root: str,
     n_queries: int,
     probes: int,
     shortlist: int,
+    bound: float,
 ):
-    """The IVF-PQ serving composition — ONE definition shared by the
-    batch store, the streamed MV, and the high-recall setting: (1) the
-    probe selects its ``probes`` nearest inverted lists from the
-    broadcast centroid array; (2) each probed list is a zone-map-PRUNED
-    group read of the code store (file skipping, never a corpus scan);
-    (3) candidates are scored in COMPRESSED form via the per-query ADC
-    lookup table (similarity.pq_lut — n_sub table reads per candidate,
-    not dim multiplies); (4) only the ``shortlist``-deep head fetches
-    full vectors for the exact cosine re-rank.  Returns (approx top-10
-    DataFrame, picked group count, total group count)."""
-    from .operators import similarity
-    from .operators.similarity import cosine
-
-    q, q_probe = _ivfpq_q_probe(emb, cents, n_queries, probes)
-    probed = sorted(
-        r.list_id for r in q_probe.select("list_id").distinct().collect()
-    )  # planner partition selection, ≤ n_lists rows
-    picked, total = t.prune_groups_points("list_id", probed)
-    corpus = t.read_groups(spark, picked).filter(
-        F.col("list_id").isin(probed)
+    """The declared IVF-PQ serving composition over the store at
+    ``root`` — the batch store, the streamed MV, and the high-recall
+    setting: the store's approximate scan (:func:`ivfpq_candidates`) for
+    the first ``n_queries`` vectors, then only the ``shortlist``-deep
+    head fetches full vectors for the exact cosine re-rank.  Returns
+    (recall@10 gate row vs brute force at ``bound``, whether the probe
+    physically skipped groups)."""
+    emb = load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", "embedding"
     )
-    lut = similarity.pq_lut(
-        q.withColumnRenamed("query_id", "vec_id").withColumnRenamed(
-            "query_vec", "embedding"
-        ),
-        spark.read.parquet(books_path),
-        n_sub=_IVFPQ_SUB,
-        n_codes=_IVFPQ_CODES,
-    )
-    scored = (
-        corpus.join(F.broadcast(q_probe), "list_id")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .join(F.broadcast(lut), "query_id")
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.aggregate(
-                F.sequence(F.lit(0), F.lit(_IVFPQ_SUB - 1)),
-                F.lit(0.0),
-                lambda acc, m: acc
-                + F.element_at(
-                    F.col("lut"),
-                    (
-                        m * _IVFPQ_CODES
-                        + F.element_at(F.col("codes"), m + 1)
-                        + 1
-                    ).cast("int"),
-                ),
-            ).alias("approx_score"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("approx_score"), F.col("neighbor_id")
-    )
-    head = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= shortlist)
-        .select("query_id", "neighbor_id")
-    )
+    qv = _ivfpq_queries(emb, n_queries)
+    scored, picked, total = ivfpq_candidates(spark, root, qv, probes)
     cv = emb.select(
         F.col("vec_id").alias("neighbor_id"),
         F.col("embedding").alias("corpus_vec"),
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.col("neighbor_id")
-    )
-    approx = (
-        head.join(F.broadcast(q), "query_id")
-        .join(cv, "neighbor_id")
-        .select(
-            "query_id",
-            "neighbor_id",
-            cosine("query_vec", "corpus_vec").alias("score"),
-        )
-        .withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= 10)
-        .select("query_id", "neighbor_id")
-    )
-    return approx, picked, total
+    approx = similarity.pq_rerank(scored, qv, cv, shortlist, 10)
+    exact = similarity.brute_force_topk(
+        emb, emb.filter(F.col("vec_id") < n_queries), k=10
+    ).select("query_id", "neighbor_id")
+    gate = _ann_recall_gate(approx, exact, bound=bound)
+    return gate, 0 < len(picked) < total
 
 
 def q_ann_ivfpq_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN served from the IVF-PQ store (_ensure_ivfpq_store) via
-    :func:`_serve_ivfpq` — the composition every production vector
+    :func:`_ivfpq_gate` — the composition every production vector
     database runs.  Gate: mean recall@10 ≥ 0.4 vs brute force over the
     4-query workload plus a STRICT ``pruned`` boolean — physically
     scanned file groups < total groups, no fallback; the 4-query
@@ -2017,23 +2015,11 @@ def q_ann_ivfpq_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     The high-recall probe setting is the separate
     ann_ivfpq_hirecall_topk gate.  No counterpart in the reference;
     completes §2.12's similarity family at its serving composition."""
-    from .operators import similarity
-
-    t, books_path = _ensure_ivfpq_store(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
+    gate, pruned = _ivfpq_gate(
+        spark, sf_dir, _ensure_ivfpq_store(spark, sf_dir),
+        _IVFPQ_NQ, _IVFPQ_PROBES, _IVFPQ_SHORTLIST, 0.4,
     )
-    cents = similarity.deterministic_centroids(emb, _IVFPQ_LISTS)
-    approx, picked, total = _serve_ivfpq(
-        spark, t, books_path, emb, cents,
-        _IVFPQ_NQ, _IVFPQ_PROBES, _IVFPQ_SHORTLIST,
-    )
-    exact = similarity.brute_force_topk(
-        emb, emb.filter(F.col("vec_id") < _IVFPQ_NQ), k=10
-    ).select("query_id", "neighbor_id")
-    return _ann_recall_gate(approx, exact, bound=0.4).withColumn(
-        "pruned", F.lit(0 < len(picked) < total)
-    )
+    return gate.withColumn("pruned", F.lit(pruned))
 
 
 def q_ann_ivfpq_hirecall_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2047,72 +2033,36 @@ def q_ann_ivfpq_hirecall_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     at far smaller fractions.  Pruning at this setting is the
     documented trade (the strict boolean lives on
     ann_ivfpq_store_topk's workload); recall is the contract here."""
-    from .operators import similarity
-
-    t, books_path = _ensure_ivfpq_store(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
-    )
-    cents = similarity.deterministic_centroids(emb, _IVFPQ_LISTS)
-    approx, _picked, _total = _serve_ivfpq(
-        spark, t, books_path, emb, cents,
-        8, _IVFPQ_HR_PROBES, _IVFPQ_HR_SHORTLIST,
-    )
-    exact = similarity.brute_force_topk(
-        emb, emb.filter(F.col("vec_id") < 8), k=10
-    ).select("query_id", "neighbor_id")
-    return _ann_recall_gate(approx, exact, bound=0.9)
+    return _ivfpq_gate(
+        spark, sf_dir, _ensure_ivfpq_store(spark, sf_dir),
+        8, _IVFPQ_HR_PROBES, _IVFPQ_HR_SHORTLIST, 0.9,
+    )[0]
 
 
-def _ensure_stream_ivfpq_mv(spark: SparkSession, sf_dir: str):
+def _ensure_stream_ivfpq_mv(spark: SparkSession, sf_dir: str) -> str:
     """The IVF-PQ code store maintained INCREMENTALLY under streaming
     vector appends — the production vector-ingestion pattern: the
     coarse quantizer (centroids) and PQ codebooks are trained ONCE on
-    the bootstrap slice (vec_id %% 4 == 0) and FROZEN; every arriving
-    micro-batch then encodes map-only against the frozen quantizers
-    and appends its (list_id, vec_id, codes) rows under a per-batch
-    txn identity.  Because encoding is a pure per-row function of the
-    frozen quantizers, the streamed store equals a one-shot batch
-    encode of the full corpus ROW-FOR-ROW — gated by two exceptAll
-    passes after the drain; batch 0 is adversarially replayed (must
-    version-no-op); any failure rmtrees the fixture.  Returns
-    (code TxTable, codebooks path)."""
-    from .operators import similarity
-    from .plans.txlog import TxTable
-
+    the bootstrap slice (vec_id %% 4 == 0) and FROZEN in the store
+    (:func:`train_ivfpq`); every arriving micro-batch then encodes
+    map-only against them (:func:`encode_ivfpq`) and appends its
+    (list_id, vec_id, codes) rows under a per-batch txn identity.
+    Because encoding is a pure per-row function of the frozen
+    quantizers, the streamed store equals a one-shot batch encode of
+    the full corpus ROW-FOR-ROW — gated by two exceptAll passes after
+    the drain; batch 0 is adversarially replayed (must version-no-op);
+    any failure rmtrees the fixture.  Same layout as the batch store,
+    so it serves through the same path.  Returns the store root."""
     root = _fx(sf_dir, "txlog_stream_ivfpq_mv")
     store_root = os.path.join(root, "codes")
-    books_path = os.path.join(root, "codebooks.parquet")
 
     def build() -> None:
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
-        boot = emb.filter(F.col("vec_id") % _N_SLICES == 0)
-        similarity.pq_refine_codebooks(
-            boot,
-            similarity.pq_codebooks(
-                boot, n_sub=_IVFPQ_SUB, n_codes=_IVFPQ_CODES
-            ),
-            n_sub=_IVFPQ_SUB,
-            iterations=_IVFPQ_REFINE_ITERS,
-        ).coalesce(1).write.mode("overwrite").parquet(books_path)
-        cents = similarity.deterministic_centroids(boot, _IVFPQ_LISTS)
-        cents_path = os.path.join(root, "centroids.parquet")
-        cents.coalesce(1).write.mode("overwrite").parquet(cents_path)
-
-        def encode(b: DataFrame) -> DataFrame:
-            sp = b.sparkSession
-            bks = sp.read.parquet(books_path)
-            cts = sp.read.parquet(cents_path)
-            assigned = similarity.ivf_assign(b, cts).select(
-                "vec_id", "list_id"
-            )
-            return (
-                similarity.pq_encode(b, bks, n_sub=_IVFPQ_SUB)
-                .join(assigned, "vec_id")
-                .select("list_id", "vec_id", "codes")
-            )
+        train_ivfpq(
+            emb.filter(F.col("vec_id") % _N_SLICES == 0), root, _IVFPQ_LISTS
+        )
 
         def refresh(bdf: DataFrame, batch_id: int) -> None:
             # partitioned append: each batch's rows land one file group PER
@@ -2120,7 +2070,7 @@ def _ensure_stream_ivfpq_mv(spark: SparkSession, sf_dir: str):
             # keeps the batch store's file-skipping property — a probe
             # plans ~n_probe/n_lists of the groups at ANY batch count
             TxTable(store_root).commit_append_partitioned(
-                encode(bdf.select("vec_id", "embedding")),
+                encode_ivfpq(bdf.select("vec_id", "embedding"), root),
                 "list_id",
                 txn=("ivfpq_mv", batch_id),
             )
@@ -2128,7 +2078,7 @@ def _ensure_stream_ivfpq_mv(spark: SparkSession, sf_dir: str):
         _stream_slices(spark, emb, root, refresh, store_root)
         t = TxTable(store_root)
         stored = t.read(spark).select("list_id", "vec_id", "codes")
-        batch = encode(emb)
+        batch = encode_ivfpq(emb, root)
         extra = stored.exceptAll(batch).count()
         missing = batch.exceptAll(stored).count()
         if extra or missing:
@@ -2136,10 +2086,10 @@ def _ensure_stream_ivfpq_mv(spark: SparkSession, sf_dir: str):
             raise RuntimeError(
                 f"streamed code store != batch encode: +{extra} -{missing}"
             )
-        _assert_gate_probe_union(spark, root, emb, cents)
+        _assert_gate_probe_union(spark, root, emb)
 
     _build_once(root, build)
-    return TxTable(store_root), books_path
+    return root
 
 
 def q_stream_ivfpq_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2154,24 +2104,11 @@ def q_stream_ivfpq_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     4-query workload as ann_ivfpq_store_topk — here the streamed store
     has one file group per (batch, list), so the probe's zone-map skip
     covers ~_N_SLICES groups per unprobed list."""
-    from .operators import similarity
-
-    t, books_path = _ensure_stream_ivfpq_mv(spark, sf_dir)
-    emb = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "embedding"
+    gate, pruned = _ivfpq_gate(
+        spark, sf_dir, _ensure_stream_ivfpq_mv(spark, sf_dir),
+        _IVFPQ_NQ, _IVFPQ_PROBES, _IVFPQ_SHORTLIST, 0.4,
     )
-    boot = emb.filter(F.col("vec_id") % _N_SLICES == 0)
-    cents = similarity.deterministic_centroids(boot, _IVFPQ_LISTS)
-    approx, picked, total = _serve_ivfpq(
-        spark, t, books_path, emb, cents,
-        _IVFPQ_NQ, _IVFPQ_PROBES, _IVFPQ_SHORTLIST,
-    )
-    exact = similarity.brute_force_topk(
-        emb, emb.filter(F.col("vec_id") < _IVFPQ_NQ), k=10
-    ).select("query_id", "neighbor_id")
-    return _ann_recall_gate(approx, exact, bound=0.4).withColumn(
-        "pruned", F.lit(0 < len(picked) < total)
-    )
+    return gate.withColumn("pruned", F.lit(pruned))
 
 
 ORACLE_ANN_PRUNED = _ORACLE_ANN_EXACT_HEAD.replace(

@@ -32,11 +32,15 @@ move search_bm25_indexed makes for retrieval.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .catalog import load_table
 from .operators import dedup
+from .plans.txlog import TxTable
 from .queries_e2e import _build_once, _check_replay, _drain, _fx
 from .queries_shared import _SHINGLE_JACCARD_CTES
 
@@ -47,8 +51,6 @@ THRESHOLD = 0.4  # est-Jaccard verify floor, same as dedup_minhash
 
 def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the documents fixture."""
-    import os
-
     path = f"{sf_dir}/documents.parquet"
     schema = spark.read.parquet(path).schema
     if os.path.isdir(path):
@@ -60,36 +62,48 @@ def _docs_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def build_lsh_store(docs: DataFrame, root: str, num_hashes: int, bands: int):
+    """The persisted band index over ``docs`` at ``root`` — one build
+    behind the declared fixture and ``lsh-store build``: the docs'
+    MinHash signatures in a ``sigs/`` txlog table (the verify side needs
+    them — signatures are num_hashes longs/doc, the text itself never
+    re-moves; a TxTable so an incremental ``--append`` commits them
+    under a txn identity), their (doc_id, band, bucket) rows in
+    ``bands/``, OPTIMIZE-clustered on ``bucket`` (each file group owns a
+    bucket range, so zone maps skip groups whose range a probe's
+    buckets miss) with bloom sidecars on ``bucket`` for selective point
+    probes, and the banding parameters in ``_lsh_meta.json``.  Returns
+    (band TxTable, signature TxTable)."""
+    spark = docs.sparkSession
+    os.makedirs(root, exist_ok=True)
+    ts = TxTable(os.path.join(root, "sigs"))
+    ts.commit_append(dedup.minhash_signatures(docs, num_hashes=num_hashes))
+    t = TxTable(os.path.join(root, "bands"))
+    t.commit_append(dedup.band_rows(ts.read(spark), "doc_id", bands))
+    t.optimize(spark, sort_key=["bucket"], target_groups=8)
+    t.add_bloom_index(spark, "bucket")
+    with open(os.path.join(root, "_lsh_meta.json"), "w") as fh:
+        json.dump({"num_hashes": num_hashes, "bands": bands}, fh)
+    return t, ts
+
+
 def _ensure_lsh_store(spark: SparkSession, sf_dir: str):
-    """The persisted band index over the STORE half (even doc_ids):
-    (doc_id, band, bucket) rows in a txlog table, OPTIMIZE-clustered on
-    ``bucket`` (each file group owns a bucket range, so zone maps skip
-    groups whose range a probe's buckets miss) with bloom sidecars on
-    ``bucket`` for selective point probes; the store docs' signatures
-    land beside it (the verify side needs them — signatures are
-    NUM_HASHES longs/doc, the text itself never re-moves).  Returns
-    (band TxTable, signatures path)."""
-    import os
-
-    from .plans.txlog import TxTable
-
+    """:func:`build_lsh_store` over the STORE half (even doc_ids) of
+    the documents table, built once.  Returns (band TxTable, signature
+    TxTable)."""
     root = _fx(sf_dir, "lsh_band_store")
-    band_root = os.path.join(root, "bands")
-    sig_path = os.path.join(root, "signatures.parquet")
 
     def build() -> None:
         docs = load_table(spark, sf_dir, "documents")
-        store_docs = docs.filter(F.col("doc_id") % 2 == 0)
-        sigs = dedup.minhash_signatures(store_docs, num_hashes=NUM_HASHES)
-        sigs.write.mode("overwrite").parquet(sig_path)
-        sigs = spark.read.parquet(sig_path)  # band rows read the written sigs
-        t = TxTable(band_root)
-        t.commit_append(dedup.band_rows(sigs, "doc_id", BANDS))
-        t.optimize(spark, sort_key=["bucket"], target_groups=8)
-        t.add_bloom_index(spark, "bucket")
+        build_lsh_store(
+            docs.filter(F.col("doc_id") % 2 == 0), root, NUM_HASHES, BANDS
+        )
 
     _build_once(root, build)
-    return TxTable(band_root), sig_path
+    return (
+        TxTable(os.path.join(root, "bands")),
+        TxTable(os.path.join(root, "sigs")),
+    )
 
 
 def probe_pairs(
@@ -138,31 +152,49 @@ def probe_pairs(
     )
 
 
-def point_candidates(
-    spark: SparkSession, t, probe_sig: DataFrame, bands: int = BANDS
+def point_matches(
+    spark: SparkSession,
+    t,
+    ts,
+    probe_sig: DataFrame,
+    bands: int,
+    threshold: float,
 ):
-    """Single-document candidate generation through the store's bloom
-    sidecars + zone maps: plan each of the probe's band buckets ONCE
-    (``prune_groups_point``), then scan the PLANNED UNION in one job
-    (``read_groups``) and keep rows matching a probe (band, bucket).
-    Returns (candidate store-id DataFrame, planned group set).  The
-    probe's band rows are driver-side by design — they ARE the query,
-    bounded by ``bands``."""
+    """Single-document lookup through the band store ``t`` (signatures
+    ``ts``), shared by the declared point probe and ``lsh-store
+    point``: plan each of the probe's band buckets ONCE through the
+    bloom sidecars + zone maps (``prune_groups_point``), scan the
+    PLANNED UNION in one job (``read_groups``), keep rows matching a
+    probe (band, bucket), then verify each candidate by signature
+    agreement >= ``threshold``.  Returns ((store_id, est_jaccard), the
+    planned group set).  The probe's band rows are driver-side by
+    design — they ARE the query, bounded by ``bands``."""
     prows = dedup.band_rows(probe_sig, "doc_id", bands).select(
         "band", "bucket"
     )
-    pairs = prows.collect()
     scanned: set[str] = set()
-    for r in pairs:
+    for r in prows.collect():
         picked, _total = t.prune_groups_point(spark, "bucket", r.bucket)
         scanned.update(picked)
-    cand = (
+    matches = (
         t.read_groups(spark, sorted(scanned))
         .join(F.broadcast(prows), ["band", "bucket"])
         .select(F.col("doc_id").alias("store_id"))
         .distinct()
+        .join(
+            ts.read(spark).select(
+                F.col("doc_id").alias("store_id"),
+                F.col("signature").alias("sig_a"),
+            ),
+            "store_id",
+        )
+        .crossJoin(
+            F.broadcast(probe_sig.select(F.col("signature").alias("sig_b")))
+        )
+        .select("store_id", dedup.sig_agreement().alias("est_jaccard"))
+        .filter(F.col("est_jaccard") >= threshold)
     )
-    return cand, scanned
+    return matches, scanned
 
 
 def q_dedup_lsh_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -175,7 +207,7 @@ def q_dedup_lsh_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     verified by signature-agreement est >= THRESHOLD.  recall_ok gates
     that every exact >= 0.8 cross-split pair surfaced through the
     store; est_err_ok bounds |est - exact| on the found pairs."""
-    t, sig_path = _ensure_lsh_store(spark, sf_dir)
+    t, ts = _ensure_lsh_store(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     probe_docs = docs.filter(F.col("doc_id") % 2 == 1)
     # persisted (and left so, same as minhash_near_dups): the probe
@@ -185,9 +217,7 @@ def q_dedup_lsh_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     psigs = dedup.minhash_signatures(
         probe_docs, num_hashes=NUM_HASHES
     ).persist()
-    found = probe_pairs(
-        t.read(spark), spark.read.parquet(sig_path), psigs
-    ).select(
+    found = probe_pairs(t.read(spark), ts.read(spark), psigs).select(
         # normalize to the (id_a < id_b) orientation the exact-pair
         # frame uses; store ids are even, probe ids odd, so least/
         # greatest is the orientation-free form
@@ -233,7 +263,7 @@ def q_dedup_lsh_point_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     signature is identical to the stored copy and the self-match MUST
     surface with agreement 1.0 (``self_found`` — collision certain, no
     probabilistic slack)."""
-    t, sig_path = _ensure_lsh_store(spark, sf_dir)
+    t, ts = _ensure_lsh_store(spark, sf_dir)
     docs = load_table(spark, sf_dir, "documents")
     probe_id = (
         docs.filter(F.col("doc_id") % 2 == 0)
@@ -244,21 +274,7 @@ def q_dedup_lsh_point_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(-1).cast("long").alias("doc_id"), "text"
     )
     psig = dedup.minhash_signatures(probe, num_hashes=NUM_HASHES)
-    cand, scanned = point_candidates(spark, t, psig)
-    verified = (
-        cand.join(
-            spark.read.parquet(sig_path).select(
-                F.col("doc_id").alias("store_id"),
-                F.col("signature").alias("sig_a"),
-            ),
-            "store_id",
-        )
-        .crossJoin(
-            F.broadcast(psig.select(F.col("signature").alias("sig_b")))
-        )
-        .select("store_id", dedup.sig_agreement().alias("est_jaccard"))
-        .filter(F.col("est_jaccard") >= THRESHOLD)
-    )
+    verified, scanned = point_matches(spark, t, ts, psig, BANDS, THRESHOLD)
     return verified.agg(
         F.lit(probe_id).cast("long").alias("probe_id"),
         F.coalesce(
@@ -282,10 +298,6 @@ def q_stream_dedup_lsh_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     hll/theta/quantile streaming MVs.  n_band_rows is exactly
     n_docs x BANDS (each doc emits one row per band), which is what
     the oracle pins."""
-    import os
-
-    from .plans.txlog import TxTable
-
     root = _fx(sf_dir, "stream_lsh_mv")
 
     def build() -> None:

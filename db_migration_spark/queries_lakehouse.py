@@ -1565,7 +1565,7 @@ GROUP BY o_orderstatus
 """
 
 
-def _ensure_ivf_store(spark: SparkSession, sf_dir: str) -> TxTable:
+def _ensure_ivf_store(spark: SparkSession, sf_dir: str):
     """The vector-database-on-the-lakehouse composition: every embedding
     is assigned to its nearest IVF centroid (operators/similarity.
     ivf_assign — a zero-exchange map over a 1-row broadcast centroid
@@ -1574,79 +1574,63 @@ def _ensure_ivf_store(spark: SparkSession, sf_dir: str) -> TxTable:
     A probe then prunes to its lists' groups at PLANNING time: the scan
     fraction n_probe/n_lists stops being a join filter and becomes
     file skipping, which is the property that matters when the corpus
-    is 100 TB of vectors."""
+    is 100 TB of vectors.  The centroids the vectors were assigned
+    under persist beside the table; probes read them, never recompute
+    them.  Returns (vector TxTable, centroids path)."""
     from .operators import similarity
 
     root = _fx(sf_dir, "txlog_ivf_embeddings")
+    vec_root = os.path.join(root, "vectors")
+    cents_path = os.path.join(root, "centroids.parquet")
 
     def build() -> None:
-        t = TxTable(root)
         emb = load_table(spark, sf_dir, "embeddings")
-        cents = similarity.deterministic_centroids(emb, 16)
-        t.commit_append_partitioned(
-            similarity.ivf_assign(emb, cents), "list_id"
+        similarity.deterministic_centroids(emb, 16).coalesce(1).write.mode(
+            "overwrite"
+        ).parquet(cents_path)
+        TxTable(vec_root).commit_append_partitioned(
+            similarity.ivf_assign(emb, spark.read.parquet(cents_path)),
+            "list_id",
         )
 
     _build_once(root, build)
-    return TxTable(root)
+    return TxTable(vec_root), cents_path
 
 
 def q_ann_ivf_pruned_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN served FROM the partitioned store (_ensure_ivf_store):
-    probe lists are selected per query from the folded centroid array
-    (same deterministic seeding as ann_ivf_topk), the probed list ids
-    are collected (≤ n_lists rows — driver-tier bound, the query
-    planner's partition-selection step in any vector database), and
-    each probed list becomes a zone-map-pruned group read.  The
-    acceptance row gates mean recall@10 ≥ 0.4 against in-query brute
-    force — plus a ``pruned`` boolean requiring the probe plan to have
-    physically skipped groups (strictly fewer planned than live; when
-    the distinct probe set legitimately covers every list — possible
-    at toy corpus sizes where 8 queries × 6 probes span all 16 lists —
-    full coverage is the correct plan and the flag stays TRUE)."""
-    import functools
-
-    from pyspark.sql import Window
-
+    probe lists are selected per query from the store's persisted
+    centroids (same deterministic seeding as ann_ivf_topk), the probed
+    list ids are collected (≤ n_lists rows — driver-tier bound, the
+    query planner's partition-selection step in any vector database),
+    and the probed lists are planned in ONE zone-map pass and read as
+    one pruned group scan.  The acceptance row gates mean recall@10 ≥
+    0.4 against in-query brute force — plus a ``pruned`` boolean
+    requiring the probe plan to have physically skipped groups
+    (strictly fewer planned than live; when the distinct probe set
+    legitimately covers every list — possible at toy corpus sizes where
+    8 queries × 6 probes span all 16 lists — full coverage is the
+    correct plan and the flag stays TRUE)."""
     from .operators import similarity
-    from .operators.similarity import centroid_array, cosine
+    from .operators.similarity import cosine
 
-    t = _ensure_ivf_store(spark, sf_dir)
+    t, cents_path = _ensure_ivf_store(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    cents = similarity.deterministic_centroids(emb, 16)
-    q = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("query_vec"),
-    )
-    probe_sorted = F.array_sort(
-        F.transform(
-            F.col("__cents"),
-            lambda s: F.struct(
-                (-cosine(F.col("query_vec"), s["centroid"])).alias("ns"),
-                s["list_id"].alias("lid"),
-            ),
-        )
-    )
-    q_probe = (
-        q.crossJoin(F.broadcast(centroid_array(cents)))
-        .select(
-            "query_id",
-            "query_vec",
-            F.explode(F.slice(probe_sorted, 1, 6)["lid"]).alias("list_id"),
-        )
+    q_probe = similarity.ivf_probe(
+        emb.filter(F.col("vec_id") < 8).select(
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("query_vec"),
+        ),
+        spark.read.parquet(cents_path),
+        6,
     )
     probes = sorted(
         r.list_id
         for r in q_probe.select("list_id").distinct().collect()
     )  # ≤ n_lists rows — the planner's partition-selection step
-    picked: set[str] = set()
-    total = len(t.active_groups())
-    for p in probes:
-        sel, _tot = t.prune_groups("list_id", lo=p, hi=p)
-        picked.update(sel)
-    corpus = functools.reduce(
-        DataFrame.unionByName,
-        [t.read_pruned(spark, "list_id", lo=p, hi=p) for p in probes],
+    picked, total = t.prune_groups_points("list_id", probes)
+    corpus = t.read_groups(spark, picked).filter(
+        F.col("list_id").isin(probes)
     )
     scored = (
         corpus.join(F.broadcast(q_probe), "list_id")
@@ -1657,17 +1641,12 @@ def q_ann_ivf_pruned_store(spark: SparkSession, sf_dir: str) -> DataFrame:
             cosine("query_vec", "embedding").alias("score"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.col("neighbor_id")
-    )
-    approx = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-    )
     exact = similarity.brute_force_topk(
         emb, emb.filter(F.col("vec_id") < 8), k=10
     ).select("query_id", "neighbor_id")
-    return _ann_recall_gate(approx, exact, bound=0.4).withColumn(
+    return _ann_recall_gate(
+        similarity.rank_topk(scored, "score", 10), exact, bound=0.4
+    ).withColumn(
         "pruned",
         F.lit(0 < len(picked) < total or len(probes) >= total),
     )

@@ -4,11 +4,12 @@ query module can import it at module top."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .catalog import load_table
 from .operators import eav
+from .operators.similarity import FP_SCALE, NSW_H, NSW_K, NSW_M, NSW_W, fp_dot
 
 
 _MELT_ATTRS = ["l_quantity", "l_returnflag", "l_linestatus", "l_shipdate"]
@@ -159,3 +160,118 @@ SELECT 'Region', 'Comment', count(*), count(DISTINCT r_name),
        min('area ' || r_regionkey), max('area ' || r_regionkey), 0, 0
 FROM region
 """
+
+
+# HNSW upper-layer parameters: 1-in-8 node sample, degree 4, 2 hops,
+# beam 4 — the routing layer is SMALL and cheap by design
+_HNSW_STRIDE, _HNSW_M1, _HNSW_H1, _HNSW_W1 = 8, 4, 2, 4
+
+
+def _nsw_answer(beam: DataFrame, emb: DataFrame, q: DataFrame) -> DataFrame:
+    """Rank the final beam to top-K (self excluded) and join each
+    answer against the exact brute-force top-K (``in_exact10`` puts
+    recall inside the hash gate).  Shared by the NSW and HNSW tails."""
+    exact = (
+        emb.crossJoin(F.broadcast(q))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            F.col("vec_id").alias("neighbor_id"),
+            fp_dot(F.col("qv"), F.col("embedding")).alias("xrel"),
+        )
+    )
+    wx = Window.partitionBy("query_id").orderBy(F.desc("xrel"), "neighbor_id")
+    exact = (
+        exact.withColumn("rn", F.row_number().over(wx))
+        .filter(F.col("rn") <= NSW_K)
+        .select("query_id", "neighbor_id", F.lit(True).alias("hit"))
+    )
+
+    wf = Window.partitionBy("query_id").orderBy(F.desc("rel"), "node")
+    fin = (
+        beam.filter(F.col("node") != F.col("query_id"))
+        .withColumn("rank", F.row_number().over(wf).cast("int"))
+        .filter(F.col("rank") <= NSW_K)
+        .select(
+            "query_id", "rank", F.col("node").alias("neighbor_id"), "rel"
+        )
+    )
+    return (
+        fin.join(exact, ["query_id", "neighbor_id"], "left")
+        .select(
+            "query_id",
+            "rank",
+            "neighbor_id",
+            "rel",
+            F.coalesce(F.col("hit"), F.lit(False)).alias("in_exact10"),
+        )
+        .orderBy("query_id", "rank")
+    )
+
+
+def _nsw_oracle_sql() -> str:
+    dot = (
+        "CAST(list_sum(list_transform(range(1, len({a}) + 1), i -> "
+        "CAST(floor(CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE) * "
+        f"{FP_SCALE} + 0.5) AS BIGINT))) AS BIGINT)"
+    )
+    sql = f"""
+WITH q AS (SELECT vec_id AS query_id, embedding AS qv
+           FROM embeddings WHERE vec_id < 3),
+dots AS (
+  SELECT a.vec_id AS src, b.vec_id AS dst,
+         {dot.format(a="a.embedding", b="b.embedding")} AS dot
+  FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id),
+knn AS (
+  SELECT src, dst FROM (
+    SELECT src, dst, row_number() OVER (
+        PARTITION BY src ORDER BY dot DESC, dst) AS rn
+    FROM dots) WHERE rn <= {NSW_M}),
+edges AS (SELECT src, dst FROM knn
+          UNION SELECT dst AS src, src AS dst FROM knn),
+entry AS (SELECT min(vec_id) AS node FROM embeddings),
+s0 AS (
+  SELECT query_id, node, {dot.format(a="qv", b="e.embedding")} AS rel
+  FROM q CROSS JOIN entry JOIN embeddings e ON e.vec_id = node)"""
+    for i in range(1, NSW_H + 1):
+        sql += f""",
+c{i} AS (
+  SELECT query_id, node FROM s{i - 1}
+  UNION
+  SELECT s.query_id, ed.dst AS node
+  FROM s{i - 1} s JOIN edges ed ON ed.src = s.node),
+s{i} AS (
+  SELECT query_id, node, rel FROM (
+    SELECT x.*, row_number() OVER (
+        PARTITION BY query_id ORDER BY rel DESC, node) AS rn
+    FROM (SELECT c.query_id, c.node,
+                 {dot.format(a="qv", b="e.embedding")} AS rel
+          FROM c{i} c
+          JOIN embeddings e ON e.vec_id = c.node
+          JOIN q ON q.query_id = c.query_id) x)
+  WHERE rn <= {NSW_W})"""
+    sql += f""",
+exact AS (
+  SELECT query_id, neighbor_id FROM (
+    SELECT query_id, e.vec_id AS neighbor_id,
+           row_number() OVER (PARTITION BY query_id
+               ORDER BY {dot.format(a="qv", b="e.embedding")} DESC,
+                        e.vec_id) AS rn
+    FROM embeddings e CROSS JOIN q WHERE e.vec_id <> query_id)
+  WHERE rn <= {NSW_K}),
+fin AS (
+  SELECT query_id, node AS neighbor_id, rel,
+         CAST(row_number() OVER (PARTITION BY query_id
+             ORDER BY rel DESC, node) AS INTEGER) AS rank
+  FROM s{NSW_H} WHERE node <> query_id)
+SELECT f.query_id, f.rank, f.neighbor_id, f.rel,
+       (e.neighbor_id IS NOT NULL) AS in_exact10
+FROM fin f LEFT JOIN exact e
+  ON e.query_id = f.query_id AND e.neighbor_id = f.neighbor_id
+WHERE f.rank <= {NSW_K}
+ORDER BY 1, 2
+"""
+    return sql
+
+
+ORACLE_NSW = _nsw_oracle_sql()

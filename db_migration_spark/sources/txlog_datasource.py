@@ -58,27 +58,30 @@ _DDL_TO_PA = {
 }
 
 
-def _schema_fields(root: str) -> list[tuple[str, str]]:
-    """[(column, spark-ddl)] of the table — from the LOG-OWNED schema
-    when recorded (so the stream's declared schema survives files
-    written after an ADD COLUMN), else the first live group's parquet
-    footer (legacy logs)."""
+def _schema_fields(root: str) -> list[tuple[str, str, str]]:
+    """[(column, spark-ddl, on-file name)] of the table — from the
+    LOG-OWNED schema when recorded (so the stream's declared schema
+    survives files written after an ADD COLUMN, and a renamed column is
+    read from the physical name its files carry), else the first live
+    group's parquet footer (legacy logs)."""
     import glob
 
     import pyarrow.parquet as pq
+    from pyspark.sql.types import StructType
 
     from ..plans.txlog import TxTable
 
     t = TxTable(root)
     js = t.table_schema_json()
     if js is not None:
-        return [(f["name"], _spark_ddl_of(f["type"])) for f in js["fields"]]
+        return [
+            (f["name"], _spark_ddl_of(f["type"]), t._physical_name(sf))
+            for f, sf in zip(js["fields"], StructType.fromJson(js).fields)
+        ]
     groups = t.active_groups()
     if not groups:
         raise ValueError(f"cannot infer schema of empty table {root}")
-    files = sorted(
-        glob.glob(os.path.join(root, "data", groups[0], "*.parquet"))
-    )
+    files = sorted(glob.glob(os.path.join(t._gpath(groups[0]), "*.parquet")))
     schema = pq.ParquetFile(files[0]).schema_arrow
     out = []
     for field in schema:
@@ -91,7 +94,7 @@ def _schema_fields(root: str) -> list[tuple[str, str]]:
             ddl = _PA_TO_DDL.get(s)
         if ddl is None:
             raise TypeError(f"unsupported column type {s} in txlog stream")
-        out.append((field.name, ddl))
+        out.append((field.name, ddl, field.name))
     return out
 
 
@@ -104,7 +107,7 @@ def _spark_ddl_of(t) -> str:
 
 
 def _data_schema_ddl(root: str) -> str:
-    cols = [f"`{n}` {d}" for n, d in _schema_fields(root)]
+    cols = [f"`{n}` {d}" for n, d, _phys in _schema_fields(root)]
     cols.append("`_commit_version` long")
     return ", ".join(cols)
 
@@ -180,9 +183,8 @@ class TxlogStreamReader(DataSourceStreamReader):
                     "(the Delta streaming-source contract)"
                 )
             for g in c.get("add", []):
-                for f in sorted(
-                    glob.glob(os.path.join(self.root, "data", g, "*.parquet"))
-                ):
+                gdir = t._gpath(g)
+                for f in sorted(glob.glob(os.path.join(gdir, "*.parquet"))):
                     parts.append(TxlogFilePartition(f, v))
         if not parts:  # engine requires ≥1 partition; emit an empty file list
             return [TxlogFilePartition("", int(end["version"]))]
@@ -203,9 +205,9 @@ class TxlogStreamReader(DataSourceStreamReader):
         for batch in table.to_batches():
             ver = pa.array([partition.version] * batch.num_rows, pa.int64())
             cols, names = [], []
-            for name, ddl in self.fields:
-                if name in batch.schema.names:
-                    cols.append(batch.column(name))
+            for name, ddl, phys in self.fields:
+                if phys in batch.schema.names:
+                    cols.append(batch.column(phys))
                 else:
                     pa_t = _DDL_TO_PA.get(ddl)
                     if pa_t is None and ddl.startswith("decimal"):

@@ -319,10 +319,11 @@ def test_stream_ivfpq_equals_batch_encode(spark):
         _ensure_stream_ivfpq_mv,
     )
 
-    t, books_path = _ensure_stream_ivfpq_mv(spark, SF)
+    root = _ensure_stream_ivfpq_mv(spark, SF)
+    t = TxTable(os.path.join(root, "codes"))
     emb = load_table(spark, SF, "embeddings").select("vec_id", "embedding")
     boot = emb.filter(F.col("vec_id") % _N_SLICES == 0)
-    books = spark.read.parquet(books_path)
+    books = spark.read.parquet(os.path.join(root, "codebooks.parquet"))
     cents = similarity.deterministic_centroids(boot, _IVFPQ_LISTS)
     batch = (
         similarity.pq_encode(emb, books, n_sub=_IVFPQ_SUB)

@@ -454,6 +454,34 @@ def test_cli_ann_build_probe(tmp_path):
     assert [r[1] for r in gprobe["results"]] == [1, 2, 3, 4, 5]
 
 
+def test_cli_ann_and_fixture_build_the_same_ivfpq_store(
+    spark, sf_dir, tmp_path
+):
+    """``ann build-ivfpq`` and the declared store fixture run ONE build:
+    over the same embeddings they persist identical codebooks,
+    centroids and (list_id, vec_id, codes) rows."""
+    import os
+
+    from db_migration_spark.plans.txlog import TxTable
+    from db_migration_spark.queries_annstore import _ensure_ivfpq_store
+
+    cli_root = str(tmp_path / "ivfpq")
+    _cli(
+        "ann", "--action", "build-ivfpq",
+        "--input", f"{sf_dir}/embeddings.parquet", "--store", cli_root,
+    )
+    fx_root = _ensure_ivfpq_store(spark, sf_dir)
+    for name in ("codebooks.parquet", "centroids.parquet"):
+        a = spark.read.parquet(os.path.join(cli_root, name))
+        b = spark.read.parquet(os.path.join(fx_root, name))
+        assert a.count() > 0
+        assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+    a = TxTable(os.path.join(cli_root, "codes")).read(spark)
+    b = TxTable(os.path.join(fx_root, "codes")).read(spark)
+    assert a.count() == 500
+    assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
+
+
 def test_cli_ann_repair_graph(spark, tmp_path):
     """The repair-graph action: runs the compaction-analog full-graph
     NN-descent round over a stream-MV store root (vectors/ + knn/) and

@@ -542,7 +542,7 @@ def test_ivf_pruned_store_scans_subset_of_groups(spark):
     via the same prune_groups planner the query uses."""
     from db_migration_spark.queries_lakehouse import _ensure_ivf_store
 
-    t = _ensure_ivf_store(spark, SF)
+    t, _cents = _ensure_ivf_store(spark, SF)
     total = len(t.active_groups())
     sel, tot = t.prune_groups("list_id", lo=0, hi=0)
     assert tot == total and len(sel) <= 1

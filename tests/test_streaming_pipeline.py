@@ -452,7 +452,9 @@ def test_replay_without_txn_identity_is_refused_then_rebuilt(spark, tmp_path):
 
 def test_query_modules_use_the_one_fixture_protocol():
     """Outside the protocol helpers in queries_e2e.py, no query module
-    writes its own build marker, drain or assert-based replay check."""
+    writes its own build marker, drain or assert-based replay check —
+    and no query-module function imports a query module (those imports
+    sit at module top, so an import cycle fails at import time)."""
     import ast
     import glob
     import os
@@ -481,4 +483,20 @@ def test_query_modules_use_the_one_fixture_protocol():
             for i, line in enumerate(lines, 1)
             if i not in skip and banned.search(line)
         ]
+        for fn in ast.walk(ast.parse("\n".join(lines))):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            for node in ast.walk(fn):
+                if isinstance(node, ast.ImportFrom):
+                    mods = [node.module or ""]
+                    mods += [a.name for a in node.names]
+                elif isinstance(node, ast.Import):
+                    mods = [a.name for a in node.names]
+                else:
+                    continue
+                if any(m.split(".")[-1].startswith("queries") for m in mods):
+                    hits.append(
+                        f"{os.path.basename(path)}:{node.lineno}: "
+                        f"function-local query-module import in {fn.name}"
+                    )
     assert not hits, "\n".join(hits)

@@ -969,6 +969,37 @@ def test_stream_source_delete_commit_contract(spark, tmp_path):
     assert rows == 15  # both append commits; the DV commit is skipped
 
 
+def test_stream_source_reads_renamed_column(spark, tmp_path):
+    """After ALTER RENAME COLUMN every file still carries the column's
+    PHYSICAL name; the txlog stream must read it from there under the
+    new logical name (files before and after the rename), not
+    null-fill it."""
+    from db_migration_spark.sources import txlog_datasource
+
+    t = TxTable(str(tmp_path / "t"))
+    t.commit_append(
+        spark.createDataFrame([(1, 10), (2, 20)], "k long, amount long")
+    )
+    t.alter_rename_column(spark, "amount", "amt")
+    t.commit_append(spark.createDataFrame([(3, 30)], "k long, amt long"))
+    want = [(1, 10), (2, 20), (3, 30)]
+    assert sorted(tuple(r) for r in t.read(spark).collect()) == want
+    txlog_datasource.register(spark)
+    q = (
+        spark.readStream.format("txlog")
+        .option("path", t.root)
+        .load()
+        .writeStream.format("memory")
+        .queryName("renamed_col")
+        .option("checkpointLocation", str(tmp_path / "chk"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    assert q.awaitTermination(120)
+    got = spark.table("renamed_col").select("k", "amt").collect()
+    assert sorted(tuple(r) for r in got) == want
+
+
 # -- log-owned schema + ADD COLUMN evolution ---------------------------------
 
 
