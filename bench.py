@@ -405,49 +405,8 @@ FULL_SUITE = [
 # r2-stable headline subset — the single stdout JSON line (the driver
 # tail-captures ~2000 chars; this 40-query dict fits, the 205-query one
 # does not).  MUST stay 1:1 with BENCH_r02's parsed["queries"] keys so
-# cross-round totals compare directly.
-HEADLINE = [
-    "x6_qa_report",
-    "q1_pricing_summary",
-    "q3_top_revenue",
-    "x1_eav_melt",
-    "x7_pivot_roundtrip",
-    "x4_apply_patches",
-    "w1_last_write_wins",
-    "events_hourly_rollup",
-    "dedup_exact",
-    "dedup_minhash",
-    "dedup_ngram_jaccard",
-    "ann_cosine_topk",
-    "text_stats",
-    "asof_join",
-    "x3_typed_cast",
-    "datalog_query",
-    "q5_region_revenue",
-    "q6_selective_sum",
-    "events_sessionize",
-    "q12_priority_lines",
-    "j4_semi_anti",
-    "a7_cube",
-    "text_tfidf_topterms",
-    "dedup_levenshtein",
-    "dedup_simhash",
-    "ann_ivf_topk",
-    "dedup_embedding_cosine",
-    "ace_e2e_qa",
-    "datalog_join",
-    "range_join_campaigns",
-    "dedup_components",
-    "datalog_ancestors",
-    "corpus_datacard",
-    "q17_small_qty_revenue",
-    "q21_sole_late_supplier",
-    "chunk_dedup",
-    "dense_ids",
-    "winsorize_values",
-    "copurchase_triangles",
-    "stream_hourly_rollup",
-]
+# cross-round totals compare directly: FULL_SUITE only grows at its end.
+HEADLINE = FULL_SUITE[:40]
 
 
 # The sketch registry entries became SELF-CERTIFYING this round: each now

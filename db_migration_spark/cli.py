@@ -694,7 +694,7 @@ def main(argv: list[str] | None = None) -> int:
 
         from .functions.theta import (
             kmv_merge,
-            kmv_scale_count,
+            kmv_set_op,
             kmv_sketch,
             kmv_stats,
         )
@@ -772,32 +772,28 @@ def main(argv: list[str] | None = None) -> int:
             # unmerged rows double-counts duplicate v values across the
             # fine-grained tuples and takes theta from the wrong union
             df = kmv_merge(df, [seg], args.k)
-        st = {
-            r[seg]: r
-            for r in kmv_stats(df, [seg], args.k)
-            .filter(F.col(seg).isin(args.seg_a, args.seg_b))
-            .collect()
-        }
-        if args.seg_a not in st or args.seg_b not in st:
-            raise SystemExit("segment value(s) not present in sketch")
-        theta = min(st[args.seg_a]["theta_v"], st[args.seg_b]["theta_v"])
-        a = df.filter((F.col(seg) == args.seg_a) & (F.col("v") < theta))
-        b = df.filter(F.col(seg) == args.seg_b).select("v")
-        how = "left_semi" if args.action == "intersect" else "left_anti"
-        picked = a.join(b, "v", how).agg(
-            F.count(F.lit(1)).alias("n"),
+        st = kmv_stats(df, [seg], args.k)
+        pairs = (
+            st.filter(F.col(seg) == args.seg_a)
+            .select(F.col(seg).alias("sa"))
+            .crossJoin(
+                st.filter(F.col(seg) == args.seg_b).select(
+                    F.col(seg).alias("sb")
+                )
+            )
         )
-        est = picked.select(
-            kmv_scale_count(F.col("n"), F.lit(theta)).alias("est")
-        ).collect()[0]["est"]
+        how = "left_semi" if args.action == "intersect" else "left_anti"
+        r = kmv_set_op(df, st, pairs, seg, how).first()
+        if r is None:
+            raise SystemExit("segment value(s) not present in sketch")
         print(
             json.dumps(
                 {
                     "action": args.action,
                     "seg_a": args.seg_a,
                     "seg_b": args.seg_b,
-                    "theta_v": theta,
-                    "estimate": int(est),
+                    "theta_v": r["theta_v"],
+                    "estimate": int(r["est"]),
                 }
             )
         )
@@ -1081,7 +1077,6 @@ def main(argv: list[str] | None = None) -> int:
         # re-implementation
         import shutil as _sh
 
-        from pyspark.sql import Window
         from pyspark.sql import functions as F
 
         from .operators.similarity import rank_topk
@@ -1090,9 +1085,10 @@ def main(argv: list[str] | None = None) -> int:
             build_ivfpq_store,
             build_nsw_graph_store,
             descent_mv_repair,
+            graph_store_beam,
             ivfpq_candidates,
-            store_beam_search,
         )
+        from .queries_shared import _beam_topk
 
         spark = get_spark("ann-cli")
         if args.action.startswith("build") and not args.input:
@@ -1170,31 +1166,29 @@ def main(argv: list[str] | None = None) -> int:
         emb = spark.read.parquet(args.input).select("vec_id", "embedding")
         q = emb.filter(F.col("vec_id").isin(qids))
         if args.action == "probe-graph":
-            t = TxTable(os.path.join(args.store, "edges"))
-            beam, scanned, scannable = store_beam_search(
-                spark,
-                t,
+            io = {"groups_read": 0, "groups_total": 0}
+            beam = graph_store_beam(
+                TxTable(os.path.join(args.store, "edges")),
                 emb,
                 q.select(
                     F.col("vec_id").alias("query_id"),
                     F.col("embedding").alias("qv"),
                 ),
-            )
-            wf = Window.partitionBy("query_id").orderBy(
-                F.desc("rel"), "node"
+                io,
             )
             rows = (
-                beam.filter(F.col("node") != F.col("query_id"))
-                .withColumn("rank", F.row_number().over(wf))
-                .filter(F.col("rank") <= args.k)
-                .select("query_id", "rank", F.col("node").alias("neighbor_id"))
+                _beam_topk(beam, args.k)
+                .select("query_id", "rank", "neighbor_id")
                 .orderBy("query_id", "rank")
                 .collect()
             )
             print(
                 json.dumps(
                     {
-                        "groups_planned": [scanned, scannable],
+                        "groups_planned": [
+                            io["groups_read"],
+                            io["groups_total"],
+                        ],
                         "results": [list(r) for r in rows],
                     }
                 )

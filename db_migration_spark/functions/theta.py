@@ -326,3 +326,53 @@ def kmv_scale_count(cnt: Column, theta_v: Column) -> Column:
             + F.lit(0.5)
         ).cast("bigint")
     )
+
+
+def kmv_set_op(
+    sk: DataFrame, st: DataFrame, pairs: DataFrame, dim: str, how: str
+) -> DataFrame:
+    """The theta set operation for every (sa, sb) row of ``pairs``
+    (values of the sketch's one dimension column ``dim``): A ∩ B with
+    ``how="left_semi"``, A \\ B with ``how="left_anti"``.  theta = the
+    min of the pair's two thresholds (``st`` = kmv_stats over
+    ``dim``); A's retained values below theta are semi- or anti-joined
+    against B's retained values, then counted, summed (the exact
+    digest) and scaled by 2^52/theta.  Returns (sa, sb, theta_v, n,
+    digest, est), one row per pair whose two values are in ``st``
+    (zeros when no value survives)."""
+    th = st.select(F.col(dim).alias("s"), "theta_v")
+    pt = (
+        F.broadcast(pairs)
+        .join(
+            th.select(F.col("s").alias("sa"), F.col("theta_v").alias("tha")),
+            "sa",
+        )
+        .join(
+            th.select(F.col("s").alias("sb"), F.col("theta_v").alias("thb")),
+            "sb",
+        )
+        .select("sa", "sb", F.least("tha", "thb").alias("theta_v"))
+    )
+    a_vals = sk.select(F.col(dim).alias("sa"), "v")
+    b_vals = sk.select(F.col(dim).alias("sbb"), F.col("v").alias("vb"))
+    picked = (
+        F.broadcast(pt)
+        .join(a_vals, "sa")
+        .filter(F.col("v") < F.col("theta_v"))
+        .join(
+            b_vals,
+            (F.col("vb") == F.col("v")) & (F.col("sbb") == F.col("sb")),
+            how,
+        )
+        .groupBy("sa", "sb")
+        .agg(F.count(F.lit(1)).alias("n"), F.sum("v").alias("digest"))
+    )
+    n = F.coalesce("n", F.lit(0))
+    return pt.join(picked, ["sa", "sb"], "left").select(
+        "sa",
+        "sb",
+        "theta_v",
+        n.alias("n"),
+        F.coalesce("digest", F.lit(0)).alias("digest"),
+        kmv_scale_count(n, F.col("theta_v")).alias("est"),
+    )

@@ -999,21 +999,24 @@ def nsw_build_edges_descent(
     return _symmetrize(knn)
 
 
-def nsw_longrange_edges(emb: DataFrame, links: int = 4) -> DataFrame:
+def nsw_longrange_edges(ids: DataFrame, n: int, links: int = 4) -> DataFrame:
     """Deterministic LONG-RANGE links — the small-world ingredient
     (Kleinberg routing; NSW gets it implicitly from insertion-order
-    randomness): each node gains ``links`` md5-derived random
-    out-neighbors, symmetrized.  Without these, a kNN graph over
+    randomness): each ``vec_id`` of ``ids`` gains ``links`` md5-derived
+    random out-neighbors, symmetrized.  Without these, a kNN graph over
     CLUSTERED embeddings degenerates into disconnected near-cliques and
     a fixed-entry beam can never leave the entry's cluster — measured
     in SCALE.md "Round-7 continuation": recall@10 went 10/50 → 50/50
     at 20k clustered vectors when these links were added.  dst is
-    hash(src, j) mod n over the dense vec_id domain; self-links drop."""
-    n = emb.count()
+    hash(src, j) mod ``n`` over the dense vec_id domain; self-links
+    drop.  The formula is stateless: the one-shot graph build passes
+    the whole corpus and its count, the descent MV one batch's ids and
+    the live id-domain size at insert time (a tunnel whose dst has not
+    arrived yet dangles until it does)."""
     j = F.explode(
         F.array(*[F.lit(i) for i in range(1, links + 1)])
     ).alias("j")
-    base = emb.select(F.col("vec_id").alias("src"), j)
+    base = ids.select(F.col("vec_id").alias("src"), j)
     lr = base.select(
         "src",
         (

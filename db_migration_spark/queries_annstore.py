@@ -17,7 +17,7 @@ module gives the graph family the same two store tiers:
   100 TB vector corpus needs from its graph index.  Gate: the same
   in-gate recall contract as ann_nsw_descent_topk (mean recall@10 vs
   the in-query exact top-10 ≥ 0.5) plus a ``pruned`` boolean
-  requiring at least one hop to have physically skipped groups.
+  requiring the beam's edge reads to have physically skipped groups.
 * ``stream_nsw_mv`` — the kNN adjacency maintained INCREMENTALLY
   under streaming appends of vectors.  Per micro-batch: score only
   the pairs with ≥ 1 endpoint in the batch (|batch| × corpus-so-far
@@ -67,7 +67,7 @@ module gives the graph family the same two store tiers:
   compaction-analog OPTIMIZE re-clustering (src / src / vec_id) so
   the point plans keep tight groups to skip; serving is size-gated
   (_PRUNED_SERVE_MIN_ROWS) between one in-memory lazy plan and the
-  2-jobs-per-hop pruned loop — identical beam either way
+  one store beam (store_beam_search) — identical beam either way
   (SCALE.md "Round-10" + plans/r10/ carry the evidence).
 
 No counterpart in the reference (azanium has no similarity tier;
@@ -79,6 +79,7 @@ from __future__ import annotations
 
 import glob
 import json
+import math
 import os
 import shutil
 
@@ -109,12 +110,16 @@ from .queries_shared import (
     _HNSW_STRIDE,
     _ORACLE_ANN_EXACT_HEAD,
     _ann_recall_gate,
+    _beam_recall_gate,
     _nsw_answer,
 )
 
 # ---------------------------------------------------------------------------
-# the persisted graph store (shared by ann_nsw_store_topk and the
-# refactored ann_nsw_descent_topk — one build, two serving plans)
+# the persisted graph store and the one store beam: one build
+# (build_nsw_graph_store) read whole by ann_nsw_descent_topk; one
+# driver-state beam (store_beam_search) that serves the edges/ store for
+# ann_nsw_store_topk and ``ann probe-graph`` and the descent MV's knn/ ∪
+# lr/ store above its serve gate — each caller passes its own planners
 # ---------------------------------------------------------------------------
 
 
@@ -128,7 +133,7 @@ def build_nsw_graph_store(emb: DataFrame, edges_root: str):
     t = TxTable(edges_root)
     t.commit_append(
         nsw_build_edges_descent(emb)
-        .unionByName(nsw_longrange_edges(emb))
+        .unionByName(nsw_longrange_edges(emb, emb.count()))
         .dropDuplicates(["src", "dst"])
     )
     t.optimize(emb.sparkSession, sort_key=["src"], target_groups=8)
@@ -180,85 +185,185 @@ def ensure_nsw_exact_edges(spark: SparkSession, sf_dir: str) -> dict:
     return paths
 
 
+def _ids_df(sp: SparkSession, ids) -> DataFrame:
+    return sp.createDataFrame([(int(i),) for i in ids], "node bigint")
+
+
+def _src_out_edges(
+    sp: SparkSession, t, frontier, io: dict | None = None
+) -> DataFrame:
+    """(src, dst) rows of edge table ``t`` whose src is in ``frontier``
+    — one src-point-planned group read.  Complete for a table that
+    stores both directions of every edge (the graph store, the
+    persisted tunnels)."""
+    ps, tot = t.prune_groups_points("src", frontier)
+    if io is not None:
+        io["groups_read"] += len(ps)
+        io["groups_total"] += tot
+    rows = t.read_groups(sp, sorted(ps))
+    fdf = F.broadcast(_ids_df(sp, frontier))
+    return rows.join(
+        fdf, rows["src"] == fdf["node"], "left_semi"
+    ).select("src", "dst")
+
+
 def store_beam_search(
-    spark: SparkSession,
-    t,
-    emb: DataFrame,
     q: DataFrame,
+    entries,
+    out_edges,
+    vectors,
     hops: int = NSW_H,
     width: int = NSW_W,
-):
-    """Breadth-beam search where each hop's adjacency comes THROUGH the
-    store: collect the hop's frontier (≤ width × |q| node ids — the
-    bounded planner state any graph-serving engine keeps per query),
-    plan its groups with one batched zone-map pass, scan only the
-    planned union.  Semantics are identical to
-    operators.similarity.nsw_beam_search over the same edge set —
-    deterministic expand → rescore → top-``width`` with id tie-breaks.
-    Returns (final beam, groups_scanned, groups_scannable) where the
-    counts measure hop-level file skipping."""
-    nodes = emb.select(F.col("vec_id").alias("node"), "embedding")
+) -> DataFrame:
+    """THE store-served beam: operators.similarity.nsw_beam_search
+    semantics (expand → rescore → top-``width`` with id tie-breaks)
+    with the beam state on the driver and every store read planned by
+    the caller's two callables:
 
-    def score(cand: DataFrame) -> DataFrame:
-        return (
-            cand.join(nodes, "node")
-            .join(F.broadcast(q), "query_id")
-            .select(
-                "query_id",
-                "node",
-                fp_dot(F.col("qv"), F.col("embedding")).alias("rel"),
-            )
+    * ``out_edges(frontier)`` → (src, dst) out-edges of a sorted list
+      of node ids;
+    * ``vectors(ids)`` → (node, embedding) rows of a sorted list of
+      ids (ids absent from the store simply do not return, the inner-
+      join semantics a dangling tunnel dst has in nsw_beam_search).
+
+    ``entries`` is one entry node id for every query, or a list of
+    per-query (query_id, node) seed pairs.  Sized for DRIVER-SMALL
+    query sets (the declared gates' 8 queries, a CLI probe): the beam
+    (≤ |q| × width (query, node, rel) tuples — the planner state any
+    graph-serving engine keeps per request) lives on the driver, so a
+    hop costs at most one bounded edge read and one vector read; the
+    distributed _pruned_beam_search serves whole micro-batches.
+
+    VISITED STATE: within one call the store is frozen, so a node's
+    out-edges, its embedding and a (query, node) score are pure
+    functions — all three are memoized (bounded by the visited set:
+    ≤ seeds + hops·width·|q| nodes).  Each hop reads only the edges
+    of never-expanded nodes and the vectors of never-read ones, and
+    scores only never-scored pairs; and a repeated beam is a fixed
+    point (the beam determines the frontier, the frontier the edges,
+    the edges the candidates, the candidates the next beam — all
+    deterministically), so the loop stops early with a bit-identical
+    result.  Scores are the exact integer fp_dot (floor(x·y·2^24 +
+    0.5) summed over the identical IEEE doubles) and the per-query
+    top-width fold keeps the Window.orderBy(desc(rel), node)
+    tie-break, so the beam equals nsw_beam_search over the same edges
+    — asserted by test_store_beam_equals_plain_beam_over_same_edges
+    and test_descent_serve_paths_agree.  Returns the final (query_id,
+    node, rel) beam."""
+    rel_memo: dict = {}  # (query_id, node) -> rel (exact long)
+    emb_memo: dict = {}  # node -> embedding (list of floats), read ONCE
+    missing: set = set()  # nodes with no stored embedding (dangling)
+    adj: dict = {}  # node -> sorted tuple of out-neighbors
+    qvs = {
+        r.query_id: list(r.qv)
+        for r in q.select("query_id", "qv").collect()
+    }
+    fscale = float(FP_SCALE)
+
+    def fetch(ids) -> None:
+        # each node's vector is read AT MOST ONCE per call (the
+        # embedding memo): without it every hop re-reads the vectors
+        # of nodes another query already scored, and since tunnel
+        # candidates are hash-random ids, that re-read set spans
+        # ~every vector group every hop (measured ×10: 33/33 vector
+        # groups per hop, 4 hops, vs ≤ 1 visit per group here)
+        todo = sorted(
+            n for n in ids if n not in emb_memo and n not in missing
         )
+        if not todo:
+            return
+        for r in vectors(todo).collect():
+            emb_memo[r.node] = list(r.embedding)
+        missing.update(n for n in todo if n not in emb_memo)
 
-    entry0 = emb.agg(F.min("vec_id").alias("node"))
-    seed = q.select("query_id").crossJoin(F.broadcast(entry0))
-    beam = score(seed).localCheckpoint(eager=False)
-    total = len(t.active_groups())
-    scanned = scannable = 0
+    def score(pairs) -> None:
+        fetch({n for _, n in pairs})
+        floor = math.floor
+        for p in pairs:
+            emb = emb_memo.get(p[1])
+            if p in rel_memo or emb is None:
+                continue
+            rel_memo[p] = sum(
+                floor(x * y * fscale + 0.5) for x, y in zip(qvs[p[0]], emb)
+            )
+
+    def fold(pairs) -> list:
+        byq: dict = {}
+        for qid, node in pairs:
+            r = rel_memo.get((qid, node))
+            if r is not None:
+                byq.setdefault(qid, []).append((-r, node))
+        beam = []
+        for qid in sorted(byq):
+            # (-rel, node): desc rel then asc node — the exact
+            # Window.orderBy(F.desc("rel"), "node") tie-break
+            top = sorted(byq[qid])[:width]
+            beam.extend((qid, node, -negr) for negr, node in top)
+        return beam
+
+    def expand(frontier) -> None:
+        new = sorted(n for n in frontier if n not in adj)
+        if not new:
+            return
+        got: dict = {n: set() for n in new}
+        for r in out_edges(new).collect():
+            got[r.src].add(r.dst)
+        for n in new:
+            adj[n] = tuple(sorted(got[n]))
+
+    if isinstance(entries, int):
+        pairs = {(qid, entries) for qid in qvs}
+    else:
+        pairs = set(entries)
+    score(pairs)
+    beam = fold(pairs)
+    prev: set = set()
     for _hop in range(hops):
-        frontier = sorted(
-            r.node for r in beam.select("node").distinct().collect()
-        )
-        picked, _tot = t.prune_groups_points("src", frontier)
-        scanned += len(picked)
-        scannable += total
-        hop_edges = t.read_groups(spark, sorted(picked)).filter(
-            F.col("src").isin(frontier)
-        )
-        s = beam.alias("s")
-        cand = (
-            beam.select("query_id", "node")
-            .unionByName(
-                s.join(
-                    hop_edges.alias("e"),
-                    F.col("s.node") == F.col("e.src"),
-                ).select(
-                    F.col("s.query_id").alias("query_id"),
-                    F.col("e.dst").alias("node"),
-                )
-            )
-            .dropDuplicates(["query_id", "node"])
-        )
-        wb = Window.partitionBy("query_id").orderBy(F.desc("rel"), "node")
-        beam = (
-            score(cand)
-            .withColumn("rn", F.row_number().over(wb))
-            .filter(F.col("rn") <= width)
-            .drop("rn")
-            .localCheckpoint(eager=False)
-        )
-    return beam, scanned, scannable
+        cur = {(qid, node) for qid, node, _rel in beam}
+        if cur == prev:
+            break
+        prev = cur
+        expand({node for _qid, node, _rel in beam})
+        pairs = set(cur)
+        for qid, node, _rel in beam:
+            pairs.update((qid, d) for d in adj.get(node, ()))
+        score(pairs)
+        beam = fold(pairs)
+    return q.sparkSession.createDataFrame(
+        beam, "query_id long, node bigint, rel long"
+    )
+
+
+def graph_store_beam(t, emb: DataFrame, q: DataFrame, io: dict) -> DataFrame:
+    """Serve the graph store ``t`` (build_nsw_graph_store's edges/
+    table) through :func:`store_beam_search` from the global-min
+    entry node — the one serve path behind ann_nsw_store_topk and
+    ``ann probe-graph``.  The stored graph is already symmetric (the
+    descent build and the tunnels both symmetrize), so a frontier's
+    out-edges are one src-pruned group read; candidate vectors are
+    the ``emb`` rows by id.  ``io`` sums the groups read and the
+    groups plannable over the beam's edge reads."""
+    sp = emb.sparkSession
+    nodes = emb.select(F.col("vec_id").alias("node"), "embedding")
+    entry = emb.agg(F.min("vec_id")).first()[0]
+    return store_beam_search(
+        q,
+        int(entry),
+        lambda frontier: _src_out_edges(sp, t, frontier, io=io),
+        lambda ids: nodes.filter(F.col("node").isin(ids)),
+    )
 
 
 def q_ann_nsw_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Graph ANN served FROM the persisted store: beam search whose
+    """Graph ANN served FROM the persisted store: the store beam whose
     hops plan and scan only the file groups owning the frontier's node
     ranges (zone-map point pruning over the src-clustered adjacency).
     Same recall contract as ann_nsw_descent_topk — the stored graph IS
-    the descent graph — plus ``pruned``: the sum over hops of planned
-    groups must be strictly below hops × live groups, i.e. at least
-    one hop physically skipped files (the first hop always does: its
-    frontier is the single entry node)."""
+    the descent graph — plus ``pruned``: the groups read, summed over
+    the beam's edge reads, must be strictly below the groups plannable
+    over the same reads, i.e. at least one read physically skipped
+    files (the first always does: its frontier is the single entry
+    node)."""
     t = ensure_nsw_graph_store(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
@@ -266,34 +371,10 @@ def q_ann_nsw_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     q = emb.filter(F.col("vec_id") < 8).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
-    beam, scanned, scannable = store_beam_search(spark, t, emb, q)
-    wf = Window.partitionBy("query_id").orderBy(F.desc("rel"), "node")
-    approx = (
-        beam.filter(F.col("node") != F.col("query_id"))
-        .withColumn("rn", F.row_number().over(wf))
-        .filter(F.col("rn") <= 10)
-        .select("query_id", F.col("node").alias("neighbor_id"))
-    )
-    # exact side ranked by the SAME fixed-point dot the beam ranks by
-    exact = (
-        emb.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            fp_dot(F.col("qv"), F.col("embedding")).alias("xrel"),
-        )
-    )
-    wx = Window.partitionBy("query_id").orderBy(
-        F.desc("xrel"), "neighbor_id"
-    )
-    exact = (
-        exact.withColumn("rn", F.row_number().over(wx))
-        .filter(F.col("rn") <= 10)
-        .select("query_id", "neighbor_id")
-    )
-    return _ann_recall_gate(approx, exact, bound=0.5).withColumn(
-        "pruned", F.lit(scanned < scannable)
+    io = {"groups_read": 0, "groups_total": 0}
+    beam = graph_store_beam(t, emb, q, io)
+    return _beam_recall_gate(beam, emb, q, bound=0.5).withColumn(
+        "pruned", F.lit(io["groups_read"] < io["groups_total"])
     )
 
 
@@ -541,71 +622,19 @@ def descent_mv_refresh(
         sp.conf.set(_CP, cp_prev)
 
 
-_DESCENT_MV_LR_LINKS = 4
-
-# Serve-path planner threshold (env-parameterised — r10 rule: no
-# constants tuned for local[32]): below this many stored vectors the
-# zone-map-pruned hop loop's fixed planning cost exceeds the I/O it
-# skips, so the SAME persisted graph is served as one in-memory lazy
-# plan instead — the broadcast-vs-shuffle-join decision, applied to
-# graph serving.  Identical edges either way (asserted by test).
-# Default = the MEASURED crossover (round 11, r10 verdict task 6,
-# plans/r11/exp_serve_gate_crossover.json: lazy wins at ≤20k rows,
+# Serve-path planner threshold (a constant, not a knob): below this
+# many stored vectors the zone-map-pruned hop loop's fixed planning cost
+# exceeds the I/O it skips, so the SAME persisted graph is served as
+# one in-memory lazy plan instead — the broadcast-vs-shuffle-join
+# decision, applied to graph serving.  Identical edges either way
+# (_descent_edges builds both).  The value is the MEASURED crossover
+# (plans/r11/exp_serve_gate_crossover.json: lazy wins at ≤20k rows,
 # tie at 50k, pruned 1.3×/1.9× faster at 100k/200k — warm-up+min3 per
 # path per size on identical graphs, beams asserted equal).  Memoizing
 # the lazy plan per store version was considered and REJECTED: its
 # localCheckpoint would keep materialized edges across timed runs —
 # cross-run result caching, which the bench rules forbid.
 _PRUNED_SERVE_MIN_ROWS = 50_000
-
-
-def _descent_lr_links(
-    ids: DataFrame, n_total: int, links: int = _DESCENT_MV_LR_LINKS
-) -> DataFrame:
-    """Long-range tunnels for ONE batch of node ids — the identical
-    md5 formula as operators.similarity.nsw_longrange_edges, but
-    generated once per batch over the BATCH's ids only (modulo the
-    live id-domain size at insert time) and PERSISTED, instead of a
-    full-corpus map pass per micro-batch (round-9 verdict: the links
-    are md5-stateless, so a batch's tunnels need only the batch ids).
-    Both directions are stored, so any frontier's tunnel out-edges
-    are a pure src-point-pruned read.  A tunnel whose dst id has not
-    arrived yet simply dangles (the scoring join drops it) until the
-    id exists — the same tolerance the recomputed form had for the
-    modulo-sliced arrival order."""
-    j = F.explode(
-        F.array(*[F.lit(i) for i in range(1, links + 1)])
-    ).alias("j")
-    base = ids.select(F.col("vec_id").alias("src"), j)
-    lr = base.select(
-        "src",
-        (
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            "_",
-                            F.lit("lr"),
-                            F.col("src").cast("string"),
-                            F.col("j").cast("string"),
-                        )
-                    ),
-                    1,
-                    8,
-                ),
-                16,
-                10,
-            ).cast("long")
-            % n_total
-        ).alias("dst"),
-    ).filter(F.col("src") != F.col("dst"))
-    return lr.unionByName(
-        lr.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).dropDuplicates(["src", "dst"])
-
-
-def _ids_df(sp: SparkSession, ids) -> DataFrame:
-    return sp.createDataFrame([(int(i),) for i in ids], "node bigint")
 
 
 def _pruned_sym_out_edges(
@@ -643,23 +672,6 @@ def _pruned_sym_out_edges(
     return sym.select("src", "dst")
 
 
-def _pruned_lr_out_edges(
-    sp: SparkSession, lt, frontier, io: dict | None = None
-) -> DataFrame:
-    """Tunnel out-edges of ``frontier`` from the persisted long-range
-    table (both directions stored at write, so a src-only point plan
-    is complete)."""
-    ps, tot = lt.prune_groups_points("src", frontier)
-    if io is not None:
-        io["groups_read"] += len(ps)
-        io["groups_total"] += tot
-    rows = lt.read_groups(sp, sorted(ps))
-    fdf = F.broadcast(_ids_df(sp, frontier))
-    return rows.join(
-        fdf, rows["src"] == fdf["node"], "left_semi"
-    ).select("src", "dst")
-
-
 def _pruned_nodes(
     sp: SparkSession, vt, ids, io: dict | None = None
 ) -> DataFrame:
@@ -675,6 +687,35 @@ def _pruned_nodes(
         F.col("vec_id").alias("node"), "embedding"
     )
     return rows.join(F.broadcast(_ids_df(sp, ids)), "node", "left_semi")
+
+
+def _descent_edges(
+    sp: SparkSession,
+    kt,
+    lt,
+    frontier=None,
+    cap: int | None = None,
+    io: dict | None = None,
+) -> DataFrame:
+    """THE edge set every descent-MV beam walks: the symmetrized stored
+    adjacency (per-src top-``cap`` by dot when given) ∪ the persisted
+    tunnels, deduplicated on (src, dst).  With a ``frontier``: only its
+    out-edges, read through zone-map point plans (the maintenance and
+    driver-state beams); without one: the whole graph in one scan (the
+    lazy serve plan).  A store built before tunnels were persisted has
+    no tunnel table and serves its adjacency alone."""
+    if frontier is None:
+        edges = _symmetrize(kt.read(sp).select("src", "dst"))
+    else:
+        edges = _pruned_sym_out_edges(sp, kt, frontier, cap, io=io)
+    if lt.latest_version() < 0:
+        return edges
+    tunnels = (
+        lt.read(sp).select("src", "dst")
+        if frontier is None
+        else _src_out_edges(sp, lt, frontier, io=io)
+    )
+    return edges.unionByName(tunnels).dropDuplicates(["src", "dst"])
 
 
 def _pruned_beam_search(
@@ -753,11 +794,7 @@ def _pruned_beam_search(
             break
         prev_beam = cur
         frontier = sorted({r.node for r in beam_rows})
-        edges = _pruned_sym_out_edges(sp, kt, frontier, cap, io=io)
-        if lt is not None and lt.latest_version() >= 0:
-            edges = edges.unionByName(
-                _pruned_lr_out_edges(sp, lt, frontier, io=io)
-            ).dropDuplicates(["src", "dst"])
+        edges = _descent_edges(sp, kt, lt, frontier, cap, io=io)
         beam_df = sp.createDataFrame(
             sorted((r.query_id, r.node) for r in beam_rows),
             "query_id long, node bigint",
@@ -790,151 +827,6 @@ def _pruned_beam_search(
         sorted((r.query_id, r.node, r.rel) for r in beam_rows),
         "query_id long, node bigint, rel long",
     )
-
-
-def _pruned_beam_search_local(
-    sp: SparkSession,
-    kt,
-    lt,
-    vt,
-    q: DataFrame,
-    entry_node,
-    hops: int,
-    width: int,
-    io: dict | None = None,
-) -> list:
-    """Serve-path variant of :func:`_pruned_beam_search` for
-    DRIVER-SMALL query sets (|q| ≤ a few dozen — the declared gates'
-    8-query workload): the beam state (≤ |q| × width (query, node,
-    rel) tuples — the planner state any graph-serving engine keeps
-    per request) lives on the driver, so each hop costs AT MOST two
-    jobs — one bounded frontier-edge read, one score — with no
-    lineage checkpoints.  Expansion/rescore/top-width semantics are
-    identical to nsw_beam_search over the same edge set; the
-    distributed variant stays the maintenance path, whose query set
-    is the whole micro-batch.  Returns the final beam as a list of
-    (query_id, node, rel) rows.
-
-    Round 11 — VISITED STATE (what every graph-serving engine keeps
-    per request): within one serve call the store is frozen, so a
-    node's symmetrized+tunnel out-edges and a (query, node) score are
-    pure functions — both are memoized on the driver (bounded by the
-    visited set: ≤ seeds + hops·width·|q| nodes).  Each hop therefore
-    reads ONLY groups owning never-expanded frontier nodes and scores
-    ONLY never-scored pairs; and a repeated beam is a fixed point (the
-    beam determines the frontier, the frontier the edges, the edges
-    the candidates, the candidates the next beam — all
-    deterministically), so the loop breaks early with a bit-identical
-    result.  The per-query top-width fold runs on the driver with the
-    exact Window.orderBy(desc(rel), node) tie-break over the exact
-    integer rels.  Equality with the single-plan lazy serve is
-    asserted by test_descent_serve_paths_agree."""
-    import math
-    from collections import namedtuple
-
-    BeamRow = namedtuple("BeamRow", ["query_id", "node", "rel"])
-
-    rel_memo: dict = {}  # (query_id, node) -> rel (exact long)
-    emb_memo: dict = {}  # node -> embedding (list of floats), read ONCE
-    missing: set = set()  # nodes with no stored embedding (dangling)
-    adj: dict = {}  # node -> tuple of out-neighbors (sym ∪ tunnels)
-    has_lr = lt is not None and lt.latest_version() >= 0
-    qvs = {
-        r.query_id: list(r.qv)
-        for r in q.select("query_id", "qv").collect()
-    }
-    fscale = float(FP_SCALE)
-
-    def fetch(ids) -> None:
-        # each node's vector group is read AT MOST ONCE per serve call
-        # (the embedding memo): without it every hop re-reads the
-        # groups of nodes another query already scored, and since
-        # tunnel candidates are hash-random ids, that re-read set
-        # spans ~every group every hop (measured ×10: 33/33 vector
-        # groups per hop, 4 hops, vs ≤ 1 visit per group here)
-        todo = sorted(
-            n for n in ids if n not in emb_memo and n not in missing
-        )
-        if not todo:
-            return
-        for r in _pruned_nodes(sp, vt, todo, io=io).collect():
-            emb_memo[r.node] = list(r.embedding)
-        for n in todo:
-            if n not in emb_memo:
-                missing.add(n)
-
-    def score(pairs) -> None:
-        # driver-side fixed-point dot — the EXACT integer fp_dot
-        # computes (floor(x·y·2^24 + 0.5) summed over components, on
-        # the identical IEEE doubles), so the memoized rels are
-        # bit-identical to the Spark expression's; asserted against
-        # the full lazy plan by test_descent_serve_paths_agree
-        fetch({n for _, n in pairs})
-        floor = math.floor
-        for p in pairs:
-            if p in rel_memo:
-                continue
-            emb = emb_memo.get(p[1])
-            if emb is None:
-                continue
-            qv = qvs[p[0]]
-            rel_memo[p] = sum(
-                floor(x * y * fscale + 0.5) for x, y in zip(qv, emb)
-            )
-
-    def fold(pairs) -> list:
-        byq: dict = {}
-        for qid, node in pairs:
-            r = rel_memo.get((qid, node))
-            if r is not None:
-                byq.setdefault(qid, []).append((-r, node))
-        beam = []
-        for qid in sorted(byq):
-            lst = byq[qid]
-            lst.sort()  # (-rel, node): desc rel then asc node — the
-            # exact Window.orderBy(F.desc("rel"), "node") tie-break
-            beam.extend(
-                BeamRow(qid, node, -negr) for negr, node in lst[:width]
-            )
-        return beam
-
-    def expand(frontier) -> None:
-        new = sorted(n for n in frontier if n not in adj)
-        if not new:
-            return
-        edges = _pruned_sym_out_edges(sp, kt, new, cap=None, io=io)
-        if has_lr:
-            edges = edges.unionByName(
-                _pruned_lr_out_edges(sp, lt, new, io=io)
-            ).dropDuplicates(["src", "dst"])
-        got: dict = {n: set() for n in new}
-        for r in edges.collect():
-            got[r.src].add(r.dst)
-        for n in new:
-            adj[n] = tuple(sorted(got[n]))
-
-    qids = sorted(r.query_id for r in q.select("query_id").collect())
-    if isinstance(entry_node, int):
-        seed_pairs = [(qid, entry_node) for qid in qids]
-    else:  # per-query (query_id, node) seed pairs — shared with the
-        # lazy path so both serve plans walk the identical beam
-        seed_pairs = sorted(set(entry_node))
-    score(seed_pairs)
-    beam = fold(seed_pairs)
-    prev: set = set()
-    for _hop in range(hops):
-        cur = {(r.query_id, r.node) for r in beam}
-        if cur == prev:
-            break
-        prev = cur
-        expand({r.node for r in beam})
-        pairs = set(cur)
-        for r in beam:
-            for d in adj.get(r.node, ()):
-                pairs.add((r.query_id, d))
-        score(pairs)
-        beam = fold(pairs)
-    return beam
 
 
 def _serve_entries(
@@ -1254,11 +1146,11 @@ def _descent_mv_refresh_inner(
         kt.apply_cdc(
             sp, changes, ["src", "dst"], txn=(txn_family[0], batch_id)
         )
-    # persist THIS batch's tunnels (md5-stateless, both directions) —
-    # replaces the nsw_longrange_edges(prev) full-corpus map pass the
-    # old navigation graph re-derived every micro-batch.  The modulo
-    # domain assumes zero-based ids; fail LOUDLY on a shifted domain
-    # instead of silently dangling every tunnel (r10 ADVICE #3)
+    # persist THIS batch's tunnels (md5-stateless, both directions):
+    # the batch's own ids over the live id domain, never a full-corpus
+    # map pass per micro-batch.  The modulo domain assumes zero-based
+    # ids; fail LOUDLY on a shifted domain instead of silently
+    # dangling every tunnel (r10 ADVICE #3)
     if n_corpus > 0:
         lo_dom, _hi_dom = vt.column_range("vec_id")
         if lo_dom is not None and int(lo_dom) != 0:
@@ -1266,7 +1158,7 @@ def _descent_mv_refresh_inner(
                 "descent-MV tunnels assume a zero-based vec_id domain; "
                 f"stored ids start at {lo_dom}"
             )
-    lr = _descent_lr_links(b, n_corpus + n_batch)
+    lr = nsw_longrange_edges(b, n_corpus + n_batch)
     lt.commit_append(lr, txn=("nswd_lr", batch_id))
     vt.commit_append(b, txn=(txn_family[1], batch_id))
     # bloom sidecars for THIS batch's fresh groups (add_bloom_index is
@@ -1692,22 +1584,20 @@ def q_stream_nsw_descent_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB property: maintenance cost proportional to the batch and
     the graph degree, not the corpus.
 
-    Round-10: the serve beam can run THROUGH the store — each hop's
-    adjacency from src/dst zone-map-point-planned group reads, tunnels
-    from the persisted long-range table the maintenance wrote
-    (src-pruned; both directions stored), candidate embeddings from
-    vec_id-point-planned reads of the vectors table — no full-table
-    scan per hop (the pre-r10 serve symmetrized the whole adjacency
-    AND re-derived nsw_longrange_edges over the whole corpus before
-    the first hop).  Like every data-skipping plan, the pruned hops
-    carry fixed per-hop planning cost that only pays off when there
-    are files to skip, so the path is SIZE-GATED (the broadcast-join
-    analogy): below ``_PRUNED_SERVE_MIN_ROWS`` the same persisted
-    graph (adjacency ∪ tunnel table — identical edges, identical
-    answer, asserted by test_descent_serve_paths_agree) is served as
-    one in-memory lazy plan.  The in-gate EXACT side below stays a
-    deliberate full-corpus crossJoin: it is the acceptance harness,
-    never shipped on the serving path."""
+    Serving is SIZE-GATED (the broadcast-join analogy) between two
+    plans over the SAME edge set (_descent_edges: symmetrized adjacency
+    ∪ persisted tunnels) and the same per-query entries.  At or above
+    ``_PRUNED_SERVE_MIN_ROWS`` stored vectors the one store beam
+    (store_beam_search) runs THROUGH the store — each hop's out-edges
+    from src/dst zone-map-point-planned group reads, candidate
+    embeddings from vec_id-point-planned reads of the vectors table,
+    no full-table scan per hop.  Below it the pruned hops' fixed
+    planning cost exceeds the I/O they skip, so the whole graph is
+    read once and served as one in-memory lazy plan (nsw_beam_search).
+    Identical answer either way (test_descent_serve_paths_agree,
+    test_descent_mv_serve_gate_keeps_the_answer).  The in-gate EXACT
+    side stays a deliberate full-corpus crossJoin: it is the
+    acceptance harness, never shipped on the serving path."""
     kt, stats_path = _ensure_stream_nsw_descent_mv(spark, sf_dir)
     base = os.path.dirname(kt.root)
     vt = TxTable(os.path.join(base, "vectors"))
@@ -1736,54 +1626,24 @@ def q_stream_nsw_descent_mv(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark, vt, q, int(lo), int(_hi) - int(lo) + 1, n, rt=rt
     )
     if n >= _PRUNED_SERVE_MIN_ROWS:
-        rows = _pruned_beam_search_local(
-            spark, kt, lt, vt, q, entries, hops=hops, width=width
-        )
-        beam = spark.createDataFrame(
-            [(r.query_id, r.node, r.rel) for r in rows],
-            "query_id long, node bigint, rel long",
+        beam = store_beam_search(
+            q,
+            entries,
+            lambda frontier: _descent_edges(spark, kt, lt, frontier),
+            lambda ids: _pruned_nodes(spark, vt, ids),
+            hops=hops,
+            width=width,
         )
     else:
-        edges = _symmetrize(kt.read(spark).select("src", "dst"))
-        # a store built by pre-r10 code has no tunnel table; serve
-        # adjacency-only instead of crashing (the pruned branch above
-        # guards identically)
-        if lt.latest_version() >= 0:
-            edges = edges.unionByName(lt.read(spark).select("src", "dst"))
-        edges = edges.dropDuplicates(["src", "dst"]).localCheckpoint(
-            eager=False
-        )
-        entry = spark.createDataFrame(
-            entries, "query_id long, node bigint"
-        )
         beam = nsw_beam_search(
-            emb, edges, q, entry=entry, hops=hops, width=width
+            emb,
+            _descent_edges(spark, kt, lt).localCheckpoint(eager=False),
+            q,
+            entry=spark.createDataFrame(entries, "query_id long, node bigint"),
+            hops=hops,
+            width=width,
         )
-    wf = Window.partitionBy("query_id").orderBy(F.desc("rel"), "node")
-    approx = (
-        beam.filter(F.col("node") != F.col("query_id"))
-        .withColumn("rn", F.row_number().over(wf))
-        .filter(F.col("rn") <= 10)
-        .select("query_id", F.col("node").alias("neighbor_id"))
-    )
-    exact = (
-        emb.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            fp_dot(F.col("qv"), F.col("embedding")).alias("xrel"),
-        )
-    )
-    wx = Window.partitionBy("query_id").orderBy(
-        F.desc("xrel"), "neighbor_id"
-    )
-    exact = (
-        exact.withColumn("rn", F.row_number().over(wx))
-        .filter(F.col("rn") <= 10)
-        .select("query_id", "neighbor_id")
-    )
-    return _ann_recall_gate(approx, exact, bound=0.7).withColumn(
+    return _beam_recall_gate(beam, emb, q, bound=0.7).withColumn(
         "bounded", F.lit(_descent_mv_bounded(stats_path))
     )
 

@@ -38,7 +38,6 @@ from .operators.similarity import (
     nsw_build_edges,
     nsw_build_edges_descent,
     nsw_build_edges_lsh,
-    nsw_longrange_edges,
 )
 from .queries_e2e import _build_once, _fx
 from .queries_annstore import ensure_nsw_exact_edges, ensure_nsw_graph_store
@@ -49,7 +48,7 @@ from .queries_shared import (
     _HNSW_STRIDE,
     _HNSW_W1,
     _ORACLE_ANN_EXACT_HEAD,
-    _ann_recall_gate,
+    _beam_recall_gate,
     _nsw_answer,
 )
 from .queries_stats import _copurchase_edges
@@ -1821,34 +1820,7 @@ def q_ann_nsw_descent_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
     beam = nsw_beam_search(emb, edges, q)
-    wf = Window.partitionBy("query_id").orderBy(F.desc("rel"), "node")
-    approx = (
-        beam.filter(F.col("node") != F.col("query_id"))
-        .withColumn("rn", F.row_number().over(wf))
-        .filter(F.col("rn") <= _NSW_K)
-        .select("query_id", F.col("node").alias("neighbor_id"))
-    )
-    # exact side ranked by the SAME fixed-point dot the beam ranks by
-    # (metric-consistent recall; brute_force_topk's float cosine would
-    # make the gate compare two different metrics on non-unit vectors)
-    exact = (
-        emb.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            _fp_dot(F.col("qv"), F.col("embedding")).alias("xrel"),
-        )
-    )
-    wx = Window.partitionBy("query_id").orderBy(
-        F.desc("xrel"), "neighbor_id"
-    )
-    exact = (
-        exact.withColumn("rn", F.row_number().over(wx))
-        .filter(F.col("rn") <= _NSW_K)
-        .select("query_id", "neighbor_id")
-    )
-    return _ann_recall_gate(approx, exact, bound=0.5)
+    return _beam_recall_gate(beam, emb, q, bound=0.5)
 
 
 REGISTRY = (

@@ -167,11 +167,11 @@ FROM region
 _HNSW_STRIDE, _HNSW_M1, _HNSW_H1, _HNSW_W1 = 8, 4, 2, 4
 
 
-def _nsw_answer(beam: DataFrame, emb: DataFrame, q: DataFrame) -> DataFrame:
-    """Rank the final beam to top-K (self excluded) and join each
-    answer against the exact brute-force top-K (``in_exact10`` puts
-    recall inside the hash gate).  Shared by the NSW and HNSW tails."""
-    exact = (
+def _exact_topk(emb: DataFrame, q: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id) of each query's exact top-``k``, self
+    excluded, ranked by the SAME fixed-point dot the beams rank by —
+    the brute-force side of every graph-ANN answer and gate."""
+    scored = (
         emb.crossJoin(F.broadcast(q))
         .filter(F.col("vec_id") != F.col("query_id"))
         .select(
@@ -181,23 +181,44 @@ def _nsw_answer(beam: DataFrame, emb: DataFrame, q: DataFrame) -> DataFrame:
         )
     )
     wx = Window.partitionBy("query_id").orderBy(F.desc("xrel"), "neighbor_id")
-    exact = (
-        exact.withColumn("rn", F.row_number().over(wx))
-        .filter(F.col("rn") <= NSW_K)
-        .select("query_id", "neighbor_id", F.lit(True).alias("hit"))
+    return (
+        scored.withColumn("rn", F.row_number().over(wx))
+        .filter(F.col("rn") <= k)
+        .select("query_id", "neighbor_id")
     )
 
+
+def _beam_topk(beam: DataFrame, k: int) -> DataFrame:
+    """A final (query_id, node, rel) beam ranked to its top-``k``
+    answers, the query itself excluded: (query_id, rank, neighbor_id,
+    rel) with the beams' desc(rel), node tie-break."""
     wf = Window.partitionBy("query_id").orderBy(F.desc("rel"), "node")
-    fin = (
-        beam.filter(F.col("node") != F.col("query_id"))
-        .withColumn("rank", F.row_number().over(wf).cast("int"))
-        .filter(F.col("rank") <= NSW_K)
-        .select(
-            "query_id", "rank", F.col("node").alias("neighbor_id"), "rel"
-        )
-    )
     return (
-        fin.join(exact, ["query_id", "neighbor_id"], "left")
+        beam.filter(F.col("node") != F.col("query_id"))
+        .withColumn("rank", F.row_number().over(wf))
+        .filter(F.col("rank") <= k)
+        .select("query_id", "rank", F.col("node").alias("neighbor_id"), "rel")
+    )
+
+
+def _beam_recall_gate(
+    beam: DataFrame, emb: DataFrame, q: DataFrame, bound: float
+) -> DataFrame:
+    """The graph-ANN acceptance row: the beam's top-K answers against
+    the exact fixed-point-dot top-K through :func:`_ann_recall_gate`."""
+    return _ann_recall_gate(
+        _beam_topk(beam, NSW_K), _exact_topk(emb, q, NSW_K), bound
+    )
+
+
+def _nsw_answer(beam: DataFrame, emb: DataFrame, q: DataFrame) -> DataFrame:
+    """Rank the final beam to top-K (self excluded) and join each
+    answer against the exact brute-force top-K (``in_exact10`` puts
+    recall inside the hash gate).  Shared by the NSW and HNSW tails."""
+    exact = _exact_topk(emb, q, NSW_K).withColumn("hit", F.lit(True))
+    return (
+        _beam_topk(beam, NSW_K)
+        .join(exact, ["query_id", "neighbor_id"], "left")
         .select(
             "query_id",
             "rank",

@@ -561,6 +561,45 @@ ORDER BY t.seg
 """
 
 
+def _theta_pair_estimates(
+    spark: SparkSession, sf_dir: str, how: str
+) -> DataFrame:
+    """For every unordered pair of order priorities: the theta set
+    operation ``how`` (kmv_set_op: "left_semi" = A ∩ B, "left_anti" =
+    A \\ B) over the per-priority customer sketches, beside the exact
+    count of the same set expression over the raw (priority, customer)
+    pairs.  Returns (sa, sb, theta_v, n, digest, est, exact)."""
+    from .functions.theta import kmv_set_op, kmv_sketch, kmv_stats
+
+    od = load_table(spark, sf_dir, "orders").select(
+        F.col("o_orderpriority").alias("seg"), "o_custkey"
+    )
+    sk = kmv_sketch(od, ["seg"], "o_custkey", _THETA_K)
+    segs = od.select("seg").distinct()
+    pairs = (
+        segs.select(F.col("seg").alias("sa"))
+        .crossJoin(segs.select(F.col("seg").alias("sb")))
+        .filter(F.col("sa") < F.col("sb"))
+    )
+    du = od.distinct()
+    exact = (
+        F.broadcast(pairs)
+        .join(du.select(F.col("seg").alias("sa"), "o_custkey"), "sa")
+        .join(
+            du.select(F.col("seg").alias("sb"), "o_custkey"),
+            ["sb", "o_custkey"],
+            how,
+        )
+        .groupBy("sa", "sb")
+        .agg(F.count_distinct("o_custkey").alias("exact"))
+    )
+    return (
+        kmv_set_op(sk, kmv_stats(sk, ["seg"], _THETA_K), pairs, "seg", how)
+        .join(exact, ["sa", "sb"], "left")
+        .withColumn("exact", F.coalesce("exact", F.lit(0)))
+    )
+
+
 def q_sketch_theta_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DIRECT intersection estimate from theta sketches — the set
     operation HLL registers cannot express (inclusion–exclusion noise
@@ -570,72 +609,16 @@ def q_sketch_theta_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
     uniform sample of the intersection, and est = |sample|·2^52/theta.
     ``digest_common`` (Σ of the sampled values) is hash-gated exactly;
     the estimate within max(20%, 15 absolute) of the exact overlap."""
-    from .functions.theta import kmv_scale_count, kmv_sketch, kmv_stats
-
-    od = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderpriority").alias("seg"), "o_custkey"
-    )
-    sk = kmv_sketch(od, ["seg"], "o_custkey", _THETA_K)
-    st = kmv_stats(sk, ["seg"], _THETA_K)
-    segs = od.select("seg").distinct()
-    pairs = (
-        segs.select(F.col("seg").alias("sa"))
-        .crossJoin(segs.select(F.col("seg").alias("sb")))
-        .filter(F.col("sa") < F.col("sb"))
-    )
-    pt = (
-        F.broadcast(pairs)
-        .join(
-            st.select(F.col("seg").alias("sa"), F.col("theta_v").alias("tha")),
-            "sa",
-        )
-        .join(
-            st.select(F.col("seg").alias("sb"), F.col("theta_v").alias("thb")),
-            "sb",
-        )
-        .select("sa", "sb", F.least("tha", "thb").alias("theta_v"))
-    )
-    a_vals = sk.select(F.col("seg").alias("sa"), "v")
-    b_vals = sk.select(F.col("seg").alias("sbb"), F.col("v").alias("vb"))
-    common = (
-        F.broadcast(pt)
-        .join(a_vals, "sa")
-        .filter(F.col("v") < F.col("theta_v"))
-        .join(
-            b_vals,
-            (F.col("vb") == F.col("v")) & (F.col("sbb") == F.col("sb")),
-            "left_semi",
-        )
-        .groupBy("sa", "sb")
-        .agg(
-            F.count(F.lit(1)).alias("n_common"),
-            F.sum("v").alias("digest_common"),
-        )
-    )
-    du = od.distinct()
-    exact = (
-        F.broadcast(pairs)
-        .join(du.select(F.col("seg").alias("sa"), "o_custkey"), "sa")
-        .join(
-            du.select(F.col("seg").alias("sb"), "o_custkey"),
-            ["sb", "o_custkey"],
-        )
-        .groupBy("sa", "sb")
-        .agg(F.count_distinct("o_custkey").alias("exact_int"))
-    )
     return (
-        pt.join(common, ["sa", "sb"], "left")
-        .join(exact, ["sa", "sb"], "left")
+        _theta_pair_estimates(spark, sf_dir, "left_semi")
         .select(
             "sa",
             "sb",
             "theta_v",
-            F.coalesce("n_common", F.lit(0)).alias("n_common"),
-            F.coalesce("digest_common", F.lit(0)).alias("digest_common"),
-            kmv_scale_count(
-                F.coalesce("n_common", F.lit(0)), F.col("theta_v")
-            ).alias("est_int"),
-            F.coalesce("exact_int", F.lit(0)).alias("exact_int"),
+            F.col("n").alias("n_common"),
+            F.col("digest").alias("digest_common"),
+            F.col("est").alias("est_int"),
+            F.col("exact").alias("exact_int"),
         )
         .withColumn(
             "int_ok",
@@ -700,73 +683,16 @@ def q_sketch_theta_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     within max(45%, 25 absolute) of the exact anti-join count (sample
     of a small set ⇒ relatively wider but still useful bounds — the
     bound itself is part of the declared contract)."""
-    from .functions.theta import kmv_scale_count, kmv_sketch, kmv_stats
-
-    od = load_table(spark, sf_dir, "orders").select(
-        F.col("o_orderpriority").alias("seg"), "o_custkey"
-    )
-    sk = kmv_sketch(od, ["seg"], "o_custkey", _THETA_K)
-    st = kmv_stats(sk, ["seg"], _THETA_K)
-    segs = od.select("seg").distinct()
-    pairs = (
-        segs.select(F.col("seg").alias("sa"))
-        .crossJoin(segs.select(F.col("seg").alias("sb")))
-        .filter(F.col("sa") < F.col("sb"))
-    )
-    pt = (
-        F.broadcast(pairs)
-        .join(
-            st.select(F.col("seg").alias("sa"), F.col("theta_v").alias("tha")),
-            "sa",
-        )
-        .join(
-            st.select(F.col("seg").alias("sb"), F.col("theta_v").alias("thb")),
-            "sb",
-        )
-        .select("sa", "sb", F.least("tha", "thb").alias("theta_v"))
-    )
-    a_vals = sk.select(F.col("seg").alias("sa"), "v")
-    b_vals = sk.select(F.col("seg").alias("sbb"), F.col("v").alias("vb"))
-    only_a = (
-        F.broadcast(pt)
-        .join(a_vals, "sa")
-        .filter(F.col("v") < F.col("theta_v"))
-        .join(
-            b_vals,
-            (F.col("vb") == F.col("v")) & (F.col("sbb") == F.col("sb")),
-            "left_anti",
-        )
-        .groupBy("sa", "sb")
-        .agg(
-            F.count(F.lit(1)).alias("n_only"),
-            F.sum("v").alias("digest_only"),
-        )
-    )
-    du = od.distinct()
-    exact = (
-        F.broadcast(pairs)
-        .join(du.select(F.col("seg").alias("sa"), "o_custkey"), "sa")
-        .join(
-            du.select(F.col("seg").alias("sb"), "o_custkey"),
-            ["sb", "o_custkey"],
-            "left_anti",
-        )
-        .groupBy("sa", "sb")
-        .agg(F.count_distinct("o_custkey").alias("exact_diff"))
-    )
     return (
-        pt.join(only_a, ["sa", "sb"], "left")
-        .join(exact, ["sa", "sb"], "left")
+        _theta_pair_estimates(spark, sf_dir, "left_anti")
         .select(
             "sa",
             "sb",
             "theta_v",
-            F.coalesce("n_only", F.lit(0)).alias("n_only"),
-            F.coalesce("digest_only", F.lit(0)).alias("digest_only"),
-            kmv_scale_count(
-                F.coalesce("n_only", F.lit(0)), F.col("theta_v")
-            ).alias("est_diff"),
-            F.coalesce("exact_diff", F.lit(0)).alias("exact_diff"),
+            F.col("n").alias("n_only"),
+            F.col("digest").alias("digest_only"),
+            F.col("est").alias("est_diff"),
+            F.col("exact").alias("exact_diff"),
         )
         .withColumn(
             "diff_ok",

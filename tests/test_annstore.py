@@ -19,8 +19,8 @@ from db_migration_spark.operators.similarity import (
 from db_migration_spark.plans.txlog import TxTable
 from db_migration_spark.queries_annstore import (
     ensure_nsw_graph_store,
+    graph_store_beam,
     q_ann_nsw_store_topk,
-    store_beam_search,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -66,7 +66,9 @@ def test_store_beam_equals_plain_beam_over_same_edges(spark):
     plain = nsw_beam_search(
         emb, t.read(spark).localCheckpoint(eager=False), q
     )
-    stored, scanned, scannable = store_beam_search(spark, t, emb, q)
+    io = {"groups_read": 0, "groups_total": 0}
+    stored = graph_store_beam(t, emb, q, io)
+    scanned, scannable = io["groups_read"], io["groups_total"]
     assert scanned <= scannable
     a = {tuple(r) for r in plain.select("query_id", "node", "rel").collect()}
     b = {tuple(r) for r in stored.select("query_id", "node", "rel").collect()}
@@ -624,14 +626,14 @@ def test_pruned_beam_matches_plain_beam(spark):
 
 
 def test_descent_lr_links_match_longrange_formula(spark):
-    """Per-batch persisted tunnels over ALL ids with the final corpus
-    size reproduce nsw_longrange_edges exactly — same md5 formula,
-    same symmetrization, so the incremental table converges to the
-    map-pass graph it replaced when batches cover the corpus."""
+    """Per-batch tunnels (the descent MV persists one batch's at a
+    time) over batches covering ALL ids with the final corpus size
+    reproduce the one-shot nsw_longrange_edges exactly — the formula is
+    md5-stateless and symmetrized per call, so the incremental table
+    converges to the map-pass graph when batches cover the corpus."""
     from db_migration_spark.operators.similarity import (
         nsw_longrange_edges,
     )
-    from db_migration_spark.queries_annstore import _descent_lr_links
 
     emb = load_table(spark, SF, "embeddings").select(
         "vec_id", "embedding"
@@ -639,9 +641,12 @@ def test_descent_lr_links_match_longrange_formula(spark):
     n = emb.count()
     a = {
         tuple(r)
-        for r in _descent_lr_links(emb.select("vec_id"), n).collect()
+        for i in range(3)
+        for r in nsw_longrange_edges(
+            emb.filter(F.col("vec_id") % 3 == i), n
+        ).collect()
     }
-    b = {tuple(r) for r in nsw_longrange_edges(emb).collect()}
+    b = {tuple(r) for r in nsw_longrange_edges(emb, n).collect()}
     assert a == b
 
 
@@ -716,8 +721,10 @@ def test_descent_serve_paths_agree(spark):
         nsw_beam_search,
     )
     from db_migration_spark.queries_annstore import (
+        _descent_edges,
         _ensure_stream_nsw_descent_mv,
-        _pruned_beam_search_local,
+        _pruned_nodes,
+        store_beam_search,
     )
 
     kt, _stats = _ensure_stream_nsw_descent_mv(spark, SF)
@@ -744,11 +751,17 @@ def test_descent_serve_paths_agree(spark):
     # the persisted representatives (plus the global-min anchor)
     assert rt.latest_version() >= 0
     assert {(qid, int(lo)) for qid in range(4)} <= set(entries)
+    def out_edges(frontier):
+        return _descent_edges(spark, kt, lt, frontier)
+
+    def vectors(ids):
+        return _pruned_nodes(spark, vt, ids)
+
     pruned = {
         (r.query_id, r.node, r.rel)
-        for r in _pruned_beam_search_local(
-            spark, kt, lt, vt, q, entries, hops=hops, width=width
-        )
+        for r in store_beam_search(
+            q, entries, out_edges, vectors, hops=hops, width=width
+        ).collect()
     }
     edges = (
         _symmetrize(kt.read(spark).select("src", "dst"))
@@ -766,7 +779,32 @@ def test_descent_serve_paths_agree(spark):
     assert pruned == plain
     # the single-entry form (int) must keep working for callers that
     # route through a global entry node
-    single = _pruned_beam_search_local(
-        spark, kt, lt, vt, q, int(lo), hops=1, width=width
-    )
+    single = store_beam_search(
+        q, int(lo), out_edges, vectors, hops=1, width=width
+    ).collect()
     assert len(single) > 0
+
+
+def test_descent_mv_serve_gate_keeps_the_answer(spark, monkeypatch):
+    """q_stream_nsw_descent_mv returns the identical row whichever side
+    of the serve gate it lands on: at the default gate the sf0.001
+    store is served by the lazy plan, with the gate at 0 by the store
+    beam (counted through the module-level name the query calls)."""
+    from db_migration_spark import queries_annstore as A
+
+    calls: list[int] = []
+    beam = A.store_beam_search
+
+    def counted(*args, **kw):
+        calls.append(1)
+        return beam(*args, **kw)
+
+    monkeypatch.setattr(A, "store_beam_search", counted)
+    lazy = [tuple(r) for r in A.q_stream_nsw_descent_mv(spark, SF).collect()]
+    assert calls == []
+    monkeypatch.setattr(A, "_PRUNED_SERVE_MIN_ROWS", 0)
+    served = [
+        tuple(r) for r in A.q_stream_nsw_descent_mv(spark, SF).collect()
+    ]
+    assert calls == [1]
+    assert served == lazy
