@@ -1117,7 +1117,7 @@ def main(argv: list[str] | None = None) -> int:
                 "vec_id", "embedding"
             )
             _sh.rmtree(args.store, ignore_errors=True)
-            t = build_nsw_graph_store(emb, os.path.join(args.store, "edges"))
+            t = build_nsw_graph_store(emb, args.store)
             print(
                 json.dumps(
                     {
@@ -1166,10 +1166,17 @@ def main(argv: list[str] | None = None) -> int:
         emb = spark.read.parquet(args.input).select("vec_id", "embedding")
         q = emb.filter(F.col("vec_id").isin(qids))
         if args.action == "probe-graph":
+            # the beam walks and scores the store's own vectors/; the
+            # probe-time --input supplies only the query vectors
+            if not os.path.isdir(os.path.join(args.store, "vectors")):
+                raise SystemExit(
+                    f"graph store {args.store} has no vectors/ — rebuild "
+                    "it with build-graph (stores written before vector "
+                    "persistence cannot be probed safely)"
+                )
             io = {"groups_read": 0, "groups_total": 0}
             beam = graph_store_beam(
                 TxTable(os.path.join(args.store, "edges")),
-                emb,
                 q.select(
                     F.col("vec_id").alias("query_id"),
                     F.col("embedding").alias("qv"),

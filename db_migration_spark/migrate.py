@@ -9,14 +9,20 @@ onto the operator library:
 
     reference step (boundary)          engine stage (native)
     ---------------------------------  -----------------------------------
-    create-database + models (X2)      read_models_schema → schema table
+    create-database + models (X2)      models_schema_rows → schema table
     acedump-to-edn-logs (X1)           parse_ace_dump → ace_records_to_datoms
     sort-edn-logs (T1)                 repartitionByRange(class, tx) + sortWithin
+                                       over the persisted parse: dumps parsed once
     import-logs (S8)                   batch parquet write, partitioned by class
     apply-patches (X4)                 apply_patches last-write-wins merge
     homol-import (X5)                  class-subset filter → second store
     qa-report (X6 = A1 ⋈ J1)           per_class_counts ⋈ id_catalog → CSV
-    backup-db (S9)                     snapshot parquet write
+    backup-db (S9)                     file-level snapshot (snapshot_store)
+
+Every step reads the store with the schema it was written with
+(``datom_store_schema`` of the installed models schema, whose rows the
+job keeps on the driver), so no read launches a footer-inference job;
+the backup copies files and launches no Spark job at all.
 
 Resume semantics come from plans.Pipeline (durable JSON cursor — the
 shelve ``LAST_STEP_OK`` analog, ``runcommand.py:393-406``) plus idempotent
@@ -26,17 +32,24 @@ stage-output paths.
 from __future__ import annotations
 
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from .operators.eav import apply_patches, homology_split, typed_cast
+from .operators.eav import (
+    apply_patches,
+    datom_store_schema,
+    homology_split,
+    typed_cast,
+)
 from .operators.relational import per_class_counts, qa_count_report
 from .plans.pipeline import Pipeline, Step
 from .sources.ace import ace_records_to_datoms, parse_ace_dump
 from .sources.catalog_files import (
+    MODELS_SCHEMA_DDL,
+    models_schema_rows,
     read_id_catalog,
-    read_models_schema,
     write_qa_report_csv,
 )
 
@@ -64,11 +77,32 @@ class MigrationJob:
         self.patches_path = patches_path
         self.release = release
         self.homol_classes = homol_classes or []
+        self._schema: list | None = None  # installed schema rows (X2)
 
     # -- stage functions (each idempotent via its output path) -------------
 
     def _path(self, *parts: str) -> str:
         return os.path.join(self.ws, self.release, *parts)
+
+    def _schema_rows(self) -> list:
+        """The installed models schema (X2) as driver rows — kept from
+        install-schema, or read once with its fixed DDL by a job that
+        resumes past it.  O(#attributes) metadata."""
+        if self._schema is None:
+            self._schema = (
+                self.spark.read.schema(MODELS_SCHEMA_DDL)
+                .parquet(self._path("schema"))
+                .collect()
+            )
+        return self._schema
+
+    def _read_store(self, name: str) -> DataFrame:
+        """The datom store ``name`` read with the schema it was written
+        with (:func:`datom_store_schema`): no footer-inference job, and
+        an empty store reads as zero rows."""
+        return self.spark.read.schema(
+            datom_store_schema(value_types(self._schema_rows()))
+        ).parquet(self._path(name))
 
     def validate(self, ctx: dict) -> str:
         """Step 1 (runcommand.py:413-421 input validation): inputs exist."""
@@ -79,7 +113,10 @@ class MigrationJob:
 
     def install_schema(self, ctx: dict) -> DataFrame:
         """X2 create-database analog: per-release schema table."""
-        schema = read_models_schema(self.spark, self.models_path, self.release)
+        self._schema = models_schema_rows(
+            self.spark, self.models_path, self.release
+        )
+        schema = self.spark.createDataFrame(self._schema, MODELS_SCHEMA_DDL)
         schema.write.mode("overwrite").parquet(self._path("schema"))
         return schema
 
@@ -87,28 +124,28 @@ class MigrationJob:
         """X1+X3: parse dumps → datoms, typed per schema, T1-sorted into
         the store layout (range-partitioned by tx, sorted within)."""
         out = self._path("datoms")
-        records = parse_ace_dump(self.spark, self.dumps_path)
-        datoms = ace_records_to_datoms(records)
-        schema_rows = self.spark.read.parquet(self._path("schema")).collect()
-        vtypes = {
-            f"{r['class']}/{r['attribute']}": r["value_type"]
-            for r in schema_rows
-            if r["value_type"] in ("long", "double", "date", "timestamp")
-        }
-        typed = typed_cast(datoms, vtypes) if vtypes else datoms
+        typed = typed_cast(
+            ace_records_to_datoms(parse_ace_dump(self.spark, self.dumps_path)),
+            value_types(self._schema_rows()),
+        ).persist()
         # Store layout for scale: hive-partitioned by class (per-class QA
         # counts, homology splits and per-class pivots prune to their
         # directories), range-clustered so each class's files cover
         # disjoint tx ranges and are tx-sorted inside — the per-class
         # analog of the reference's globally sorted EDN import (T1), with
-        # no single-task global sort anywhere.
-        (
-            typed.repartitionByRange(F.col("class"), F.col("tx"))
-            .sortWithinPartitions("class", "tx")
-            .write.mode("overwrite")
-            .partitionBy("class")
-            .parquet(out)
-        )
+        # no single-task global sort anywhere.  The range sort samples
+        # its input before the write reads it: the persist makes the
+        # sample parse the dumps and the write read the parsed datoms.
+        try:
+            (
+                typed.repartitionByRange(F.col("class"), F.col("tx"))
+                .sortWithinPartitions("class", "tx")
+                .write.mode("overwrite")
+                .partitionBy("class")
+                .parquet(out)
+            )
+        finally:
+            typed.unpersist()
         return out
 
     def merge_patches(self, ctx: dict) -> str:
@@ -118,63 +155,55 @@ class MigrationJob:
         card-many attributes (the ACeDB default) resolve per (e,a,v) so a
         patch assert accumulates instead of collapsing the whole multi-value
         set — matching the Datomic patch transact the reference runs
-        (pseudoace.py:105-110)."""
+        (pseudoace.py:105-110).  A release without patches snapshots
+        ``datoms`` file by file, keeping its class-partitioned layout."""
         out = self._path("datoms_patched")
-        base = self.spark.read.parquet(self._path("datoms"))
         if not self.patches_path:
-            base.write.mode("overwrite").parquet(out)
+            snapshot_store(self._path("datoms"), out)
             return out
+        base = self._read_store("datoms")
         patches = ace_records_to_datoms(
             parse_ace_dump(self.spark, self.patches_path)
         )
-        for c in base.columns:
+        for c, t in base.dtypes:
             if c not in patches.columns:
-                patches = patches.withColumn(c, F.lit(None).cast(dict(base.dtypes)[c]))
+                patches = patches.withColumn(c, F.lit(None).cast(t))
+        card_many = [
+            f"{r['class']}/{r['attribute']}"
+            for r in self._schema_rows()
+            if r["cardinality"] == "many"
+        ]
         merged = apply_patches(
-            base,
-            patches.select(*base.columns),
-            card_many_attrs=self._card_many_attrs(),
+            base, patches.select(*base.columns), card_many_attrs=card_many
         )
         merged.write.mode("overwrite").partitionBy("class").parquet(out)
         return out
-
-    def _card_many_attrs(self) -> list[str]:
-        """Card-many attribute names ('Class/attr') from the installed
-        schema (X2).  Schema is O(#attributes) metadata — a collect here is
-        the same driver-side read typed_cast does."""
-        schema_rows = self.spark.read.parquet(self._path("schema")).collect()
-        return [
-            f"{r['class']}/{r['attribute']}"
-            for r in schema_rows
-            if r["cardinality"] == "many"
-        ]
 
     def homol_split(self, ctx: dict) -> str:
         """X5: second store for homology classes (the '<release>-homol' DB,
         runcommand.py:439-461)."""
         out = self._path("homol")
-        datoms = self.spark.read.parquet(self._path("datoms_patched"))
-        homology_split(datoms, self.homol_classes).write.mode(
-            "overwrite"
-        ).parquet(out)
+        homology_split(
+            self._read_store("datoms_patched"), self.homol_classes
+        ).write.mode("overwrite").parquet(out)
         return out
 
     def qa_report(self, ctx: dict) -> DataFrame:
         """X6: per-class entity counts ⋈ expected id catalog → quoted CSV
         (the reference's human gate before backup, runcommand.py:188-203)."""
-        datoms = self.spark.read.parquet(self._path("datoms_patched"))
-        actual = per_class_counts(datoms, "class", entity_col="e")
+        actual = per_class_counts(
+            self._read_store("datoms_patched"), "class", entity_col="e"
+        )
         expected = read_id_catalog(self.spark, self.catalog_path)
         report = qa_count_report(actual, expected)
         write_qa_report_csv(report, self._path("qa_report"))
         return report
 
     def backup(self, ctx: dict) -> str:
-        """S9: snapshot of the final store (datomic backup-db analog)."""
+        """S9: file-level snapshot of the final store (the datomic
+        backup-db analog) — no Spark job."""
         out = self._path("backup")
-        self.spark.read.parquet(self._path("datoms_patched")).write.mode(
-            "overwrite"
-        ).parquet(out)
+        snapshot_store(self._path("datoms_patched"), out)
         return out
 
     # -- assembly -----------------------------------------------------------
@@ -193,6 +222,28 @@ class MigrationJob:
 
     def run(self) -> dict:
         return self.pipeline().run()
+
+
+def value_types(schema_rows: list) -> dict[str, str]:
+    """'Class/attribute' → value_type of installed schema rows (X2) —
+    the attribute typing :func:`typed_cast` and
+    :func:`datom_store_schema` take."""
+    return {
+        f"{r['class']}/{r['attribute']}": r["value_type"] for r in schema_rows
+    }
+
+
+def snapshot_store(src: str, dst: str) -> None:
+    """Byte-level snapshot of the committed store directory ``src`` at
+    ``dst`` — the datomic ``backup-db`` analog: its files are copied,
+    never decoded and re-encoded.  The copy lands in a temp sibling that
+    is renamed into place, so a crash never leaves a half snapshot at
+    ``dst``."""
+    tmp = dst + ".tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
+    shutil.copytree(src, tmp)
+    shutil.rmtree(dst, ignore_errors=True)
+    os.replace(tmp, dst)
 
 
 def materialize_wide(
@@ -219,13 +270,15 @@ def materialize_wide(
     information."""
     from .operators.eav import pivot_multi, to_attr_multimap
 
-    schema_rows = spark.read.parquet(schema_path).collect()
+    schema_rows = spark.read.schema(MODELS_SCHEMA_DDL).parquet(schema_path).collect()
     by_class: dict[str, dict[str, str]] = {}
     for r in schema_rows:
         by_class.setdefault(r["class"], {})[
             f"{r['class']}/{r['attribute']}"
         ] = r["cardinality"]
-    datoms = spark.read.parquet(store_path)
+    datoms = spark.read.schema(
+        datom_store_schema(value_types(schema_rows))
+    ).parquet(store_path)
     out = {}
     for cls, attrs in by_class.items():
         if classes and cls not in classes:

@@ -137,6 +137,49 @@ def to_attr_multimap(datoms: DataFrame) -> DataFrame:
     )
 
 
+# the typed value columns typed_cast adds, in column order:
+# models value_type → (column, SQL type)
+_TYPED_COLUMNS = {
+    "long": ("v_long", "long"),
+    "double": ("v_double", "double"),
+    "date": ("v_date", "date"),
+    "timestamp": ("v_ts", "timestamp"),
+}
+
+
+def typed_columns(schema: dict[str, str]) -> list[tuple[str, str, list[str]]]:
+    """(column, SQL type, attributes) of each typed value column that
+    :func:`typed_cast` adds for ``schema`` (attribute → value_type): one
+    per type class present, in ``_TYPED_COLUMNS`` order."""
+    by_type: dict[str, list[str]] = {}
+    for attr, vtype in schema.items():
+        by_type.setdefault(vtype, []).append(attr)
+    return [
+        (col_name, sql_type, by_type[vtype])
+        for vtype, (col_name, sql_type) in _TYPED_COLUMNS.items()
+        if vtype in by_type
+    ]
+
+
+def datom_store_schema(schema: dict[str, str]) -> str:
+    """DDL of the class-partitioned datom store a migration writes for
+    the models ``schema`` (attribute → value_type), in the column order
+    a partitioned read returns: the file columns ``e, a, v, tx, op,
+    comment``, the :func:`typed_columns`, then the partition column
+    ``class``.  The store's columns are a pure function of the schema,
+    so reading it with this DDL launches no footer-inference job, and a
+    store with no part files (a release with zero objects) reads as
+    zero rows instead of failing to infer."""
+    typed = "".join(
+        f", {col_name} {sql_type.upper()}"
+        for col_name, sql_type, _attrs in typed_columns(schema)
+    )
+    return (
+        "e BIGINT, a STRING, v STRING, tx TIMESTAMP, op BOOLEAN, "
+        f"comment STRING{typed}, class STRING"
+    )
+
+
 def typed_cast(datoms: DataFrame, schema: dict[str, str]) -> DataFrame:
     """X3 (``prepare-import``, pseudoace.py:79-84): schema-driven typed
     normalization of the stringly datom stream.
@@ -148,29 +191,18 @@ def typed_cast(datoms: DataFrame, schema: dict[str, str]) -> DataFrame:
     rather than a join: zero shuffle, whole-stage codegen, and wrong-typed
     values become nulls exactly like Datomic's import would reject them.
 
-    Output keeps ``v`` and adds one typed column per type class present.
+    Output keeps ``v`` and adds one typed column per type class present
+    (:func:`typed_columns`).
     """
-    by_type: dict[str, list[str]] = {}
-    for attr, vtype in schema.items():
-        by_type.setdefault(vtype, []).append(attr)
-
     out = datoms
-    casts = {
-        "long": ("v_long", "long"),
-        "double": ("v_double", "double"),
-        "date": ("v_date", "date"),
-        "timestamp": ("v_ts", "timestamp"),
-    }
-    for vtype, (col_name, sql_type) in casts.items():
-        attrs = by_type.get(vtype)
-        if attrs:
-            out = out.withColumn(
-                col_name,
-                # try_cast: malformed values null out instead of failing the
-                # job under ANSI mode (Spark 4 default) — the import-reject
-                # semantics we want for dirty dump data
-                F.when(F.col("a").isin(attrs), F.col("v").try_cast(sql_type)),
-            )
+    for col_name, sql_type, attrs in typed_columns(schema):
+        out = out.withColumn(
+            col_name,
+            # try_cast: malformed values null out instead of failing the
+            # job under ANSI mode (Spark 4 default) — the import-reject
+            # semantics we want for dirty dump data
+            F.when(F.col("a").isin(attrs), F.col("v").try_cast(sql_type)),
+        )
     return out
 
 

@@ -34,6 +34,9 @@ def qa_count_report(
     missing classes as count mismatches), the diff, and a match flag; sorted
     by descending actual count then class name — the reference sorts its
     report rows descending by the first count column (``util.py:86``).
+    The sort is local to one partition: the report is O(#classes) rows,
+    so a total order needs no range exchange (and no sampling job), and
+    a single-file sink keeps it as is.
 
     Join strategy note: Spark cannot broadcast either side of a FULL OUTER
     join, so this is a sort-merge join — of two O(#classes) *aggregates*
@@ -51,7 +54,8 @@ def qa_count_report(
         )
         .withColumn("diff", F.col(actual_count_col) - F.col(expected_count_col))
         .withColumn("matches", F.col("diff") == 0)
-        .orderBy(F.desc(actual_count_col), F.col(class_col))
+        .coalesce(1)
+        .sortWithinPartitions(F.desc(actual_count_col), F.col(class_col))
     )
 
 

@@ -123,38 +123,44 @@ from .queries_shared import (
 # ---------------------------------------------------------------------------
 
 
-def build_nsw_graph_store(emb: DataFrame, edges_root: str):
+def build_nsw_graph_store(emb: DataFrame, root: str):
     """The NN-descent + long-range adjacency of ``emb`` committed to a
-    txlog table at ``edges_root``, OPTIMIZE-clustered on ``src`` (each
+    txlog table at ``root/edges``, OPTIMIZE-clustered on ``src`` (each
     file group owns a contiguous node range → min/max zone maps make
-    any frontier's groups plannable without I/O) — the one graph-store
-    build behind the declared fixture and ``ann build-graph``.  Returns
-    the edge TxTable."""
-    t = TxTable(edges_root)
+    any frontier's groups plannable without I/O), and the node vectors
+    beside it at ``root/vectors``, clustered on ``vec_id`` the same way
+    — the store serves from its own vectors, never from a probe-time
+    input.  The one graph-store build behind the declared fixture and
+    ``ann build-graph``.  Returns the edge TxTable."""
+    sp = emb.sparkSession
+    vt = TxTable(os.path.join(root, "vectors"))
+    vt.commit_append(emb.select("vec_id", "embedding"))
+    vt.optimize(sp, sort_key=["vec_id"], target_groups=8)
+    t = TxTable(os.path.join(root, "edges"))
     t.commit_append(
         nsw_build_edges_descent(emb)
         .unionByName(nsw_longrange_edges(emb, emb.count()))
         .dropDuplicates(["src", "dst"])
     )
-    t.optimize(emb.sparkSession, sort_key=["src"], target_groups=8)
+    t.optimize(sp, sort_key=["src"], target_groups=8)
     return t
 
 
 def ensure_nsw_graph_store(spark: SparkSession, sf_dir: str):
     """:func:`build_nsw_graph_store` over the embeddings table.
     Priming discipline (r7 verdict task 7): built once (``_build_once``)
-    so sweeps and bench time SERVING, never construction."""
+    so sweeps and bench time SERVING, never construction.  Returns the
+    edge TxTable."""
     root = _fx(sf_dir, "txlog_nsw_graph")
-    edges_root = os.path.join(root, "edges")
 
     def build() -> None:
         emb = load_table(spark, sf_dir, "embeddings").select(
             "vec_id", "embedding"
         )
-        build_nsw_graph_store(emb, edges_root)
+        build_nsw_graph_store(emb, root)
 
     _build_once(root, build)
-    return TxTable(edges_root)
+    return TxTable(os.path.join(root, "edges"))
 
 
 def ensure_nsw_exact_edges(spark: SparkSession, sf_dir: str) -> dict:
@@ -334,23 +340,26 @@ def store_beam_search(
     )
 
 
-def graph_store_beam(t, emb: DataFrame, q: DataFrame, io: dict) -> DataFrame:
-    """Serve the graph store ``t`` (build_nsw_graph_store's edges/
-    table) through :func:`store_beam_search` from the global-min
-    entry node — the one serve path behind ann_nsw_store_topk and
-    ``ann probe-graph``.  The stored graph is already symmetric (the
-    descent build and the tunnels both symmetrize), so a frontier's
-    out-edges are one src-pruned group read; candidate vectors are
-    the ``emb`` rows by id.  ``io`` sums the groups read and the
-    groups plannable over the beam's edge reads."""
-    sp = emb.sparkSession
-    nodes = emb.select(F.col("vec_id").alias("node"), "embedding")
-    entry = emb.agg(F.min("vec_id")).first()[0]
+def graph_store_beam(t, q: DataFrame, io: dict) -> DataFrame:
+    """Serve the graph store whose edge table is ``t``
+    (build_nsw_graph_store's ``edges/``) through
+    :func:`store_beam_search` from the global-min entry node — the one
+    serve path behind ann_nsw_store_topk and ``ann probe-graph``.  The
+    stored graph is already symmetric (the descent build and the
+    tunnels both symmetrize), so a frontier's out-edges are one
+    src-pruned group read; candidate vectors are vec_id-pruned reads of
+    the store's own ``vectors/`` table, whose zone maps also give the
+    entry node.  ``q`` only supplies the query vectors.  ``io`` sums
+    the groups read and the groups plannable over the beam's edge
+    reads."""
+    sp = q.sparkSession
+    vt = TxTable(os.path.join(os.path.dirname(t.root), "vectors"))
+    entry, _hi = vt.column_range("vec_id")
     return store_beam_search(
         q,
         int(entry),
         lambda frontier: _src_out_edges(sp, t, frontier, io=io),
-        lambda ids: nodes.filter(F.col("node").isin(ids)),
+        lambda ids: _pruned_nodes(sp, vt, ids),
     )
 
 
@@ -372,7 +381,7 @@ def q_ann_nsw_store_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qv")
     )
     io = {"groups_read": 0, "groups_total": 0}
-    beam = graph_store_beam(t, emb, q, io)
+    beam = graph_store_beam(t, q, io)
     return _beam_recall_gate(beam, emb, q, bound=0.5).withColumn(
         "pruned", F.lit(io["groups_read"] < io["groups_total"])
     )

@@ -12,7 +12,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -29,13 +29,14 @@ def read_id_catalog(spark: SparkSession, path: str) -> DataFrame:
 
 
 def write_qa_report_csv(report: DataFrame, path: str) -> None:
-    """S12: quoted CSV sink, desc by the first count column (util.py:86).
-    coalesce(1) mirrors the reference's single report file — the report is
-    O(#classes) rows, so one task is correct even at 100 TB input."""
-    count_cols = [c for c, t in report.dtypes if t in ("bigint", "int")]
-    out = report.orderBy(F.desc(count_cols[0])) if count_cols else report
+    """S12: quoted CSV sink, one file, rows in the report's own order —
+    :func:`..operators.relational.qa_count_report` already sorts desc by
+    count (util.py:86), so sorting again here would only re-run the
+    range sort.  coalesce(1) mirrors the reference's single report file
+    and keeps a sorted report's order — the report is O(#classes) rows,
+    so one task is correct even at 100 TB input."""
     (
-        out.coalesce(1)
+        report.coalesce(1)
         .write.mode("overwrite")
         .option("header", True)
         .option("quoteAll", True)
@@ -43,11 +44,19 @@ def write_qa_report_csv(report: DataFrame, path: str) -> None:
     )
 
 
-def read_models_schema(
+MODELS_SCHEMA_DDL = (
+    "class STRING, attribute STRING, value_type STRING, "
+    "cardinality STRING, release STRING"
+)
+_SchemaRow = Row("class", "attribute", "value_type", "cardinality", "release")
+
+
+def models_schema_rows(
     spark: SparkSession, path: str, release: str = ""
-) -> DataFrame:
-    """X2: simplified annotated-models parser → schema DataFrame
-    (class, attribute, value_type, cardinality, release) per FIXTURES.md §3.
+) -> list[Row]:
+    """X2: simplified annotated-models parser → one driver row per
+    attribute (class, attribute, value_type, cardinality, release), the
+    ``MODELS_SCHEMA_DDL`` columns of FIXTURES.md §3.
 
     Line grammar (one attribute per line, ``?Class`` headers):
 
@@ -82,10 +91,19 @@ def read_models_schema(
         vtype = (rest[0] if rest else "Text").lower()
         vtype = {"text": "string", "int": "long", "float": "double",
                  "datetype": "timestamp", "ref": "ref"}.get(vtype, vtype)
-        rows.append((cls, attr, vtype, "one" if unique else "many", release))
+        rows.append(
+            _SchemaRow(cls, attr, vtype, "one" if unique else "many", release)
+        )
+    return rows
+
+
+def read_models_schema(
+    spark: SparkSession, path: str, release: str = ""
+) -> DataFrame:
+    """X2: the :func:`models_schema_rows` of a models file as a schema
+    DataFrame (``MODELS_SCHEMA_DDL``)."""
     return spark.createDataFrame(
-        rows, "class STRING, attribute STRING, value_type STRING, "
-              "cardinality STRING, release STRING"
+        models_schema_rows(spark, path, release), MODELS_SCHEMA_DDL
     )
 
 

@@ -67,7 +67,7 @@ def test_store_beam_equals_plain_beam_over_same_edges(spark):
         emb, t.read(spark).localCheckpoint(eager=False), q
     )
     io = {"groups_read": 0, "groups_total": 0}
-    stored = graph_store_beam(t, emb, q, io)
+    stored = graph_store_beam(t, q, io)
     scanned, scannable = io["groups_read"], io["groups_total"]
     assert scanned <= scannable
     a = {tuple(r) for r in plain.select("query_id", "node", "rel").collect()}

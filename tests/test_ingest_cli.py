@@ -454,6 +454,41 @@ def test_cli_ann_build_probe(tmp_path):
     assert [r[1] for r in gprobe["results"]] == [1, 2, 3, 4, 5]
 
 
+def test_cli_ann_probe_graph_serves_from_store_vectors(tmp_path):
+    """``probe-graph`` walks and scores the vectors persisted in the
+    graph store: a probe whose --input holds only the query vectors
+    returns what the full-corpus input returns, and a store without
+    vectors/ is refused with a pointed error."""
+    import os
+    import shutil
+
+    import duckdb
+
+    emb = "/root/testdata/sf0.001/embeddings.parquet"
+    store = str(tmp_path / "graph")
+    _cli("ann", "--action", "build-graph", "--input", emb, "--store", store)
+    sub = str(tmp_path / "queries.parquet")
+    duckdb.sql(
+        f"copy (select * from '{emb}' where vec_id in (0, 1)) to '{sub}'"
+    )
+
+    def probe(inp):
+        return _cli(
+            "ann", "--action", "probe-graph", "--input", inp,
+            "--store", store, "--query-ids", "0,1", "--k", "5",
+        )
+
+    full = probe(emb)
+    assert len(full["results"]) == 10  # 2 queries x top-5
+    assert probe(sub) == full
+    shutil.rmtree(os.path.join(store, "vectors"))
+    err = _cli(
+        "ann", "--action", "probe-graph", "--input", emb, "--store", store,
+        "--query-ids", "0", "--k", "5", expect_fail=True,
+    )
+    assert "rebuild" in err
+
+
 def test_cli_ann_and_fixture_build_the_same_ivfpq_store(
     spark, sf_dir, tmp_path
 ):

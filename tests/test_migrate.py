@@ -4,6 +4,7 @@ homology split, snapshot — with resume semantics."""
 from __future__ import annotations
 
 import gzip
+from pathlib import Path
 
 import pytest
 
@@ -37,27 +38,45 @@ MODELS = """?Gene
 """
 
 
-@pytest.fixture(scope="module")
-def job(spark, tmp_path_factory):
-    root = tmp_path_factory.mktemp("migration")
+def _write_release(root, dump=DUMP, patch=PATCH, models=MODELS,
+                   catalog="Gene 2\nProtein 1\nHomology_group 1\nVariation 5\n"):
     (root / "dumps").mkdir()
     with gzip.open(root / "dumps" / "dump1.ace.gz", "wt") as fp:
-        fp.write(DUMP)
+        fp.write(dump)
     (root / "patches").mkdir()
-    (root / "patches" / "p1.ace").write_text(PATCH)
-    (root / "models.wrm.WS299").write_text(MODELS)
+    (root / "patches" / "p1.ace").write_text(patch)
+    (root / "models.wrm.WS299").write_text(models)
     with gzip.open(root / "catalog.txt.gz", "wt") as fp:
-        fp.write("Gene 2\nProtein 1\nHomology_group 1\nVariation 5\n")
-    j = MigrationJob(
+        fp.write(catalog)
+
+
+def _job(spark, root, workspace=None, patches=True):
+    return MigrationJob(
         spark,
-        workspace=str(root / "ws"),
+        workspace=str(workspace or root / "ws"),
         dumps_path=str(root / "dumps"),
         models_path=str(root / "models.wrm.WS299"),
         catalog_path=str(root / "catalog.txt.gz"),
-        patches_path=str(root / "patches"),
+        patches_path=str(root / "patches") if patches else None,
         release="WS299",
         homol_classes=["Homology_group"],
     )
+
+
+@pytest.fixture(scope="module")
+def job(spark, tmp_path_factory):
+    root = tmp_path_factory.mktemp("migration")
+    _write_release(root)
+    j = _job(spark, root)
+    j.run()
+    return j
+
+
+@pytest.fixture(scope="module")
+def job_without_patches(spark, job):
+    """The fixture release migrated again with no patch dump."""
+    j = _job(spark, Path(job.dumps_path).parent, patches=False,
+             workspace=Path(job.ws).parent / "ws-no-patches")
     j.run()
     return j
 
@@ -86,6 +105,13 @@ def test_qa_report_diff(spark, job):
     # Variation expected 5, found 0 → flagged
     assert by_class["Variation"]["actual_count"] == "0"
     assert by_class["Variation"]["matches"] == "false"
+    # one file in the report's one order: desc count, ties by class name
+    lines = [
+        ln.split(",")[0].strip('"')
+        for f in sorted(Path(job._path("qa_report")).glob("*.csv"))
+        for ln in f.read_text().splitlines()[1:]
+    ]
+    assert lines == ["Gene", "Homology_group", "Protein", "Variation"]
 
 
 def test_homology_store(spark, job):
@@ -104,11 +130,11 @@ def test_backup_and_resume(spark, job):
     assert ctx == {}  # nothing re-executed
 
 
-def test_store_partition_pruning(spark, job):
+def _assert_class_pruned(spark, store_path):
     import contextlib, io
     from pyspark.sql import functions as F
 
-    store = spark.read.parquet(job._path("datoms_patched"))
+    store = spark.read.parquet(store_path)
     pruned = store.filter(F.col("class") == "Gene")
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
@@ -119,6 +145,26 @@ def test_store_partition_pruning(spark, job):
     assert "PartitionFilters" in plan
     assert "class" in plan.split("PartitionFilters", 1)[1][:200]
     assert pruned.count() == 3
+
+
+def test_store_partition_pruning(spark, job):
+    _assert_class_pruned(spark, job._path("datoms_patched"))
+
+
+def test_store_partition_pruning_without_patches(spark, job_without_patches):
+    """With no patch dump, datoms_patched is the class-partitioned
+    datoms store as is — never a flat rewrite that loses pruning."""
+    store = job_without_patches._path("datoms_patched")
+    assert {p.name for p in Path(store).glob("class=*")} == {
+        "class=Gene", "class=Protein", "class=Homology_group"
+    }
+    _assert_class_pruned(spark, store)
+    idents = {
+        r["v"]
+        for r in job_without_patches._read_store("datoms_patched").collect()
+        if r["a"] == "Gene/Identity"
+    }
+    assert idents == {"g-one", "g-two"}
 
 
 def test_materialize_wide(spark, job, tmp_path):
@@ -138,3 +184,117 @@ def test_materialize_wide(spark, job, tmp_path):
     assert idents == {"g-one-renamed", "g-two"}
     homol = spark.read.parquet(out["Homology_group"]).collect()
     assert homol[0]["Homology_group/Member"] == ["G1"]  # card-many array
+
+
+def test_empty_dump_release_migrates(spark, tmp_path):
+    """A release whose dumps hold zero objects: the partitioned writes
+    leave no part files, and every later step still runs — the store
+    is empty, every catalog class is a QA mismatch, the backup is
+    empty."""
+    _write_release(
+        tmp_path, dump="", patch="", models="?Gene\n  Identity UNIQUE Text\n",
+        catalog="Gene 2\nVariation 5\n",
+    )
+    j = _job(spark, tmp_path)
+    j.run()
+    assert j._read_store("datoms_patched").count() == 0
+    assert j._read_store("homol").count() == 0
+    report = spark.read.option("header", True).csv(j._path("qa_report"))
+    rows = {r["class_name"]: r for r in report.collect()}
+    assert set(rows) == {"Gene", "Variation"}
+    assert all(r["actual_count"] == "0" for r in rows.values())
+    assert all(r["matches"] == "false" for r in rows.values())
+    assert j._read_store("backup").count() == 0
+
+
+def _run_per_step(spark, j) -> dict:
+    """Run ``j`` with one Spark job group per pipeline step.  Per step:
+    the jobs it launched, the jobs among them outside any SQL execution
+    (a parquet footer-inference job is one), and the rows the .ace
+    parser (the MapInPandas node) produced across its executions."""
+    sc = spark.sparkContext
+    groups = {}
+
+    def on_step(phase, _n, step):
+        if phase == "start":
+            group = f"budget-{id(j)}/{step.description}"
+            groups[step.description] = group
+            sc.setJobGroup(group, group)
+
+    p = j.pipeline()
+    p.add_listener(on_step)
+    try:
+        p.run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    sql = spark._jsparkSession.sharedState().statusStore()
+    execs = sql.executionsList()
+    exec_of = {}
+    for i in range(execs.length()):
+        e = execs.apply(i)
+        ids = e.jobs().keysIterator()
+        while ids.hasNext():
+            exec_of[int(ids.next())] = e.executionId()
+
+    def parsed_rows(eid) -> int:
+        nodes, values = sql.planGraph(eid).allNodes(), sql.executionMetrics(eid)
+        n = 0
+        for k in range(nodes.length()):
+            node = nodes.apply(k)
+            if node.name() != "MapInPandas":
+                continue
+            ms = node.metrics()
+            for m in range(ms.length()):
+                v = values.get(ms.apply(m).accumulatorId())
+                if ms.apply(m).name() == "number of output rows" and v.isDefined():
+                    n += int(v.get().replace(",", ""))
+        return n
+
+    out = {}
+    for step, group in groups.items():
+        jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+        out[step] = {
+            "jobs": len(jobs),
+            "outside_sql": sum(jid not in exec_of for jid in jobs),
+            "parsed": sum(
+                parsed_rows(eid) for eid in {exec_of[j] for j in jobs if j in exec_of}
+            ),
+        }
+    return out
+
+
+def test_release_job_budget(spark, job, tmp_path):
+    """The fixture release's Spark jobs, step by step: each dump record
+    is parsed once, no step infers a store schema, the backup is a file
+    copy with no Spark job, and the release stays within 15 jobs."""
+    j = _job(spark, Path(job.dumps_path).parent, workspace=tmp_path / "ws")
+    steps = _run_per_step(spark, j)
+    assert steps["backup"]["jobs"] == 0
+    assert {s: v["outside_sql"] for s, v in steps.items() if v["outside_sql"]} == {}
+    # 5 dump records + 1 patch record, each through the parser once
+    assert steps["dump-to-datoms"]["parsed"] == 5
+    assert steps["merge-patches"]["parsed"] == 1
+    assert sum(v["parsed"] for v in steps.values()) == 6
+    assert sum(v["jobs"] for v in steps.values()) <= 15, steps
+    backup = sorted(j._read_store("backup").collect())
+    assert len(backup) == 5
+    assert backup == sorted(j._read_store("datoms_patched").collect())
+
+
+def test_resumed_job_reads_the_installed_schema(spark, job, tmp_path):
+    """A fresh job resuming after install-schema and dump-to-datoms
+    takes the schema from the installed table and rebuilds the same
+    store."""
+    inputs = Path(job.dumps_path).parent
+    _job(spark, inputs, workspace=tmp_path / "ws").run()
+    resumed = _job(spark, inputs, workspace=tmp_path / "ws")
+    before = sorted(resumed._read_store("datoms_patched").collect())
+    pipeline = resumed.pipeline()
+    pipeline.reset_to_step(4)  # merge-patches onward
+    assert set(pipeline.run()) == {
+        "merge-patches", "homol-split", "qa-report", "backup"
+    }
+    assert sorted(resumed._read_store("datoms_patched").collect()) == before
+    assert sorted(resumed._read_store("backup").collect()) == before
