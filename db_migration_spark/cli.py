@@ -1308,9 +1308,9 @@ def main(argv: list[str] | None = None) -> int:
         )
         pipe.run()
     elif args.cmd == "migrate-homol":
-        job.homol_split({})
+        job.homol_split()
     elif args.cmd == "qa-report":
-        job.qa_report({})
+        job.qa_report()
     elif args.cmd == "reset-to-step":
         job.pipeline().reset_to_step(args.step)
     elif args.cmd == "clean":

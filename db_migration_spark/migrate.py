@@ -9,12 +9,15 @@ onto the operator library:
 
     reference step (boundary)          engine stage (native)
     ---------------------------------  -----------------------------------
-    create-database + models (X2)      models_schema_rows → schema table
+    create-database + models (X2)      models_schema_rows (a driver read of
+                                       the models file) → schema table
     acedump-to-edn-logs (X1)           parse_ace_dump → ace_records_to_datoms
+    prepare-import (X3)                typed_cast per the installed schema
     sort-edn-logs (T1)                 repartitionByRange(class, tx) + sortWithin
                                        over the persisted parse: dumps parsed once
     import-logs (S8)                   batch parquet write, partitioned by class
-    apply-patches (X4)                 apply_patches last-write-wins merge
+    apply-patches (X4)                 patches parsed and typed (X1+X3) like
+                                       the dumps → apply_patches merge
     homol-import (X5)                  class-subset filter → second store
     qa-report (X6 = A1 ⋈ J1)           per_class_counts ⋈ id_catalog → CSV
     backup-db (S9)                     file-level snapshot (snapshot_store)
@@ -22,7 +25,8 @@ onto the operator library:
 Every step reads the store with the schema it was written with
 (``datom_store_schema`` of the installed models schema, whose rows the
 job keeps on the driver), so no read launches a footer-inference job;
-the backup copies files and launches no Spark job at all.
+the backup copies files and launches no Spark job at all.  The store's
+columns, typed casts and card-many set all come from ``operators.eav``.
 
 Resume semantics come from plans.Pipeline (durable JSON cursor — the
 shelve ``LAST_STEP_OK`` analog, ``runcommand.py:393-406``) plus idempotent
@@ -39,9 +43,11 @@ from pyspark.sql import functions as F
 
 from .operators.eav import (
     apply_patches,
+    card_many_attrs,
     datom_store_schema,
     homology_split,
     typed_cast,
+    value_types,
 )
 from .operators.relational import per_class_counts, qa_count_report
 from .plans.pipeline import Pipeline, Step
@@ -86,48 +92,42 @@ class MigrationJob:
 
     def _schema_rows(self) -> list:
         """The installed models schema (X2) as driver rows — kept from
-        install-schema, or read once with its fixed DDL by a job that
-        resumes past it.  O(#attributes) metadata."""
+        install-schema, or read once by a job that resumes past it."""
         if self._schema is None:
-            self._schema = (
-                self.spark.read.schema(MODELS_SCHEMA_DDL)
-                .parquet(self._path("schema"))
-                .collect()
-            )
+            self._schema = read_schema_rows(self.spark, self._path("schema"))
         return self._schema
 
     def _read_store(self, name: str) -> DataFrame:
-        """The datom store ``name`` read with the schema it was written
-        with (:func:`datom_store_schema`): no footer-inference job, and
-        an empty store reads as zero rows."""
-        return self.spark.read.schema(
-            datom_store_schema(value_types(self._schema_rows()))
-        ).parquet(self._path(name))
+        return read_store(self.spark, self._path(name), self._schema_rows())
 
-    def validate(self, ctx: dict) -> str:
+    def _datoms(self, path: str) -> DataFrame:
+        """X1+X3: the ``.ace`` dumps under ``path`` parsed to datoms and
+        typed per the installed schema — the one parse of both the
+        release dumps and its patches."""
+        return typed_cast(
+            ace_records_to_datoms(parse_ace_dump(self.spark, path)),
+            value_types(self._schema_rows()),
+        )
+
+    def validate(self) -> None:
         """Step 1 (runcommand.py:413-421 input validation): inputs exist."""
         for p in filter(None, [self.dumps_path, self.models_path, self.catalog_path]):
             if not os.path.exists(p.split("*")[0].rstrip("/") or p):
                 raise FileNotFoundError(p)
-        return "ok"
 
-    def install_schema(self, ctx: dict) -> DataFrame:
-        """X2 create-database analog: per-release schema table."""
-        self._schema = models_schema_rows(
-            self.spark, self.models_path, self.release
-        )
-        schema = self.spark.createDataFrame(self._schema, MODELS_SCHEMA_DDL)
-        schema.write.mode("overwrite").parquet(self._path("schema"))
-        return schema
+    def install_schema(self) -> None:
+        """X2 create-database analog: per-release schema table, parsed
+        from the models file on the driver; its write is the one job."""
+        self._schema = models_schema_rows(self.models_path, self.release)
+        self.spark.createDataFrame(self._schema, MODELS_SCHEMA_DDL).write.mode(
+            "overwrite"
+        ).parquet(self._path("schema"))
 
-    def dump_to_datoms(self, ctx: dict) -> str:
+    def dump_to_datoms(self) -> str:
         """X1+X3: parse dumps → datoms, typed per schema, T1-sorted into
         the store layout (range-partitioned by tx, sorted within)."""
         out = self._path("datoms")
-        typed = typed_cast(
-            ace_records_to_datoms(parse_ace_dump(self.spark, self.dumps_path)),
-            value_types(self._schema_rows()),
-        ).persist()
+        typed = self._datoms(self.dumps_path).persist()
         # Store layout for scale: hive-partitioned by class (per-class QA
         # counts, homology splits and per-class pivots prune to their
         # directories), range-clustered so each class's files cover
@@ -148,7 +148,7 @@ class MigrationJob:
             typed.unpersist()
         return out
 
-    def merge_patches(self, ctx: dict) -> str:
+    def merge_patches(self) -> str:
         """X4: late patches over the imported base — cardinality-aware.
 
         Card-one attributes (UNIQUE model lines) upsert LWW per (e,a);
@@ -161,25 +161,15 @@ class MigrationJob:
         if not self.patches_path:
             snapshot_store(self._path("datoms"), out)
             return out
-        base = self._read_store("datoms")
-        patches = ace_records_to_datoms(
-            parse_ace_dump(self.spark, self.patches_path)
-        )
-        for c, t in base.dtypes:
-            if c not in patches.columns:
-                patches = patches.withColumn(c, F.lit(None).cast(t))
-        card_many = [
-            f"{r['class']}/{r['attribute']}"
-            for r in self._schema_rows()
-            if r["cardinality"] == "many"
-        ]
         merged = apply_patches(
-            base, patches.select(*base.columns), card_many_attrs=card_many
+            self._read_store("datoms"),
+            self._datoms(self.patches_path),
+            card_many_attrs=card_many_attrs(self._schema_rows()),
         )
         merged.write.mode("overwrite").partitionBy("class").parquet(out)
         return out
 
-    def homol_split(self, ctx: dict) -> str:
+    def homol_split(self) -> str:
         """X5: second store for homology classes (the '<release>-homol' DB,
         runcommand.py:439-461)."""
         out = self._path("homol")
@@ -188,7 +178,7 @@ class MigrationJob:
         ).write.mode("overwrite").parquet(out)
         return out
 
-    def qa_report(self, ctx: dict) -> DataFrame:
+    def qa_report(self) -> DataFrame:
         """X6: per-class entity counts ⋈ expected id catalog → quoted CSV
         (the reference's human gate before backup, runcommand.py:188-203)."""
         actual = per_class_counts(
@@ -199,7 +189,7 @@ class MigrationJob:
         write_qa_report_csv(report, self._path("qa_report"))
         return report
 
-    def backup(self, ctx: dict) -> str:
+    def backup(self) -> str:
         """S9: file-level snapshot of the final store (the datomic
         backup-db analog) — no Spark job."""
         out = self._path("backup")
@@ -220,17 +210,23 @@ class MigrationJob:
         ]
         return Pipeline(steps, self._path("manifest.json"))
 
-    def run(self) -> dict:
+    def run(self) -> list[str]:
         return self.pipeline().run()
 
 
-def value_types(schema_rows: list) -> dict[str, str]:
-    """'Class/attribute' → value_type of installed schema rows (X2) —
-    the attribute typing :func:`typed_cast` and
-    :func:`datom_store_schema` take."""
-    return {
-        f"{r['class']}/{r['attribute']}": r["value_type"] for r in schema_rows
-    }
+def read_schema_rows(spark: SparkSession, path: str) -> list:
+    """An installed models schema table (X2) as driver rows, read with
+    its fixed DDL.  O(#attributes) metadata."""
+    return spark.read.schema(MODELS_SCHEMA_DDL).parquet(path).collect()
+
+
+def read_store(spark: SparkSession, path: str, schema_rows: list) -> DataFrame:
+    """The datom store at ``path`` read with the schema it was written
+    with (:func:`datom_store_schema` of the installed ``schema_rows``):
+    no footer-inference job, and an empty store reads as zero rows."""
+    return spark.read.schema(
+        datom_store_schema(value_types(schema_rows))
+    ).parquet(path)
 
 
 def snapshot_store(src: str, dst: str) -> None:
@@ -270,15 +266,12 @@ def materialize_wide(
     information."""
     from .operators.eav import pivot_multi, to_attr_multimap
 
-    schema_rows = spark.read.schema(MODELS_SCHEMA_DDL).parquet(schema_path).collect()
-    by_class: dict[str, dict[str, str]] = {}
-    for r in schema_rows:
-        by_class.setdefault(r["class"], {})[
-            f"{r['class']}/{r['attribute']}"
-        ] = r["cardinality"]
-    datoms = spark.read.schema(
-        datom_store_schema(value_types(schema_rows))
-    ).parquet(store_path)
+    schema_rows = read_schema_rows(spark, schema_path)
+    many = set(card_many_attrs(schema_rows))
+    by_class: dict[str, list[str]] = {}
+    for attr in value_types(schema_rows):
+        by_class.setdefault(attr.split("/", 1)[0], []).append(attr)
+    datoms = read_store(spark, store_path, schema_rows)
     out = {}
     for cls, attrs in by_class.items():
         if classes and cls not in classes:
@@ -292,8 +285,8 @@ def materialize_wide(
             wide.write.mode("overwrite").parquet(path)
             out[cls] = path
             continue
-        ones = [a for a, card in attrs.items() if card == "one"]
-        manys = [a for a, card in attrs.items() if card == "many"]
+        ones = [a for a in attrs if a not in many]
+        manys = [a for a in attrs if a in many]
         wide = None
         if ones:
             # exact pivot only guards entities whose card-one datoms are

@@ -22,6 +22,8 @@ from __future__ import annotations
 
 import struct
 
+from .image_ops import channel_sums_of
+
 _FILE_HDR = 14
 _INFO_HDR = 40
 
@@ -98,7 +100,4 @@ def channel_sums(payload: bytes) -> tuple[int, int, int, list[int]]:
     exact verification statistic (integer, so the oracle compares with
     no float tolerance at all)."""
     width, height, channels, pix = decode_bmp_pixels(payload)
-    sums = [0] * channels
-    for i, v in enumerate(pix):
-        sums[i % channels] += v
-    return width, height, channels, sums
+    return width, height, channels, channel_sums_of(pix, channels)

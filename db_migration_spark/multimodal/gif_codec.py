@@ -20,6 +20,8 @@ from __future__ import annotations
 
 import struct
 
+from .image_ops import channel_sums_of
+
 MAX_CODE_WIDTH = 12
 
 
@@ -287,10 +289,4 @@ def channel_means(b: bytes):
     surface as png_codec/jpeg_codec.channel_means, for the shared
     decode_pixel_stats seam."""
     w, h, rgb = decode_gif(b)
-    n = w * h
-    sums = [0, 0, 0]
-    for i in range(0, len(rgb), 3):
-        sums[0] += rgb[i]
-        sums[1] += rgb[i + 1]
-        sums[2] += rgb[i + 2]
-    return w, h, 3, [s / n for s in sums]
+    return w, h, 3, [s / (w * h) for s in channel_sums_of(rgb, 3)]

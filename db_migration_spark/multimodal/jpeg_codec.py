@@ -25,6 +25,8 @@ from __future__ import annotations
 
 import math
 
+from .image_ops import channel_sums_of
+
 # zigzag scan order: index = zigzag position, value = natural (row*8+col)
 ZIGZAG = [
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
@@ -509,9 +511,4 @@ def channel_means(data: bytes):
     """(width, height, channels, per-channel means) — the verification
     statistic, same shape as png_codec.channel_means."""
     w, h, ch, pix = decode_jpeg_pixels(data)
-    sums = [0] * ch
-    n = w * h
-    for i in range(0, len(pix), ch):
-        for c in range(ch):
-            sums[c] += pix[i + c]
-    return w, h, ch, [s / n for s in sums]
+    return w, h, ch, [s / (w * h) for s in channel_sums_of(pix, ch)]

@@ -17,6 +17,8 @@ from __future__ import annotations
 import struct
 import zlib
 
+from .image_ops import channel_sums_of
+
 PNG_SIGNATURE = b"\x89PNG\r\n\x1a\n"
 
 _CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}  # color_type → samples/pixel
@@ -139,7 +141,6 @@ def channel_means(payload: bytes) -> tuple[int, int, int, list[float]]:
     verification statistic (a wrong inflate/unfilter shifts the means)."""
     width, height, channels, pix = decode_png_pixels(payload)
     n = width * height
-    sums = [0] * channels
-    for i, b in enumerate(pix):
-        sums[i % channels] += b
-    return width, height, channels, [s / n for s in sums]
+    return width, height, channels, [
+        s / n for s in channel_sums_of(pix, channels)
+    ]

@@ -17,6 +17,8 @@ from __future__ import annotations
 
 import struct
 
+from .image_ops import channel_sums_of
+
 _MAGIC = b"qoif"
 _END = b"\x00" * 7 + b"\x01"
 
@@ -173,22 +175,10 @@ def channel_sums(data: bytes) -> tuple[int, int, list[int]]:
     """(width, height, per-channel pixel SUMS) — exact integers, the
     oracle statistic (means would re-introduce float division)."""
     w, h, ch, px = decode_qoi(data)
-    sums = [0] * ch
-    n = w * h
-    for i in range(n):
-        o = i * ch
-        for c in range(ch):
-            sums[c] += px[o + c]
-    return w, h, sums
+    return w, h, channel_sums_of(px, ch)
 
 
 def channel_means(data: bytes) -> tuple[int, int, int, list[float]]:
     """Mirror of png_codec.channel_means for the shared decode seam."""
     w, h, ch, px = decode_qoi(data)
-    n = w * h
-    sums = [0] * ch
-    for i in range(n):
-        o = i * ch
-        for c in range(ch):
-            sums[c] += px[o + c]
-    return w, h, ch, [s / n for s in sums]
+    return w, h, ch, [s / (w * h) for s in channel_sums_of(px, ch)]

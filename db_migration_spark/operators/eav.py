@@ -4,9 +4,14 @@ The reference's intermediate IR is an append-only datom stream
 ``[entity attribute value tx]`` produced from ACeDB object dumps and imported
 into Datomic in timestamp order (``/root/reference/src/azanium/pseudoace.py:69-102``,
 ``runcommand.py:180-211``).  Here the datom stream is a plain DataFrame
-``(e BIGINT, a STRING, v STRING, tx TIMESTAMP, op BOOLEAN)`` and the store is
+(:data:`DATOM_DDL`) and the store is
 partitioned Parquet — Datomic's transactional ordering becomes range
 partitioning by ``tx`` with intra-partition sort (never a 1-task global sort).
+
+This module also owns the store's schema: the datom columns
+(:data:`DATOM_DDL`), the typed value columns the models schema adds
+(:func:`typed_columns`) and the facts read off the installed models
+schema rows (:func:`value_types`, :func:`card_many_attrs`).
 """
 
 from __future__ import annotations
@@ -14,7 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-DATOM_COLS = ("e", "a", "v", "tx", "op")
+# the datom stream's columns
+DATOM_DDL = "e BIGINT, a STRING, v STRING, tx TIMESTAMP, op BOOLEAN"
 
 
 def melt(
@@ -147,6 +153,24 @@ _TYPED_COLUMNS = {
 }
 
 
+def _attr(row) -> str:
+    """The datom attribute name ``Class/attribute`` of a schema row."""
+    return f"{row['class']}/{row['attribute']}"
+
+
+def value_types(schema_rows: list) -> dict[str, str]:
+    """Attribute → value_type of installed models schema rows (X2,
+    ``MODELS_SCHEMA_DDL``) — the typing :func:`typed_cast` and
+    :func:`datom_store_schema` take."""
+    return {_attr(r): r["value_type"] for r in schema_rows}
+
+
+def card_many_attrs(schema_rows: list) -> list[str]:
+    """The cardinality-many attributes of installed models schema rows —
+    the set :func:`apply_patches` resolves per value."""
+    return [_attr(r) for r in schema_rows if r["cardinality"] == "many"]
+
+
 def typed_columns(schema: dict[str, str]) -> list[tuple[str, str, list[str]]]:
     """(column, SQL type, attributes) of each typed value column that
     :func:`typed_cast` adds for ``schema`` (attribute → value_type): one
@@ -164,9 +188,9 @@ def typed_columns(schema: dict[str, str]) -> list[tuple[str, str, list[str]]]:
 def datom_store_schema(schema: dict[str, str]) -> str:
     """DDL of the class-partitioned datom store a migration writes for
     the models ``schema`` (attribute → value_type), in the column order
-    a partitioned read returns: the file columns ``e, a, v, tx, op,
-    comment``, the :func:`typed_columns`, then the partition column
-    ``class``.  The store's columns are a pure function of the schema,
+    a partitioned read returns: the file columns (:data:`DATOM_DDL`,
+    then ``comment``), the :func:`typed_columns`, then the partition
+    column ``class``.  The store's columns are a pure function of the schema,
     so reading it with this DDL launches no footer-inference job, and a
     store with no part files (a release with zero objects) reads as
     zero rows instead of failing to infer."""
@@ -174,22 +198,21 @@ def datom_store_schema(schema: dict[str, str]) -> str:
         f", {col_name} {sql_type.upper()}"
         for col_name, sql_type, _attrs in typed_columns(schema)
     )
-    return (
-        "e BIGINT, a STRING, v STRING, tx TIMESTAMP, op BOOLEAN, "
-        f"comment STRING{typed}, class STRING"
-    )
+    return f"{DATOM_DDL}, comment STRING{typed}, class STRING"
 
 
 def typed_cast(datoms: DataFrame, schema: dict[str, str]) -> DataFrame:
     """X3 (``prepare-import``, pseudoace.py:79-84): schema-driven typed
     normalization of the stringly datom stream.
 
-    ``schema`` maps attribute → value_type ('string'|'long'|'double'|
-    'date'|'timestamp'), the engine-side form of the annotated models file
-    (X2, sources/catalog_files.py:read_models_schema).  The schema is
-    metadata — O(#attributes) — so it compiles into a CASE expression
-    rather than a join: zero shuffle, whole-stage codegen, and wrong-typed
-    values become nulls exactly like Datomic's import would reject them.
+    ``schema`` maps attribute → value_type, the engine-side form of the
+    annotated models file (X2: :func:`value_types` of
+    ``catalog_files.models_schema_rows``); the ``_TYPED_COLUMNS`` types
+    get a typed column, every other type stays in ``v`` only.  The
+    schema is metadata — O(#attributes) — so it compiles into a CASE
+    expression rather than a join: zero shuffle, whole-stage codegen,
+    and wrong-typed values become nulls exactly like Datomic's import
+    would reject them.
 
     Output keeps ``v`` and adds one typed column per type class present
     (:func:`typed_columns`).

@@ -20,7 +20,7 @@ import json
 import os
 import time
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass
@@ -28,8 +28,7 @@ class Step:
     """One pipeline stage (runcommand.py:288 ``Step`` namedtuple analog)."""
 
     description: str
-    func: Callable[..., object]
-    kwargs: dict = field(default_factory=dict)
+    func: Callable[[], object]
 
 
 class Pipeline:
@@ -66,20 +65,21 @@ class Pipeline:
             fn(phase, n, step)
 
     # -- execution (process_steps analog, runcommand.py:389-409) --
-    def run(self, context: dict | None = None) -> dict:
-        """Run remaining steps from the cursor.  On step failure the cursor
-        stays (resume semantics); step results accumulate in ``context``."""
+    def run(self) -> list[str]:
+        """Run remaining steps from the cursor and return the descriptions
+        of the steps run.  On step failure the cursor stays (resume
+        semantics)."""
         state = self._load()
         start = state[self.STATE_KEY]
-        ctx = context if context is not None else {}
+        ran = []
         for n, step in enumerate(self.steps[start:], start=start + 1):
             self._emit("start", n, step)
             try:
-                result = step.func(ctx, **step.kwargs)
+                step.func()
             except Exception:
                 self._emit("error", n, step)
                 raise
-            ctx[step.description] = result
+            ran.append(step.description)
             state[self.STATE_KEY] = n
             state["history"].append(
                 {
@@ -91,7 +91,7 @@ class Pipeline:
             )
             self._save(state)
             self._emit("ok", n, step)
-        return ctx
+        return ran
 
     def reset_to_step(self, step_n: int) -> None:
         """runcommand.py:346-387: rewind the cursor (callers also delete

@@ -28,10 +28,19 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
 
 from .catalog import load_table
-from .operators.eav import typed_cast
+from .operators.eav import (
+    apply_patches,
+    card_many_attrs,
+    typed_cast,
+    value_types,
+)
 from .operators.relational import per_class_counts, qa_count_report
 from .sources.ace import ace_records_to_datoms, parse_ace_dump
-from .sources.catalog_files import read_id_catalog, read_models_schema
+from .sources.catalog_files import (
+    MODELS_SCHEMA_DDL,
+    models_schema_rows,
+    read_id_catalog,
+)
 from .sources.edn import parse_edn_log, write_edn_style_log
 
 def _code_version(files: list[str] | None = None) -> str:
@@ -266,15 +275,9 @@ def q_ace_e2e_datoms(spark: SparkSession, sf_dir: str) -> DataFrame:
     real dump text inside the correctness gate (VERDICT r1 item 1).
     """
     dump = _ensure_ace_dump(spark, sf_dir)
-    models = _ensure_models_file(sf_dir)
-    schema_rows = read_models_schema(spark, models, release="WS999").collect()
-    vtypes = {
-        f"{r['class']}/{r['attribute']}": r["value_type"]
-        for r in schema_rows
-        if r["value_type"] in ("long", "double", "date", "timestamp")
-    }
+    schema_rows = models_schema_rows(_ensure_models_file(sf_dir), "WS999")
     datoms = ace_records_to_datoms(parse_ace_dump(spark, dump))
-    typed = typed_cast(datoms, vtypes)
+    typed = typed_cast(datoms, value_types(schema_rows))
     return (
         typed.groupBy("class", "a")
         .agg(
@@ -374,19 +377,14 @@ def q_ace_e2e_patched(spark: SparkSession, sf_dir: str) -> DataFrame:
     (runcommand.py:319-327 analog)."""
     dump = _ensure_ace_dump(spark, sf_dir)
     patches_dir = _ensure_ace_patches(spark, sf_dir)
-    models = _ensure_models_file(sf_dir)
-    schema_rows = read_models_schema(spark, models, release="WS999").collect()
-    card_many = [
-        f"{r['class']}/{r['attribute']}"
-        for r in schema_rows
-        if r["cardinality"] == "many"
-    ]
+    schema_rows = models_schema_rows(_ensure_models_file(sf_dir), "WS999")
     base = ace_records_to_datoms(parse_ace_dump(spark, dump))
     patches = ace_records_to_datoms(parse_ace_dump(spark, patches_dir))
-    from .operators.eav import apply_patches
-
     merged = apply_patches(
-        base, patches, tiebreak_col="v", card_many_attrs=card_many
+        base,
+        patches,
+        tiebreak_col="v",
+        card_many_attrs=card_many_attrs(schema_rows),
     )
     return (
         merged.filter(F.col("class") == "Customer")
@@ -501,24 +499,20 @@ _X2_ATTRS = [
 
 def q_x2_models_schema(spark: SparkSession, sf_dir: str) -> DataFrame:
     """X2 schema install oracled (VERDICT r1 item 4): a models file whose
-    class blocks derive from the nation table → ``read_models_schema`` →
+    class blocks derive from the nation table → ``models_schema_rows`` →
     (class, attribute, value_type, cardinality, release) rows.  Exercises
     the UNIQUE→one / default→many and Text/Float type mappings
     (pseudoace.py:56-66 analog)."""
-    out = _fx(sf_dir, "models_gen")
-    if not _complete(out):
-        nat = load_table(spark, sf_dir, "nation")
-        attr_lines = "".join(
-            f"\n  {name} {decl}" for name, decl, _, _ in _X2_ATTRS
-        )
-        blocks = nat.select(
-            F.concat(
-                F.format_string("?Gene_%s", F.col("n_name")),
-                F.lit(attr_lines),
-            ).alias("value")
-        )
-        blocks.coalesce(1).write.mode("overwrite").text(out)
-    return read_models_schema(spark, out, release="WS290")
+    attr_lines = "".join(f"\n  {name} {decl}" for name, decl, _, _ in _X2_ATTRS)
+    nation = load_table(spark, sf_dir, "nation").select("n_name").collect()
+    out_dir = _fx(sf_dir, "models_gen")
+    os.makedirs(out_dir, exist_ok=True)
+    path = os.path.join(out_dir, "models.wrm")
+    with open(path, "w") as fh:
+        fh.write("".join(f"?Gene_{r.n_name}{attr_lines}\n" for r in nation))
+    return spark.createDataFrame(
+        models_schema_rows(path, release="WS290"), MODELS_SCHEMA_DDL
+    )
 
 
 ORACLE_X2_MODELS = """

@@ -12,6 +12,8 @@
 
 from __future__ import annotations
 
+import gzip
+
 from pyspark.sql import DataFrame, Row, SparkSession
 from pyspark.sql import functions as F
 
@@ -51,12 +53,12 @@ MODELS_SCHEMA_DDL = (
 _SchemaRow = Row("class", "attribute", "value_type", "cardinality", "release")
 
 
-def models_schema_rows(
-    spark: SparkSession, path: str, release: str = ""
-) -> list[Row]:
+def models_schema_rows(path: str, release: str = "") -> list[Row]:
     """X2: simplified annotated-models parser → one driver row per
     attribute (class, attribute, value_type, cardinality, release), the
-    ``MODELS_SCHEMA_DDL`` columns of FIXTURES.md §3.
+    ``MODELS_SCHEMA_DDL`` columns of FIXTURES.md §3.  The file is a few
+    dozen lines, read on the driver (UTF-8, gzip for a ``.gz`` name):
+    no Spark job.
 
     Line grammar (one attribute per line, ``?Class`` headers):
 
@@ -67,10 +69,9 @@ def models_schema_rows(
 
     UNIQUE → cardinality 'one', else 'many' (the ACeDB default).
     """
-    lines = [
-        r.value
-        for r in spark.read.text(path).collect()  # schema files are tiny
-    ]
+    opener = gzip.open if path.endswith(".gz") else open
+    with opener(path, "rt", encoding="utf-8") as fh:
+        lines = fh.readlines()
     rows = []
     cls = None
     for ln in lines:
@@ -95,16 +96,6 @@ def models_schema_rows(
             _SchemaRow(cls, attr, vtype, "one" if unique else "many", release)
         )
     return rows
-
-
-def read_models_schema(
-    spark: SparkSession, path: str, release: str = ""
-) -> DataFrame:
-    """X2: the :func:`models_schema_rows` of a models file as a schema
-    DataFrame (``MODELS_SCHEMA_DDL``)."""
-    return spark.createDataFrame(
-        models_schema_rows(spark, path, release), MODELS_SCHEMA_DDL
-    )
 
 
 def report_to_markdown(report: DataFrame, max_rows: int = 1000) -> str:

@@ -21,32 +21,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import (
-    BooleanType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-    TimestampType,
-)
 
-from ..operators.eav import upsert_patches
+from ..operators.eav import DATOM_DDL, upsert_patches
 from ..plans.txlog import TxTable
-
-DATOM_SCHEMA = StructType(
-    [
-        StructField("e", LongType()),
-        StructField("a", StringType()),
-        StructField("v", StringType()),
-        StructField("tx", TimestampType()),
-        StructField("op", BooleanType()),
-    ]
-)
 
 
 def stream_datoms(spark: SparkSession, log_dir: str) -> DataFrame:
     """Datom-log directory as a streaming source (S8 input side)."""
-    return spark.readStream.schema(DATOM_SCHEMA).parquet(log_dir)
+    return spark.readStream.schema(DATOM_DDL).parquet(log_dir)
 
 
 def import_available_now(

@@ -7,8 +7,8 @@ import gzip
 from pyspark.sql import functions as F
 
 from db_migration_spark.sources.catalog_files import (
+    models_schema_rows,
     read_id_catalog,
-    read_models_schema,
     report_to_markdown,
     write_qa_report_csv,
 )
@@ -59,10 +59,7 @@ def test_id_catalog(spark, tmp_path):
     }
 
 
-def test_models_schema(spark, tmp_path):
-    p = tmp_path / "models.wrm.WS250"
-    p.write_text(
-        """// annotated models
+MODELS = """// annotated models
 ?Gene
   Identity UNIQUE Text
   CGC_name Text
@@ -70,13 +67,28 @@ def test_models_schema(spark, tmp_path):
 ?Protein
   Peptide UNIQUE Text
 """
-    )
-    schema = read_models_schema(spark, str(p), release="WS250").collect()
+
+
+def test_models_schema(tmp_path):
+    p = tmp_path / "models.wrm.WS250"
+    p.write_text(MODELS)
+    schema = models_schema_rows(str(p), release="WS250")
     rows = {(r["class"], r["attribute"]): r for r in schema}
     assert rows[("Gene", "Identity")]["cardinality"] == "one"
     assert rows[("Gene", "CGC_name")]["cardinality"] == "many"
     assert rows[("Gene", "Score")]["value_type"] == "double"
     assert rows[("Protein", "Peptide")]["release"] == "WS250"
+
+
+def test_models_schema_gz_matches_plain(tmp_path):
+    plain = tmp_path / "models.wrm.WS250"
+    plain.write_text(MODELS)
+    packed = tmp_path / "models.wrm.WS250.gz"
+    with gzip.open(packed, "wt") as fh:
+        fh.write(MODELS)
+    rows = models_schema_rows(str(plain), release="WS250")
+    assert len(rows) == 4
+    assert models_schema_rows(str(packed), release="WS250") == rows
 
 
 def test_qa_csv_and_markdown(spark, tmp_path):

@@ -205,6 +205,39 @@ def test_png_codec_all_filter_types_roundtrip():
         assert got == pix, f"filter {ftype}"
 
 
+def test_codec_channel_stats_cover_exactly_the_decoded_pixels():
+    """Every codec decodes to exactly w·h·ch interleaved values, and its
+    channel statistic is the per-channel sum (or mean) of that buffer."""
+    import random
+
+    from db_migration_spark.multimodal import bmp_codec, gif_codec
+    from db_migration_spark.multimodal import jpeg_codec as J
+    from db_migration_spark.multimodal import png_codec, qoi_codec
+
+    w, h = 5, 3
+    rgb = bytes(random.Random(7).randrange(256) for _ in range(w * h * 3))
+    palette = bytes(random.Random(8).randrange(256) for _ in range(12))
+    png = png_codec.encode_png_rgb(w, h, rgb)
+    jpeg = J.encode_jpeg_gray_blocks(2, 1, [40, 200])
+    gif = gif_codec.encode_gif(w, h, palette, bytes(i % 4 for i in range(w * h)))
+    qoi = qoi_codec.encode_qoi(w, h, rgb)
+    bmp = bmp_codec.encode_bmp_rgb(w, h, rgb)
+    cases = [
+        (png_codec.decode_png_pixels(png), png_codec.channel_means(png)),
+        (J.decode_jpeg_pixels(jpeg), J.channel_means(jpeg)),
+        ((w, h, 3, gif_codec.decode_gif(gif)[2]), gif_codec.channel_means(gif)),
+        (qoi_codec.decode_qoi(qoi), qoi_codec.channel_means(qoi)),
+    ]
+    for (dw, dh, ch, pix), means in cases:
+        assert len(pix) == dw * dh * ch
+        assert means == (dw, dh, ch, [sum(pix[c::ch]) / (dw * dh) for c in range(ch)])
+    sums = [sum(rgb[c::3]) for c in range(3)]
+    assert qoi_codec.channel_sums(qoi) == (w, h, sums)
+    dw, dh, ch, pix = bmp_codec.decode_bmp_pixels(bmp)
+    assert len(pix) == dw * dh * ch
+    assert bmp_codec.channel_sums(bmp) == (w, h, 3, sums)
+
+
 def test_png_resize_real_kernel():
     from db_migration_spark.multimodal import png_codec as pc
     from db_migration_spark.multimodal.binary_ops import DeterministicFakeCodec

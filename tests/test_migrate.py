@@ -126,8 +126,7 @@ def test_backup_and_resume(spark, job):
     p = job.pipeline()
     state = p._load()
     assert state["last_step_ok"] == 7
-    ctx = p.run()
-    assert ctx == {}  # nothing re-executed
+    assert p.run() == []  # nothing re-executed
 
 
 def _assert_class_pruned(spark, store_path):
@@ -145,6 +144,23 @@ def _assert_class_pruned(spark, store_path):
     assert "PartitionFilters" in plan
     assert "class" in plan.split("PartitionFilters", 1)[1][:200]
     assert pruned.count() == 3
+
+
+def test_patched_datoms_are_typed(spark, tmp_path):
+    """A patched Float value lands typed like a dumped one: the patches
+    go through the same typed parse (X3) as the dumps."""
+    patch = PATCH + 'Score "4.25" -O "2011-01-01_10:00:01"\n'
+    _write_release(tmp_path, patch=patch)
+    j = _job(spark, tmp_path)
+    j.run()
+    for store in ("datoms_patched", "backup"):
+        scores = {
+            r["v"]: r["v_double"]
+            for r in j._read_store(store).collect()
+            if r["a"] == "Gene/Score"
+        }
+        # Score is card-many: the patch value joins the dumped one
+        assert scores == {"3.5": 3.5, "4.25": 4.25}, store
 
 
 def test_store_partition_pruning(spark, job):
@@ -267,17 +283,20 @@ def _run_per_step(spark, j) -> dict:
 
 def test_release_job_budget(spark, job, tmp_path):
     """The fixture release's Spark jobs, step by step: each dump record
-    is parsed once, no step infers a store schema, the backup is a file
-    copy with no Spark job, and the release stays within 15 jobs."""
+    is parsed once, no step infers a store schema, the models file is
+    read on the driver (install-schema's one job is its table write),
+    the backup is a file copy with no Spark job, and the release stays
+    within 12 jobs."""
     j = _job(spark, Path(job.dumps_path).parent, workspace=tmp_path / "ws")
     steps = _run_per_step(spark, j)
+    assert steps["install-schema"]["jobs"] == 1
     assert steps["backup"]["jobs"] == 0
     assert {s: v["outside_sql"] for s, v in steps.items() if v["outside_sql"]} == {}
     # 5 dump records + 1 patch record, each through the parser once
     assert steps["dump-to-datoms"]["parsed"] == 5
     assert steps["merge-patches"]["parsed"] == 1
     assert sum(v["parsed"] for v in steps.values()) == 6
-    assert sum(v["jobs"] for v in steps.values()) <= 15, steps
+    assert sum(v["jobs"] for v in steps.values()) <= 12, steps
     backup = sorted(j._read_store("backup").collect())
     assert len(backup) == 5
     assert backup == sorted(j._read_store("datoms_patched").collect())

@@ -9,6 +9,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from db_migration_spark.catalog import load_table
+from db_migration_spark.operators.eav import DATOM_DDL
 from db_migration_spark.plans.pipeline import Pipeline, Step
 from db_migration_spark.streaming import import_stream as st
 
@@ -73,7 +74,7 @@ def test_late_patch_merge_and_compaction(spark, tmp_path):
 
     def drain(ckpt):
         q = st.late_patch_merge(
-            spark.readStream.schema(st.DATOM_SCHEMA).parquet(str(patch_src)),
+            spark.readStream.schema(DATOM_DDL).parquet(str(patch_src)),
             str(base_dir),
             str(tmp_path / ckpt),
         )
@@ -147,41 +148,33 @@ def test_session_window_runs(spark, sf_dir, tmp_path):
 def test_pipeline_resume_and_reset(tmp_path):
     manifest = str(tmp_path / "manifest.json")
     calls = []
-
-    def ok(ctx, tag):
-        calls.append(tag)
-        return tag
-
     boom = {"fail": True}
 
-    def flaky(ctx):
-        calls.append("flaky")
-        if boom["fail"]:
-            raise RuntimeError("transient")
-        return "done"
+    def step(tag):
+        def run():
+            calls.append(tag)
+            if tag == "two" and boom["fail"]:
+                raise RuntimeError("transient")
 
-    steps = [
-        Step("one", ok, {"tag": "one"}),
-        Step("two", flaky),
-        Step("three", ok, {"tag": "three"}),
-    ]
-    p = Pipeline(steps, manifest)
+        return Step(tag, run)
+
+    p = Pipeline([step("one"), step("two"), step("three")], manifest)
     events = []
     p.add_listener(lambda phase, n, s: events.append((phase, n)))
 
     with pytest.raises(RuntimeError):
         p.run()
-    assert calls == ["one", "flaky"]
+    assert calls == ["one", "two"]
     assert ("error", 2) in events
 
     boom["fail"] = False
-    ctx = p.run()  # resumes at step two; step one NOT re-run
-    assert calls == ["one", "flaky", "flaky", "three"]
-    assert ctx["two"] == "done"
+    # resumes at step two; step one NOT re-run
+    assert p.run() == ["two", "three"]
+    assert calls == ["one", "two", "two", "three"]
+    assert ("ok", 3) in events
 
     p.reset_to_step(2)
-    p.run()
-    assert calls.count("three") == 2  # steps 2-3 re-ran, step 1 didn't
+    assert p.run() == ["two", "three"]  # steps 2-3 re-ran, step 1 didn't
     assert calls.count("one") == 1
 
 
@@ -192,7 +185,7 @@ def test_notifications_listener(tmp_path):
 
     log = tmp_path / "notify.jsonl"
     listener = step_listener(log_path=str(log))
-    steps = [Step("alpha", lambda ctx: "ok")]
+    steps = [Step("alpha", lambda: "ok")]
     p = Pipeline(steps, str(tmp_path / "m.json"))
     p.add_listener(listener)
     p.run()
@@ -210,7 +203,6 @@ def test_stream_dedup_drops_redelivered_keys(spark, tmp_path):
     import datetime
 
     from db_migration_spark.streaming.import_stream import (
-        DATOM_SCHEMA,
         stream_dedup,
         stream_datoms,
     )
@@ -225,7 +217,7 @@ def test_stream_dedup_drops_redelivered_keys(spark, tmp_path):
         (2, "doc/fp", "BBB", t, True),
         (3, "doc/fp", "AAA", t, True),          # same fp, other entity
     ]
-    spark.createDataFrame(rows, DATOM_SCHEMA).write.parquet(src)
+    spark.createDataFrame(rows, DATOM_DDL).write.parquet(src)
     deduped = stream_dedup(stream_datoms(spark, src), ["a", "v"])
     q = (
         deduped.writeStream.trigger(availableNow=True)
@@ -245,7 +237,6 @@ def test_streaming_class_counts_update_mode(spark, tmp_path):
     import datetime
 
     from db_migration_spark.streaming.import_stream import (
-        DATOM_SCHEMA,
         stream_datoms,
         streaming_class_counts,
     )
@@ -259,7 +250,7 @@ def test_streaming_class_counts_update_mode(spark, tmp_path):
         (1, "Gene", "c", t, True),
         (3, "Protein", "d", t, True),
     ]
-    spark.createDataFrame(rows, DATOM_SCHEMA).write.parquet(src)
+    spark.createDataFrame(rows, DATOM_DDL).write.parquet(src)
     counts = streaming_class_counts(stream_datoms(spark, src))
     q = (
         counts.writeStream.trigger(availableNow=True)
