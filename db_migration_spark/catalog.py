@@ -14,6 +14,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .session import DEFAULT_CPUS
+
 TABLES = (
     "region",
     "nation",
@@ -69,7 +71,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         elif ts_type == "timestamp_ntz":
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
     if name in _SPREAD_TABLES:
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
         # Single-file inputs smaller than maxPartitionBytes scan as one
         # split; spread them (cheap file-size probe, no plan analysis).
         # Why not lower spark.sql.files.maxPartitionBytes instead (the
@@ -83,7 +84,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # files) it never fires.
         path = os.path.join(sf_dir, f"{name}.parquet")
         if os.path.isfile(path) and os.path.getsize(path) < 128 * 1024 * 1024:
-            df = df.repartition(cpus)
+            df = df.repartition(DEFAULT_CPUS)
     return df
 
 

@@ -7,25 +7,32 @@ patches → QA report → backup.  Steps 2-4 are acquisition/compression of
 text the engine now reads directly; the remaining dataflow steps map 1:1
 onto the operator library:
 
-    reference step (boundary)          engine stage (native)
-    ---------------------------------  -----------------------------------
-    create-database + models (X2)      models_schema_rows (a driver read of
-                                       the models file) → schema table
-    acedump-to-edn-logs (X1)           parse_ace_dump → ace_records_to_datoms
-    prepare-import (X3)                typed_cast per the installed schema
-    sort-edn-logs (T1)                 repartitionByRange(class, tx) + sortWithin
-                                       over the persisted parse: dumps parsed once
-    import-logs (S8)                   batch parquet write, partitioned by class
-    apply-patches (X4)                 patches parsed and typed (X1+X3) like
-                                       the dumps → apply_patches merge
-    homol-import (X5)                  class-subset filter → second store
-    qa-report (X6 = A1 ⋈ J1)           per_class_counts ⋈ id_catalog → CSV
-    backup-db (S9)                     file-level snapshot (snapshot_store)
+    reference step (boundary)      engine stage (native)                      Spark jobs
+    -----------------------------  -----------------------------------------  ----------
+    create-database + models (X2)  models_schema_rows (a driver read of           0
+                                   the models file) → schema table, a
+                                   driver pyarrow write
+    acedump-to-edn-logs (X1)       parse_ace_dump → ace_records_to_datoms         4
+    prepare-import (X3)            typed_cast per the installed schema
+    sort-edn-logs (T1)             repartitionByRange(class, tx) +
+                                   sortWithinPartitions over the persisted
+                                   parse: dumps parsed once
+    import-logs (S8)               batch parquet write, partitioned by class
+    apply-patches (X4)             patches parsed and typed (X1+X3) like          2
+                                   the dumps → apply_patches merge
+    homol-import (X5)              file-level snapshot of the homology            0
+                                   classes' partitions (snapshot_store)
+    qa-report (X6 = A1 ⋈ J1)       per_class_counts collected (one query)       ≤ 3
+                                   ⋈ id catalog on the driver
+                                   (qa_report_rows) → one quoted CSV
+    backup-db (S9)                 file-level snapshot (snapshot_store)           0
 
 Every step reads the store with the schema it was written with
 (``datom_store_schema`` of the installed models schema, whose rows the
-job keeps on the driver), so no read launches a footer-inference job;
-the backup copies files and launches no Spark job at all.  The store's
+job keeps on the driver), so no read launches a footer-inference job.
+The tables of a handful of rows — the schema table, the id catalog and
+the QA report — are read and written on the driver, and the homology
+store and backup copy files: a release runs 9 Spark jobs.  The store's
 columns, typed casts and card-many set all come from ``operators.eav``.
 
 Resume semantics come from plans.Pipeline (durable JSON cursor — the
@@ -37,6 +44,7 @@ from __future__ import annotations
 
 import os
 import shutil
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -45,18 +53,18 @@ from .operators.eav import (
     apply_patches,
     card_many_attrs,
     datom_store_schema,
-    homology_split,
     typed_cast,
     value_types,
 )
-from .operators.relational import per_class_counts, qa_count_report
-from .plans.pipeline import Pipeline, Step
+from .operators.relational import per_class_counts, qa_report_rows
+from .plans.pipeline import Pipeline, Step, publish_dir
 from .sources.ace import ace_records_to_datoms, parse_ace_dump
 from .sources.catalog_files import (
-    MODELS_SCHEMA_DDL,
     models_schema_rows,
     read_id_catalog,
+    read_schema_rows,
     write_qa_report_csv,
+    write_schema_table,
 )
 
 
@@ -92,9 +100,10 @@ class MigrationJob:
 
     def _schema_rows(self) -> list:
         """The installed models schema (X2) as driver rows — kept from
-        install-schema, or read once by a job that resumes past it."""
+        install-schema, or read once on the driver by a job that resumes
+        past it."""
         if self._schema is None:
-            self._schema = read_schema_rows(self.spark, self._path("schema"))
+            self._schema = read_schema_rows(self._path("schema"))
         return self._schema
 
     def _read_store(self, name: str) -> DataFrame:
@@ -117,11 +126,9 @@ class MigrationJob:
 
     def install_schema(self) -> None:
         """X2 create-database analog: per-release schema table, parsed
-        from the models file on the driver; its write is the one job."""
+        from the models file and written on the driver — no Spark job."""
         self._schema = models_schema_rows(self.models_path, self.release)
-        self.spark.createDataFrame(self._schema, MODELS_SCHEMA_DDL).write.mode(
-            "overwrite"
-        ).parquet(self._path("schema"))
+        write_schema_table(self._schema, self._path("schema"))
 
     def dump_to_datoms(self) -> str:
         """X1+X3: parse dumps → datoms, typed per schema, T1-sorted into
@@ -171,21 +178,28 @@ class MigrationJob:
 
     def homol_split(self) -> str:
         """X5: second store for homology classes (the '<release>-homol' DB,
-        runcommand.py:439-461)."""
-        out = self._path("homol")
-        homology_split(
-            self._read_store("datoms_patched"), self.homol_classes
-        ).write.mode("overwrite").parquet(out)
+        runcommand.py:439-461) — a file-level snapshot of their
+        ``class=<c>`` partitions of the final store, no Spark job.  A
+        release with no homology rows publishes an empty store."""
+        src, out = self._path("datoms_patched"), self._path("homol")
+        wanted = set(self.homol_classes)
+        # partition directory names are the class values path-escaped
+        parts = [
+            p for p in os.listdir(src)
+            if p.startswith("class=") and unquote(p[len("class="):]) in wanted
+        ]
+        snapshot_store(src, out, parts)
         return out
 
-    def qa_report(self) -> DataFrame:
+    def qa_report(self) -> list:
         """X6: per-class entity counts ⋈ expected id catalog → quoted CSV
-        (the reference's human gate before backup, runcommand.py:188-203)."""
+        (the reference's human gate before backup, runcommand.py:188-203).
+        The counts are the one Spark query; both sides are O(#classes)
+        rows, so the reconcile and the CSV run on the driver."""
         actual = per_class_counts(
             self._read_store("datoms_patched"), "class", entity_col="e"
-        )
-        expected = read_id_catalog(self.spark, self.catalog_path)
-        report = qa_count_report(actual, expected)
+        ).collect()
+        report = qa_report_rows(actual, read_id_catalog(self.catalog_path))
         write_qa_report_csv(report, self._path("qa_report"))
         return report
 
@@ -214,12 +228,6 @@ class MigrationJob:
         return self.pipeline().run()
 
 
-def read_schema_rows(spark: SparkSession, path: str) -> list:
-    """An installed models schema table (X2) as driver rows, read with
-    its fixed DDL.  O(#attributes) metadata."""
-    return spark.read.schema(MODELS_SCHEMA_DDL).parquet(path).collect()
-
-
 def read_store(spark: SparkSession, path: str, schema_rows: list) -> DataFrame:
     """The datom store at ``path`` read with the schema it was written
     with (:func:`datom_store_schema` of the installed ``schema_rows``):
@@ -229,17 +237,23 @@ def read_store(spark: SparkSession, path: str, schema_rows: list) -> DataFrame:
     ).parquet(path)
 
 
-def snapshot_store(src: str, dst: str) -> None:
+def snapshot_store(src: str, dst: str, partitions: list[str] | None = None) -> None:
     """Byte-level snapshot of the committed store directory ``src`` at
     ``dst`` — the datomic ``backup-db`` analog: its files are copied,
-    never decoded and re-encoded.  The copy lands in a temp sibling that
-    is renamed into place, so a crash never leaves a half snapshot at
+    never decoded and re-encoded.  With ``partitions`` (directory names
+    under ``src``, e.g. ``class=Gene``) only those partitions are copied,
+    beside ``src``'s top-level files.  The copy is published in one
+    rename (``publish_dir``), so a crash never leaves a half snapshot at
     ``dst``."""
-    tmp = dst + ".tmp"
-    shutil.rmtree(tmp, ignore_errors=True)
-    shutil.copytree(src, tmp)
-    shutil.rmtree(dst, ignore_errors=True)
-    os.replace(tmp, dst)
+    def skip(d: str, names: list[str]) -> list[str]:
+        if partitions is None or d != src:
+            return []
+        return [
+            n for n in names
+            if n not in partitions and os.path.isdir(os.path.join(d, n))
+        ]
+
+    publish_dir(dst, lambda tmp: shutil.copytree(src, tmp, ignore=skip))
 
 
 def materialize_wide(
@@ -266,7 +280,7 @@ def materialize_wide(
     information."""
     from .operators.eav import pivot_multi, to_attr_multimap
 
-    schema_rows = read_schema_rows(spark, schema_path)
+    schema_rows = read_schema_rows(schema_path)
     many = set(card_many_attrs(schema_rows))
     by_class: dict[str, list[str]] = {}
     for attr in value_types(schema_rows):

@@ -14,7 +14,7 @@ beyond the agg itself, and the agg output is already small.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 
@@ -57,6 +57,32 @@ def qa_count_report(
         .coalesce(1)
         .sortWithinPartitions(F.desc(actual_count_col), F.col(class_col))
     )
+
+
+QA_REPORT_COLUMNS = ("class_name", "actual_count", "expected_count", "diff", "matches")
+_QaRow = Row(*QA_REPORT_COLUMNS)
+
+
+def qa_report_rows(actual: list, expected: list) -> list[Row]:
+    """:func:`qa_count_report` on the driver, for inputs that are already
+    O(#classes) rows — ``actual`` (class_name, actual_count) as
+    :func:`per_class_counts` collects, ``expected`` (class_name,
+    expected_count) as the id catalog reads — with the same rules and
+    the same row order: a missing side counts 0, ``diff`` is actual
+    minus expected, ``matches`` is ``diff == 0``, and the rows run by
+    descending actual count, then class name (the reference builds its
+    report the same way in plain Python, ``util.py:81-86``).  Like the
+    full outer join, a catalog class listed twice yields two rows."""
+    counts = {cls: n for cls, n in actual}
+    listed = set()
+    rows = []
+    for cls, want in expected:
+        listed.add(cls)
+        rows.append((cls, counts.get(cls, 0), 0 if want is None else want))
+    rows += [(cls, n, 0) for cls, n in counts.items() if cls not in listed]
+    # Spark's ascending order puts a NULL class first
+    rows.sort(key=lambda r: (-r[1], r[0] is not None, r[0] or ""))
+    return [_QaRow(cls, got, want, got - want, got == want) for cls, got, want in rows]
 
 
 def per_class_counts(

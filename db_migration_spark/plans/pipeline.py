@@ -12,12 +12,15 @@ Engine mapping: steps are Python callables producing Spark jobs; the cursor
 is a JSON manifest (idempotent stage-output paths do the heavy lifting —
 a re-run of a completed stage is a no-op existence check, the reference's
 own re-entrancy trick, changelog 0.25).  Listeners replace Slack webhooks.
+A stage output the driver writes itself lands through :func:`publish_dir`
+(temp sibling, then one rename), so a crash never leaves half of it.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import shutil
 import time
 from collections.abc import Callable
 from dataclasses import dataclass
@@ -107,3 +110,15 @@ class Pipeline:
         """clean-previous-state analog (runcommand.py:258-280)."""
         if os.path.exists(self.manifest_path):
             os.remove(self.manifest_path)
+
+
+def publish_dir(dst: str, write: Callable[[str], object]) -> None:
+    """Publish a driver-written stage output at ``dst``: ``write(tmp)``
+    fills the directory ``tmp`` (a fresh temp sibling of ``dst``, which
+    it creates), then ``tmp`` replaces ``dst`` in one rename — so a crash
+    leaves either the old output or the new one, never half of it."""
+    tmp = dst + ".tmp"
+    shutil.rmtree(tmp, ignore_errors=True)
+    write(tmp)
+    shutil.rmtree(dst, ignore_errors=True)
+    os.replace(tmp, dst)

@@ -438,7 +438,9 @@ def q_ace_e2e_qa(spark: SparkSession, sf_dir: str) -> DataFrame:
     catalog = _ensure_id_catalog(spark, sf_dir)
     datoms = ace_records_to_datoms(parse_ace_dump(spark, dump))
     actual = per_class_counts(datoms, "class", entity_col="e")
-    expected = read_id_catalog(spark, catalog)
+    expected = spark.createDataFrame(
+        read_id_catalog(catalog), "class_name STRING, expected_count BIGINT"
+    )
     return qa_count_report(actual, expected)
 
 

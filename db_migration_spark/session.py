@@ -18,10 +18,13 @@ import os
 
 from pyspark.sql import SparkSession
 
-# One shuffle partition per local core is right for local[32] test runs; on a
-# real cluster AQE coalescing makes the initial number mostly irrelevant as
-# long as it is not too small, so we set a high ceiling and let AQE shrink.
-DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# The local core count: ``SPARK_GRAFT_CPUS`` when set, else the cores this
+# process may run on — a host-sized local[N] and one shuffle partition per
+# core.  On a real cluster AQE coalescing makes the initial partition number
+# mostly irrelevant as long as it is not too small.
+DEFAULT_CPUS = int(
+    os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+)
 
 # The engine's root: the directory holding db_migration_spark/ and the
 # Python worker entry pyspark_graft_worker.py.

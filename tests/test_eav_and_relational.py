@@ -99,6 +99,39 @@ def test_qa_count_report_missing_classes(spark):
     assert rows["Protein"]["matches"] is False
 
 
+def test_qa_report_rows_agree_with_qa_count_report(spark, tmp_path):
+    """The driver report (the release's qa-report step) and the Spark
+    report (the declared x6 query) apply the same rules: a class only in
+    the counts, classes only in the catalog, count ties broken by class
+    name — identical rows in identical order, and the driver CSV is
+    byte for byte Spark's quoteAll + header CSV of the same rows."""
+    from pathlib import Path
+
+    from db_migration_spark.sources.catalog_files import write_qa_report_csv
+
+    actual = [("Gene", 3), ("Protein", 2), ("Homology_group", 2), ("Orphan", 1),
+              ('Odd"Class', 1), ("Back\\slash", 4)]
+    expected = [("Gene", 3), ("Protein", 1), ("Homology_group", 2),
+                ("Variation", 5), ("Allele", 7), ("Ünï,code", 2), ("Back\\slash", 4)]
+    report = relational.qa_count_report(
+        spark.createDataFrame(actual, "class_name STRING, actual_count BIGINT"),
+        spark.createDataFrame(expected, "class_name STRING, expected_count BIGINT"),
+    )
+    rows = relational.qa_report_rows(actual, expected)
+    assert [r.asDict() for r in rows] == [r.asDict() for r in report.collect()]
+    assert [r["class_name"] for r in rows][:3] == ["Back\\slash", "Gene", "Homology_group"]
+
+    def csv_bytes(out: Path) -> bytes:
+        (part,) = out.glob("*.csv")
+        return part.read_bytes()
+
+    report.coalesce(1).write.option("header", True).option("quoteAll", True).csv(
+        str(tmp_path / "spark")
+    )
+    write_qa_report_csv(rows, str(tmp_path / "driver"))
+    assert csv_bytes(tmp_path / "driver") == csv_bytes(tmp_path / "spark")
+
+
 def test_homology_split(spark):
     datoms = _datoms(
         spark, [(1, "a", "v", TS(2020, 1, 1), True)]

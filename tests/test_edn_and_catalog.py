@@ -7,10 +7,13 @@ import gzip
 from pyspark.sql import functions as F
 
 from db_migration_spark.sources.catalog_files import (
+    MODELS_SCHEMA_DDL,
     models_schema_rows,
     read_id_catalog,
+    read_schema_rows,
     report_to_markdown,
     write_qa_report_csv,
+    write_schema_table,
 )
 from db_migration_spark.sources.edn import parse_edn_log, write_edn_style_log
 
@@ -47,11 +50,11 @@ def test_edn_roundtrip(spark, tmp_path):
     assert sorted(map(key, back)) == sorted(map(key, orig))
 
 
-def test_id_catalog(spark, tmp_path):
+def test_id_catalog(tmp_path):
     p = tmp_path / "all_classes_report.WS250.txt.gz"
     with gzip.open(p, "wt") as fp:
         fp.write("Gene 48231\nProtein 28314\n\nVariation 812345\n")
-    cat = read_id_catalog(spark, str(p)).collect()
+    cat = read_id_catalog(str(p))
     assert {(r["class_name"], r["expected_count"]) for r in cat} == {
         ("Gene", 48231),
         ("Protein", 28314),
@@ -89,6 +92,26 @@ def test_models_schema_gz_matches_plain(tmp_path):
     rows = models_schema_rows(str(plain), release="WS250")
     assert len(rows) == 4
     assert models_schema_rows(str(packed), release="WS250") == rows
+
+
+def test_schema_table_reads_like_the_ddl(spark, tmp_path):
+    """The driver's schema-table read gives the rows Spark reads with
+    MODELS_SCHEMA_DDL: for the driver-written table, and for a
+    Spark-written one that lacks columns (they read as NULL)."""
+    p = tmp_path / "models.wrm.WS250"
+    p.write_text(MODELS)
+    rows = models_schema_rows(str(p), release="WS250")
+    installed = str(tmp_path / "schema")
+    write_schema_table(rows, installed)
+    assert read_schema_rows(installed) == rows
+    assert spark.read.schema(MODELS_SCHEMA_DDL).parquet(installed).collect() == rows
+    partial = str(tmp_path / "partial")
+    spark.createDataFrame(
+        [("lineitem", "flags", "many")], ["class", "attribute", "cardinality"]
+    ).write.parquet(partial)
+    assert read_schema_rows(partial) == (
+        spark.read.schema(MODELS_SCHEMA_DDL).parquet(partial).collect()
+    )
 
 
 def test_qa_csv_and_markdown(spark, tmp_path):

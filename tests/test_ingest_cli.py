@@ -559,3 +559,24 @@ def test_cli_ann_repair_graph(spark, tmp_path):
         expect_fail=True,
     )
     assert "stream-MV store root" in err
+
+
+def test_cpu_default_is_host_sized_when_unset():
+    """Without SPARK_GRAFT_CPUS the local core count — local[N], the
+    shuffle partitions and the table spread — is the cores this process
+    may run on, defined once in session.py."""
+    env = {k: v for k, v in os.environ.items() if k != "SPARK_GRAFT_CPUS"}
+    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env["PYTHONPATH"] = repo_root
+    proc = subprocess.run(
+        [
+            sys.executable, "-c",
+            "import os; from db_migration_spark import catalog, session; "
+            "print(session.DEFAULT_CPUS, catalog.DEFAULT_CPUS, "
+            "len(os.sched_getaffinity(0)))",
+        ],
+        capture_output=True, text=True, timeout=120, env=env, cwd=repo_root,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    session_cpus, catalog_cpus, host_cpus = proc.stdout.split()
+    assert session_cpus == catalog_cpus == host_cpus

@@ -117,6 +117,12 @@ def test_qa_report_diff(spark, job):
 def test_homology_store(spark, job):
     homol = spark.read.parquet(job._path("homol"))
     assert {r["class"] for r in homol.collect()} == {"Homology_group"}
+    # a file-level copy of the store's class partition, rows unchanged
+    assert {p.name for p in Path(job._path("homol")).glob("class=*")} == {
+        "class=Homology_group"
+    }
+    want = job._read_store("datoms_patched").filter("class = 'Homology_group'")
+    assert sorted(job._read_store("homol").collect()) == sorted(want.collect())
 
 
 def test_backup_and_resume(spark, job):
@@ -283,20 +289,24 @@ def _run_per_step(spark, j) -> dict:
 
 def test_release_job_budget(spark, job, tmp_path):
     """The fixture release's Spark jobs, step by step: each dump record
-    is parsed once, no step infers a store schema, the models file is
-    read on the driver (install-schema's one job is its table write),
-    the backup is a file copy with no Spark job, and the release stays
-    within 12 jobs."""
+    is parsed once, no step infers a store schema, the schema table,
+    the homology store and the backup take no Spark job (a driver write
+    and two file snapshots), the QA report is one aggregate query, and
+    the release stays within 9 jobs."""
     j = _job(spark, Path(job.dumps_path).parent, workspace=tmp_path / "ws")
     steps = _run_per_step(spark, j)
-    assert steps["install-schema"]["jobs"] == 1
+    assert steps["install-schema"]["jobs"] == 0
+    assert steps["dump-to-datoms"]["jobs"] == 4
+    assert steps["merge-patches"]["jobs"] == 2
+    assert steps["homol-split"]["jobs"] == 0
+    assert steps["qa-report"]["jobs"] <= 3
     assert steps["backup"]["jobs"] == 0
     assert {s: v["outside_sql"] for s, v in steps.items() if v["outside_sql"]} == {}
     # 5 dump records + 1 patch record, each through the parser once
     assert steps["dump-to-datoms"]["parsed"] == 5
     assert steps["merge-patches"]["parsed"] == 1
     assert sum(v["parsed"] for v in steps.values()) == 6
-    assert sum(v["jobs"] for v in steps.values()) <= 12, steps
+    assert sum(v["jobs"] for v in steps.values()) <= 9, steps
     backup = sorted(j._read_store("backup").collect())
     assert len(backup) == 5
     assert backup == sorted(j._read_store("datoms_patched").collect())
@@ -304,11 +314,24 @@ def test_release_job_budget(spark, job, tmp_path):
 
 def test_resumed_job_reads_the_installed_schema(spark, job, tmp_path):
     """A fresh job resuming after install-schema and dump-to-datoms
-    takes the schema from the installed table and rebuilds the same
-    store."""
+    takes the schema from the installed table — a driver read that
+    launches no Spark job — and rebuilds the same store."""
+    from db_migration_spark.sources.catalog_files import models_schema_rows
+
     inputs = Path(job.dumps_path).parent
     _job(spark, inputs, workspace=tmp_path / "ws").run()
     resumed = _job(spark, inputs, workspace=tmp_path / "ws")
+    sc = spark.sparkContext
+    group = f"schema-read-{id(resumed)}"
+    sc.setJobGroup(group, group)
+    try:
+        schema = resumed._schema_rows()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert schema == models_schema_rows(resumed.models_path, "WS299")
     before = sorted(resumed._read_store("datoms_patched").collect())
     pipeline = resumed.pipeline()
     pipeline.reset_to_step(4)  # merge-patches onward
