@@ -14,10 +14,10 @@ onto the operator library:
                                    driver pyarrow write
     acedump-to-edn-logs (X1)       parse_ace_dump → ace_records_to_datoms         4
     prepare-import (X3)            typed_cast per the installed schema
-    sort-edn-logs (T1)             repartitionByRange(class, tx) +
-                                   sortWithinPartitions over the persisted
-                                   parse: dumps parsed once
-    import-logs (S8)               batch parquet write, partitioned by class
+    sort-edn-logs (T1)             eav.tx_sorted(typed, "class") over the
+                                   persisted parse: dumps parsed once
+    import-logs (S8)               the same step's one batch parquet write,
+                                   partitioned by class
     apply-patches (X4)             patches parsed and typed (X1+X3) like          2
                                    the dumps → apply_patches merge
     homol-import (X5)              file-level snapshot of the homology            0
@@ -53,6 +53,7 @@ from .operators.eav import (
     apply_patches,
     card_many_attrs,
     datom_store_schema,
+    tx_sorted,
     typed_cast,
     value_types,
 )
@@ -137,20 +138,17 @@ class MigrationJob:
         typed = self._datoms(self.dumps_path).persist()
         # Store layout for scale: hive-partitioned by class (per-class QA
         # counts, homology splits and per-class pivots prune to their
-        # directories), range-clustered so each class's files cover
-        # disjoint tx ranges and are tx-sorted inside — the per-class
-        # analog of the reference's globally sorted EDN import (T1), with
-        # no single-task global sort anywhere.  The range sort samples
-        # its input before the write reads it: the persist makes the
-        # sample parse the dumps and the write read the parsed datoms.
+        # directories), T1-sorted with class leading the range key so
+        # each class's files cover disjoint tx ranges and are tx-sorted
+        # inside — the per-class analog of the reference's globally
+        # sorted EDN import, with no single-task global sort anywhere.
+        # The range sort samples its input before the write reads it:
+        # the persist makes the sample parse the dumps and the write
+        # read the parsed datoms.
         try:
-            (
-                typed.repartitionByRange(F.col("class"), F.col("tx"))
-                .sortWithinPartitions("class", "tx")
-                .write.mode("overwrite")
-                .partitionBy("class")
-                .parquet(out)
-            )
+            tx_sorted(typed, "class").write.mode("overwrite").partitionBy(
+                "class"
+            ).parquet(out)
         finally:
             typed.unpersist()
         return out

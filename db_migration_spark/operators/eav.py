@@ -317,19 +317,24 @@ def upsert_patches(patches: DataFrame, partition_col: str | None = None):
     return transform
 
 
-def tx_sorted_writer(datoms: DataFrame, partitions: int | None = None):
-    """T1/S8: the load-bearing timestamp sort before import
+def tx_sorted(
+    datoms: DataFrame, *cluster: str, partitions: int | None = None
+) -> DataFrame:
+    """T1: the load-bearing timestamp sort before import
     (``pseudoace.py:87-95``, ``runcommand.py:180-185``).
 
-    ``repartitionByRange('tx')`` + ``sortWithinPartitions`` reproduces the
-    reference's per-file-parallel external sort: globally range-ordered
-    partitions, each internally sorted, written in parallel — no single-task
-    bottleneck.  Returns a DataFrameWriter; caller picks format/path.
+    ``repartitionByRange(*cluster, 'tx')`` + ``sortWithinPartitions``
+    reproduces the reference's per-file-parallel external sort: globally
+    range-ordered partitions, each internally sorted, written in
+    parallel — no single-task bottleneck.  ``cluster`` columns lead the
+    key (the release store clusters by ``class``, so each class's files
+    cover disjoint tx ranges); ``partitions`` fixes the range count,
+    else ``spark.sql.shuffle.partitions`` under AQE.
     """
-    parts = datoms.repartitionByRange(
-        *( [partitions] if partitions else [] ), F.col("tx")
-    ).sortWithinPartitions("tx")
-    return parts.write
+    keys = (*cluster, "tx")
+    return datoms.repartitionByRange(
+        *([partitions] if partitions else []), *keys
+    ).sortWithinPartitions(*keys)
 
 
 def homology_split(datoms: DataFrame, homol_classes: list[str]) -> DataFrame:
@@ -598,37 +603,32 @@ def apply_cas(
     return apply_patches(base, matched, tiebreak_col=tiebreak_col)
 
 
-INDEXES = ("eavt", "aevt", "avet", "vaet")
-
-
 def write_indexes(
     datoms: DataFrame,
     root: str,
     ref_attrs: list[str] | None = None,
     partitions: int = 8,
 ) -> None:
-    """Datomic's four covering indexes as Parquet layouts — the storage
-    architecture that makes every access path a pruned scan:
+    """Datomic's covering indexes that have readers, as Parquet layouts
+    — each access path is a pruned scan:
 
-    * ``eavt/`` — range-partitioned by ``e``, rows sorted (e, a, tx):
-      entity lookup touches one partition, attributes arrive clustered.
     * ``aevt/`` — hive-partitioned by ``a``: per-attribute column scans
-      (the analytics path) prune to one directory.
+      (the analytics path, ``q_datalog_indexed``) prune to one
+      directory.
     * ``avet/`` — hive-partitioned by ``a``, sorted by ``v`` within
-      files: value/range lookup on an attribute = one directory + a
-      pushed ``v`` predicate over sorted row groups (Datomic's AVET
-      exists only for indexed attrs; here every attr gets one — storage
-      is cheap relative to a 100 TB re-sort later).
+      files: value/range lookup on an attribute (:func:`avet_lookup`)
+      = one directory + a pushed ``v`` predicate over sorted row groups
+      (Datomic's AVET exists only for indexed attrs; here every attr
+      gets one — storage is cheap relative to a 100 TB re-sort later).
     * ``vaet/`` — ref datoms only (``ref_attrs``), partitioned by ``a``
       with ``v`` cast to the entity id: reverse navigation ("who points
-      at e?") without scanning non-ref attributes.
+      at e?", :func:`vaet_reverse_lookup`) without scanning non-ref
+      attributes.
 
-    All four are plain ``partitionBy``/``repartitionByRange`` writes —
-    no global single-task sort; each index parallelizes by its own key.
+    Datomic's EAVT (entity lookup) has no reader here, so it is not
+    written.  All three are plain ``partitionBy`` writes — no global
+    single-task sort; each index parallelizes by its own key.
     """
-    datoms.repartitionByRange(partitions, "e").sortWithinPartitions(
-        "e", "a", "tx"
-    ).write.mode("overwrite").parquet(f"{root}/eavt")
     datoms.repartition(partitions, "a").write.partitionBy("a").mode(
         "overwrite"
     ).parquet(f"{root}/aevt")

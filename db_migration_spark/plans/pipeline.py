@@ -115,8 +115,10 @@ class Pipeline:
 def publish_dir(dst: str, write: Callable[[str], object]) -> None:
     """Publish a driver-written stage output at ``dst``: ``write(tmp)``
     fills the directory ``tmp`` (a fresh temp sibling of ``dst``, which
-    it creates), then ``tmp`` replaces ``dst`` in one rename — so a crash
-    leaves either the old output or the new one, never half of it."""
+    it creates), then the old ``dst`` is removed and ``tmp`` renamed into
+    its place.  ``dst`` never holds half an output; a crash between the
+    removal and the rename leaves no ``dst`` at all, and a rerun of the
+    step (its pipeline cursor has not advanced) republishes it."""
     tmp = dst + ".tmp"
     shutil.rmtree(tmp, ignore_errors=True)
     write(tmp)

@@ -904,9 +904,10 @@ GROUP BY o_orderstatus
 
 
 def _ensure_index_store(spark: SparkSession, sf_dir: str) -> str:
-    """Build the four-index store (eav.write_indexes) once per sf —
-    content-deterministic from the parquet tables, so it is built once
-    (``_build_once``) and served thereafter."""
+    """Build the index store (eav.write_indexes: the AEVT, AVET and
+    VAET layouts) once per sf — content-deterministic from the parquet
+    tables, so it is built once (``_build_once``) and served
+    thereafter."""
     from .operators.eav import write_indexes
 
     root = _fx(sf_dir, "index_store")
@@ -993,7 +994,7 @@ GROUP BY o_custkey ORDER BY target
 
 
 def q_datalog_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The Datalog compiler reading the four-index STORE instead of an
+    """The Datalog compiler reading the AEVT index STORE instead of an
     in-memory datom frame: each pattern clause binds a constant
     attribute, the compiler emits the equality filter, and because the
     AEVT layout hive-partitions by ``a``, Catalyst turns every clause

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.eav import tx_sorted
+
 # entity ids may be negative (xxhash64-derived surrogates, e.g. reified
 # tx entities from tx_comment_datoms)
 _LINE_PAT = (
@@ -54,9 +56,7 @@ def write_edn_style_log(datoms: DataFrame, path: str, partitions: int | None = N
     """S7 sink: datom DataFrame → gzipped line-oriented log files,
     range-partitioned and sorted by tx (T1 semantics: per-file parallel
     sort, globally ordered across files — ``pseudoace.py:87-95``)."""
-    args = [partitions, F.col("tx")] if partitions else [F.col("tx")]
-    datoms_sorted = datoms.repartitionByRange(*args).sortWithinPartitions("tx")
-    out = datoms_sorted.select(
+    out = tx_sorted(datoms, partitions=partitions).select(
         F.format_string(
             '[:db/%s %s :%s "%s" #inst "%s"]',
             F.when(F.col("op"), F.lit("add")).otherwise(F.lit("retract")),

@@ -164,39 +164,3 @@ def fetch_versioned_file(base_url: str, tag: str, path: str, dest: str) -> str:
     url = f"{base_url.rstrip('/')}/{tag}/{path.lstrip('/')}"
     return http_download(url, dest)
 
-
-def compact_parquet(
-    spark, src: str, dst: str, target_mb: int = 256
-) -> dict:
-    """Small-file compaction — the maintenance job every long-lived
-    store needs (streaming ingest and per-partition writes accumulate
-    KB-scale files whose open/footer overhead dominates scans at 100 TB):
-    rewrite ``src`` into ``dst`` with file count sized from actual bytes
-    (``ceil(total / target_mb)``), preserving content exactly.
-
-    Uses ``coalesce`` (no shuffle) since compaction only merges — a
-    repartition would pay a full shuffle for nothing.  Returns
-    {files_before, files_after, bytes} for the operator's log line."""
-    import glob as _glob
-    import math
-    import os as _os
-
-    files = [
-        f
-        for f in _glob.glob(_os.path.join(src, "**", "*.parquet"), recursive=True)
-        if _os.path.isfile(f)
-    ]
-    total = sum(_os.path.getsize(f) for f in files)
-    n_out = max(1, math.ceil(total / (target_mb * 1024 * 1024)))
-    df = spark.read.parquet(src)
-    df.coalesce(n_out).write.mode("overwrite").parquet(dst)
-    after = [
-        f
-        for f in _glob.glob(_os.path.join(dst, "**", "*.parquet"), recursive=True)
-        if _os.path.isfile(f)
-    ]
-    return {
-        "files_before": len(files),
-        "files_after": len(after),
-        "bytes": total,
-    }

@@ -205,6 +205,41 @@ def test_stream_nsw_descent_mv_bounded_and_recalls(spark):
     assert all("n_corpus" in s for s in stats)
 
 
+def test_descent_mv_bounded_gate_counts_entry_scorings(tmp_path):
+    """The ``bounded`` gate allows each post-bootstrap batch
+    n_batch·(_DESCENT_MV_BUDGET + n_entries) scored candidates: the
+    constant per-vector budget plus the beam entries each vector scored
+    (n_lists ≈ 4·√n representatives once a recluster persisted them),
+    so a batch over the constant alone passes and one over the sum
+    fails."""
+    import json
+
+    from db_migration_spark.queries_annstore import (
+        _DESCENT_MV_BUDGET,
+        _descent_mv_bounded,
+    )
+
+    def gate(*lines):
+        path = tmp_path / "maintenance_stats.jsonl"
+        path.write_text("".join(json.dumps(s) + "\n" for s in lines))
+        return _descent_mv_bounded(str(path))
+
+    boot = {"batch": 0, "n_batch": 10, "n_corpus": 0, "n_entries": 0,
+            "candidates": 10**9}
+    limit = 10 * (_DESCENT_MV_BUDGET + 400)
+
+    def batch(candidates):
+        return {"batch": 1, "n_batch": 10, "n_corpus": 10000,
+                "n_entries": 400, "candidates": candidates}
+
+    # over the old constant budget, within the entry-aware bound
+    assert 10 * _DESCENT_MV_BUDGET < limit - 1
+    assert gate(boot, batch(10 * _DESCENT_MV_BUDGET + 1))
+    assert gate(boot, batch(limit))
+    # over the entry-aware bound
+    assert not gate(boot, batch(limit + 1))
+
+
 def test_descent_mv_repair_improves_and_noops_on_replay(spark, tmp_path):
     """The full-graph repair round: (a) per-src edge quality (sum of
     kept dots) weakly improves — the fold is top-M over old ∪ newly

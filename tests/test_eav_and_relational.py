@@ -149,7 +149,7 @@ def test_tx_sorted_writer_ordering(spark, tmp_path):
         for i in range(1000)
     ]
     out = tmp_path / "sorted"
-    eav.tx_sorted_writer(_datoms(spark, rows), partitions=4).mode(
+    eav.tx_sorted(_datoms(spark, rows), partitions=4).write.mode(
         "overwrite"
     ).parquet(str(out))
     # per-file: sorted within; across files: ranges are disjoint (T1 contract)

@@ -129,24 +129,6 @@ def test_cli_corpus_prep(tmp_path):
     assert (out / "pack_manifest").is_dir()
 
 
-def test_compact_parquet(tmp_path):
-    from db_migration_spark.catalog import load_table
-    from db_migration_spark.session import get_spark
-    from db_migration_spark.sources.ingest import compact_parquet
-
-    spark = get_spark("compact-test", shuffle_partitions=8)
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    src, dst = tmp_path / "frag", tmp_path / "compact"
-    docs.repartition(32).write.parquet(str(src))
-    stats = compact_parquet(spark, str(src), str(dst), target_mb=256)
-    assert stats["files_before"] == 32
-    assert stats["files_after"] < 32
-    # content preserved exactly
-    a = {r["doc_id"] for r in spark.read.parquet(str(src)).collect()}
-    b = {r["doc_id"] for r in spark.read.parquet(str(dst)).collect()}
-    assert a == b
-
-
 def test_cli_distinct_rollup(tmp_path):
     """build writes a register rollup; estimate merges it to any dim
     subset and the global estimate lands within the HLL error bound of

@@ -81,12 +81,57 @@ def job_without_patches(spark, job):
     return j
 
 
-def test_store_is_typed_and_tx_sorted(spark, job):
+def test_store_is_typed_and_tx_sorted(spark, job, tmp_path):
+    """The typed store, and the T1 contract where the release runs it:
+    in each ``class=`` directory of ``datoms/`` every file is tx-sorted
+    (NULLs first, as Spark orders them) and the files' tx ranges are
+    disjoint — checked on a release whose Gene class spans several
+    files."""
+    import pyarrow.parquet as pq
+
     store = spark.read.parquet(job._path("datoms_patched"))
     rows = store.collect()
     assert len(rows) == 5
     score = [r for r in rows if r["a"] == "Gene/Score"][0]
     assert score["v_double"] == 3.5
+
+    dump = "".join(
+        f'Gene : "G{i}"\n'
+        f'Identity "g-{i}" -O "2010-{1 + i % 12:02d}-{1 + i % 28:02d}_10:00:{i:02d}"\n\n'
+        for i in range(60)
+    ) + 'Gene : "G-untimed"\nIdentity "g-untimed"\n\nProtein : "P1"\nPeptide "MSD"\n'
+    _write_release(tmp_path, dump=dump, catalog="Gene 61\nProtein 1\n")
+    j = _job(spark, tmp_path)
+    # every range partition its own file: AQE would coalesce a store
+    # this small into one partition, leaving no range to check
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        j.install_schema()
+        out = Path(j.dump_to_datoms())
+    finally:
+        spark.conf.set(coalesce, prev)
+
+    def tx_key(t):
+        return (t is not None, t)
+
+    n_files = {}
+    for cls_dir in sorted(out.glob("class=*")):
+        ranges = []
+        for f in sorted(cls_dir.glob("part-*.parquet")):
+            txs = [tx_key(t) for t in pq.read_table(str(f)).column("tx").to_pylist()]
+            if not txs:
+                continue
+            assert txs == sorted(txs), f
+            ranges.append((txs[0], txs[-1]))
+        ranges.sort()
+        for (_lo1, hi1), (lo2, _hi2) in zip(ranges, ranges[1:]):
+            assert hi1 <= lo2, cls_dir
+        n_files[cls_dir.name] = len(ranges)
+    assert set(n_files) == {"class=Gene", "class=Protein"}
+    assert n_files["class=Gene"] >= 2, n_files
+    assert j._read_store("datoms").filter("tx IS NULL").count() == 2
 
 
 def test_patch_won(spark, job):

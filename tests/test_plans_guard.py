@@ -600,3 +600,45 @@ def test_blockmax_candidates_join_broadcast_allowlist(spark):
     # the (query, term, group) allow-list joins broadcast — candidate
     # generation must never shuffle the store side by the tiny list
     assert "BroadcastHashJoin" in plan
+
+
+def test_release_dump_write_is_class_tx_range_sorted(spark, tmp_path):
+    # the release store's T1 layout (eav.tx_sorted over class, tx): the
+    # dump-to-datoms write must range-partition and sort on (class, tx)
+    # — per-file-parallel, never a single-partition global sort
+    import re
+
+    from db_migration_spark.migrate import MigrationJob
+
+    (tmp_path / "dumps").mkdir()
+    (tmp_path / "dumps" / "d.ace").write_text(
+        'Gene : "G1"\nIdentity "g-one" -O "2010-01-01_10:00:00"\n\n'
+        'Gene : "G2"\nIdentity "g-two" -O "2010-01-02_10:00:00"\n'
+    )
+    (tmp_path / "models").write_text("?Gene\n  Identity UNIQUE Text\n")
+    job = MigrationJob(
+        spark, str(tmp_path / "ws"), dumps_path=str(tmp_path / "dumps"),
+        models_path=str(tmp_path / "models"), catalog_path="", release="R",
+    )
+    job.install_schema()
+    status = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        ex = status.executionsList()
+        return {ex.apply(i).executionId(): ex.apply(i) for i in range(ex.length())}
+
+    before = set(executions())
+    job.dump_to_datoms()
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    writes = [
+        e.physicalPlanDescription()
+        for eid, e in executions().items()
+        if eid not in before
+        and "InsertIntoHadoopFsRelationCommand" in e.physicalPlanDescription()
+    ]
+    assert len(writes) == 1, writes
+    plan = writes[0]
+    key = r"class#\d+ ASC NULLS FIRST, tx#\d+ ASC NULLS FIRST"
+    assert re.search(rf"Arguments: rangepartitioning\({key}", plan), plan
+    assert re.search(rf"\) Sort\nInput \[.*\]\nArguments: \[{key}\]", plan), plan
+    assert "SinglePartition" not in plan, plan

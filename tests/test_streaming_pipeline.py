@@ -1,9 +1,7 @@
-"""Streaming import (availableNow + checkpoint resume), late patches,
-windowed rollups; resumable pipeline DAG."""
+"""Streaming rollups and ingest dedup, the streaming .ace source, the
+store-fixture protocol; resumable pipeline DAG."""
 
 from __future__ import annotations
-
-import datetime
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,83 +10,6 @@ from db_migration_spark.catalog import load_table
 from db_migration_spark.operators.eav import DATOM_DDL
 from db_migration_spark.plans.pipeline import Pipeline, Step
 from db_migration_spark.streaming import import_stream as st
-
-TS = datetime.datetime
-
-
-def _datoms(spark, rows):
-    return spark.createDataFrame(
-        rows, "e LONG, a STRING, v STRING, tx TIMESTAMP, op BOOLEAN"
-    )
-
-
-def test_available_now_import_and_resume(spark, tmp_path):
-    log_dir = tmp_path / "logs"
-    target = tmp_path / "store"
-    ckpt = tmp_path / "ckpt"
-    batch1 = _datoms(spark, [(1, "a", "v1", TS(2020, 1, 1), True)])
-    batch1.write.parquet(str(log_dir / "f1"))
-
-    q = st.import_available_now(
-        st.stream_datoms(spark, str(log_dir) + "/*"), str(target), str(ckpt)
-    )
-    q.awaitTermination(120)
-    assert spark.read.parquet(str(target)).count() == 1
-
-    # new log file arrives; restart processes ONLY the new file (checkpoint
-    # = the reference's resumable step cursor)
-    batch2 = _datoms(spark, [(2, "a", "v2", TS(2020, 1, 2), True)])
-    batch2.write.parquet(str(log_dir / "f2"))
-    q2 = st.import_available_now(
-        st.stream_datoms(spark, str(log_dir) + "/*"), str(target), str(ckpt)
-    )
-    q2.awaitTermination(120)
-    out = spark.read.parquet(str(target))
-    assert out.count() == 2  # no duplicate of batch1
-    assert {r["e"] for r in out.collect()} == {1, 2}
-
-
-def test_late_patch_merge_and_compaction(spark, tmp_path):
-    from db_migration_spark.plans.txlog import TxTable
-
-    base_dir = tmp_path / "store"
-    store = TxTable(str(base_dir))
-    store.commit_append(
-        _datoms(
-            spark,
-            [
-                (1, "name", "old", TS(2020, 1, 1), True),
-                (2, "name", "keep", TS(2020, 1, 1), True),
-            ],
-        )
-    )
-
-    patch_src = tmp_path / "patches_src"
-    _datoms(
-        spark,
-        [
-            (1, "name", "new", TS(2020, 2, 1), True),
-            (2, "name", "keep", TS(2020, 2, 1), False),  # late retraction
-        ],
-    ).write.parquet(str(patch_src))
-
-    def drain(ckpt):
-        q = st.late_patch_merge(
-            spark.readStream.schema(DATOM_DDL).parquet(str(patch_src)),
-            str(base_dir),
-            str(tmp_path / ckpt),
-        )
-        q.awaitTermination(120)
-
-    drain("ckpt2")
-    rows = {(r["e"], r["a"]): r["v"] for r in store.read(spark).collect()}
-    assert rows == {(1, "name"): "new"}  # e=2 retracted by the late patch
-    # a fresh checkpoint redelivers batch 0: its txn identity is
-    # already committed, so the replay is a no-op
-    v = store.latest_version()
-    drain("ckpt_replay")
-    assert store.latest_version() == v
-
 
 def test_windowed_rollup_streaming_matches_batch(spark, sf_dir, tmp_path):
     events = load_table(spark, sf_dir, "events")
@@ -202,10 +123,7 @@ def test_stream_dedup_drops_redelivered_keys(spark, tmp_path):
     across micro-batch redelivery."""
     import datetime
 
-    from db_migration_spark.streaming.import_stream import (
-        stream_dedup,
-        stream_datoms,
-    )
+    from db_migration_spark.streaming.import_stream import stream_dedup
 
     src = str(tmp_path / "in")
     out = str(tmp_path / "out")
@@ -218,7 +136,9 @@ def test_stream_dedup_drops_redelivered_keys(spark, tmp_path):
         (3, "doc/fp", "AAA", t, True),          # same fp, other entity
     ]
     spark.createDataFrame(rows, DATOM_DDL).write.parquet(src)
-    deduped = stream_dedup(stream_datoms(spark, src), ["a", "v"])
+    deduped = stream_dedup(
+        spark.readStream.schema(DATOM_DDL).parquet(src), ["a", "v"]
+    )
     q = (
         deduped.writeStream.trigger(availableNow=True)
         .option("checkpointLocation", ck)
@@ -229,45 +149,6 @@ def test_stream_dedup_drops_redelivered_keys(spark, tmp_path):
     q.awaitTermination(120)
     got = sorted(r["v"] for r in spark.read.parquet(out).collect())
     assert got == ["AAA", "BBB"]  # one row per (a, v) fingerprint
-
-
-def test_streaming_class_counts_update_mode(spark, tmp_path):
-    """Running per-attribute counts maintained across the stream; final
-    state equals the batch aggregate."""
-    import datetime
-
-    from db_migration_spark.streaming.import_stream import (
-        stream_datoms,
-        streaming_class_counts,
-    )
-
-    src = str(tmp_path / "in")
-    ck = str(tmp_path / "ck")
-    t = datetime.datetime(2024, 1, 1)
-    rows = [
-        (1, "Gene", "a", t, True),
-        (2, "Gene", "b", t, True),
-        (1, "Gene", "c", t, True),
-        (3, "Protein", "d", t, True),
-    ]
-    spark.createDataFrame(rows, DATOM_DDL).write.parquet(src)
-    counts = streaming_class_counts(stream_datoms(spark, src))
-    q = (
-        counts.writeStream.trigger(availableNow=True)
-        .option("checkpointLocation", ck)
-        .format("memory")
-        .queryName("cls_counts")
-        .outputMode("complete")
-        .start()
-    )
-    q.awaitTermination(120)
-    got = {
-        r["a"]: (r["n_datoms"], r["approx_entities"])
-        for r in spark.sql("SELECT * FROM cls_counts").collect()
-    }
-    assert got["Gene"][0] == 3 and got["Protein"][0] == 1
-    # approx distinct is exact at this cardinality
-    assert got["Gene"][1] == 2 and got["Protein"][1] == 1
 
 
 def test_multibatch_sliding_rollup_matches_batch(spark, sf_dir, tmp_path):

@@ -171,6 +171,41 @@ def test_txn_append_is_idempotent(spark, tmp_path):
     assert t.txn_version("sink-a", 99) is None
 
 
+def test_patch_merge_retracts_and_replays_as_noop(spark, tmp_path):
+    """X4 on the versioned store: a patch batch MERGEd through
+    ``upsert_patches`` under a txn identity resolves last-write-wins —
+    a later value replaces the old one and a late retraction removes
+    the datom — and replaying the same batch commits nothing."""
+    import datetime
+
+    from db_migration_spark.operators.eav import DATOM_DDL, upsert_patches
+
+    ts = datetime.datetime
+    t = TxTable(str(tmp_path / "store"))
+    t.commit_append(
+        spark.createDataFrame(
+            [
+                (1, "name", "old", ts(2020, 1, 1), True),
+                (2, "name", "keep", ts(2020, 1, 1), True),
+            ],
+            DATOM_DDL,
+        )
+    )
+    patches = spark.createDataFrame(
+        [
+            (1, "name", "new", ts(2020, 2, 1), True),
+            (2, "name", "keep", ts(2020, 2, 1), False),  # late retraction
+        ],
+        DATOM_DDL,
+    )
+    v = t.merge(spark, upsert_patches(patches), txn=("late_patch", 0))
+    rows = {(r["e"], r["a"]): r["v"] for r in t.read(spark).collect()}
+    assert rows == {(1, "name"): "new"}  # e=2 retracted by the patch
+    # a redelivered batch: its txn identity is already committed
+    assert t.merge(spark, upsert_patches(patches), txn=("late_patch", 0)) == v
+    assert t.latest_version() == v
+
+
 def test_optimize_preserves_content_and_compacts(spark, tmp_path):
     t = TxTable(str(tmp_path / "t"))
     for i in range(6):
